@@ -296,7 +296,7 @@ object SnapshotStore {
   // ---- immutable-part metadata caches (round 20 optimization) --------
   //
   // Manifest parts are IMMUTABLE and UUID-named (a part path is never
-  // reused), so their file-name lists and column shapes can be cached
+  // reused), so their (file, n_rows) entries and column shapes can be cached
   // per JVM with zero staleness risk — exactly Iceberg's manifest
   // caching. Before this, every commit on a chain re-read the SAME
   // carried parts (one names job + one footer probe per part per
@@ -307,79 +307,180 @@ object SnapshotStore {
   // q28k/q28/q28b decomposition). Bounded LRU; evicted entries simply
   // re-read. Deleted parts (vacuum/gcParts) age out — nothing ever
   // reads a deleted part's cache entry because no live list names it.
-  private def lruCache[V](maxEntries: Int) = java.util.Collections.synchronizedMap(
+  private[core] def lruCache[V](maxEntries: Int) = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[String, V](64, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean =
         size() > maxEntries
     })
-  private val partNamesCache = lruCache[Seq[String]](512)
+  /** The column shape of a manifest without stat envelopes. */
+  private val EntrySchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("file", org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("n_rows", org.apache.spark.sql.types.LongType,
+      nullable = false)))
+
+  /** A manifest part's METADATA SUMMARY: its file and row totals plus
+    * its PENDING special-file entries (CDC deltas, MOR delete keys,
+    * deletion vectors) — all that the pending-file guards, the fold
+    * policies and [[countAt]] decide from. Its size is bounded by the
+    * pending files, not by the part, so parts of any size are cached. */
+  private[core] final case class PartSummary(files: Long, rows: Long,
+                                             pending: Seq[(String, Long)])
+
+  private val partEntriesCache = lruCache[Seq[(String, Long)]](512)
+  private val partSummaryCache = lruCache[PartSummary](4096)
   private val partColsCache  = lruCache[Seq[String]](2048)
+  // retained-size bound (ADVICE r20 #5): the LRU caps ENTRIES, but one
+  // consolidated part on a large table can hold 10^5-10^6 entries —
+  // oversized entry lists are not cached (a re-read costs one job, not
+  // heap); their summaries are
+  private val MaxCachedEntries = 65536
 
   /** Test seam: drop the part caches (content is never stale — this
     * exists for memory hygiene in long-lived harnesses, not
     * correctness). */
-  def clearPartCaches(): Unit = { partNamesCache.clear(); partColsCache.clear() }
+  def clearPartCaches(): Unit = {
+    partEntriesCache.clear(); partSummaryCache.clear(); partColsCache.clear()
+  }
 
-  /** File names per manifest part, cache-backed. Uncached parts are
-    * read in ONE names-only job and attributed to their part dir via
+  private def partKey(root: Path, mpath: String): String =
+    root.resolve(mpath).toAbsolutePath.normalize.toString
+
+  private def isPendingFile(f: String): Boolean =
+    isCdcDeltaFile(f) || isDeleteFile(f) || isDvFile(f)
+
+  /** Cache one part's entries (when small enough) and their summary,
+    * under the part's absolute key. Parts are immutable and UUID-named,
+    * so this is also the WRITE-THROUGH a commit does for the part it
+    * just wrote: the next commit's probes and the stream's next plan
+    * never re-read it. */
+  private def cacheEntries(abs: String, entries: Seq[(String, Long)]): Unit = {
+    partSummaryCache.put(abs, summarize(entries))
+    if (entries.size <= MaxCachedEntries) partEntriesCache.put(abs, entries)
+  }
+
+  private def summarize(entries: Seq[(String, Long)]): PartSummary =
+    PartSummary(entries.size, entries.map(_._2).sum, entries.filter(e => isPendingFile(e._1)))
+
+  /** Part dir (absolute, normalized) of an `input_file_name` URI. */
+  private def partDirOf(u: String): String =
+    java.nio.file.Paths.get(new java.net.URI(u)).getParent.toAbsolutePath.normalize.toString
+
+  /** FAIL LOUD on attribution misses (ADVICE r20 #1): a part whose
+    * input_file_name parent does not lexically match its computed key
+    * (symlinked root, alternate path form) must never cache as an empty
+    * part — commitOnce would treat it as vacuously clean and carry it,
+    * filesAt would silently drop its files, and the guards would miss
+    * its pending files. A genuinely EMPTY part (0 entry rows,
+    * footer-verified) is the only legitimate unattributed miss. The
+    * footer check is strict: a part the scan skipped as corrupt
+    * (ignoreCorruptFiles) is unattributed, never empty. */
+  private def requireAttributed(spark: SparkSession, miss: Seq[String],
+                                found: Set[String]): Unit = {
+    val unattributed = (miss.toSet -- found).filter { abs =>
+      import scala.jdk.CollectionConverters._
+      val s = Files.list(java.nio.file.Paths.get(abs))
+      val pq = try s.iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".parquet"))
+          .map(_.toString).toSeq
+        finally s.close()
+      pq.isEmpty || scala.util.Try(org.apache.spark.sql.execution.datasources.parquet
+        .GraftParquetShim.footerRowCount(spark, pq) != 0L).getOrElse(true)
+    }
+    require(unattributed.isEmpty,
+      s"manifest part name attribution failed (path-form mismatch or unreadable part?) " +
+      s"for: ${unattributed.toSeq.sorted.mkString(", ")}")
+  }
+
+  /** `(file, n_rows)` entries per manifest part, cache-backed. Uncached
+    * parts are read in ONE job and attributed to their part dir via
     * input_file_name (each part is a single-file parquet dir). Returns
-    * mpath → sorted names. */
-  private[core] def partNamesFor(spark: SparkSession, root: Path,
-                                 mpaths: Seq[String]): Map[String, Seq[String]] = {
+    * mpath → entries sorted by file. */
+  private[core] def partEntriesFor(spark: SparkSession, root: Path,
+                                   mpaths: Seq[String]): Map[String, Seq[(String, Long)]] = {
     import spark.implicits._
-    val keyed = mpaths.map(m =>
-      root.resolve(m).toAbsolutePath.normalize.toString -> m)
+    val keyed = mpaths.map(m => partKey(root, m) -> m)
     // build the result from locally-HELD values (ADVICE r20 #2): the
     // LRU is shared across tables/threads, so a re-read after the puts
     // could see a concurrent eviction and hand back null
-    val held = scala.collection.mutable.Map.empty[String, Seq[String]]
+    val held = scala.collection.mutable.Map.empty[String, Seq[(String, Long)]]
     keyed.foreach { case (abs, _) =>
       if (!held.contains(abs)) {
-        val hit = partNamesCache.get(abs)
+        val hit = partEntriesCache.get(abs)
         if (hit != null) held(abs) = hit
       }
     }
     val miss = keyed.collect {
       case (abs, _) if !held.contains(abs) => abs }.distinct
     if (miss.nonEmpty) {
-      val byDir: Map[String, Seq[String]] = spark.read.parquet(miss: _*)
-        .select(input_file_name().as("_u"), col("file"))
-        .as[(String, String)].collect().toSeq
-        .groupMap { case (u, _) =>
-          java.nio.file.Paths.get(new java.net.URI(u))
-            .getParent.toAbsolutePath.normalize.toString
-        } { case (_, f) => f }
-      // FAIL LOUD on attribution misses (ADVICE r20 #1): a part whose
-      // input_file_name parent does not lexically match its computed
-      // key (symlinked root, alternate path form) must never cache as
-      // an empty name list — commitOnce would treat it as vacuously
-      // clean and carry it, and filesAt would silently drop its files.
-      // A genuinely EMPTY part (0 entry rows, footer-verified) is the
-      // only legitimate unattributed miss.
-      val unattributed = (miss.toSet -- byDir.keySet).filter { abs =>
-        import scala.jdk.CollectionConverters._
-        val s = Files.list(java.nio.file.Paths.get(abs))
-        val pq = try s.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .map(_.toString).toSeq
-          finally s.close()
-        pq.isEmpty || org.apache.spark.sql.execution.datasources.parquet
-          .GraftParquetShim.footerRowCount(spark, pq) != 0L
-      }
-      require(unattributed.isEmpty,
-        s"manifest part name attribution failed (path-form mismatch?) " +
-        s"for: ${unattributed.toSeq.sorted.mkString(", ")}")
+      // read under the entry schema every part carries (envelope
+      // columns, if any, are not needed here): no schema-inference job
+      val byDir: Map[String, Seq[(String, Long)]] = spark.read.schema(EntrySchema)
+        .parquet(miss: _*)
+        .select(input_file_name().as("_u"), col("file"), coalesce(col("n_rows"), lit(0L)))
+        .as[(String, String, Long)].collect().toSeq
+        .groupMap { case (u, _, _) => partDirOf(u) } { case (_, f, n) => f -> n }
+      requireAttributed(spark, miss, byDir.keySet)
       miss.foreach { abs =>
-        val names = byDir.getOrElse(abs, Seq.empty).sorted
-        held(abs) = names
-        // retained-size bound (ADVICE r20 #5): the LRU caps ENTRIES, but
-        // one consolidated part on a large table can hold 10^5-10^6 name
-        // strings — skip caching oversized lists (callers still get the
-        // value from `held`; a re-read costs one names job, not heap)
-        if (names.size <= 65536) partNamesCache.put(abs, names)
+        val entries = byDir.getOrElse(abs, Seq.empty).sortBy(_._1)
+        held(abs) = entries
+        cacheEntries(abs, entries)
       }
     }
     keyed.map { case (abs, m) => m -> held(abs) }.toMap
+  }
+
+  /** Version N's merged part summary ([[PartSummary]]), cache-backed:
+    * zero jobs once each part has been read or written in this JVM
+    * (every entries-cache fill also caches the summary, in a larger
+    * LRU).
+    * Uncached parts — evicted, or too large for the entries cache —
+    * are summarized in ONE job that returns their totals and
+    * pending entries, never their file names, so a guard or a fold
+    * policy never pulls O(table) entries to the driver. */
+  private def summaryAt(spark: SparkSession, root: Path, v: Long): PartSummary = {
+    val parts: Seq[PartSummary] = readList(root, v) match {
+      case Some(rows) =>
+        val keys = rows.map(r => partKey(root, r.mpath)).distinct
+        val held = scala.collection.mutable.Map.empty[String, PartSummary]
+        keys.foreach { abs =>
+          val hit = partSummaryCache.get(abs)
+          if (hit != null) held(abs) = hit
+        }
+        val miss = keys.filterNot(held.contains)
+        if (miss.nonEmpty) {
+          import spark.implicits._
+          // summarized per input split, no shuffle: one job whose result
+          // is O(splits + pending files)
+          val byDir: Map[String, PartSummary] = spark.read.schema(EntrySchema)
+            .parquet(miss: _*)
+            .select(input_file_name(), col("file"), coalesce(col("n_rows"), lit(0L)))
+            .as[(String, String, Long)]
+            .mapPartitions { rows =>
+              val acc = scala.collection.mutable.Map.empty[String, (Long, Long, List[(String, Long)])]
+              rows.foreach { case (u, f, n) =>
+                val (c, r, p) = acc.getOrElse(u, (0L, 0L, Nil))
+                acc(u) = (c + 1, r + n, if (f != null && isPendingFile(f)) (f, n) :: p else p)
+              }
+              acc.iterator.map { case (u, (c, r, p)) => (u, c, r, p) }
+            }
+            .collect().toSeq
+            .groupMapReduce(r => partDirOf(r._1))(r => PartSummary(r._2, r._3, r._4))(
+              (a, b) => PartSummary(a.files + b.files, a.rows + b.rows, a.pending ++ b.pending))
+          requireAttributed(spark, miss, byDir.keySet)
+          miss.foreach { abs =>
+            val sm = byDir.getOrElse(abs, PartSummary(0L, 0L, Seq.empty))
+            held(abs) = sm
+            partSummaryCache.put(abs, sm)
+          }
+        }
+        keys.map(held)
+      case None =>
+        import spark.implicits._
+        Seq(summarize(manifest(spark, root, v)
+          .select(col("file"), coalesce(col("n_rows"), lit(0L)))
+          .as[(String, Long)].collect().toSeq))
+    }
+    PartSummary(parts.map(_.files).sum, parts.map(_.rows).sum, parts.flatMap(_.pending))
   }
 
   /** Column names of one manifest part's footer, cache-backed. A miss
@@ -421,13 +522,28 @@ object SnapshotStore {
     appendFastPath: Boolean)
   @volatile var lastCommitStats: Option[CommitStats] = None
 
-  /** Write `entries` as one immutable manifest part; returns its list
-    * row. Entry row counts are read back from the written part so the
-    * stamp reflects what a reader will see. */
-  private def writePart(spark: SparkSession, root: Path, entries: DataFrame): ListRow = {
+  /** Write one immutable manifest part under a fresh `m_<uuid>` dir;
+    * `body` writes the bytes into the dir and returns the part's list
+    * row. The part is registered in-flight BEFORE bytes land (gc-safe)
+    * and, on failure, deregistered and reclaimed: a failed write never
+    * reaches the caller's `written` ledger, so its registration would
+    * otherwise shield the partial dir from same-JVM gcParts for the
+    * JVM's lifetime (ADVICE r15). */
+  private def newPart(root: Path)(body: (String, Path) => ListRow): ListRow = {
     val rel = s"_snapshots/manifests/m_${java.util.UUID.randomUUID()}"
-    inFlightFor(root).add(rel) // registered BEFORE bytes land — gc-safe
-    try {
+    inFlightFor(root).add(rel)
+    try body(rel, root.resolve(rel).toAbsolutePath)
+    catch { case t: Throwable =>
+      inFlightFor(root).remove(rel)
+      IndexStore.deleteRecursively(root.resolve(rel))
+      throw t
+    }
+  }
+
+  /** Write `entries` as one immutable manifest part with a Spark job —
+    * the path for entry frames that carry stat envelopes. */
+  private def writePart(spark: SparkSession, root: Path, entries: DataFrame): ListRow =
+    newPart(root) { (rel, dir) =>
       // entry/row counts are OBSERVED on the write job itself
       // (computed over exactly the rows the writer serialized, so the
       // stamp still reflects what a reader will see) instead of
@@ -438,29 +554,70 @@ object SnapshotStore {
       val obs = org.apache.spark.sql.Observation()
       entries.observe(obs, count(lit(1)).as("f"),
           coalesce(sum(col("n_rows")), lit(0L)).as("r"))
-        .coalesce(1).write.mode("overwrite").parquet(root.resolve(rel).toString)
+        .coalesce(1).write.mode("overwrite").parquet(dir.toString)
       val m = obs.get
       ListRow(rel, m("f").asInstanceOf[Long], m("r").asInstanceOf[Long])
-    } catch { case t: Throwable =>
-      // a failed write never reaches the caller's `written` ledger, so
-      // its registration would otherwise shield the partial dir from
-      // same-JVM gcParts for the JVM's lifetime (ADVICE r15) —
-      // deregister and reclaim before rethrowing
-      inFlightFor(root).remove(rel)
-      IndexStore.deleteRecursively(root.resolve(rel))
-      throw t
     }
-  }
+
+  /** Write stats-less `(file, n_rows)` entries as one immutable manifest
+    * part ON THE DRIVER — no Spark job. The bytes come from Spark's own
+    * parquet writer ([[ParquetFileFormat.prepareWrite]]'s
+    * OutputWriterFactory under the session's hadoop conf, the writer
+    * `df.write.parquet` tasks run, as the streaming sink's tasks do), so
+    * the part is byte-compatible with a distributed one. The file lands
+    * under a hidden temp name and is atomically moved to its final name
+    * inside the in-flight `m_<uuid>` dir: a listing never sees a torn
+    * part file. The entries are written through to the part cache. */
+  private def writeEntriesPart(spark: SparkSession, root: Path,
+                               entries: Seq[(String, Long)]): ListRow =
+    newPart(root) { (rel, dir) =>
+      import org.apache.hadoop.mapreduce.{TaskAttemptID, TaskType}
+      Files.createDirectories(dir)
+      val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sessionState.newHadoopConf())
+      val owf = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+        .prepareWrite(spark, job, Map.empty, EntrySchema)
+      val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+        job.getConfiguration, new TaskAttemptID("graft", 0, TaskType.MAP, 0, 0))
+      val name = s"part-00000-${java.util.UUID.randomUUID()}${owf.getFileExtension(ctx)}"
+      val tmp = dir.resolve(s".$name.tmp")
+      val sorted = entries.sortBy(_._1)
+      val w = owf.newInstance(tmp.toString, EntrySchema, ctx)
+      try sorted.foreach { case (f, n) =>
+        w.write(org.apache.spark.sql.catalyst.InternalRow(
+          org.apache.spark.unsafe.types.UTF8String.fromString(f), n))
+      } finally w.close()
+      // the local filesystem's checksum sidecar follows its file
+      val crc = dir.resolve(s"..$name.tmp.crc")
+      if (Files.exists(crc)) Files.move(crc, dir.resolve(s".$name.crc"))
+      Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+      cacheEntries(partKey(root, rel), sorted)
+      ListRow(rel, sorted.size.toLong, sorted.map(_._2).sum)
+    }
+
+  /** Fresh stats-less entries: each file's exact row count from its
+    * parquet footer (block row counts are exact), under the session's
+    * corrupt-file policy — see [[GraftParquetShim.footerRowCounts]]. */
+  private def footerEntries(spark: SparkSession, root: Path,
+                            fresh: Seq[String]): Seq[(String, Long)] =
+    fresh.zip(org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
+      .footerRowCounts(spark, fresh.map(f => root.resolve(f).toString)))
 
   /** Merge a list's parts into ONE when it outgrew
     * [[maxManifestParts]] — returns the (possibly consolidated) list
-    * plus whether consolidation fired. */
+    * plus whether consolidation fired. Stats-less parts merge on the
+    * driver from their (cached) entries; parts with envelopes merge
+    * with a Spark job. */
   private def consolidate(spark: SparkSession, root: Path,
                           rows: Seq[ListRow]): (Seq[ListRow], Seq[ListRow], Boolean) =
     if (rows.size <= maxManifestParts) (rows, Seq.empty, false)
     else {
-      val all = spark.read.parquet(rows.map(r => root.resolve(r.mpath).toString): _*)
-      val merged = writePart(spark, root, all)
+      val statsLess = rows.forall(r => partColsFor(spark, root, r.mpath).toSet == EntrySchema.fieldNames.toSet)
+      val merged =
+        if (statsLess)
+          writeEntriesPart(spark, root,
+            partEntriesFor(spark, root, rows.map(_.mpath)).values.flatten.toSeq)
+        else writePart(spark, root,
+          spark.read.parquet(rows.map(r => root.resolve(r.mpath).toString): _*))
       (Seq(merged), Seq(merged), true)
     }
 
@@ -840,7 +997,9 @@ object SnapshotStore {
     * stats aggregate, dirty parts' kept entries are a semi-join, and
     * only FILE NAMES ever cross the driver (the same O(files × ~60 B)
     * class as Spark's own driver-side FileIndex listing, and as the
-    * `files` argument itself). Per-PART carry (VERDICT r13 #1): a part
+    * `files` argument itself) — on a stats-less manifest an entry IS a
+    * name plus a row count, so there the new part is built on the
+    * driver from footers and cached entries. Per-PART carry (VERDICT r13 #1): a part
     * none of whose files was removed is carried into the new list BY
     * REFERENCE — its entries are neither read in full nor rewritten —
     * so a file-removing commit's metadata write is bounded by the
@@ -892,6 +1051,39 @@ object SnapshotStore {
         org.apache.spark.sql.Row.fromSeq(
           f +: 0L +: Seq.fill(schema.length - 2)(null))): _*), schema))
 
+  /** The ONE new part a commit writes — its fresh files' entries plus,
+    * on a file-removing commit, the kept entries of its dirty parts —
+    * or None when there is nothing to write.
+    *
+    * STATS-LESS manifests (no `min_/max_` envelopes): a fresh entry is
+    * `(file, n_rows)` and a footer holds the exact count, so the part is
+    * built and written on the driver with NO Spark job; `keptEntries`
+    * come from the (cached) dirty-part entries. Manifests WITH
+    * envelopes keep the distributed per-file stats aggregate, unioned
+    * with `keptFrame` (the dirty parts' kept rows, a name semi-join). */
+  private def writeNewPart(spark: SparkSession, root: Path, fresh: Seq[String],
+                           effStats: Seq[String], manifestCols: Seq[String],
+                           keptEntries: => Seq[(String, Long)],
+                           keptFrame: => Option[DataFrame]): Option[ListRow] =
+    if (effStats.isEmpty)
+      Some(keptEntries ++ footerEntries(spark, root, fresh))
+        .filter(_.nonEmpty).map(writeEntriesPart(spark, root, _))
+    else {
+      import spark.implicits._
+      val kept = keptFrame
+      val freshAgg = freshEntries(spark, root, fresh, effStats, manifestCols)
+      try {
+        // the persisted fresh side is materialized ONCE here (names
+        // only) and reused by the part write below
+        val freshNames: Set[String] =
+          freshAgg.map(_.select("file").as[String].collect().toSet).getOrElse(Set.empty)
+        val zeros = freshAgg.flatMap(df =>
+          zeroEntries(spark, fresh.filterNot(freshNames), df.schema))
+        (kept.toSeq ++ freshAgg.toSeq ++ zeros.toSeq).reduceOption(_.unionByName(_))
+          .map(writePart(spark, root, _))
+      } finally freshAgg.foreach(_.unpersist())
+    }
+
   private def commitOnce(spark: SparkSession, root: Path, files: Seq[String],
                          statsCols: Seq[String], prev: Option[Long],
                          ref: String, opType: String = "overwrite",
@@ -940,90 +1132,76 @@ object SnapshotStore {
     // part must serve the shape, or none is copied/carried
     val shapeOk = prevParts.nonEmpty &&
       partCols.forall(cs => manifestCols.forall(cs.contains))
-    // names per part — cache-backed (immutable parts): at most ONE job
+    // entries per part — cache-backed (immutable parts): at most ONE job
     // over the not-yet-cached parts, zero on a warm chain
-    val namesByPart: Map[Int, Seq[String]] =
+    val entriesByPart: Map[Int, Seq[(String, Long)]] =
       if (!shapeOk) Map.empty
       else {
-        val byPath = partNamesFor(spark, root,
+        val byPath = partEntriesFor(spark, root,
           prevParts.flatten.map(_.mpath).distinct)
         prevParts.zipWithIndex.map {
           case (Some(lr), i) => i -> byPath(lr.mpath)
           case (r @ None, i) => // legacy pseudo-part: uncached direct read
-            i -> partDf(r).select(col("file")).as[String].collect().toSeq
+            i -> partDf(r).select(col("file"), coalesce(col("n_rows"), lit(0L)))
+              .as[(String, Long)].collect().toSeq
         }.toMap
       }
-    val prevNames: Set[String] = namesByPart.values.flatten.toSet
+    def namesOf(i: Int): Seq[String] = entriesByPart.getOrElse(i, Seq.empty).map(_._1)
+    val prevNames: Set[String] = entriesByPart.values.flatten.map(_._1).toSet
     val keep = files.toSet
     // per-part carry: clean parts ride by reference; dirty parts (and
     // legacy pseudo-parts) contribute their KEPT entries to the fresh
-    // part via a name semi-join. Carry-by-reference demands the part's
-    // shape match the new version's EXACTLY — a superset part (commit
-    // narrowing statsCols) is dirty and gets PROJECTED down, keeping
-    // one column shape per version (ADVICE r14)
+    // part — a name filter over their entries. Carry-by-reference
+    // demands the part's shape match the new version's EXACTLY — a
+    // superset part (commit narrowing statsCols) is dirty and gets
+    // PROJECTED down, keeping one column shape per version (ADVICE r14)
     val (cleanIdx, dirtyIdx) = prevParts.indices.partition { i =>
       prevParts(i).isDefined && shapeOk &&
         partCols(i).toSet == manifestCols.toSet &&
-        namesByPart.getOrElse(i, Seq.empty).forall(keep)
+        namesOf(i).forall(keep)
     }
     val carriedRows: Seq[ListRow] = cleanIdx.map(i => prevParts(i).get)
-    val dirtyKept: Option[DataFrame] = {
-      val withKept = dirtyIdx.filter(i =>
-        namesByPart.getOrElse(i, Seq.empty).exists(keep))
-      if (!shapeOk || withKept.isEmpty) None
-      else Some(withKept.map(i => partDf(prevParts(i)))
-        .reduce(_.unionByName(_)).select(manifestCols.map(col): _*)
-        .join(files.toDF("file"), Seq("file"), "left_semi"))
-    }
+    val withKept = dirtyIdx.filter(i => namesOf(i).exists(keep))
     val fresh = files.filterNot(prevNames)
-    val freshAgg = freshEntries(spark, root, fresh, effStats, manifestCols)
+    val written = scala.collection.mutable.ArrayBuffer.empty[ListRow]
     try {
-      // the persisted fresh side is materialized ONCE here (names only)
-      // and reused by the part write below
-      val freshNames: Set[String] =
-        freshAgg.map(_.select("file").as[String].collect().toSet).getOrElse(Set.empty)
-      val schema = freshAgg.map(_.schema).orElse(dirtyKept.map(_.schema))
-        .orElse(carriedRows.headOption.map(r =>
-          spark.read.parquet(root.resolve(r.mpath).toString).schema))
-        .getOrElse(throw new IllegalArgumentException(s"empty commit for $root"))
-      val zeros = zeroEntries(spark, fresh.filterNot(freshNames), schema)
-      val newEntries: Option[DataFrame] =
-        (dirtyKept.toSeq ++ freshAgg.toSeq ++ zeros.toSeq)
-          .reduceOption(_.unionByName(_))
-      val written = scala.collection.mutable.ArrayBuffer.empty[ListRow]
-      try {
-        newEntries.foreach(e => written += writePart(spark, root, e))
-        val (listRows, extra, merged) =
-          consolidate(spark, root, carriedRows ++ written.toSeq)
-        written ++= extra
-        require(listRows.nonEmpty, s"empty commit for $root")
-        publishVersion(root, ref, prev, next, listRows,
-          schemaDdl = declareDdl.orElse {
-            val freshAbs = fresh.map(f => root.resolve(f).toString)
-            mergedDeclared(spark, root, prev, freshAbs)
-              .orElse(birthDeclared(spark, root, prev, files, freshAbs))
-          },
-          opType = opType, streamEpoch = streamEpoch)
-        // parts this commit wrote but consolidation superseded were
-        // never published by any list — drop them now
-        val live = listRows.map(_.mpath).toSet
-        written.filterNot(r => live(r.mpath))
-          .foreach(r => IndexStore.deleteRecursively(root.resolve(r.mpath)))
-        lastCommitStats = Some(CommitStats(next, ref,
-          partsWritten = written.size,
-          entriesWritten = written.map(_.nFiles).sum,
-          listRows = listRows.size,
-          namesHeld = (prevNames.size + files.size).toLong,
-          consolidated = merged, appendFastPath = false))
-        next
-      } catch {
-        case t: Throwable =>
-          // a failed attempt leaves NO trace: its unreferenced parts go
-          // now (the list tmp dir is cleaned by publishVersion itself)
-          written.foreach(r => IndexStore.deleteRecursively(root.resolve(r.mpath)))
-          throw t
-      } finally written.foreach(r => inFlightFor(root).remove(r.mpath))
-    } finally freshAgg.foreach(_.unpersist())
+      written ++= writeNewPart(spark, root, fresh, effStats, manifestCols,
+        keptEntries = withKept.flatMap(i => entriesByPart(i).filter(e => keep(e._1))),
+        keptFrame =
+          if (withKept.isEmpty) None
+          else Some(withKept.map(i => partDf(prevParts(i)))
+            .reduce(_.unionByName(_)).select(manifestCols.map(col): _*)
+            .join(files.toDF("file"), Seq("file"), "left_semi")))
+      val (listRows, extra, merged) =
+        consolidate(spark, root, carriedRows ++ written.toSeq)
+      written ++= extra
+      require(listRows.nonEmpty, s"empty commit for $root")
+      publishVersion(root, ref, prev, next, listRows,
+        schemaDdl = declareDdl.orElse {
+          val freshAbs = fresh.map(f => root.resolve(f).toString)
+          mergedDeclared(spark, root, prev, freshAbs)
+            .orElse(birthDeclared(spark, root, prev, files, freshAbs))
+        },
+        opType = opType, streamEpoch = streamEpoch)
+      // parts this commit wrote but consolidation superseded were
+      // never published by any list — drop them now
+      val live = listRows.map(_.mpath).toSet
+      written.filterNot(r => live(r.mpath))
+        .foreach(r => IndexStore.deleteRecursively(root.resolve(r.mpath)))
+      lastCommitStats = Some(CommitStats(next, ref,
+        partsWritten = written.size,
+        entriesWritten = written.map(_.nFiles).sum,
+        listRows = listRows.size,
+        namesHeld = (prevNames.size + files.size).toLong,
+        consolidated = merged, appendFastPath = false))
+      next
+    } catch {
+      case t: Throwable =>
+        // a failed attempt leaves NO trace: its unreferenced parts go
+        // now (the list tmp dir is cleaned by publishVersion itself)
+        written.foreach(r => IndexStore.deleteRecursively(root.resolve(r.mpath)))
+        throw t
+    } finally written.foreach(r => inFlightFor(root).remove(r.mpath))
   }
 
   /** The CAS publish + pointer swing shared by [[commitOnce]] and
@@ -1168,7 +1346,10 @@ object SnapshotStore {
     * delta's names and the part names — at 10⁶ table files an epoch
     * append moves kilobytes, reads no prev entry rows at all (one
     * schema footer for stats-shape inheritance), and never calls
-    * [[filesAt]]. Falls back to the general [[commit]] exactly when
+    * [[filesAt]]. On a stats-less manifest (no `min_/max_` envelopes)
+    * the append launches NO Spark job: fresh entries come from the
+    * files' footers and the part is written on the driver (see
+    * [[writeNewPart]]). Falls back to the general [[commit]] exactly when
     * the table needs migration (legacy single-dir manifest) or an
     * explicit statsCols change forces carried files to rescan. Same
     * CAS discipline as [[commit]]; on a lost race the append re-reads
@@ -1218,7 +1399,6 @@ object SnapshotStore {
                          statsCols: Seq[String], prev: Option[Long],
                          ref: String, opType: String = "append",
                          streamEpoch: Option[(String, Long)] = None): Option[Long] = {
-    import spark.implicits._
     commitAttemptHook(root, prev)
     val next = prev.getOrElse(0L) + 1
     val carried: Seq[ListRow] = prev match {
@@ -1245,44 +1425,35 @@ object SnapshotStore {
       Seq("file", "n_rows") ++ effStats.flatMap(c => Seq(s"min_$c", s"max_$c"))
     if (carriedColSets.exists(_.toSet != manifestCols.toSet))
       return None // shape change: carried files must project/rescan — general path
-    val freshAgg = freshEntries(spark, root, addFiles, effStats, manifestCols)
+    val written = scala.collection.mutable.ArrayBuffer.empty[ListRow]
     try {
-      val freshNames: Set[String] =
-        freshAgg.map(_.select("file").as[String].collect().toSet).getOrElse(Set.empty)
-      val schema = freshAgg.map(_.schema)
-        .orElse(carried.headOption.map(r =>
-          spark.read.parquet(root.resolve(r.mpath).toString).schema))
-        .getOrElse(throw new IllegalArgumentException(s"empty commit for $root"))
-      val zeros = zeroEntries(spark, addFiles.filterNot(freshNames), schema)
-      val entries = (freshAgg.toSeq ++ zeros.toSeq).reduce(_.unionByName(_))
-      val written = scala.collection.mutable.ArrayBuffer(writePart(spark, root, entries))
-      try {
-        val (listRows, extra, merged) =
-          consolidate(spark, root, carried ++ written.toSeq)
-        written ++= extra
-        publishVersion(root, ref, prev, next, listRows,
-          schemaDdl = {
-            val addAbs = addFiles.map(f => root.resolve(f).toString)
-            mergedDeclared(spark, root, prev, addAbs)
-              .orElse(birthDeclared(spark, root, prev, addFiles, addAbs))
-          },
-          opType = opType, streamEpoch = streamEpoch)
-        val live = listRows.map(_.mpath).toSet
-        written.filterNot(r => live(r.mpath))
-          .foreach(r => IndexStore.deleteRecursively(root.resolve(r.mpath)))
-        lastCommitStats = Some(CommitStats(next, ref,
-          partsWritten = written.size,
-          entriesWritten = written.map(_.nFiles).sum,
-          listRows = listRows.size,
-          namesHeld = (addFiles.size + carried.size + listRows.size).toLong,
-          consolidated = merged, appendFastPath = true))
-        Some(next)
-      } catch {
-        case t: Throwable =>
-          written.foreach(r => IndexStore.deleteRecursively(root.resolve(r.mpath)))
-          throw t
-      } finally written.foreach(r => inFlightFor(root).remove(r.mpath))
-    } finally freshAgg.foreach(_.unpersist())
+      written ++= writeNewPart(spark, root, addFiles, effStats, manifestCols,
+        keptEntries = Seq.empty, keptFrame = None)
+      val (listRows, extra, merged) =
+        consolidate(spark, root, carried ++ written.toSeq)
+      written ++= extra
+      publishVersion(root, ref, prev, next, listRows,
+        schemaDdl = {
+          val addAbs = addFiles.map(f => root.resolve(f).toString)
+          mergedDeclared(spark, root, prev, addAbs)
+            .orElse(birthDeclared(spark, root, prev, addFiles, addAbs))
+        },
+        opType = opType, streamEpoch = streamEpoch)
+      val live = listRows.map(_.mpath).toSet
+      written.filterNot(r => live(r.mpath))
+        .foreach(r => IndexStore.deleteRecursively(root.resolve(r.mpath)))
+      lastCommitStats = Some(CommitStats(next, ref,
+        partsWritten = written.size,
+        entriesWritten = written.map(_.nFiles).sum,
+        listRows = listRows.size,
+        namesHeld = (addFiles.size + carried.size + listRows.size).toLong,
+        consolidated = merged, appendFastPath = true))
+      Some(next)
+    } catch {
+      case t: Throwable =>
+        written.foreach(r => IndexStore.deleteRecursively(root.resolve(r.mpath)))
+        throw t
+    } finally written.foreach(r => inFlightFor(root).remove(r.mpath))
   }
 
   /** Atomically point `ref` at version `v` (HEAD or a branch ref). */
@@ -1373,7 +1544,7 @@ object SnapshotStore {
   def filesAt(spark: SparkSession, root: Path, v: Long): Seq[String] =
     readList(root, v) match {
       case Some(rows) =>
-        partNamesFor(spark, root, rows.map(_.mpath)).values.flatten.toSeq.sorted
+        partEntriesFor(spark, root, rows.map(_.mpath)).values.flatten.map(_._1).toSeq.sorted
       case None =>
         import spark.implicits._
         manifest(spark, root, v).select("file").as[String].collect().toSeq.sorted
@@ -1424,7 +1595,6 @@ object SnapshotStore {
     * `a = 0` means "before the first version" (delta = all of b). */
   def appendDeltaFiles(spark: SparkSession, root: Path,
                        a: Long, b: Long): Option[Seq[String]] = {
-    import spark.implicits._
     val la: Seq[ListRow] =
       if (a == 0L) Seq.empty
       else readList(root, a).getOrElse(return None)
@@ -1433,8 +1603,8 @@ object SnapshotStore {
     if (!old.subsetOf(lb.map(_.mpath).toSet)) return None
     val fresh = lb.filterNot(r => old(r.mpath))
     if (fresh.isEmpty) Some(Seq.empty)
-    else Some(partNamesFor(spark, root, fresh.map(_.mpath))
-      .values.flatten.toSeq.sorted)
+    else Some(partEntriesFor(spark, root, fresh.map(_.mpath))
+      .values.flatten.map(_._1).toSeq.sorted)
   }
 
   /** Per-version FILE-COUNT ledger over (a, b] — metadata-only (list
@@ -2737,17 +2907,12 @@ object SnapshotStore {
     // manifest's file names filter through [[isDvFile]] itself, and the
     // commit threshold counts DISTINCT `_dv_a<v>` attempt dirs — not
     // ledger files — so the policy stays honest if a vector ever lands
-    // multi-file. Still metadata-only (the manifest is tiny).
-    val dvNames = filesAt(spark, root, head).filter(isDvFile)
-    if (dvNames.isEmpty) return None
-    val dvCommits = dvNames.flatMap(n =>
-      "_dv_a(\\d+)/".r.findFirstMatchIn(n).map(_.group(1))).distinct.size
-    val positions = {
-      val p = manifest(spark, root, head)
-        .where(col("file").isin(dvNames: _*))
-        .agg(coalesce(sum(col("n_rows")), lit(0L))).head()
-      p.getLong(0)
-    }
+    // multi-file. Metadata-only, from the version's part summary.
+    val dv = summaryAt(spark, root, head).pending.filter(e => isDvFile(e._1))
+    if (dv.isEmpty) return None
+    val dvCommits = dv.flatMap(e =>
+      "_dv_a(\\d+)/".r.findFirstMatchIn(e._1).map(_.group(1))).distinct.size
+    val positions = dv.map(_._2).sum
     if (positions >= maxPendingPositions || dvCommits >= maxDvCommits)
       Some(foldDv(spark, root, numFiles, statsCols))
     else None
@@ -2792,39 +2957,17 @@ object SnapshotStore {
     }
   }
 
-  /** [[requireNoPending]] as a METADATA-ONLY probe (round 14): one
-    * tiny manifest query per flag instead of an O(table) name collect —
-    * what the per-epoch writers use so their guard costs nothing at
-    * 10⁶ files. */
+  /** [[requireNoPending]] over version `v`'s pending file names, read
+    * from its part summary ([[summaryAt]]) — what the per-epoch writers
+    * use, so their guard never collects the table's names, and costs no
+    * Spark job once the version's parts have been summarized or written
+    * in this JVM. */
   private def requireNoPendingAt(spark: SparkSession, root: Path, v: Long, op: String,
                                  cdcDeltas: Boolean = false,
                                  morDeletes: Boolean = false,
-                                 dvs: Boolean = false): Unit = {
-    val m = manifest(spark, root, v)
-    def probe(pred: org.apache.spark.sql.Column): Seq[String] =
-      m.where(pred).select("file").limit(3).collect().map(_.getString(0)).toSeq
-    if (cdcDeltas) {
-      val d = probe(col("file").contains("/_cdcdelta_a") ||
-        col("file").startsWith("data/_cdcdelta_a"))
-      if (d.nonEmpty) throw new IllegalStateException(
-        s"$op on a table with un-folded CDC delta file(s) — " +
-        s"run foldCdc first (pending: ${d.mkString(", ")}…)")
-    }
-    if (morDeletes) {
-      val d = probe(col("file").contains("/_deletes_a") ||
-        col("file").startsWith("data/_deletes_a"))
-      if (d.nonEmpty) throw new IllegalStateException(
-        s"$op on a table with un-folded MOR delete file(s) — " +
-        s"run foldMor first (pending: ${d.mkString(", ")}…)")
-    }
-    if (dvs) {
-      val d = probe(col("file").contains("/_dv_a") ||
-        col("file").startsWith("data/_dv_a"))
-      if (d.nonEmpty) throw new IllegalStateException(
-        s"$op on a table with un-folded deletion-vector file(s) — " +
-        s"run foldDv first (pending: ${d.mkString(", ")}…)")
-    }
-  }
+                                 dvs: Boolean = false): Unit =
+    requireNoPending(summaryAt(spark, root, v).pending.map(_._1), op,
+      cdcDeltas, morDeletes, dvs)
 
   /** Is this manifest path a CDC DELTA file? CDC deltas live under
     * `data/_cdcdelta_a<attempt>/` by path convention, like MOR delete
@@ -2858,7 +3001,7 @@ object SnapshotStore {
     requireNoRenames(root, head, "commitCdcDelta")
     // the delta rung's recency argmax does not know how to apply MOR
     // delete keys — the two merge-on-read disciplines must not mix.
-    // Metadata-only probe: a delta commit never collects table names.
+    // Reads the part summary: a delta commit never collects table names.
     requireNoPendingAt(spark, root, head, "commitCdcDelta", morDeletes = true, dvs = true)
     val attempt = head + 1
     val rel = s"data/_cdcdelta_a$attempt"
@@ -2980,7 +3123,8 @@ object SnapshotStore {
 
   /** Fold POLICY: fold when pending delta rows exceed `ratio` × base
     * rows — decided METADATA-ONLY from the manifest's n_rows (no data
-    * file opened), so the in-loop check is free. `ratio` is the
+    * file opened; the entries come from the part cache, so no Spark
+    * job either), so the in-loop check is free. `ratio` is the
     * read-vs-write-amplification dial (Hudi's compaction trigger):
     * pending deltas cost reads a per-key argmax over the envelope-hit
     * region (≤ (1+ratio) × table worst case) while each fold rewrites
@@ -3002,14 +3146,10 @@ object SnapshotStore {
                    orderCols: Seq[String], numFiles: Int,
                    ratio: Double = 0.5, minDeltaCommits: Int = 4): Option[Long] = {
     val head = headVersion(root).getOrElse(return None)
-    val m = manifest(spark, root, head)
-    val split = m.groupBy(
-        (col("file").contains("/_cdcdelta_a") ||
-         col("file").startsWith("data/_cdcdelta_a")).as("d"))
-      .agg(sum(col("n_rows")).as("n"), count(lit(1)).as("files"))
-      .collect().map(r => r.getBoolean(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val (deltaRows, deltaFiles) = split.getOrElse(true, (0L, 0L))
-    val baseRows = split.getOrElse(false, (0L, 0L))._1
+    val sm = summaryAt(spark, root, head)
+    val delta = sm.pending.filter(e => isCdcDeltaFile(e._1))
+    val (deltaRows, deltaFiles) = (delta.map(_._2).sum, delta.size)
+    val baseRows = sm.rows - deltaRows
     if (deltaRows > 0 && deltaFiles >= minDeltaCommits &&
         deltaRows >= ratio * math.max(1L, baseRows))
       Some(foldCdc(spark, root, keyCol, orderCols, numFiles))
@@ -3112,11 +3252,12 @@ object SnapshotStore {
     * between. */
   def countAt(spark: SparkSession, root: Path, v: Option[Long] = None): Long = {
     val ver = v.orElse(headVersion(root)).get
+    val sm = summaryAt(spark, root, ver)
     // physical n_rows ≠ logical count when pending special files carry
     // superseded versions / delete keys — refuse rather than overcount
-    requireNoPendingAt(spark, root, ver, "countAt",
+    requireNoPending(sm.pending.map(_._1), "countAt",
       cdcDeltas = true, morDeletes = true, dvs = true)
-    manifest(spark, root, ver).agg(sum(col("n_rows"))).head().getLong(0)
+    sm.rows
   }
 
   /** Drop manifest PARTS no surviving version list references —

@@ -21,13 +21,15 @@ object Tables {
   // (round 21, guide §5): every `spark.read.parquet` call re-infers the
   // footer schema — measured as a ~45 ms driver/listing job per call,
   // and harness queries call load() several times (streaming replays
-  // dozens of times). Keyed by (absolute path, mtime, size, the
-  // NTZ-inference conf that shapes the result): an in-place rewrite
-  // changes mtime/size and re-infers, so entries cannot go stale —
-  // metadata caching with revalidation, not result caching. Directories
-  // and unreadable paths fall back to plain inference.
-  private val schemaCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Long, String), org.apache.spark.sql.types.StructType]
+  // dozens of times). Keyed by (absolute path, file key, mtime in
+  // nanoseconds, size, the NTZ-inference conf that shapes the result):
+  // an in-place rewrite changes mtime/size, a replace-by-rename changes
+  // the file key, and nanosecond mtimes separate two rewrites inside
+  // one millisecond — so entries cannot go stale; metadata caching with
+  // revalidation, not result caching. A bounded LRU, like the snapshot
+  // part caches: superseded keys of rewritten files age out.
+  // Directories and unreadable paths fall back to plain inference.
+  private val schemaCache = SnapshotStore.lruCache[StructType](256)
 
   private def readCached(spark: SparkSession, path: String): DataFrame = {
     val p = java.nio.file.Paths.get(path)
@@ -38,9 +40,14 @@ object Tables {
       else {
         val inferNtz = spark.conf
           .getOption("spark.sql.parquet.inferTimestampNTZ.enabled").getOrElse("true")
-        val key = (p.toAbsolutePath.toString,
-          attrs.lastModifiedTime.toMillis, attrs.size, inferNtz)
-        val schema = schemaCache.getOrElseUpdate(key, spark.read.parquet(path).schema)
+        val key = Seq(p.toAbsolutePath.toString, String.valueOf(attrs.fileKey),
+          attrs.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS),
+          attrs.size, inferNtz).mkString("\u0000")
+        val schema = Option(schemaCache.get(key)).getOrElse {
+          val s = spark.read.parquet(path).schema
+          schemaCache.put(key, s)
+          s
+        }
         spark.read.schema(schema).parquet(path)
       }
     } catch { case _: java.io.IOException => spark.read.parquet(path) }

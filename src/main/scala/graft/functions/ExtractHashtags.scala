@@ -150,7 +150,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (FunctionIdentifier(TextKernels.shinglesFnName),
        new ExpressionInfo(classOf[WordShingles].getCanonicalName, TextKernels.shinglesFnName),
        (exprs: Seq[Expression]) => WordShingles(exprs(0),
-         exprs(1).eval().asInstanceOf[Int])))
+         SqlArgs.intLiteral(TextKernels.shinglesFnName, "k", exprs, 1))))
     ext.injectFunction(
       (FunctionIdentifier(TextKernels.bigramsFnName),
        new ExpressionInfo(classOf[WordBigrams].getCanonicalName, TextKernels.bigramsFnName),

@@ -169,7 +169,7 @@ object HyperplaneLsh {
       reg.registerFunction(wid,
         new ExpressionInfo(classOf[HyperplaneKeysWide].getCanonicalName, wideFnName),
         (exprs: Seq[Expression]) =>
-          HyperplaneKeysWide(exprs.head, exprs(1).eval().asInstanceOf[Int]))
+          HyperplaneKeysWide(exprs.head, SqlArgs.intLiteral(wideFnName, "bits", exprs, 1)))
     val sid = FunctionIdentifier(signWordsFnName)
     if (!reg.functionExists(sid))
       reg.registerFunction(sid,

@@ -93,7 +93,7 @@ object TextKernels {
       reg.registerFunction(sid,
         new ExpressionInfo(classOf[WordShingles].getCanonicalName, shinglesFnName),
         (exprs: Seq[Expression]) => WordShingles(exprs(0),
-          exprs(1).eval().asInstanceOf[Int]))
+          SqlArgs.intLiteral(shinglesFnName, "k", exprs, 1)))
     val bid = FunctionIdentifier(bigramsFnName)
     if (!reg.functionExists(bid))
       reg.registerFunction(bid,

@@ -51,6 +51,17 @@ import graft.core.SnapshotStore
   * shape) can MAINTAIN a catalog table instead of detouring through
   * foreachBatch.
   *
+  * JOB BUDGET (stats-less tables, the default for a catalog table): an
+  * append-mode epoch's commit launches 0 Spark jobs — the
+  * [[graft.core.SnapshotStore.commitAppend]] entries come from the
+  * files' footers and its manifest part is written on the driver. An
+  * update-mode epoch that does not fold launches 2 jobs in all, both of
+  * which move rows: the micro-batch's own aggregate-and-write and the
+  * `_seq` rewrite of the CDC delta. The staging read-back is planned
+  * under the known write schema, and the pending-file guard and the
+  * fold policy decide from the part summaries the commits wrote through
+  * to the part cache — no metadata job.
+  *
   * Tasks write parquet through Spark's OWN write path —
   * [[ParquetFileFormat.prepareWrite]]'s [[OutputWriterFactory]] under
   * the session's hadoop conf, so epoch files are byte-compatible with
@@ -159,8 +170,10 @@ private[sql] class SnapshotStreamingWrite(root: Path, tableName: String,
         // replay detection and content land atomically. The staging
         // files are superseded by the delta file and dropped; a crash
         // between commit and cleanup strays unreferenced files no
-        // manifest names — invisible to every reader.
-        val delta = spark.read.parquet(
+        // manifest names — invisible to every reader. The staging
+        // files are read under the schema they were written with (an
+        // update-mode table is flat): no schema-inference job.
+        val delta = spark.read.schema(writeSchema).parquet(
           fresh.map(f => root.resolve(f).toString): _*)
         SnapshotStore.commitCdcDelta(spark, root, delta, k,
           streamEpoch = Some(queryTok -> epochId))

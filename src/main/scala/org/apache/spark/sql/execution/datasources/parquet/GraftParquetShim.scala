@@ -46,14 +46,40 @@ object GraftParquetShim {
     * for SMALL file lists where a count() job is pure scheduler
     * overhead. */
   def footerRowCount(spark: SparkSession, paths: Seq[String]): Long = {
-    import scala.jdk.CollectionConverters._
     val conf = spark.sessionState.newHadoopConf()
-    paths.map { p =>
-      val footer = ParquetFooterReader.readFooter(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new HPath(p), conf),
-        org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
-      footer.getBlocks.asScala.map(_.getRowCount).sum
-    }.sum
+    paths.map(p => rowsOf(conf, new HPath(p))).sum
+  }
+
+  /** Exact per-file row counts from footers, under the session's
+    * corrupt-file policy — what a commit's fresh manifest entries need,
+    * with the semantics of the distributed count it replaces: a missing
+    * file always fails; a file whose footer cannot be read fails with
+    * Spark's own footer error, or counts 0 rows when
+    * `spark.sql.files.ignoreCorruptFiles` is on (the distributed scan
+    * skipped it, and the zero-row default entry took its place). */
+  def footerRowCounts(spark: SparkSession, paths: Seq[String]): Seq[Long] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val ignoreCorrupt = spark.sessionState.conf.ignoreCorruptFiles
+    def one(p: String): Long = {
+      val hp = new HPath(p)
+      hp.getFileSystem(conf).getFileStatus(hp) // FileNotFoundException: never ignored
+      try rowsOf(conf, hp)
+      catch {
+        case e: Exception
+            if e.isInstanceOf[RuntimeException] || e.isInstanceOf[java.io.IOException] =>
+          if (ignoreCorrupt) 0L
+          else throw org.apache.spark.sql.errors.QueryExecutionErrors
+            .cannotReadFooterForFileError(hp, e)
+      }
+    }
+    paths.map(one)
+  }
+
+  private def rowsOf(conf: org.apache.hadoop.conf.Configuration, p: HPath): Long = {
+    import scala.jdk.CollectionConverters._
+    ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+      .getBlocks.asScala.map(_.getRowCount).sum
   }
 }

@@ -32,6 +32,34 @@ class SourceFormatsSpec extends AnyFunSuite {
     assert(fromOrc.schema == nation.schema)
   }
 
+  test("Tables.load revalidates its schema cache: a file rewritten in place inside one millisecond serves its new schema") {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.attribute.FileTime
+    val dir = Files.createTempDirectory("schema-cache")
+    // two single-file parquet payloads of one size: column `a` vs `b`
+    def payload(name: String): Array[Byte] = {
+      val out = dir.resolve(s"w_$name")
+      spark.range(3).select(col("id").as(name)).coalesce(1).write.parquet(out.toString)
+      Files.readAllBytes(Files.list(out).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get)
+    }
+    val (pa, pb) = (payload("a"), payload("b"))
+    assert(pa.length == pb.length, "fixture: the two payloads must have one size")
+    val target = dir.resolve("t.parquet")
+    val ms = java.time.Instant.parse("2024-01-01T00:00:00.000Z")
+    Files.write(target, pa)
+    Files.setLastModifiedTime(target, FileTime.from(ms.plusNanos(100000)))
+    assert(Tables.load(spark, dir.toString, "t").columns.toSeq == Seq("a"))
+    // rewrite in place (same file, same size), stamped in the same millisecond
+    Files.write(target, pb)
+    Files.setLastModifiedTime(target, FileTime.from(ms.plusNanos(200000)))
+    assume(Files.getLastModifiedTime(target).toInstant == ms.plusNanos(200000),
+      "this filesystem keeps no sub-millisecond modification times")
+    assert(Tables.load(spark, dir.toString, "t").columns.toSeq == Seq("b"),
+      "the schema cache served a stale schema for a rewritten file")
+    graft.core.IndexStore.deleteRecursively(dir)
+  }
+
   test("kafka seam: option surface matches the reference's configuration") {
     import graft.streaming.StreamingPipelines.{SourceConfig, kafkaOptions}
     val opts = kafkaOptions(SourceConfig(format = "kafka",

@@ -253,4 +253,23 @@ class TextFunctionsSpec extends AnyFunSuite {
     val ref = df.select(refTop(col("toks")).as("c")).as[Long].collect().toSeq
     assert(got == ref)
   }
+
+  test("word_shingles SQL: the width must be an INT literal — a column or a string raises an AnalysisException naming the function") {
+    Seq((Seq("a", "b", "c"), 2)).toDF("toks", "k").createOrReplaceTempView("shingle_args")
+    assert(spark.sql("SELECT word_shingles(toks, 2) AS s FROM shingle_args")
+      .as[Seq[String]].collect().toSeq == Seq(Seq("a b", "b c")))
+    val nonFoldable = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT word_shingles(toks, k) FROM shingle_args").collect()
+    }
+    assert(nonFoldable.getCondition == "NON_FOLDABLE_ARGUMENT", nonFoldable.getMessage)
+    assert(nonFoldable.getMessage.contains("`word_shingles`") &&
+      nonFoldable.getMessage.contains("INT"), nonFoldable.getMessage)
+    val notInt = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT word_shingles(toks, '3') FROM shingle_args").collect()
+    }
+    assert(notInt.getCondition == "UNEXPECTED_INPUT_TYPE", notInt.getMessage)
+    assert(notInt.getMessage.contains("`word_shingles`") &&
+      notInt.getMessage.contains("INT") && notInt.getMessage.contains("STRING"),
+      notInt.getMessage)
+  }
 }
