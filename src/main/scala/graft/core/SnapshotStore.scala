@@ -3045,11 +3045,24 @@ object SnapshotStore {
     import spark.implicits._
     val files = filesAt(spark, root, ver)
     val (delta, data) = files.partition(isCdcDeltaFile)
-    val deltas = readFiles(spark, root, delta, inferPartitions = false)
+    // both probes read footers, not schema-inference jobs: the deltas'
+    // schema from their own footers, the envelope columns from each
+    // part's cached footer columns
+    val deltaPaths = delta.map(f => root.resolve(f).toString)
+    val deltas = org.apache.spark.sql.execution.datasources.parquet
+      .GraftParquetShim.footerMergedSchema(spark, deltaPaths)
+      .map(s => spark.read.schema(s).parquet(deltaPaths: _*))
+      .getOrElse(throw new IllegalStateException(
+        s"$root v$ver: no readable footer among its ${delta.size} CDC delta files"))
     val dataCols = deltas.columns.toSeq.filterNot(_ == "_seq")
-    val man = manifest(spark, root, ver)
+    val envelope = Seq(s"min_$keyCol", s"max_$keyCol")
+    val hasEnvelope = readList(root, ver) match {
+      case Some(rows) => rows.forall(r => envelope.forall(partColsFor(spark, root, r.mpath).contains))
+      case None => envelope.forall(manifest(spark, root, ver).columns.contains)
+    }
     val (hot, cold) =
-      if (man.columns.contains(s"min_$keyCol") && man.columns.contains(s"max_$keyCol")) {
+      if (hasEnvelope) {
+        val man = manifest(spark, root, ver)
         val deltaKeys = deltas.select(col(keyCol)).distinct()
         val hit = deltaKeys.join(
             broadcast(man.select(col("file"), col(s"min_$keyCol"), col(s"max_$keyCol"))),

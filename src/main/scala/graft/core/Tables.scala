@@ -129,7 +129,8 @@ object Tables {
   * whole-stage codegen ON (deliberately inverting the reference's
   * `spark.sql.codegen.wholeStage=false`,
   * TwitterDatasetTrendingHashtag.java:58), shuffle partitions sized for
-  * the local test harness (on a real cluster this is AQE-advised).
+  * the local test harness (on a real cluster this is AQE-advised), and
+  * `file:` paths through [[GraftLocalFileSystem]] / [[GraftLocalFs]].
   */
 object GraftSession {
   def build(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
@@ -163,6 +164,12 @@ object GraftSession {
       .config("spark.sql.optimizer.excludedRules",
               "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.ui.enabled", "false")
+      // `file:` through the fork-free local filesystem, for FileSystem
+      // and FileContext users alike. Set before the SparkContext
+      // exists: Hadoop caches the first `file:` FileSystem per user
+      // whatever the conf of a later lookup.
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

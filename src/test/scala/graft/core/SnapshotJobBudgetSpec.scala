@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.TestSpark
 import graft.streaming.StreamingPipelines
@@ -18,9 +18,11 @@ import graft.streaming.StreamingPipelines
   * table launches no Spark job (fresh entries from footers, the part
   * written on the driver), and an update-mode `mergeKeys` sink epoch
   * that does not fold launches only the jobs that move rows — the
-  * micro-batch's own aggregate-and-write and the `_seq` delta rewrite.
-  * Plus the corrupt-file semantics of the footer path, which must match
-  * the distributed count it replaced. */
+  * micro-batch's own aggregate-and-write and the `_seq` delta rewrite;
+  * one that folds adds the fold's hot-file read and rewrite. Its
+  * SUBPROCESS budget is zero: no `chmod`/`readlink` process for any file
+  * the live path writes. Plus the corrupt-file semantics of the footer
+  * path, which must match the distributed count it replaced. */
 class SnapshotJobBudgetSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -166,26 +168,39 @@ class SnapshotJobBudgetSpec extends AnyFunSuite {
     } finally IndexStore.deleteRecursively(root)
   }
 
-  test("an update-mode mergeKeys sink data epoch that does not fold launches at most 2 jobs; readAtCdc equals the batch trending counts") {
+  private val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+
+  /** Tweet batch `i` (40 tweets, 20 s of event time after batch i-1) as
+    * one parquet file under `src`; its root-relative name. */
+  private def tweetFile(src: Path, i: Int): String = {
     import spark.implicits._
+    val rows = (0 until 40).map { j =>
+      (new java.sql.Timestamp(t0 + i * 20000L + j * 500L),
+        s"tweet $i.$j #tag${j % 5} #b${(i + j) % 3}")
+    }
+    writeFile(src, f"data/b$i%03d", rows.toDF("timestamp", "text"))
+  }
+
+  private def append(src: Path, i: Int): Unit =
+    SnapshotStore.commitAppend(spark, src, Seq(tweetFile(src, i)))
+
+  /** The live path: a `graft-snapshot` stream over a tweet table through
+    * `trendingHashtagCounts` into an update-mode `mergeKeys` sink. `body`
+    * runs once batches 0 and 1 have been streamed (the cold first epoch
+    * and a warm one) and gets the query, the source root, the sink root
+    * and a counter of one micro-batch's Spark jobs. Afterwards the sink,
+    * resolved, must equal the batch trending counts at HEAD. The sink
+    * folds on its 4th delta: batches 0-2 stay below the fold policy. */
+  private def withTrendingSink(body: (StreamingQuery, Path, Path, Long => Int) => Unit): Unit = {
     val src = Files.createTempDirectory("budget-src")
     val sinkParent = Files.createTempDirectory("budget-sink")
     val sink = sinkParent.resolve("tbl").toAbsolutePath.normalize
     val ckpt = Files.createTempDirectory("budget-ckpt")
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    def batch(i: Int): Unit = {
-      val rows = (0 until 40).map { j =>
-        (new java.sql.Timestamp(t0 + i * 20000L + j * 500L),
-          s"tweet $i.$j #tag${j % 5} #b${(i + j) % 3}")
-      }
-      val f = writeFile(src, f"data/b$i%03d", rows.toDF("timestamp", "text"))
-      SnapshotStore.commitAppend(spark, src, Seq(f))
-    }
     val ss = spark.newSession()
     ss.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     ss.conf.set("spark.sql.shuffle.partitions", "2")
     val table = s"graft_lake.`$sink`"
-    // jobs of this query only, by micro-batch
+    // jobs by (query, micro-batch)
     val epochJobs = new ConcurrentLinkedQueue[(String, Long)]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
@@ -194,8 +209,9 @@ class SnapshotJobBudgetSpec extends AnyFunSuite {
                b <- Option(j.properties.getProperty("streaming.sql.batchId")))
             epochJobs.add(q -> b.toLong)
     }
+    ss.sparkContext.addSparkListener(listener)
     try {
-      batch(0)
+      append(src, 0)
       ss.sql(s"CREATE TABLE $table (k STRING, window_start TIMESTAMP, hashtag STRING, cnt BIGINT)")
       val tweets = ss.readStream.format("graft-snapshot")
         .option("path", src.toString).load()
@@ -210,23 +226,12 @@ class SnapshotJobBudgetSpec extends AnyFunSuite {
         .toTable(table)
       try {
         q.processAllAvailable() // cold first epoch
-        batch(1)
+        append(src, 1)
         q.processAllAvailable()
-        ss.sparkContext.addSparkListener(listener)
-        val before = q.lastProgress.batchId
-        batch(2)
-        q.processAllAvailable()
-        // the data epoch of batch 2: the first micro-batch after `before`
-        // that read rows
-        val dataEpoch = q.recentProgress.filter(p => p.batchId > before && p.numInputRows > 0)
-          .map(_.batchId).min
-        drainJobStarts()
-        val n = epochJobs.asScala.count { case (qid, b) => qid == q.id.toString && b == dataEpoch }
-        val head = SnapshotStore.headVersion(sink).get
-        assert(!SnapshotStore.opTypeOf(sink, head).contains("fold"),
-          "the measured epoch folded — the fixture must stay below the fold policy")
-        assert(n >= 1, s"no job seen for epoch $dataEpoch — listener scoping broke")
-        assert(n <= 2, s"data epoch $dataEpoch launched $n Spark jobs (budget: 2)")
+        body(q, src, sink, { epoch =>
+          drainJobStarts()
+          epochJobs.asScala.count { case (qid, b) => qid == q.id.toString && b == epoch }
+        })
       } finally q.stop()
       // the resolved sink equals the batch answer at HEAD, row for row
       val got = SnapshotStore.readAtCdc(spark, sink, keyCol = "k", orderCols = Nil)
@@ -239,6 +244,103 @@ class SnapshotJobBudgetSpec extends AnyFunSuite {
     } finally {
       ss.sparkContext.removeSparkListener(listener)
       Seq(src, sinkParent, ckpt).foreach(IndexStore.deleteRecursively)
+    }
+  }
+
+  /** The first micro-batch after `before` that read rows. */
+  private def dataEpochAfter(q: StreamingQuery, before: Long): Long =
+    q.recentProgress.filter(p => p.batchId > before && p.numInputRows > 0).map(_.batchId).min
+
+  private def folded(sink: Path): Boolean =
+    SnapshotStore.opTypeOf(sink, SnapshotStore.headVersion(sink).get).contains("fold")
+
+  test("an update-mode mergeKeys sink data epoch that does not fold launches at most 2 jobs; readAtCdc equals the batch trending counts") {
+    withTrendingSink { (q, src, sink, jobsIn) =>
+      val before = q.lastProgress.batchId
+      append(src, 2)
+      q.processAllAvailable()
+      val epoch = dataEpochAfter(q, before)
+      val n = jobsIn(epoch)
+      assert(!folded(sink), "the measured epoch folded — the fixture must stay below the fold policy")
+      assert(n >= 1, s"no job seen for epoch $epoch — listener scoping broke")
+      assert(n <= 2, s"data epoch $epoch launched $n Spark jobs (budget: 2)")
+    }
+  }
+
+  test("a sink epoch that folds launches at most 5 jobs: the fold reads the deltas' schema and the envelope columns from footers; readAtCdc equals the batch trending counts") {
+    withTrendingSink { (q, src, sink, jobsIn) =>
+      append(src, 2)
+      q.processAllAvailable()
+      assert(!folded(sink), "the fixture folded before its 4th delta")
+      val before = q.lastProgress.batchId
+      append(src, 3)
+      q.processAllAvailable()
+      val epoch = dataEpochAfter(q, before)
+      val n = jobsIn(epoch)
+      assert(folded(sink), "the 4th delta did not fold — the fixture must reach the fold policy")
+      // 2 that move the epoch's rows, then the fold's read of the hot
+      // files and its range-partitioned rewrite (a sampling job and the
+      // write)
+      assert(n <= 5, s"fold epoch $epoch launched $n Spark jobs (budget: 5)")
+    }
+  }
+
+  /** The processes this JVM started while `body` ran, from a JFR
+    * `jdk.ProcessStart` recording. */
+  private def processStarts(body: => Unit): Seq[jdk.jfr.consumer.RecordedEvent] = {
+    val out = Files.createTempFile("process-starts", ".jfr")
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.setDestination(out)
+      rec.start()
+      try body finally rec.stop()
+      jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala.toSeq
+    } finally {
+      rec.close()
+      Files.deleteIfExists(out)
+    }
+  }
+
+  /** How many processes started, the first commands and the frames
+    * that started the first one. */
+  private def describe(events: Seq[jdk.jfr.consumer.RecordedEvent]): String =
+    (s"${events.size} process(es):" +: events.take(8).map(_.getString("command")) ++:
+      events.headOption.flatMap(e => Option(e.getStackTrace)).toSeq
+        .flatMap(_.getFrames.asScala.take(16))
+        .map(f => s"  at ${f.getMethod.getType.getName}.${f.getMethod.getName}")).mkString("\n")
+
+  test("the session's Hadoop conf resolves file: to the fork-free local filesystem, for FileSystem and FileContext users") {
+    val local = java.net.URI.create("file:///")
+    Seq(spark.sparkContext.hadoopConfiguration, spark.sessionState.newHadoopConf()).foreach { conf =>
+      val fs = org.apache.hadoop.fs.FileSystem.get(local, conf)
+      assert(fs.isInstanceOf[GraftLocalFileSystem], fs.getClass.getName)
+      val afs = org.apache.hadoop.fs.AbstractFileSystem.get(local, conf)
+      assert(afs.isInstanceOf[GraftLocalFs], afs.getClass.getName)
+    }
+  }
+
+  test("no subprocess on the live path: a commitAppend, a sink data epoch, the following no-data epoch and a foldCdc start no process") {
+    withTrendingSink { (q, src, sink, _) =>
+      val f = tweetFile(src, 2)
+      val before = q.lastProgress.batchId
+      val live = processStarts {
+        SnapshotStore.commitAppend(spark, src, Seq(f))
+        q.processAllAvailable()
+        val epoch = dataEpochAfter(q, before)
+        // the watermark moved: Spark runs a no-data epoch to evict state
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!q.recentProgress.exists(p => p.batchId > epoch && p.numInputRows == 0)) {
+          assert(System.nanoTime() < deadline, s"no no-data epoch followed epoch $epoch")
+          Thread.sleep(50)
+        }
+      }
+      assert(SnapshotStore.filesAt(spark, sink, SnapshotStore.headVersion(sink).get)
+        .exists(SnapshotStore.isCdcDeltaFile), "the fold below needs pending deltas")
+      val fold = processStarts(SnapshotStore.foldCdc(spark, sink, "k", Nil, numFiles = 2))
+      assert(folded(sink))
+      assert(live.isEmpty, s"the live path started ${describe(live)}")
+      assert(fold.isEmpty, s"foldCdc started ${describe(fold)}")
     }
   }
 
