@@ -15,9 +15,11 @@ import scala.collection.concurrent.TrieMap
   *  - freshness: a caller-computed corpus fingerprint is stamped to
   *    `_META` at build and revalidated on every load — an in-place
   *    corpus change rebuilds instead of serving a stale index. The
-  *    fingerprint is (count, id range)-grade by design: cheap enough to
-  *    recompute on EVERY load (no tokenization/scan of payloads on the
-  *    revalidation path). The documented tradeoff: an in-place content
+  *    fingerprint is (count, id range)-grade by design: one column-
+  *    pruned aggregate, no tokenization/scan of payloads, recomputed
+  *    for a file-backed corpus only when its files' metadata changes
+  *    (`SimilarityQueries.corpusFingerprint`). The documented tradeoff:
+  *    an in-place content
   *    edit that preserves row count and id range serves a stale index;
   *    a deployment that mutates corpora in place wants a content-hash
   *    strict mode at the cost of a full scan per validation.

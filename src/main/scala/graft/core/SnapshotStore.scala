@@ -307,7 +307,7 @@ object SnapshotStore {
   // q28k/q28/q28b decomposition). Bounded LRU; evicted entries simply
   // re-read. Deleted parts (vacuum/gcParts) age out — nothing ever
   // reads a deleted part's cache entry because no live list names it.
-  private[core] def lruCache[V](maxEntries: Int) = java.util.Collections.synchronizedMap(
+  private[graft] def lruCache[V](maxEntries: Int) = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[String, V](64, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean =
         size() > maxEntries

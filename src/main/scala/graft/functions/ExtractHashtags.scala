@@ -175,5 +175,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // node, lowered to the band-join assembly inside the operator-
     // optimization fixed point (graft.plans.SimilarityJoin)
     ext.injectOptimizerRule(spark => new graft.plans.ExpandSimilarityJoin(spark))
+    // small global sorts at one range partition: no range-sampling job
+    // (graft.plans.SmallSortPartitioning)
+    ext.injectQueryStagePrepRule(_ => graft.plans.SmallSortPartitioning)
   }
 }

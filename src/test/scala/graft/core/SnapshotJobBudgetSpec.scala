@@ -1,7 +1,7 @@
 package graft.core
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
@@ -11,6 +11,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.SparkJobs.{drainJobStarts, jobsOf}
 import graft.TestSpark
 import graft.streaming.StreamingPipelines
 
@@ -25,47 +26,6 @@ import graft.streaming.StreamingPipelines
   * path, which must match the distributed count it replaced. */
 class SnapshotJobBudgetSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private val SentinelKey = "graft.spec.sentinel"
-
-  /** Block until the listener bus has delivered every job start so
-    * far: a sentinel job is started on this thread, and events reach
-    * the listeners of one bus queue in order, so once its start arrives
-    * every earlier one has too. */
-  private def drainJobStarts(): Unit = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null && tag == j.properties.getProperty(SentinelKey)) seen.countDown()
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setLocalProperty(SentinelKey, tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(SentinelKey, null)
-      assert(seen.await(30, TimeUnit.SECONDS), "the listener bus never delivered the sentinel job")
-    } finally sc.removeSparkListener(l)
-  }
-
-  /** Jobs `body` launches on this thread, counted by a job-group-scoped
-    * listener (parallel suites cannot pollute it). */
-  private def jobsOf[A](group: String)(body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null && group == j.properties.getProperty("spark.jobGroup.id") &&
-            j.properties.getProperty(SentinelKey) == null) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val r = try body finally sc.clearJobGroup()
-      drainJobStarts()
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Write `df` as one parquet file under `root/<dir>`; its root-relative name. */
   private def writeFile(root: Path, dir: String, df: DataFrame): String = {
