@@ -227,11 +227,17 @@ object SnapshotStreamSource {
     * bounded-reads and O(delta)-planning pins assert against. Ring-
     * capped so a long-lived stream never accumulates driver memory. */
   val planLog = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long, Int, Boolean)]()
+  /** Per-batch READER-FACTORY log (test seam): (root, startV, endV) per
+    * reader factory a data micro-batch created — each one broadcasts
+    * the session's Hadoop conf. Ring-capped like [[planLog]]. */
+  val factoryLog = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
   private val PlanLogCap = 1024
-  private[sources] def logPlan(e: (String, Long, Long, Int, Boolean)): Unit = {
-    planLog.add(e)
-    while (planLog.size > PlanLogCap) planLog.poll()
+  private def capped[E](log: java.util.Queue[E], e: E): Unit = {
+    log.add(e)
+    while (log.size > PlanLogCap) log.poll()
   }
+  private[sources] def logPlan(e: (String, Long, Long, Int, Boolean)): Unit = capped(planLog, e)
+  private[sources] def logFactory(e: (String, Long, Long)): Unit = capped(factoryLog, e)
 }
 
 private[sources] class SnapshotStreamTable(root: Path, schema0: StructType,
@@ -321,14 +327,40 @@ private[graft] class SnapshotMicroBatchStream(root: Path, schema: StructType,
     }
   }
 
-  // the per-batch inner parquet scan, built by planInputPartitions and
-  // consumed by the createReaderFactory call that follows it (the
-  // MicroBatchExecution driver-side sequence)
-  @volatile private var lastBatch: Option[Batch] = None
+  /** One planned interval: its partitions and the reader factory of its
+    * inner parquet scan (None for an empty interval). */
+  private case class Planned(a: Long, b: Long, parts: Array[InputPartition],
+                             factory: Option[PartitionReaderFactory])
+
+  // PLAN ONCE PER INTERVAL: Spark evaluates planInputPartitions(start,
+  // end) and createReaderFactory() on every copy of the batch's
+  // MicroBatchScanExec node — 6 per data trigger — and each plan would
+  // repeat the manifest diff and the parquet scan build, and each
+  // factory broadcast the Hadoop conf. A committed interval is
+  // immutable (so are its schema and rename guards' answers), so the
+  // current interval's plan is kept and served again; only the latest
+  // interval is held, so memory stays bounded. createReaderFactory
+  // follows planInputPartitions (the MicroBatchExecution driver-side
+  // sequence), so it serves the current interval's factory.
+  @volatile private var planned: Option[Planned] = None
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val (a, b) = (start.asInstanceOf[VOffset].v, end.asInstanceOf[VOffset].v)
-    if (b <= a) { lastBatch = None; return Array.empty }
+    planned.filter(p => p.a == a && p.b == b).getOrElse {
+      val batch = planInterval(a, b)
+      val p = Planned(a, b, batch.map(_.planInputPartitions()).getOrElse(Array.empty),
+        batch.map { bt =>
+          SnapshotStreamSource.logFactory((root.toString, a, b))
+          bt.createReaderFactory()
+        })
+      planned = Some(p)
+      p
+    }.parts
+  }
+
+  /** The batch over versions (a, b] — None when it reads no file. */
+  private def planInterval(a: Long, b: Long): Option[Batch] = {
+    if (b <= a) return None
     val spark = SparkSession.active
     // re-asserted PER BATCH, not just at stream-start schema inference
     // (ADVICE r16): a renameColumnMapped committed mid-stream would
@@ -396,12 +428,9 @@ private[graft] class SnapshotMicroBatchStream(root: Path, schema: StructType,
       "delta rows raw / MOR delete keys and DV positions as retraction rows " +
       "for downstream resolution")
     SnapshotStreamSource.logPlan((root.toString, a, b, delta.size, fast.isDefined))
-    if (delta.isEmpty) { lastBatch = None; return Array.empty }
-    val batch =
-      if (cdcFeed) planFeedBatch(spark, a, b, delta)
-      else planPlainBatch(spark, a, b, delta)
-    lastBatch = Some(batch)
-    batch.planInputPartitions()
+    if (delta.isEmpty) None
+    else if (cdcFeed) Some(planFeedBatch(spark, a, b, delta))
+    else Some(planPlainBatch(spark, a, b, delta))
   }
 
   /** The plain (non-feed) per-batch scan: stock DSv2 parquet over
@@ -641,7 +670,7 @@ private[graft] class SnapshotMicroBatchStream(root: Path, schema: StructType,
     }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    lastBatch.map(_.createReaderFactory()).getOrElse(
+    planned.flatMap(_.factory).getOrElse(
       // an empty batch plans no partitions; no reader will be asked for
       new PartitionReaderFactory {
         override def createReader(p: InputPartition) =

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.SnapshotStore
+import graft.core.{IndexStore, SnapshotStore}
 
 /** STREAMING WRITE through the SQL catalog (VERDICT r18 missing #3 —
   * the write-side symmetry of q28l's `readStream.table`):
@@ -55,12 +55,18 @@ import graft.core.SnapshotStore
   * append-mode epoch's commit launches 0 Spark jobs — the
   * [[graft.core.SnapshotStore.commitAppend]] entries come from the
   * files' footers and its manifest part is written on the driver. An
-  * update-mode epoch that does not fold launches 2 jobs in all, both of
-  * which move rows: the micro-batch's own aggregate-and-write and the
-  * `_seq` rewrite of the CDC delta. The staging read-back is planned
-  * under the known write schema, and the pending-file guard and the
-  * fold policy decide from the part summaries the commits wrote through
-  * to the part cache — no metadata job.
+  * update-mode epoch that does not fold launches 1 job in all, the
+  * micro-batch's own aggregate-and-write: its tasks already write the
+  * CDC delta's schema, with `_seq` = HEAD + 1 read when the writer
+  * factory was made, so the commit moves the task files into the
+  * delta's attempt dir ([[graft.core.SnapshotStore.commitCdcDeltaFiles]])
+  * instead of rewriting them. Only when another writer moved HEAD in
+  * between does the commit read the files back (under the known write
+  * schema, no inference job) and re-stamp them through
+  * [[graft.core.SnapshotStore.commitCdcDelta]], one more job. The
+  * pending-file guard and the fold policy decide from the part
+  * summaries the commits wrote through to the part cache — no metadata
+  * job.
   *
   * Tasks write parquet through Spark's OWN write path —
   * [[ParquetFileFormat.prepareWrite]]'s [[OutputWriterFactory]] under
@@ -119,15 +125,25 @@ private[sql] class SnapshotStreamingWrite(root: Path, tableName: String,
     val dataSchema =
       if (partitionCols.isEmpty) writeSchema
       else StructType(writeSchema.filterNot(f => partitionCols.contains(f.name)))
+    // UPDATE mode: the task files ARE the epoch's CDC delta — every
+    // row carries `_seq` = the version a commit on today's HEAD lands;
+    // commit checks the stamp against HEAD again
+    val seq = mergeKey.map(_ => SnapshotStore.headVersion(root).getOrElse(0L) + 1)
+    val fileSchema =
+      if (seq.isEmpty) dataSchema else SnapshotStore.cdcDeltaSchema(dataSchema)
     val job = org.apache.hadoop.mapreduce.Job.getInstance(
       spark.sessionState.newHadoopConf())
     val owf = new ParquetFileFormat()
-      .prepareWrite(spark, job, Map.empty, dataSchema)
+      .prepareWrite(spark, job, Map.empty, fileSchema)
     new EpochParquetWriterFactory(rootStr, queryTok, writeSchema,
       partitionCols, owf,
       new SerializableConfiguration(job.getConfiguration),
-      spark.sessionState.conf.sessionLocalTimeZone)
+      spark.sessionState.conf.sessionLocalTimeZone, fileSchema, seq)
   }
+
+  /** The epoch's attempt dir on a flat table (`data/stream_<q>_e<n>/`). */
+  private def stagingDir(epochId: Long): Path =
+    root.resolve(s"data/stream_${queryTok}_e$epochId")
 
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
@@ -154,8 +170,10 @@ private[sql] class SnapshotStreamingWrite(root: Path, tableName: String,
     val hw = head.flatMap(v => SnapshotStore.streamEpochOf(root, v, queryTok))
     if (hw.exists(_ >= epochId)) {
       // failure-replayed epoch: drop the duplicate files, keep the
-      // committed content
+      // committed content (an update-mode attempt dir holds nothing
+      // else; an append-mode one holds the committed files)
       fresh.foreach(f => Files.deleteIfExists(root.resolve(f)))
+      if (mergeKey.nonEmpty) IndexStore.deleteRecursively(stagingDir(epochId))
       return
     }
     mergeKey match {
@@ -167,17 +185,33 @@ private[sql] class SnapshotStreamingWrite(root: Path, tableName: String,
         // (commitCdcDelta/readAtCdc over (mergeOrderCols, _seq): later
         // epochs beat earlier ones, arrival-order-independent — the
         // q26r discipline). The epoch stamp rides the SAME commit, so
-        // replay detection and content land atomically. The staging
-        // files are superseded by the delta file and dropped; a crash
-        // between commit and cleanup strays unreferenced files no
-        // manifest names — invisible to every reader. The staging
-        // files are read under the schema they were written with (an
-        // update-mode table is flat): no schema-inference job.
-        val delta = spark.read.schema(writeSchema).parquet(
-          fresh.map(f => root.resolve(f).toString): _*)
-        SnapshotStore.commitCdcDelta(spark, root, delta, k,
-          streamEpoch = Some(queryTok -> epochId))
-        fresh.foreach(f => Files.deleteIfExists(root.resolve(f)))
+        // replay detection and content land atomically. While HEAD is
+        // still the base the tasks stamped `_seq` for, their files are
+        // the delta and move into its attempt dir. Otherwise they are
+        // read back under the schema they were written with (an
+        // update-mode table is flat: no schema-inference job) and
+        // re-stamped by commitCdcDelta, so `_seq` always equals the
+        // committed version; the staging files are then superseded and
+        // dropped. A crash between commit and cleanup strays
+        // unreferenced files no manifest names — invisible to every
+        // reader.
+        val stamps = messages.toSeq.collect {
+          case m: EpochFilesMessage if m.files.nonEmpty => m.seq
+        }.distinct
+        val epoch = Some(queryTok -> epochId)
+        try head match {
+          case Some(h) if stamps == Seq(Some(h + 1)) =>
+            SnapshotStore.commitCdcDeltaFiles(spark, root, fresh,
+              expectedBase = h, streamEpoch = epoch)
+          case _ =>
+            val delta = spark.read.schema(writeSchema).parquet(
+              fresh.map(f => root.resolve(f).toString): _*)
+            SnapshotStore.commitCdcDelta(spark, root, delta, k, streamEpoch = epoch)
+        } finally {
+          // whichever path ran (or failed): the attempt dir holds only
+          // staging files and their `.crc` sidecars
+          IndexStore.deleteRecursively(stagingDir(epochId))
+        }
         // compaction UNDER POLICY, the Hudi MOR-compactor discipline:
         // metadata-only decision per epoch, amortized rewrites — the
         // read-side argmax pool stays a bounded fraction of the table
@@ -220,15 +254,20 @@ private[sql] class SnapshotStreamingWrite(root: Path, tableName: String,
     val committed = SnapshotStore.headVersion(root)
       .flatMap(v => SnapshotStore.streamEpochOf(root, v, queryTok))
       .exists(_ >= epochId)
-    if (!committed)
+    if (!committed) {
       messages.toSeq.collect { case m: EpochFilesMessage => m.files }.flatten
         .foreach(f => Files.deleteIfExists(root.resolve(f)))
+      // an uncommitted epoch's flat attempt dir holds only its own
+      // files and their `.crc` sidecars
+      IndexStore.deleteRecursively(stagingDir(epochId))
+    }
   }
 }
 
 /** One epoch's file names, table-root-relative (names only — never
-  * rows — cross the driver). */
-private[sql] case class EpochFilesMessage(files: Seq[String])
+  * rows — cross the driver), and, in update mode, the `_seq` every row
+  * of them carries. */
+private[sql] case class EpochFilesMessage(files: Seq[String], seq: Option[Long] = None)
     extends WriterCommitMessage
 
 /** Task-side parquet writer: Spark's own [[OutputWriterFactory]] (the
@@ -246,20 +285,26 @@ private[sql] case class EpochFilesMessage(files: Seq[String])
   * partitioning discipline — a high-cardinality stream adds
   * `.repartition(partitionCols)` upstream (the same repartition-first
   * rule every batch partitioned write on this seam keeps), which
-  * collapses it to ~1 writer per task. */
+  * collapses it to ~1 writer per task.
+  *
+  * Files are written under `fileSchema`: the data half, or in UPDATE
+  * mode (`seq` set, flat tables) the row with the `_seq` column
+  * appended — the epoch's files are then its CDC delta as they land. */
 private[sql] class EpochParquetWriterFactory(rootStr: String,
                                              queryTok: String,
                                              schema: StructType,
                                              partitionCols: Seq[String],
                                              owf: OutputWriterFactory,
                                              conf: SerializableConfiguration,
-                                             timeZoneId: String)
+                                             timeZoneId: String,
+                                             fileSchema: StructType,
+                                             seq: Option[Long])
     extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection}
+      import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow, JoinedRow, UnsafeProjection}
       import org.apache.spark.sql.execution.datasources.OutputWriter
 
       private val tok = s"stream_${queryTok}_e$epochId"
@@ -279,11 +324,12 @@ private[sql] class EpochParquetWriterFactory(rootStr: String,
       }
       private val dataOrdinals =
         schema.indices.filterNot(partOrdinals.contains)
-      private val dataSchema = StructType(dataOrdinals.map(schema(_)))
       private val dataProj =
         if (partitionCols.isEmpty) null
         else UnsafeProjection.create(dataOrdinals.map(i =>
           BoundReference(i, schema(i).dataType, schema(i).nullable)))
+      // update mode: the row, then its `_seq` stamp
+      private val stamped = seq.map(s => (new JoinedRow, new GenericInternalRow(Array[Any](s))))
 
       private val writers =
         scala.collection.mutable.LinkedHashMap.empty[String, (OutputWriter, String)]
@@ -296,8 +342,7 @@ private[sql] class EpochParquetWriterFactory(rootStr: String,
             owf.getFileExtension(ctx)
           val p = Paths.get(rootStr).resolve(rel)
           Files.createDirectories(p.getParent)
-          (owf.newInstance(p.toString,
-            if (partitionCols.isEmpty) schema else dataSchema, ctx), rel)
+          (owf.newInstance(p.toString, fileSchema, ctx), rel)
         })._1
 
       private def dirOf(row: InternalRow): String =
@@ -315,11 +360,12 @@ private[sql] class EpochParquetWriterFactory(rootStr: String,
 
       override def write(row: InternalRow): Unit = {
         val w = writerFor(dirOf(row))
-        w.write(if (dataProj == null) row else dataProj(row))
+        val data = if (dataProj == null) row else dataProj(row)
+        w.write(stamped.fold(data) { case (j, s) => j(data, s) })
       }
       override def commit(): WriterCommitMessage = {
         writers.values.foreach(_._1.close())
-        EpochFilesMessage(writers.values.map(_._2).toSeq)
+        EpochFilesMessage(writers.values.map(_._2).toSeq, seq)
       }
       override def abort(): Unit = writers.values.foreach { case (w, rel) =>
         try w.close() catch { case _: Exception => () }

@@ -16,6 +16,11 @@ import org.apache.spark.sql.types.StructType
   * commit's own size); whole-table schema inference keeps the
   * distributed path. */
 object GraftParquetShim {
+  /** `schema` with every field, element and value nullable — the schema
+    * a file-source read under a user-specified schema yields (Spark's
+    * own `asNullable`, package-private). */
+  def asNullable(schema: StructType): StructType = schema.asNullable
+
   def footerMergedSchema(spark: SparkSession,
                          paths: Seq[String]): Option[StructType] = {
     if (paths.isEmpty) return None

@@ -65,8 +65,7 @@ class SnapshotStreamSpec extends AnyFunSuite {
           Thread.sleep(500) // listener-bus drain (private API in 4.x)
         } finally spark.sparkContext.removeSparkListener(listener)
         // the 2 delta rows plus a handful of one-row manifest-part
-        // reads (Spark re-plans each batch several times); a standing-
-        // table re-read would add the 1000 wide rows
+        // reads; a standing-table re-read would add the 1000 wide rows
         assert(recordsRead.get() < 100L,
           s"the (2,3] batch must read only the delta, read ${recordsRead.get()}")
         assert(spark.table("snapstream_t1").count() == 1005L)
@@ -129,6 +128,7 @@ class SnapshotStreamSpec extends AnyFunSuite {
         SnapshotStore.commitAppend(spark, root, filesOf(root, i))
       }
       SnapshotStreamSource.planLog.clear()
+      SnapshotStreamSource.factoryLog.clear()
       val q = spark.readStream
         .format("graft-snapshot")
         .option("path", root.toString)
@@ -144,11 +144,20 @@ class SnapshotStreamSpec extends AnyFunSuite {
         val plans = SnapshotStreamSource.planLog.asScala
           .filter(_._1 == root.toString).toSeq.sortBy(_._2)
         // the backlog drained as FOUR one-version batches, not one big
-        // one (distinct: Spark re-plans each batch several times)
+        // one
         assert(plans.map(p => (p._2, p._3)).distinct ==
           Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L)),
           s"expected one version per batch, got $plans")
         assert(plans.forall(_._4 == 1), s"each batch must plan 1 file: $plans")
+        // PLANNED ONCE: Spark asks every copy of a batch's scan node for
+        // its partitions and reader factory; each data micro-batch
+        // diffs its interval once and broadcasts one reader factory
+        assert(plans.size == 4, s"each interval must be planned once: $plans")
+        val factories = SnapshotStreamSource.factoryLog.asScala
+          .filter(_._1 == root.toString).toSeq.sortBy(_._2)
+        assert(factories.map(f => (f._2, f._3)) ==
+          Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L)),
+          s"expected one reader factory per data micro-batch, got $factories")
       } finally q.stop()
     } finally {
       IndexStore.deleteRecursively(root)
