@@ -86,7 +86,9 @@ object IndexStore {
   def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+      val walked = Files.walk(p)
+      val paths = try walked.iterator().asScala.toSeq finally walked.close()
+      paths.reverse.foreach(Files.deleteIfExists(_))
     }
 
   /** True iff the tree under `p` contains at least one parquet data

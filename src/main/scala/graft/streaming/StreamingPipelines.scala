@@ -1,14 +1,14 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
-import java.nio.file.attribute.FileTime
 import java.sql.Timestamp
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, ForeachWriter, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.core.Tables
 import graft.functions.TagCount
@@ -69,18 +69,6 @@ object StreamingPipelines {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
     "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" -> "true",
     "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" -> "512")
-
-  /** Set the RocksDB state-store provider (+ its tuning confs) for the
-    * duration of `body`, restoring the previous conf after. */
-  private def withRocksDB[T](spark: SparkSession)(body: => T): T = {
-    val saved = RocksDBConfs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    RocksDBConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
 
   /** Unload every loaded state-store provider (closing RocksDB native
     * instances) once a replay has drained. Spark's maintenance thread
@@ -166,11 +154,6 @@ object StreamingPipelines {
 
   // ---- replay input ----------------------------------------------------
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    }
-
   /** The watermark-flush sentinel: one synthetic event, 1 hour past the
     * corpus max event time, replayed LAST. Its only job is to push the
     * final watermark past every real session/window end so APPEND-mode
@@ -194,56 +177,44 @@ object StreamingPipelines {
     * and re-chunks if the source changed in place, instead of silently
     * replaying stale data. */
   def chunkEvents(spark: SparkSession, dir: String): Path = {
-    val root = Paths.get(sys.props("java.io.tmpdir"), "graft-stream",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"))
-    val chunkDir = root.resolve("chunks")
-    val doneFile = chunkDir.resolve("_DONE")
     val events = Tables.load(spark, dir, "events")
-    val fp = {
-      val r = events.agg(count(lit(1)), min(col("event_id")), max(col("event_id"))).head()
-      // v2: layout includes the sentinel chunk — older dirs rebuild
-      s"v2:${r.getLong(0)}:${r.get(1)}:${r.get(2)}"
-    }
-    if (Files.exists(doneFile) &&
-        new String(Files.readAllBytes(doneFile), "UTF-8").trim == fp) return chunkDir
-    deleteRecursively(root)
-    Files.createDirectories(chunkDir)
-    val staging = root.resolve("staging").toString
-    events
-      .withColumn("day", date_format(col("ts"), "yyyyMMdd"))
-      .repartition(col("day"))
-      .write.mode("overwrite").partitionBy("day").parquet(staging)
-    val dayDirs = listDir(Paths.get(staging))
-      .filter(p => p.getFileName.toString.startsWith("day="))
-      .sortBy(_.getFileName.toString)
-    dayDirs.zipWithIndex.foreach { case (dayDir, i) =>
-      val parts = listDir(dayDir)
-        .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString)
-      parts.zipWithIndex.foreach { case (part, j) =>
-        val dst = chunkDir.resolve(f"chunk_$i%03d_$j%02d.parquet")
-        Files.move(part, dst)
-        Files.setLastModifiedTime(dst, FileTime.fromMillis(1700000000000L + i * 1000L))
-      }
-    }
-    // the sentinel chunk: latest mtime + last-sorting name → last trigger
-    val mx = events.agg(max(col("event_id")), max(col("ts"))).head()
-    val sentStaging = root.resolve("sentinel").toString
-    events.sparkSession.range(1).select(
+    // v3: the sentinel is the last staged chunk
+    Replay.stageChunks("graft-stream", dir, "v3", events, "event_id") {
+      val mx = events.agg(max(col("event_id")), max(col("ts"))).head()
+      val sentinel = spark.range(1).select(
         lit(mx.getLong(0) + 1).as("event_id"),
         lit(new Timestamp(mx.getTimestamp(1).getTime + 3600L * 1000)).as("ts"),
         lit(-1L).as("user_id"),
         lit(SentinelType).as("event_type"),
         lit(0.0).as("value"),
         lit("").as("props"))
-      .coalesce(1).write.mode("overwrite").parquet(sentStaging)
-    val sentPart = listDir(Paths.get(sentStaging))
-      .filter(_.getFileName.toString.endsWith(".parquet")).head
-    val sentDst = chunkDir.resolve("chunk_999_00.parquet")
-    Files.move(sentPart, sentDst)
-    Files.setLastModifiedTime(sentDst, FileTime.fromMillis(1700000000000L + 999000L))
-    Files.write(doneFile, fp.getBytes("UTF-8"))
-    chunkDir
+      // chunk = the day; the sentinel's key sorts after every day
+      events.withColumn("chunk", date_format(col("ts"), "yyyyMMdd"))
+        .unionByName(sentinel.withColumn("chunk", lit("99999999")))
+    }
   }
+
+  /** A file stream over a staged chunk dir, one chunk file per
+    * micro-batch. */
+  def chunkStream(spark: SparkSession, schema: StructType, chunkDir: Path): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(chunkDir.toString)
+
+  /** The chunked event replay with the flush sentinel dropped: the
+    * stream every pipeline over real events reads. */
+  def realEvents(spark: SparkSession, dir: String, filesPerTrigger: Int): DataFrame =
+    eventStream(spark, SourceConfig(path = chunkEvents(spark, dir).toString,
+        filesPerTrigger = filesPerTrigger))
+      .where(col("event_type") =!= SentinelType)
+
+  /** Idempotent durable sink: each epoch OVERWRITES its own
+    * `batch_id=N` dir, so a failure-replayed epoch replaces itself
+    * instead of duplicating rows (exactly-once at rest on top of the
+    * source's replayable offsets) — the portable InfluxDB stand-in
+    * (S:242-248). No driver round-trip. */
+  def epochSink(out: String): (DataFrame, Long) => Unit =
+    (batch, batchId) => batch.write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
 
   // ---- source seam -----------------------------------------------------
 
@@ -323,8 +294,6 @@ object StreamingPipelines {
     import spark.implicits._
     val sink = new SinkState
     val chunkDir = chunkEvents(spark, dir)
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
-
     // Streaming state here is tiny per trigger (≤ a few thousand window
     // rows); 32 state-store partitions would mean N queries × triggers
     // × 32 near-empty state tasks of pure overhead. Each state
@@ -334,8 +303,7 @@ object StreamingPipelines {
     // state volume, not cores.
     // (The partition count is baked into each query's checkpoint at
     // first start, so set it before start() and restore after.)
-    val savedShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    //
     // State backend SIZED TO THE STATE (VERDICT r10 next #7): this
     // replay's stores hold a few thousand window/dedup rows per query —
     // the regime where the default on-heap HDFSBackedStateStore commits
@@ -347,529 +315,470 @@ object StreamingPipelines {
     // `transformWithState` pipeline (Spark requires it there) and is a
     // one-conf deployment knob when real state outgrows the heap; the
     // provider is per-query-start, so the two coexist on one session.
-    val savedProvider = RocksDBConfs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+    Replay.withConfs(spark, Map("spark.sql.shuffle.partitions" -> "2",
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")) {
+      Replay.withCheckpoint(None) { ckpt =>
+        // every query started so far: stopped in `finally` if a later start
+        // (or the await) throws, so a failed replay leaves none running
+        val started = scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
+        def run[T](name: String, mode: String, stream: Dataset[T])
+                  (to: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery = {
+          val q = Replay.start(stream, mode, s"$ckpt/$name")(to)
+          started += q
+          q
+        }
+        val runId = java.util.UUID.randomUUID().toString
+        val dedupWmName = s"graft_dedupwm_${java.util.UUID.randomUUID()}"
+        val dedupWmRemovedAcc = new java.util.concurrent.atomic.AtomicLong(0L)
+        val dedupWmListener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+          import org.apache.spark.sql.streaming.StreamingQueryListener._
+          override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+          override def onQueryProgress(e: QueryProgressEvent): Unit =
+            if (e.progress.name == dedupWmName)
+              dedupWmRemovedAcc.addAndGet(e.progress.stateOperators.map(_.numRowsRemoved).sum)
+          override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+        }
+        WriterRegistry.queues.put(runId, sink.runningLog)
+        spark.streams.addListener(dedupWmListener)
+        try {
+          def source: DataFrame = eventStream(spark,
+            SourceConfig(path = chunkDir.toString, filesPerTrigger = filesPerTrigger))
+          // real events only — every pipeline aggregating over the corpus
+          // drops the watermark-flush sentinel before it can count; only the
+          // session query (append mode) lets it through its watermark node
+          def data: DataFrame = source.where(col("event_type") =!= SentinelType)
 
-    def source: DataFrame = eventStream(spark,
-      SourceConfig(path = chunkDir.toString, filesPerTrigger = filesPerTrigger))
-    // real events only — every pipeline aggregating over the corpus
-    // drops the watermark-flush sentinel before it can count; only the
-    // session query (append mode) lets it through its watermark node
-    def data: DataFrame = source.where(col("event_type") =!= SentinelType)
+          sink.tumblingSinkDir = Files.createTempDirectory("graft-out-tumbling").toString
+          sink.slidingSinkDir  = Files.createTempDirectory("graft-out-sliding").toString
+          sink.perTypeSinkDir  = Files.createTempDirectory("graft-out-pertype").toString
+          sink.top1SinkDir     = Files.createTempDirectory("graft-out-top1").toString
+          sink.joinSinkDir     = Files.createTempDirectory("graft-out-join").toString
+          sink.leftJoinSinkDir = Files.createTempDirectory("graft-out-leftjoin").toString
+          sink.dedupSinkDir    = Files.createTempDirectory("graft-out-dedup").toString
+          sink.dedupWmSinkDir  = Files.createTempDirectory("graft-out-dedupwm").toString
+          sink.enrichSinkDir   = Files.createTempDirectory("graft-out-enrich").toString
+          sink.sessionSinkDir  = Files.createTempDirectory("graft-out-session").toString
+          sink.cdcSnapDir      = Files.createTempDirectory("graft-out-cdc").toString
+          sink.cdcBucketDir    = Files.createTempDirectory("graft-out-cdcb").toString
+          sink.mvDir           = Files.createTempDirectory("graft-out-mv").toString
 
-    /** Idempotent durable sink: each epoch OVERWRITES its own
-      * `batch_id=N` dir, so a failure-replayed epoch replaces itself
-      * instead of duplicating rows (exactly-once at rest on top of the
-      * source's replayable offsets) — the portable InfluxDB stand-in
-      * (S:242-248). No driver round-trip. */
-    def epochSink(out: String): (DataFrame, Long) => Unit =
-      (batch, batchId) => batch.write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+          // O12 — tumbling 1-minute count, update mode.
+          run("tumbling", "update", data
+            .withWatermark("ts", "300 seconds")
+            .groupBy(window(col("ts"), "1 minute"))
+            .agg(count(lit(1)).as("n_events"))
+            .select(col("window.start").as("window_start"), col("n_events")))(
+            _.foreachBatch(epochSink(sink.tumblingSinkDir)))
 
-    sink.tumblingSinkDir = Files.createTempDirectory("graft-out-tumbling").toString
-    sink.slidingSinkDir  = Files.createTempDirectory("graft-out-sliding").toString
-    sink.perTypeSinkDir  = Files.createTempDirectory("graft-out-pertype").toString
-    sink.top1SinkDir     = Files.createTempDirectory("graft-out-top1").toString
-    sink.joinSinkDir     = Files.createTempDirectory("graft-out-join").toString
-    sink.leftJoinSinkDir = Files.createTempDirectory("graft-out-leftjoin").toString
-    sink.dedupSinkDir    = Files.createTempDirectory("graft-out-dedup").toString
-    sink.dedupWmSinkDir  = Files.createTempDirectory("graft-out-dedupwm").toString
-    sink.enrichSinkDir   = Files.createTempDirectory("graft-out-enrich").toString
-    sink.sessionSinkDir  = Files.createTempDirectory("graft-out-session").toString
-    sink.cdcSnapDir      = Files.createTempDirectory("graft-out-cdc").toString
-    sink.cdcBucketDir    = Files.createTempDirectory("graft-out-cdcb").toString
-    sink.mvDir           = Files.createTempDirectory("graft-out-mv").toString
+          // O9 — sliding event-time window (the reference's trending window
+          // shape, 30s/5s at S:80, re-parameterized 5m/1m for the data's
+          // spread): each event lands in window/slide = 5 overlapping windows
+          run("sliding", "update", data
+            .withWatermark("ts", "300 seconds")
+            .groupBy(window(col("ts"), "5 minutes", "1 minute"))
+            .agg(count(lit(1)).as("n_events"))
+            .select(col("window.start").as("window_start"), col("n_events")))(
+            _.foreachBatch(epochSink(sink.slidingSinkDir)))
 
-    // O12 — tumbling 1-minute count, update mode.
-    val tumbling = data
-      .withWatermark("ts", "300 seconds")
-      .groupBy(window(col("ts"), "1 minute"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col("n_events"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", s"$ckpt/tumbling")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(epochSink(sink.tumblingSinkDir)).start()
+          // O11 input — per-(window, type) counts; q20b derives top-1 from
+          // the drained sink at read time (the reference charts the sink,
+          // S:237-263)
+          run("pertype", "update", data
+            .withWatermark("ts", "300 seconds")
+            .groupBy(window(col("ts"), "1 minute"), col("event_type"))
+            .agg(count(lit(1)).as("cnt"))
+            .select(col("window.start").as("window_start"), col("event_type"), col("cnt")))(
+            _.foreachBatch(epochSink(sink.perTypeSinkDir)))
 
-    // O9 — sliding event-time window (the reference's trending window
-    // shape, 30s/5s at S:80, re-parameterized 5m/1m for the data's
-    // spread): each event lands in window/slide = 5 overlapping windows
-    val sliding = data
-      .withWatermark("ts", "300 seconds")
-      .groupBy(window(col("ts"), "5 minutes", "1 minute"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col("n_events"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", s"$ckpt/sliding")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(epochSink(sink.slidingSinkDir)).start()
+          // O11 proper — the trending argmax UDAF applied IN-STREAM (S:81):
+          // the typed Aggregator's tag→count buffer lives in the state store
+          // per window, merged across triggers; update mode re-emits a
+          // window's current argmax each trigger and latest-epoch-wins at
+          // read time yields the final answer (q20h; oracle = batch q7).
+          val argmax = udaf(new graft.functions.TrendingArgMax, Encoders.product[TagCount])
+          run("top1", "update", data
+            .withWatermark("ts", "300 seconds")
+            .groupBy(window(col("ts"), "1 minute"))
+            .agg(argmax(col("event_type"), lit(1L)).as("m"))
+            .select(col("window.start").as("window_start"),
+                    col("m.top_type").as("top_type"), col("m.cnt").as("cnt")))(
+            _.foreachBatch(epochSink(sink.top1SinkDir)))
 
-    // O11 input — per-(window, type) counts; q20b derives top-1 from
-    // the drained sink at read time (the reference charts the sink,
-    // S:237-263)
-    val perType = data
-      .withWatermark("ts", "300 seconds")
-      .groupBy(window(col("ts"), "1 minute"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("cnt"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", s"$ckpt/pertype")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(epochSink(sink.perTypeSinkDir)).start()
+          // O13 — global stateful running count (constant key, S:99), state =
+          // CountInfo, output stamped with the current watermark (S:473-484).
+          // The single-key funnel is the deliberate parity demo; the sharded
+          // twin below is the scale-correct variant. Output is ONE row per
+          // trigger — the bounded case where a ForeachWriter (O17) is the
+          // right sink.
+          val updateFn: (String, Iterator[Event], GroupState[CountInfo]) => CountUpdate =
+            (_, events, state) => {
+              val prev = state.getOption.map(_.count).getOrElse(0L)
+              val next = CountInfo(prev + events.size)
+              state.update(next)
+              CountUpdate(next.count, new Timestamp(state.getCurrentWatermarkMs()))
+            }
+          run("running", "update", data.as[Event]
+            .withWatermark("ts", "300 seconds")
+            .groupByKey(_ => "count")
+            .mapGroupsWithState(GroupStateTimeout.NoTimeout)(updateFn))(
+            _.foreach(new RunningCountWriter(runId)))
 
-    // O11 proper — the trending argmax UDAF applied IN-STREAM (S:81):
-    // the typed Aggregator's tag→count buffer lives in the state store
-    // per window, merged across triggers; update mode re-emits a
-    // window's current argmax each trigger and latest-epoch-wins at
-    // read time yields the final answer (q20h; oracle = batch q7).
-    val argmax = udaf(new graft.functions.TrendingArgMax, Encoders.product[TagCount])
-    val top1 = data
-      .withWatermark("ts", "300 seconds")
-      .groupBy(window(col("ts"), "1 minute"))
-      .agg(argmax(col("event_type"), lit(1L)).as("m"))
-      .select(col("window.start").as("window_start"),
-              col("m.top_type").as("top_type"), col("m.cnt").as("cnt"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", s"$ckpt/top1")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(epochSink(sink.top1SinkDir)).start()
+          // SURVEY §7 hard part (b): the scale-correct running count — state
+          // sharded over RunningCountShards keys (hash of user_id), each
+          // shard a partial count in mapGroupsWithState; every trigger emits
+          // only changed (shard, partial) rows (bounded at shards
+          // rows/trigger, hence the driver map is fine). The global answer is
+          // the SUM of final partials — computed at read time, never funneled
+          // through one task (q20g).
+          val shardFn: (Int, Iterator[Event], GroupState[CountInfo]) => (Int, Long) =
+            (shard, events, state) => {
+              val next = CountInfo(state.getOption.map(_.count).getOrElse(0L) + events.size)
+              state.update(next)
+              (shard, next.count)
+            }
+          run("sharded", "update", data.as[Event]
+            .groupByKey(e => math.floorMod(e.user_id, RunningCountShards.toLong).toInt)
+            .mapGroupsWithState(GroupStateTimeout.NoTimeout)(shardFn))(
+            _.foreachBatch { (batch: Dataset[(Int, Long)], _: Long) =>
+              batch.collect().foreach { case (s, c) => sink.shardPartials.put(s, c) }
+            })
 
-    // O13 — global stateful running count (constant key, S:99), state =
-    // CountInfo, output stamped with the current watermark (S:473-484).
-    // The single-key funnel is the deliberate parity demo; the sharded
-    // twin below is the scale-correct variant. Output is ONE row per
-    // trigger — the bounded case where a ForeachWriter (O17) is the
-    // right sink.
-    val updateFn: (String, Iterator[Event], GroupState[CountInfo]) => CountUpdate =
-      (_, events, state) => {
-        val prev = state.getOption.map(_.count).getOrElse(0L)
-        val next = CountInfo(prev + events.size)
-        state.update(next)
-        CountUpdate(next.count, new Timestamp(state.getCurrentWatermarkMs()))
+          // stream-stream interval join (beyond the reference's surface; the
+          // canonical funnel query): each click joined to same-user purchases
+          // within the following 5 minutes. Both sides carry the 300 s
+          // watermark; the range condition bounds join state, so buffered rows
+          // are evicted as the watermark advances — state is O(join window ×
+          // rate), never O(stream). Inner join + append mode: each match is
+          // emitted exactly once, and the event-time-ordered replay guarantees
+          // a row's match partner always arrives before eviction (partner ts
+          // within 300 s < the 600 s arrival-to-eviction horizon), so the
+          // drained result equals the batch interval join. Output is
+          // corpus-scale at 100 TB — durable sink, never driver memory.
+          val clicks = source
+            .withWatermark("ts", "300 seconds")
+            .where(col("event_type") === "click")
+            .select(col("user_id").as("c_user"), col("event_id").as("click_id"), col("ts").as("c_ts"))
+          val purchases = source
+            .withWatermark("ts", "300 seconds")
+            .where(col("event_type") === "purchase")
+            .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"), col("ts").as("p_ts"))
+          run("joined", "append", clicks.join(purchases,
+              expr("c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 5 minutes"))
+            .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id")))(
+            _.foreachBatch(epochSink(sink.joinSinkDir)))
+
+          // Stream-stream LEFT OUTER interval join (q20l) — the outer mode the
+          // inner join above can't express: every click resolves exactly once
+          // — matched rows emit as matches arrive, unmatched clicks emit
+          // NULL-extended only once the watermark proves no matching purchase
+          // can still arrive (emitting earlier would be wrong; never emitting
+          // is what the inner join does). Same bounded state as the inner
+          // join (range condition + 300 s watermark, both sides).
+          //
+          // Sentinel routing is THE correctness subtlety here (the q20i
+          // lesson, outer-join edition): an `event_type === 'click'` filter
+          // is pushed BELOW EventTimeWatermark by PushDownPredicates, so the
+          // flush sentinel would be dropped before the watermark node ever
+          // saw it — the final watermark then stalls 300 s behind the last
+          // REAL event and every click inside that tail horizon waits for a
+          // flush that never comes (observed: exactly the corpus-tail click
+          // stranded in state). The per-side filters therefore KEEP the
+          // sentinel (`isin(type, SentinelType)`); it joins only its own
+          // mirror (user_id -1, same instant), and the sink edge drops
+          // user_id < 0 — semantics over real events are untouched while the
+          // sentinel walks through both watermark nodes and closes every
+          // join window at drain. NULL purchase_id materializes as -1 (q9c's
+          // COALESCE convention) so the durable parquet column is non-null.
+          val clicksF = source
+            .withWatermark("ts", "300 seconds")
+            .where(col("event_type").isin("click", SentinelType))
+            .select(col("user_id").as("c_user"), col("event_id").as("click_id"), col("ts").as("c_ts"))
+          val purchasesF = source
+            .withWatermark("ts", "300 seconds")
+            .where(col("event_type").isin("purchase", SentinelType))
+            .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"), col("ts").as("p_ts"))
+          // NOTE the sentinel drop lives INSIDE foreachBatch (outside the
+          // streaming plan): as a plan-side filter, `user_id >= 0` references
+          // only left-side columns and PushDownPredicates would push it
+          // through the join into the click side — below the watermark node —
+          // re-creating exactly the stall the isin() filters prevent.
+          run("leftjoined", "append", clicksF.join(purchasesF,
+              expr("c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 5 minutes"),
+              "left_outer")
+            .select(col("c_user").as("user_id"), col("click_id"),
+                    coalesce(col("purchase_id"), lit(-1L)).as("purchase_id")))(
+            _.foreachBatch { (batch: DataFrame, batchId: Long) =>
+              batch.where(col("user_id") >= 0)
+                .write.mode("overwrite").parquet(s"${sink.leftJoinSinkDir}/batch_id=$batchId")
+            })
+
+          // Stream-STATIC enrichment join (q20j) — the dimension-join mode the
+          // reference never exercises but every production stream runs: each
+          // event joined to the static customer table (user_id → market
+          // segment), then aggregated per (window, segment). The static side
+          // is `broadcast()` and STATELESS — no watermark bookkeeping, no join
+          // state; Spark re-resolves the batch side each micro-batch (which is
+          // how slowly-changing dimensions pick up updates mid-stream). At
+          // 100 TB the dimension stays broadcast-sized by construction
+          // (customers ≪ events); a corpus-scale dimension would drop the hint
+          // and shuffle-hash-join per micro-batch instead.
+          val customers = Tables.load(spark, dir, "customer")
+            .select(col("c_custkey"), col("c_mktsegment"))
+          run("enrich", "update", data
+            .withWatermark("ts", "300 seconds")
+            .join(broadcast(customers), col("user_id") === col("c_custkey"))
+            .groupBy(window(col("ts"), "1 minute"), col("c_mktsegment"))
+            .agg(count(lit(1)).as("cnt"))
+            .select(col("window.start").as("window_start"),
+                    col("c_mktsegment").as("segment"), col("cnt")))(
+            _.foreachBatch(epochSink(sink.enrichSinkDir)))
+
+          // Streaming exact dedup (q20f): first occurrence per user_id across
+          // the whole replay (`dropDuplicates` keyed state). Append-mode
+          // epochs are disjoint first-occurrence sets — a plain union read.
+          //
+          // No watermark: `dropDuplicates` keyed state is never time-evicted,
+          // so a watermark would evict nothing — but it WOULD silently drop
+          // out-of-event-time-order rows before dedup, breaking the exact
+          // global contract (oracle = batch DISTINCT) if replay order ever
+          // deviates. When the dedup contract is time-bounded,
+          // `dropDuplicatesWithinWatermark` bounds state to the watermark
+          // horizon; the batch-side digest dedup (q16) is the exact-at-rest
+          // path at 100 TB.
+          run("dedup", "append", data
+            .dropDuplicates("user_id")
+            .select("user_id"))(
+            _.foreachBatch(epochSink(sink.dedupSinkDir)))
+
+          // Bounded-state streaming dedup (q20m): `dropDuplicatesWithinWatermark`
+          // — the 100 TB posture q20f deliberately is not. q20f's keyed state
+          // is NEVER evicted (exact global first-occurrence), so its state
+          // grows with lifetime distinct keys — unbounded on an infinite
+          // stream. Here state expires once the watermark passes a key's
+          // event time + delay, so state is bounded by the key arrival rate ×
+          // horizon, not by stream lifetime.
+          //
+          // Determinism under arbitrary micro-batch boundaries is BY
+          // CONSTRUCTION: the key is (user_id, day) and the horizon (25 h)
+          // covers a full day, so every occurrence of a key falls within the
+          // delay of its first occurrence — the only case the API *guarantees*
+          // dedups — and a key never recurs after its day passes, so eviction
+          // can never re-admit one. Output ≡ DISTINCT (user_id, day) exactly,
+          // at any trigger granularity, while eviction still fires mid-replay
+          // (day-k state expires as day k+2 processes — asserted from the
+          // state-operator metrics below). Keys whose occurrences can strictly
+          // exceed the horizon belong in q20f's exact path or a batch dedup.
+          // Eviction counting (ADVICE r8 #3): `recentProgress` is a bounded
+          // ring (spark.sql.streaming.numRecentProgressUpdates, default 100) —
+          // fine at today's 2-3 triggers, but a bigger corpus or smaller
+          // filesPerTrigger would silently undercount the evictions the spec
+          // asserts on. A listener registered BEFORE the query starts
+          // (`dedupWmListener`, above) sees every progress event regardless
+          // of trigger count; matched by query name (the id is only known
+          // after start()).
+          val dedupWm = run("dedupwm", "append", data
+            .select(col("user_id"), to_date(col("ts")).as("day"), col("ts"))
+            .withWatermark("ts", "25 hours")
+            .dropDuplicatesWithinWatermark("user_id", "day")
+            .select("user_id", "day"))(
+            _.queryName(dedupWmName).foreachBatch(epochSink(sink.dedupWmSinkDir)))
+
+          // Streaming CDC upsert (q25b) — the MERGE-INTO shape every lakehouse
+          // stream runs (batch q25's streaming twin): each micro-batch of the
+          // changelog merges latest-wins into a durable snapshot. The merge is
+          // associative by construction — argmax by (ts, event_id) over
+          // (previous snapshot ∪ batch) equals the argmax over the whole
+          // changelog prefix — so the drained snapshot hash-equals batch q25
+          // at ANY trigger granularity. Tombstones (op='D') are RETAINED in
+          // the snapshot state (a tombstone must keep winning against older
+          // updates that could arrive later); they are dropped only at read.
+          //
+          // Crash safety: epoch N writes a FULL snapshot to its own
+          // `snap_batch_id=N` dir reading only committed dirs < N — a
+          // failure-replayed epoch recomputes byte-identically (same prev
+          // snapshot, same replayable source offsets) and overwrite is
+          // idempotent. At 100 TB the snapshot rewrite is partition-scoped
+          // (merge-on-read compaction per affected partition, the lakehouse
+          // MERGE posture); the full-snapshot rewrite here is the
+          // corpus-complete demonstration of the same per-epoch algebra.
+          // Stateless as a streaming query: ALL merge state is at rest in the
+          // snapshot — no state store, no watermark bookkeeping.
+          val cdcMerge: (DataFrame, Long) => Unit = (batch, batchId) => {
+            val sparkB = batch.sparkSession
+            val chg = batch.select(col("user_id"), col("ts"), col("event_id"),
+              when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
+              col("event_type"), col("value"))
+            val snapRoot = Paths.get(sink.cdcSnapDir)
+            val prev = latestSnapshotId(snapRoot, beforeExclusive = batchId)
+            val all = prev match {
+              case Some(p) => sparkB.read
+                .parquet(snapRoot.resolve(s"snap_batch_id=$p").toString)
+                .unionByName(chg)
+              case None => chg
+            }
+            all.groupBy("user_id")
+              .agg(max_by(
+                struct(col("op"), col("event_type"), col("value"), col("ts"), col("event_id")),
+                struct(col("ts"), col("event_id"))).as("last"))
+              .select(col("user_id"), col("last.op").as("op"),
+                col("last.event_type").as("event_type"), col("last.value").as("value"),
+                col("last.ts").as("ts"), col("last.event_id").as("event_id"))
+              .write.mode("overwrite")
+              .parquet(snapRoot.resolve(s"snap_batch_id=$batchId").toString)
+            // in-loop GC policy (VERDICT r9 next #3): retain TWO snapshots —
+            // this epoch's (checkpoint not yet committed, so possibly
+            // replayed) and its committed predecessor, which a retry of this
+            // epoch must still find. Bounds the sink at 2 snapshots for
+            // stream lifetime; the offline slot may drop to 1 post-drain.
+            vacuumCdcSnapshots(sink.cdcSnapDir, retain = 2)
+          }
+          run("cdc", "append", data)(_.foreachBatch(cdcMerge))
+
+          // q25c — the same changelog through the BUCKETED (partition-scoped)
+          // merge: per epoch only the touched key-hash buckets are read and
+          // rewritten (see cdcBucketMergeEpoch). Same oracle as q25/q25b —
+          // three merge strategies, one answer.
+          run("cdcb", "append", data)(
+            _.foreachBatch { (batch: DataFrame, batchId: Long) =>
+              val chg = batch.select(col("user_id"), col("ts"), col("event_id"),
+                when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
+                col("event_type"), col("value"))
+              cdcBucketMergeEpoch(chg, sink.cdcBucketDir, batchId)
+            })
+
+          // q25d — INCREMENTAL MATERIALIZED-VIEW maintenance over the same
+          // changelog: the per-type aggregate (live users, exact decimal
+          // value sum) is maintained by DELTA ALGEBRA only — each epoch
+          // retracts the TOUCHED users' old contributions and applies their
+          // new ones; the aggregate is NEVER recomputed from the user state.
+          // agg_N = agg_{N-1} ⊕ Σ_touched (f(new) − f(old)) — per-epoch cost
+          // O(touched keys) on the delta side regardless of how many users
+          // the view covers, which is the entire point of a materialized
+          // view at 100 TB. Exactness across arbitrarily many epochs comes
+          // from doing the value algebra in DECIMAL(18,4) (associative,
+          // order-independent) — the drained aggregate must be bit-identical
+          // to the batch GROUP BY over the fully-upserted table, which the
+          // oracle checks. Handles the full transition matrix: U→U same
+          // group (retract+apply cancel), U→U group move (retract A, apply
+          // B), U→D (retract only), D→U (apply only); tombstones persist in
+          // the user state (late-arrival correctness) but never contribute.
+          // The user-state carry here is a full rewrite (the q25b
+          // demonstration shape); at 100 TB it is bucket-scoped exactly as
+          // q25c demonstrates — the NOVEL piece q25d adds is the aggregate
+          // delta algebra on top.
+          val mvMaintain: (DataFrame, Long) => Unit = (batch, batchId) => {
+            val sparkB = batch.sparkSession
+            val mvRoot = Paths.get(sink.mvDir)
+            val chg = batch.select(col("user_id"), col("ts"), col("event_id"),
+              when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
+              col("event_type"), col("value"))
+            def latestWins(df: DataFrame): DataFrame = df
+              .groupBy("user_id")
+              .agg(max_by(
+                struct(col("op"), col("event_type"), col("value"), col("ts"), col("event_id")),
+                struct(col("ts"), col("event_id"))).as("last"))
+              .select(col("user_id"), col("last.op").as("op"),
+                col("last.event_type").as("event_type"), col("last.value").as("value"),
+                col("last.ts").as("ts"), col("last.event_id").as("event_id"))
+            val batchLatest = latestWins(chg)
+            def prevOf(sub: String): Option[DataFrame] = {
+              val p = mvRoot.resolve(sub)
+              latestSnapshotId(p, beforeExclusive = batchId)
+                .map(n => sparkB.read.parquet(p.resolve(s"snap_batch_id=$n").toString))
+            }
+            val prevState = prevOf("state")
+            // old rows of TOUCHED users only (semi-join filter; bucket-scoped
+            // at scale) — reading committed dirs < batchId makes a
+            // failure-replayed epoch recompute byte-identically
+            val oldTouched = prevState match {
+              case Some(s) => s.join(batchLatest.select("user_id"), Seq("user_id"), "left_semi")
+              case None => batchLatest.limit(0)
+            }
+            val newTouched = latestWins(oldTouched.unionByName(batchLatest))
+            val dv = col("value").cast("decimal(18,4)")
+            val deltas = oldTouched.where(col("op") =!= "D")
+                .select(col("event_type"), lit(-1L).as("dn"), (-dv).as("dv"))
+              .unionByName(newTouched.where(col("op") =!= "D")
+                .select(col("event_type"), lit(1L).as("dn"), dv.as("dv")))
+            val aggAll = prevOf("agg") match {
+              case Some(a) => a.select(col("event_type"), col("n_users").as("dn"),
+                col("sum_value").as("dv")).unionByName(deltas)
+              case None => deltas
+            }
+            aggAll.groupBy("event_type")
+              .agg(sum(col("dn")).as("n_users"), sum(col("dv")).as("sum_value"))
+              .where(col("n_users") > 0)
+              .write.mode("overwrite")
+              .parquet(mvRoot.resolve(s"agg/snap_batch_id=$batchId").toString)
+            val carried = prevState match {
+              case Some(s) =>
+                s.join(batchLatest.select("user_id"), Seq("user_id"), "left_anti")
+                  .unionByName(newTouched)
+              case None => newTouched
+            }
+            carried.write.mode("overwrite")
+              .parquet(mvRoot.resolve(s"state/snap_batch_id=$batchId").toString)
+            // same in-loop GC policy as q25b: this epoch + its committed
+            // predecessor (which a retry must still find)
+            vacuumCdcSnapshots(mvRoot.resolve("state").toString, retain = 2)
+            vacuumCdcSnapshots(mvRoot.resolve("agg").toString, retain = 2)
+          }
+          run("mv", "append", data)(_.foreachBatch(mvMaintain))
+
+          // Per-type session windows (q20i) — the gap-based windowing mode
+          // (q5b's streaming twin, keyed by type so session state shards over
+          // the key space instead of funneling one global session chain).
+          // Session aggregations only support APPEND mode: a session emits
+          // exactly once, when the watermark passes its end. The sentinel must
+          // reach the watermark node (it flushes every real session at drain),
+          // so it is NOT filtered here — a pre-aggregation filter would be
+          // pushed below EventTimeWatermark by PushDownPredicates and the
+          // watermark would never advance past the last real event (measured:
+          // the corpus-tail session never emits). Keyed by event_type, the
+          // sentinel only ever forms its own '__flush' session, which the
+          // q20i reader drops.
+          run("session", "append", source
+            .withWatermark("ts", "300 seconds")
+            .groupBy(session_window(col("ts"), "5 minutes"), col("event_type"))
+            .agg(count(lit(1)).as("n_events"))
+            .select(col("session_window.start").as("session_start"),
+                    col("event_type"), col("n_events")))(
+            _.foreachBatch(epochSink(sink.sessionSinkDir)))
+
+          started.foreach(_.awaitTermination())
+          // q20m's scale contract is the state BOUND, not just the rows:
+          // record the drained state size and total evictions off the
+          // progress metrics (the spec asserts removed > 0 and final <
+          // lifetime distinct — i.e. the horizon actually evicted state).
+          val progresses = dedupWm.recentProgress.filter(_.stateOperators.nonEmpty)
+          sink.dedupWmFinalStateRows =
+            progresses.lastOption.map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
+          // listener events post asynchronously — take the max of the
+          // listener accumulator and the (ring-bounded) recentProgress sum:
+          // at ≤100 triggers they agree; past the ring the listener wins
+          sink.dedupWmRowsRemoved = math.max(
+            dedupWmRemovedAcc.get,
+            progresses.map(_.stateOperators.map(_.numRowsRemoved).sum).sum)
+        } finally {
+          started.foreach(_.stop())
+          spark.streams.removeListener(dedupWmListener)
+          WriterRegistry.queues.remove(runId)
+        }
       }
-    val runId = java.util.UUID.randomUUID().toString
-    WriterRegistry.queues.put(runId, sink.runningLog)
-    val running = data.as[Event]
-      .withWatermark("ts", "300 seconds")
-      .groupByKey(_ => "count")
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(updateFn)
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", s"$ckpt/running")
-      .trigger(Trigger.AvailableNow())
-      .foreach(new RunningCountWriter(runId))
-      .start()
-
-    // SURVEY §7 hard part (b): the scale-correct running count — state
-    // sharded over RunningCountShards keys (hash of user_id), each
-    // shard a partial count in mapGroupsWithState; every trigger emits
-    // only changed (shard, partial) rows (bounded at shards
-    // rows/trigger, hence the driver map is fine). The global answer is
-    // the SUM of final partials — computed at read time, never funneled
-    // through one task (q20g).
-    val shardFn: (Int, Iterator[Event], GroupState[CountInfo]) => (Int, Long) =
-      (shard, events, state) => {
-        val next = CountInfo(state.getOption.map(_.count).getOrElse(0L) + events.size)
-        state.update(next)
-        (shard, next.count)
-      }
-    val sharded = data.as[Event]
-      .groupByKey(e => math.floorMod(e.user_id, RunningCountShards.toLong).toInt)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(shardFn)
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", s"$ckpt/sharded")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[(Int, Long)], _: Long) =>
-        batch.collect().foreach { case (s, c) => sink.shardPartials.put(s, c) }
-      }.start()
-
-    // stream-stream interval join (beyond the reference's surface; the
-    // canonical funnel query): each click joined to same-user purchases
-    // within the following 5 minutes. Both sides carry the 300 s
-    // watermark; the range condition bounds join state, so buffered rows
-    // are evicted as the watermark advances — state is O(join window ×
-    // rate), never O(stream). Inner join + append mode: each match is
-    // emitted exactly once, and the event-time-ordered replay guarantees
-    // a row's match partner always arrives before eviction (partner ts
-    // within 300 s < the 600 s arrival-to-eviction horizon), so the
-    // drained result equals the batch interval join. Output is
-    // corpus-scale at 100 TB — durable sink, never driver memory.
-    val clicks = source
-      .withWatermark("ts", "300 seconds")
-      .where(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"), col("ts").as("c_ts"))
-    val purchases = source
-      .withWatermark("ts", "300 seconds")
-      .where(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-    val joined = clicks.join(purchases,
-        expr("c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 5 minutes"))
-      .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$ckpt/joined")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(epochSink(sink.joinSinkDir)).start()
-
-    // Stream-stream LEFT OUTER interval join (q20l) — the outer mode the
-    // inner join above can't express: every click resolves exactly once
-    // — matched rows emit as matches arrive, unmatched clicks emit
-    // NULL-extended only once the watermark proves no matching purchase
-    // can still arrive (emitting earlier would be wrong; never emitting
-    // is what the inner join does). Same bounded state as the inner
-    // join (range condition + 300 s watermark, both sides).
-    //
-    // Sentinel routing is THE correctness subtlety here (the q20i
-    // lesson, outer-join edition): an `event_type === 'click'` filter
-    // is pushed BELOW EventTimeWatermark by PushDownPredicates, so the
-    // flush sentinel would be dropped before the watermark node ever
-    // saw it — the final watermark then stalls 300 s behind the last
-    // REAL event and every click inside that tail horizon waits for a
-    // flush that never comes (observed: exactly the corpus-tail click
-    // stranded in state). The per-side filters therefore KEEP the
-    // sentinel (`isin(type, SentinelType)`); it joins only its own
-    // mirror (user_id -1, same instant), and the sink edge drops
-    // user_id < 0 — semantics over real events are untouched while the
-    // sentinel walks through both watermark nodes and closes every
-    // join window at drain. NULL purchase_id materializes as -1 (q9c's
-    // COALESCE convention) so the durable parquet column is non-null.
-    val clicksF = source
-      .withWatermark("ts", "300 seconds")
-      .where(col("event_type").isin("click", SentinelType))
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"), col("ts").as("c_ts"))
-    val purchasesF = source
-      .withWatermark("ts", "300 seconds")
-      .where(col("event_type").isin("purchase", SentinelType))
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-    // NOTE the sentinel drop lives INSIDE foreachBatch (outside the
-    // streaming plan): as a plan-side filter, `user_id >= 0` references
-    // only left-side columns and PushDownPredicates would push it
-    // through the join into the click side — below the watermark node —
-    // re-creating exactly the stall the isin() filters prevent.
-    val leftJoined = clicksF.join(purchasesF,
-        expr("c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 5 minutes"),
-        "left_outer")
-      .select(col("c_user").as("user_id"), col("click_id"),
-              coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$ckpt/leftjoined")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.where(col("user_id") >= 0)
-          .write.mode("overwrite").parquet(s"${sink.leftJoinSinkDir}/batch_id=$batchId")
-      }.start()
-
-    // Stream-STATIC enrichment join (q20j) — the dimension-join mode the
-    // reference never exercises but every production stream runs: each
-    // event joined to the static customer table (user_id → market
-    // segment), then aggregated per (window, segment). The static side
-    // is `broadcast()` and STATELESS — no watermark bookkeeping, no join
-    // state; Spark re-resolves the batch side each micro-batch (which is
-    // how slowly-changing dimensions pick up updates mid-stream). At
-    // 100 TB the dimension stays broadcast-sized by construction
-    // (customers ≪ events); a corpus-scale dimension would drop the hint
-    // and shuffle-hash-join per micro-batch instead.
-    val customers = Tables.load(spark, dir, "customer")
-      .select(col("c_custkey"), col("c_mktsegment"))
-    val enrich = data
-      .withWatermark("ts", "300 seconds")
-      .join(broadcast(customers), col("user_id") === col("c_custkey"))
-      .groupBy(window(col("ts"), "1 minute"), col("c_mktsegment"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("window_start"),
-              col("c_mktsegment").as("segment"), col("cnt"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", s"$ckpt/enrich")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(epochSink(sink.enrichSinkDir)).start()
-
-    // Streaming exact dedup (q20f): first occurrence per user_id across
-    // the whole replay (`dropDuplicates` keyed state). Append-mode
-    // epochs are disjoint first-occurrence sets — a plain union read.
-    //
-    // No watermark: `dropDuplicates` keyed state is never time-evicted,
-    // so a watermark would evict nothing — but it WOULD silently drop
-    // out-of-event-time-order rows before dedup, breaking the exact
-    // global contract (oracle = batch DISTINCT) if replay order ever
-    // deviates. When the dedup contract is time-bounded,
-    // `dropDuplicatesWithinWatermark` bounds state to the watermark
-    // horizon; the batch-side digest dedup (q16) is the exact-at-rest
-    // path at 100 TB.
-    val dedup = data
-      .dropDuplicates("user_id")
-      .select("user_id")
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$ckpt/dedup")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(epochSink(sink.dedupSinkDir)).start()
-
-    // Bounded-state streaming dedup (q20m): `dropDuplicatesWithinWatermark`
-    // — the 100 TB posture q20f deliberately is not. q20f's keyed state
-    // is NEVER evicted (exact global first-occurrence), so its state
-    // grows with lifetime distinct keys — unbounded on an infinite
-    // stream. Here state expires once the watermark passes a key's
-    // event time + delay, so state is bounded by the key arrival rate ×
-    // horizon, not by stream lifetime.
-    //
-    // Determinism under arbitrary micro-batch boundaries is BY
-    // CONSTRUCTION: the key is (user_id, day) and the horizon (25 h)
-    // covers a full day, so every occurrence of a key falls within the
-    // delay of its first occurrence — the only case the API *guarantees*
-    // dedups — and a key never recurs after its day passes, so eviction
-    // can never re-admit one. Output ≡ DISTINCT (user_id, day) exactly,
-    // at any trigger granularity, while eviction still fires mid-replay
-    // (day-k state expires as day k+2 processes — asserted from the
-    // state-operator metrics below). Keys whose occurrences can strictly
-    // exceed the horizon belong in q20f's exact path or a batch dedup.
-    // Eviction counting (ADVICE r8 #3): `recentProgress` is a bounded
-    // ring (spark.sql.streaming.numRecentProgressUpdates, default 100) —
-    // fine at today's 2-3 triggers, but a bigger corpus or smaller
-    // filesPerTrigger would silently undercount the evictions the spec
-    // asserts on. A listener registered BEFORE the query starts sees
-    // every progress event regardless of trigger count; matched by query
-    // name (the id is only known after start()).
-    val dedupWmName = s"graft_dedupwm_${java.util.UUID.randomUUID()}"
-    val dedupWmRemovedAcc = new java.util.concurrent.atomic.AtomicLong(0L)
-    val dedupWmListener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == dedupWmName)
-          dedupWmRemovedAcc.addAndGet(e.progress.stateOperators.map(_.numRowsRemoved).sum)
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(dedupWmListener)
-
-    val dedupWm = data
-      .select(col("user_id"), to_date(col("ts")).as("day"), col("ts"))
-      .withWatermark("ts", "25 hours")
-      .dropDuplicatesWithinWatermark("user_id", "day")
-      .select("user_id", "day")
-      .writeStream.outputMode("append")
-      .queryName(dedupWmName)
-      .option("checkpointLocation", s"$ckpt/dedupwm")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(epochSink(sink.dedupWmSinkDir)).start()
-
-    // Streaming CDC upsert (q25b) — the MERGE-INTO shape every lakehouse
-    // stream runs (batch q25's streaming twin): each micro-batch of the
-    // changelog merges latest-wins into a durable snapshot. The merge is
-    // associative by construction — argmax by (ts, event_id) over
-    // (previous snapshot ∪ batch) equals the argmax over the whole
-    // changelog prefix — so the drained snapshot hash-equals batch q25
-    // at ANY trigger granularity. Tombstones (op='D') are RETAINED in
-    // the snapshot state (a tombstone must keep winning against older
-    // updates that could arrive later); they are dropped only at read.
-    //
-    // Crash safety: epoch N writes a FULL snapshot to its own
-    // `snap_batch_id=N` dir reading only committed dirs < N — a
-    // failure-replayed epoch recomputes byte-identically (same prev
-    // snapshot, same replayable source offsets) and overwrite is
-    // idempotent. At 100 TB the snapshot rewrite is partition-scoped
-    // (merge-on-read compaction per affected partition, the lakehouse
-    // MERGE posture); the full-snapshot rewrite here is the
-    // corpus-complete demonstration of the same per-epoch algebra.
-    // Stateless as a streaming query: ALL merge state is at rest in the
-    // snapshot — no state store, no watermark bookkeeping.
-    val cdcMerge: (DataFrame, Long) => Unit = (batch, batchId) => {
-      val sparkB = batch.sparkSession
-      val chg = batch.select(col("user_id"), col("ts"), col("event_id"),
-        when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
-        col("event_type"), col("value"))
-      val snapRoot = Paths.get(sink.cdcSnapDir)
-      val prev = latestSnapshotId(snapRoot, beforeExclusive = batchId)
-      val all = prev match {
-        case Some(p) => sparkB.read
-          .parquet(snapRoot.resolve(s"snap_batch_id=$p").toString)
-          .unionByName(chg)
-        case None => chg
-      }
-      all.groupBy("user_id")
-        .agg(max_by(
-          struct(col("op"), col("event_type"), col("value"), col("ts"), col("event_id")),
-          struct(col("ts"), col("event_id"))).as("last"))
-        .select(col("user_id"), col("last.op").as("op"),
-          col("last.event_type").as("event_type"), col("last.value").as("value"),
-          col("last.ts").as("ts"), col("last.event_id").as("event_id"))
-        .write.mode("overwrite")
-        .parquet(snapRoot.resolve(s"snap_batch_id=$batchId").toString)
-      // in-loop GC policy (VERDICT r9 next #3): retain TWO snapshots —
-      // this epoch's (checkpoint not yet committed, so possibly
-      // replayed) and its committed predecessor, which a retry of this
-      // epoch must still find. Bounds the sink at 2 snapshots for
-      // stream lifetime; the offline slot may drop to 1 post-drain.
-      vacuumCdcSnapshots(sink.cdcSnapDir, retain = 2)
-    }
-    val cdc = data
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$ckpt/cdc")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(cdcMerge).start()
-
-    // q25c — the same changelog through the BUCKETED (partition-scoped)
-    // merge: per epoch only the touched key-hash buckets are read and
-    // rewritten (see cdcBucketMergeEpoch). Same oracle as q25/q25b —
-    // three merge strategies, one answer.
-    val cdcBucketed = data
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$ckpt/cdcb")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val chg = batch.select(col("user_id"), col("ts"), col("event_id"),
-          when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
-          col("event_type"), col("value"))
-        cdcBucketMergeEpoch(chg, sink.cdcBucketDir, batchId)
-      }.start()
-
-    // q25d — INCREMENTAL MATERIALIZED-VIEW maintenance over the same
-    // changelog: the per-type aggregate (live users, exact decimal
-    // value sum) is maintained by DELTA ALGEBRA only — each epoch
-    // retracts the TOUCHED users' old contributions and applies their
-    // new ones; the aggregate is NEVER recomputed from the user state.
-    // agg_N = agg_{N-1} ⊕ Σ_touched (f(new) − f(old)) — per-epoch cost
-    // O(touched keys) on the delta side regardless of how many users
-    // the view covers, which is the entire point of a materialized
-    // view at 100 TB. Exactness across arbitrarily many epochs comes
-    // from doing the value algebra in DECIMAL(18,4) (associative,
-    // order-independent) — the drained aggregate must be bit-identical
-    // to the batch GROUP BY over the fully-upserted table, which the
-    // oracle checks. Handles the full transition matrix: U→U same
-    // group (retract+apply cancel), U→U group move (retract A, apply
-    // B), U→D (retract only), D→U (apply only); tombstones persist in
-    // the user state (late-arrival correctness) but never contribute.
-    // The user-state carry here is a full rewrite (the q25b
-    // demonstration shape); at 100 TB it is bucket-scoped exactly as
-    // q25c demonstrates — the NOVEL piece q25d adds is the aggregate
-    // delta algebra on top.
-    val mvMaintain: (DataFrame, Long) => Unit = (batch, batchId) => {
-      val sparkB = batch.sparkSession
-      val mvRoot = Paths.get(sink.mvDir)
-      val chg = batch.select(col("user_id"), col("ts"), col("event_id"),
-        when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
-        col("event_type"), col("value"))
-      def latestWins(df: DataFrame): DataFrame = df
-        .groupBy("user_id")
-        .agg(max_by(
-          struct(col("op"), col("event_type"), col("value"), col("ts"), col("event_id")),
-          struct(col("ts"), col("event_id"))).as("last"))
-        .select(col("user_id"), col("last.op").as("op"),
-          col("last.event_type").as("event_type"), col("last.value").as("value"),
-          col("last.ts").as("ts"), col("last.event_id").as("event_id"))
-      val batchLatest = latestWins(chg)
-      def prevOf(sub: String): Option[DataFrame] = {
-        val p = mvRoot.resolve(sub)
-        latestSnapshotId(p, beforeExclusive = batchId)
-          .map(n => sparkB.read.parquet(p.resolve(s"snap_batch_id=$n").toString))
-      }
-      val prevState = prevOf("state")
-      // old rows of TOUCHED users only (semi-join filter; bucket-scoped
-      // at scale) — reading committed dirs < batchId makes a
-      // failure-replayed epoch recompute byte-identically
-      val oldTouched = prevState match {
-        case Some(s) => s.join(batchLatest.select("user_id"), Seq("user_id"), "left_semi")
-        case None => batchLatest.limit(0)
-      }
-      val newTouched = latestWins(oldTouched.unionByName(batchLatest))
-      val dv = col("value").cast("decimal(18,4)")
-      val deltas = oldTouched.where(col("op") =!= "D")
-          .select(col("event_type"), lit(-1L).as("dn"), (-dv).as("dv"))
-        .unionByName(newTouched.where(col("op") =!= "D")
-          .select(col("event_type"), lit(1L).as("dn"), dv.as("dv")))
-      val aggAll = prevOf("agg") match {
-        case Some(a) => a.select(col("event_type"), col("n_users").as("dn"),
-          col("sum_value").as("dv")).unionByName(deltas)
-        case None => deltas
-      }
-      aggAll.groupBy("event_type")
-        .agg(sum(col("dn")).as("n_users"), sum(col("dv")).as("sum_value"))
-        .where(col("n_users") > 0)
-        .write.mode("overwrite")
-        .parquet(mvRoot.resolve(s"agg/snap_batch_id=$batchId").toString)
-      val carried = prevState match {
-        case Some(s) =>
-          s.join(batchLatest.select("user_id"), Seq("user_id"), "left_anti")
-            .unionByName(newTouched)
-        case None => newTouched
-      }
-      carried.write.mode("overwrite")
-        .parquet(mvRoot.resolve(s"state/snap_batch_id=$batchId").toString)
-      // same in-loop GC policy as q25b: this epoch + its committed
-      // predecessor (which a retry must still find)
-      vacuumCdcSnapshots(mvRoot.resolve("state").toString, retain = 2)
-      vacuumCdcSnapshots(mvRoot.resolve("agg").toString, retain = 2)
-    }
-    val mv = data
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$ckpt/mv")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(mvMaintain).start()
-
-    // Per-type session windows (q20i) — the gap-based windowing mode
-    // (q5b's streaming twin, keyed by type so session state shards over
-    // the key space instead of funneling one global session chain).
-    // Session aggregations only support APPEND mode: a session emits
-    // exactly once, when the watermark passes its end. The sentinel must
-    // reach the watermark node (it flushes every real session at drain),
-    // so it is NOT filtered here — a pre-aggregation filter would be
-    // pushed below EventTimeWatermark by PushDownPredicates and the
-    // watermark would never advance past the last real event (measured:
-    // the corpus-tail session never emits). Keyed by event_type, the
-    // sentinel only ever forms its own '__flush' session, which the
-    // q20i reader drops.
-    val session = source
-      .withWatermark("ts", "300 seconds")
-      .groupBy(session_window(col("ts"), "5 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("session_start"),
-              col("event_type"), col("n_events"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$ckpt/session")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(epochSink(sink.sessionSinkDir)).start()
-
-    try {
-      Seq(tumbling, sliding, perType, top1, running, sharded, joined, leftJoined,
-          enrich, dedup, dedupWm, cdc, cdcBucketed, mv, session)
-        .foreach(_.awaitTermination())
-      // q20m's scale contract is the state BOUND, not just the rows:
-      // record the drained state size and total evictions off the
-      // progress metrics (the spec asserts removed > 0 and final <
-      // lifetime distinct — i.e. the horizon actually evicted state).
-      val progresses = dedupWm.recentProgress.filter(_.stateOperators.nonEmpty)
-      sink.dedupWmFinalStateRows =
-        progresses.lastOption.map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
-      // listener events post asynchronously — take the max of the
-      // listener accumulator and the (ring-bounded) recentProgress sum:
-      // at ≤100 triggers they agree; past the ring the listener wins
-      sink.dedupWmRowsRemoved = math.max(
-        dedupWmRemovedAcc.get,
-        progresses.map(_.stateOperators.map(_.numRowsRemoved).sum).sum)
-    } finally {
-      spark.streams.removeListener(dedupWmListener)
-      WriterRegistry.queues.remove(runId)
-      spark.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-      savedProvider.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-      // free the native stores this replay opened (10 queries × 4 state
-      // partitions) instead of waiting on the 60 s maintenance cadence
-      unloadStateStores()
     }
     sink
   }
 
-  /** Replay results memoized per sfDir (all q20* entries share one
-    * replay; Bench clears this to time real replays). */
-  private val cache = TrieMap.empty[String, SinkState]
+  /** The shared replay, run once per dataset ([[Replay.memo]]): every
+    * q20* reader reads one replay; Bench clears the memo to time real
+    * replays. */
   def replayCached(spark: SparkSession, dir: String): SinkState =
-    cache.getOrElseUpdate(dir, replay(spark, dir))
-  private val wireCache = TrieMap.empty[String, String]
-  def clearCache(): Unit = {
-    cache.clear(); wireCache.clear(); ingestCache.clear()
-    growCache.clear(); embIngestCache.clear(); embGrowCache.clear(); mediaCache.clear()
-    postingestCache.clear(); pqIngestReplayCache.clear(); lineIngestCache.clear()
-    snapIngestCache.clear(); funnelCache.clear(); cdcMergeCache.clear()
-    cdcMorCache.clear()
-  }
+    Replay.memo("replay", dir)(replay(spark, dir))
+
+  /** Forget every memoized replay result, so the next read re-runs its
+    * replay. */
+  def clearCache(): Unit = Replay.clear()
 
   // ---- the Kafka wire path, executed as a real stream ------------------
 
@@ -890,6 +799,25 @@ object StreamingPipelines {
               Map("timestampFormat" -> "yyyy-MM-dd HH:mm:ss.SSSSSS"))
         .cast("binary").as("value"))
 
+  /** Stage the producer-serialized frames as `rounds` chunks
+    * (consecutive days packed per round, so replay order stays
+    * event-time-ordered), fingerprint-revalidated like the other chunk
+    * stagings. The day→round assignment derives from the DISTINCT-day
+    * list — bounded metadata (≤ days in the corpus), joined back
+    * broadcast; no event row touches the driver here. */
+  def stageWireRounds(spark: SparkSession, dir: String, rounds: Int): Path = {
+    import spark.implicits._
+    val events = Tables.load(spark, dir, "events")
+    Replay.stageChunks("graft-wire", dir, s"v2:$rounds", events, "event_id") {
+      val frames = wireFrames(events)
+      val days = frames.select("day").distinct().orderBy("day").collect().map(_.getString(0))
+      val perRound = math.max(1, math.ceil(days.length / rounds.toDouble).toInt)
+      val assign = broadcast(days.zipWithIndex
+        .map { case (d, i) => (d, i / perRound) }.toSeq.toDF("day", "chunk"))
+      frames.join(assign, "day").select(col("chunk"), col("value"))
+    }
+  }
+
   /** VERDICT r6 #1: the Kafka WIRE path as a REAL micro-batch stream.
     * A `MemoryStream[Array[Byte]]` plays the broker — its driver-side
     * data plane is the test-harness stand-in for Kafka's partitions
@@ -904,152 +832,56 @@ object StreamingPipelines {
     * nothing extra and 5× the trigger bookkeeping, which at this state
     * size is the whole bill — measured 19.7 s vs ~4 s at sf0.1).
     * Returns the durable sink dir. */
-  /** Stage the producer-serialized frames as `rounds` parquet dirs
-    * (consecutive days packed per round, so replay order stays
-    * event-time-ordered), fingerprint-revalidated like the other chunk
-    * stagings. The day→round assignment derives from the DISTINCT-day
-    * list — bounded metadata (≤ days in the corpus), joined back
-    * broadcast; no event row touches the driver here. */
-  def stageWireRounds(spark: SparkSession, dir: String, rounds: Int): Path = {
-    import spark.implicits._
-    val root = Paths.get(sys.props("java.io.tmpdir"), "graft-wire",
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"))
-    val stagedDir = root.resolve("rounds")
-    val doneFile = stagedDir.resolve("_DONE")
-    val events = Tables.load(spark, dir, "events")
-    val fp = {
-      val r = events.agg(count(lit(1)), min(col("event_id")), max(col("event_id"))).head()
-      s"v1:$rounds:${r.getLong(0)}:${r.get(1)}:${r.get(2)}"
-    }
-    if (Files.exists(doneFile) &&
-        new String(Files.readAllBytes(doneFile), "UTF-8").trim == fp) return stagedDir
-    deleteRecursively(root)
-    Files.createDirectories(stagedDir)
-    val frames = wireFrames(events)
-    val days = frames.select("day").distinct().orderBy("day").collect().map(_.getString(0))
-    val perRound = math.max(1, math.ceil(days.length / rounds.toDouble).toInt)
-    val assign = broadcast(days.zipWithIndex
-      .map { case (d, i) => (d, i / perRound) }.toSeq.toDF("day", "round"))
-    frames.join(assign, "day").select(col("round"), col("value"))
-      .write.mode("overwrite").partitionBy("round").parquet(stagedDir.resolve("data").toString)
-    Files.write(doneFile, fp.getBytes("UTF-8"))
-    stagedDir
-  }
-
   def wireReplay(spark: SparkSession, dir: String, rounds: Int = 4): String = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val out  = Files.createTempDirectory("graft-wire-out").toString
-    val ckpt = Files.createTempDirectory("graft-wire-ckpt").toString
     // Broker-stand-in data plane (VERDICT r7 wrong #2: the former
     // whole-corpus collect would OOM the driver long before the engine
     // saw a byte at 100×): the serialized frames are STAGED to disk as
-    // one parquet dir per replay round, and each round is brought to
-    // the driver only at the moment it is fed to the MemoryStream — the
+    // one chunk per replay round, and each round is brought to the
+    // driver only at the moment it is fed to the MemoryStream — the
     // stand-in holds ONE round, never the corpus, exactly as a broker
     // holds the partitions a consumer is about to poll.
-    val roundDirs = {
-      val data = stageWireRounds(spark, dir, rounds).resolve("data")
-      listDir(data)
-        .filter(_.getFileName.toString.startsWith("round="))
-        // numeric round order — a lexicographic sort would replay
-        // 0,1,10,11,2,… past 9 rounds (the stageChunksByIdMod lesson)
-        .sortBy(_.getFileName.toString.stripPrefix("round=").toInt)
-    }
-    val savedShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    val roundFiles = listDir(stageWireRounds(spark, dir, rounds))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .groupBy(_.getFileName.toString.take("chunk_000".length)) // one group per round
+      .toSeq.sortBy(_._1).map(_._2.map(_.toString))
     // update-mode emission happens on data batches; the latest-wins
     // read depends on no watermark-advance emission, so the extra
     // no-data micro-batch after every round (~1/3 of the replay's
     // trigger bill, measured) buys nothing here
-    val savedNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try withRocksDB(spark) {
-      val source = MemoryStream[Array[Byte]](Encoders.BINARY, spark.sqlContext)
-      val q = kafkaWireDecode(source.toDF())
-        .withWatermark("ts", "300 seconds")
-        .groupBy(window(col("ts"), "1 minute"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("window.start").as("window_start"), col("n_events"))
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-        }.start()
-      try roundDirs.foreach { rd =>
-        val roundFrames = spark.read.parquet(rd.toString).select("value")
-          .collect().iterator.map(_.getAs[Array[Byte]](0)).toSeq
-        source.addData(roundFrames)
-        q.processAllAvailable()
-      } finally { q.stop(); q.awaitTermination() }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", savedShuffle)
-      savedNoData match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None    => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+    Replay.withConfs(spark, RocksDBConfs ++ Map("spark.sql.shuffle.partitions" -> "2",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) {
+      Replay.withCheckpoint(None) { ckpt =>
+        val source = MemoryStream[Array[Byte]](Encoders.BINARY, spark.sqlContext)
+        val q = Replay.writer(kafkaWireDecode(source.toDF())
+            .withWatermark("ts", "300 seconds")
+            .groupBy(window(col("ts"), "1 minute"))
+            .agg(count(lit(1)).as("n_events"))
+            .select(col("window.start").as("window_start"), col("n_events")), ckpt, "update")
+          .foreachBatch(epochSink(out)).start()
+        try roundFiles.foreach { files =>
+          val roundFrames = spark.read.parquet(files: _*).select("value")
+            .collect().iterator.map(_.getAs[Array[Byte]](0)).toSeq
+          source.addData(roundFrames)
+          q.processAllAvailable()
+        } finally q.stop()
       }
-      unloadStateStores()
     }
     out
   }
 
   // ---- streaming incremental near-dup ingestion (q16j) -----------------
 
-  /** VERDICT r6 #4: the production LLM-ingest loop end-to-end. The q16i
-    * ingestion slice replays as a document STREAM (one micro-batch per
-    * id-keyed chunk); each micro-batch runs the asymmetric band join
-    * against the standing corpus's PERSISTED band index
-    * ([[graft.operators.DedupQueries.baseBandIndex]] — signatures/bands
-    * are read, never recomputed per batch), and flagged pairs land in
-    * the durable idempotent epoch sink. Per-batch cost is
-    * O(batch × bucket-collisions); the standing corpus is scanned only
-    * for the exact-verify payload of screened candidates. Composition
-    * of two independently-green components (q16i's join, the durable
-    * sink), so the drained sink must equal the batch q16i answer —
-    * that is q16j's oracle. Returns the sink dir. */
   /** Stage any id-keyed frame as `nChunks` mtime-ordered parquet chunk
     * files (chunk = id mod nChunks — deterministic, every chunk a
-    * scale-proportional batch), fingerprint-revalidated like
-    * [[chunkEvents]]. One staging engine for all three ingest replays
-    * (text q16j/q16k, vectors q16l, media q19e). The chunk value lives
-    * only in the staged dir names and is dropped by the file moves —
-    * data files carry exactly `frame`'s schema. */
+    * scale-proportional batch) through [[Replay.stageChunks]], the
+    * staging every chunked replay shares; data files carry exactly
+    * `frame`'s schema. */
   def stageChunksByIdMod(frame: DataFrame, idCol: String, rootName: String,
-                         dir: String, nChunks: Int): Path = {
-    val root = Paths.get(sys.props("java.io.tmpdir"), rootName,
-      dir.replaceAll("[^A-Za-z0-9._-]", "_"))
-    val chunkDir = root.resolve("chunks")
-    val doneFile = chunkDir.resolve("_DONE")
-    val fp = {
-      val r = frame.agg(count(lit(1)), min(col(idCol)), max(col(idCol))).head()
-      s"v1:$nChunks:${r.getLong(0)}:${r.get(1)}:${r.get(2)}"
-    }
-    if (Files.exists(doneFile) &&
-        new String(Files.readAllBytes(doneFile), "UTF-8").trim == fp) return chunkDir
-    deleteRecursively(root)
-    Files.createDirectories(chunkDir)
-    val staging = root.resolve("staging").toString
-    frame.withColumn("chunk", pmod(col(idCol), lit(nChunks)))
-      .repartition(col("chunk"))
-      .write.mode("overwrite").partitionBy("chunk").parquet(staging)
-    val chunkDirs = listDir(Paths.get(staging))
-      .filter(_.getFileName.toString.startsWith("chunk="))
-      // numeric chunk order (ADVICE r7 #2): a lexicographic sort of
-      // `chunk=N` names would stage 0,1,10,11,2,… at nChunks ≥ 10 and
-      // silently break the "strictly earlier chunk" replay contract
-      .sortBy(_.getFileName.toString.stripPrefix("chunk=").toInt)
-    chunkDirs.zipWithIndex.foreach { case (cDir, i) =>
-      val parts = listDir(cDir)
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .sortBy(_.getFileName.toString)
-      parts.zipWithIndex.foreach { case (part, j) =>
-        val dst = chunkDir.resolve(f"chunk_$i%03d_$j%02d.parquet")
-        Files.move(part, dst)
-        Files.setLastModifiedTime(dst, FileTime.fromMillis(1700000000000L + i * 1000L))
-      }
-    }
-    Files.write(doneFile, fp.getBytes("UTF-8"))
-    chunkDir
-  }
+                         dir: String, nChunks: Int): Path =
+    Replay.stageChunks(rootName, dir, s"v1:$nChunks", frame, idCol)(
+      frame.withColumn("chunk", pmod(col(idCol), lit(nChunks))))
 
   /** The q16i ingestion slice staged for the text ingest replays. */
   def stageIngestChunks(spark: SparkSession, dir: String, nChunks: Int): Path = {
@@ -1070,34 +902,37 @@ object StreamingPipelines {
       .select(col("doc_id"), shingles(col("toks"), 3).as("sh"))
   }
 
+  /** VERDICT r6 #4: the production LLM-ingest loop end-to-end. The q16i
+    * ingestion slice replays as a document STREAM (one micro-batch per
+    * id-keyed chunk); each micro-batch runs the asymmetric band join
+    * against the standing corpus's PERSISTED band index
+    * ([[graft.operators.DedupQueries.baseBandIndex]] — signatures/bands
+    * are read, never recomputed per batch), and flagged pairs land in
+    * the durable idempotent epoch sink. Per-batch cost is
+    * O(batch × bucket-collisions); the standing corpus is scanned only
+    * for the exact-verify payload of screened candidates. Composition
+    * of two independently-green components (q16i's join, the durable
+    * sink), so the drained sink must equal the batch q16i answer —
+    * that is q16j's oracle. Returns the sink dir. */
   def ingestNearDupReplay(spark: SparkSession, dir: String,
                           nChunks: Int = graft.operators.DedupQueries.IngestChunks): String = {
     import graft.operators.DedupQueries
     val docs = Tables.load(spark, dir, "documents")
     val chunkDir = stageIngestChunks(spark, dir, nChunks)
     val out  = Files.createTempDirectory("graft-ingest-out").toString
-    val ckpt = Files.createTempDirectory("graft-ingest-ckpt").toString
     // the index and the base payload frame are static across batches
     val index = DedupQueries.baseBandIndex(spark, dir)
     val base = DedupQueries.wordShingleDocs(spark, dir)
       .where(col("doc_id") % DedupQueries.IngestSplitMod =!= DedupQueries.IngestSplitRem)
-    val q = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(chunkDir.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DedupQueries.nearDupPairsAcross(
-            base = base, batch = shingleBatch(batch),
-            sigCol = call_function(graft.functions.MinHash.sigFnName, col("sh")),
-            payloadCol = col("sh"),
-            jacOf = DedupQueries.arrayJaccard, threshold = 0.8,
-            baseIndex = Some(index))
-          .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-      }.start()
-    q.awaitTermination()
+    Replay.drain(chunkStream(spark, docs.schema, chunkDir)) { (batch, batchId) =>
+      DedupQueries.nearDupPairsAcross(
+          base = base, batch = shingleBatch(batch),
+          sigCol = call_function(graft.functions.MinHash.sigFnName, col("sh")),
+          payloadCol = col("sh"),
+          jacOf = DedupQueries.arrayJaccard, threshold = 0.8,
+          baseIndex = Some(index))
+        .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+    }
     out
   }
 
@@ -1189,71 +1024,61 @@ object StreamingPipelines {
     val docs = Tables.load(spark, dir, "documents")
     val chunkDir = chunkDirOpt.getOrElse(stageIngestChunks(spark, dir, nChunks))
     val out  = outOpt.getOrElse(Files.createTempDirectory("graft-grow-out").toString)
-    val ckpt = ckptOpt.getOrElse(Files.createTempDirectory("graft-grow-ckpt").toString)
     val grow = growOpt.getOrElse(Files.createTempDirectory("graft-grow-idx"))
     val sigDir  = grow.resolve("sigs").toString
     val bandDir = grow.resolve("bands").toString
     val baseIdx = DedupQueries.baseBandIndex(spark, dir)
     val payload = DedupQueries.wordShingleDocs(spark, dir)
     lastGrowStats = Nil
-    val q = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(chunkDir.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // maintenance policy: every K-th epoch folds the candidate
-        // appendices strictly below itself BEFORE probing (a retried
-        // epoch re-runs the fold, which converges and probes
-        // identically — pinned in StreamingParitySpec)
-        val compacted = batchId > 0 && batchId % CompactEveryEpochs == 0
-        if (compacted) {
-          compactIngestAppendix(spark, sigDir, Seq("doc_id", "sig"), uptoExclusive = batchId)
-          compactIngestAppendix(spark, bandDir, Seq("doc_id", "band"), uptoExclusive = batchId)
+    Replay.drain(chunkStream(spark, docs.schema, chunkDir), ckptOpt = ckptOpt) { (batch, batchId) =>
+      // maintenance policy: every K-th epoch folds the candidate
+      // appendices strictly below itself BEFORE probing (a retried
+      // epoch re-runs the fold, which converges and probes
+      // identically — pinned in StreamingParitySpec)
+      val compacted = batchId > 0 && batchId % CompactEveryEpochs == 0
+      if (compacted) {
+        compactIngestAppendix(spark, sigDir, Seq("doc_id", "sig"), uptoExclusive = batchId)
+        compactIngestAppendix(spark, bandDir, Seq("doc_id", "band"), uptoExclusive = batchId)
+      }
+      // telemetry stamp only (q16k_batches): appendix row count from
+      // parquet FOOTERS driver-side — exact, zero Spark jobs, where a
+      // count() job per epoch was pure scheduler overhead (guide §5)
+      val (dirsNow, rowsNow) =
+        if (!Files.exists(Paths.get(sigDir))) (0, 0L)
+        else {
+          // match Spark's leaf-file filtering (ADVICE r20 #3): skip
+          // _temporary/hidden segments an aborted epoch write can
+          // stray, which spark.read ignores but a bare walk counts
+          val walked = Files.walk(Paths.get(sigDir))
+          val pq = try walked.iterator().asScala
+            .filter(_.getFileName.toString.endsWith(".parquet"))
+            .filter(p => Paths.get(sigDir).relativize(p).iterator().asScala
+              .forall { seg =>
+                val s = seg.toString
+                !s.startsWith("_") && !s.startsWith(".")
+              })
+            .map(_.toString).toSeq finally walked.close()
+          (listDir(Paths.get(sigDir))
+             .count(_.getFileName.toString.startsWith("batch_id=")),
+           org.apache.spark.sql.execution.datasources.parquet
+             .GraftParquetShim.footerRowCount(spark, pq))
         }
-        // telemetry stamp only (q16k_batches): appendix row count from
-        // parquet FOOTERS driver-side — exact, zero Spark jobs, where a
-        // count() job per epoch was pure scheduler overhead (guide §5)
-        val (dirsNow, rowsNow) =
-          if (!Files.exists(Paths.get(sigDir))) (0, 0L)
-          else {
-            // match Spark's leaf-file filtering (ADVICE r20 #3): skip
-            // _temporary/hidden segments an aborted epoch write can
-            // stray, which spark.read ignores but a bare walk counts
-            val walked = Files.walk(Paths.get(sigDir))
-            val pq = try walked.iterator().asScala
-              .filter(_.getFileName.toString.endsWith(".parquet"))
-              .filter(p => Paths.get(sigDir).relativize(p).iterator().asScala
-                .forall { seg =>
-                  val s = seg.toString
-                  !s.startsWith("_") && !s.startsWith(".")
-                })
-              .map(_.toString).toSeq finally walked.close()
-            (listDir(Paths.get(sigDir))
-               .count(_.getFileName.toString.startsWith("batch_id=")),
-             org.apache.spark.sql.execution.datasources.parquet
-               .GraftParquetShim.footerRowCount(spark, pq))
-          }
-        val t0 = System.nanoTime()
-        val shingled = shingleBatch(batch)
-        growingIngestProbe(spark, baseIdx, payload, shingled, batchId, sigDir, bandDir)
-          .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-        val probeSec = (System.nanoTime() - t0) / 1e9
-        // accept: this batch's sig/band tables join the standing index.
-        // `sigs` is referenced twice (sig write, band derivation) —
-        // batch-sized, so the recompute is cheaper than a read-back.
-        val sigs = shingled.select(col("doc_id"),
-          call_function(graft.functions.MinHash.sigFnName, col("sh")).as("sig"))
-        sigs.write.mode("overwrite").parquet(s"$sigDir/batch_id=$batchId")
-        sigs.select(col("doc_id"), explode(DedupQueries.bandKeys(col("sig"))).as("band"))
-          .write.mode("overwrite").parquet(s"$bandDir/batch_id=$batchId")
-        lastGrowStats = lastGrowStats :+
-          IngestBatchStat(batchId, math.rint(probeSec * 1000) / 1000, dirsNow, rowsNow, compacted)
-        ()
-      }.start()
-    q.awaitTermination()
+      val t0 = System.nanoTime()
+      val shingled = shingleBatch(batch)
+      growingIngestProbe(spark, baseIdx, payload, shingled, batchId, sigDir, bandDir)
+        .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+      val probeSec = (System.nanoTime() - t0) / 1e9
+      // accept: this batch's sig/band tables join the standing index.
+      // `sigs` is referenced twice (sig write, band derivation) —
+      // batch-sized, so the recompute is cheaper than a read-back.
+      val sigs = shingled.select(col("doc_id"),
+        call_function(graft.functions.MinHash.sigFnName, col("sh")).as("sig"))
+      sigs.write.mode("overwrite").parquet(s"$sigDir/batch_id=$batchId")
+      sigs.select(col("doc_id"), explode(DedupQueries.bandKeys(col("sig"))).as("band"))
+        .write.mode("overwrite").parquet(s"$bandDir/batch_id=$batchId")
+      lastGrowStats = lastGrowStats :+
+        IngestBatchStat(batchId, math.rint(probeSec * 1000) / 1000, dirsNow, rowsNow, compacted)
+    }
     out
   }
 
@@ -1524,18 +1349,9 @@ object StreamingPipelines {
     val incoming = docs.where(
       col("doc_id") % DedupQueries.IngestSplitMod === DedupQueries.IngestSplitRem)
     val chunkDir = stageChunksByIdMod(incoming, "doc_id", "graft-postingest", dir, nChunks)
-    val ckpt = Files.createTempDirectory("graft-postingest-ckpt").toString
-    val q = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(chunkDir.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        LayoutQueries.postingsAppendIncremental(spark, root, batch, batchId)
-      }.start()
-    q.awaitTermination()
+    Replay.drain(chunkStream(spark, docs.schema, chunkDir)) { (batch, batchId) =>
+      LayoutQueries.postingsAppendIncremental(spark, root, batch, batchId)
+    }
     // post-drain QUIESCED maintenance slot: postings are PAYLOAD rows
     // (they feed ranks 1:1 — a mid-crash duplicate would double a df
     // count), so unlike the candidate appendices they compact only
@@ -1549,13 +1365,11 @@ object StreamingPipelines {
       Seq("src_batch", "n", "sum_dl"))
   }
 
-  private val postingestCache = TrieMap.empty[String, Boolean]
-
   /** Q18q — run (once per dataset per JVM) the posting ingest replay,
     * then answer the q18o queries from the composed base ∪ ingested
     * view; oracle = q18o's SQL over the full corpus. */
   def q18qBm25StreamIngest(spark: SparkSession, dir: String): DataFrame = {
-    postingestCache.getOrElseUpdate(dir, { postingIngestReplay(spark, dir); true })
+    Replay.memo("postingest", dir) { postingIngestReplay(spark, dir); true }
     graft.operators.LayoutQueries.q18qAfterIngest(spark, dir)
   }
 
@@ -1576,24 +1390,15 @@ object StreamingPipelines {
       .where(col("vec_id") >= 1000000L)
     val chunkDir = stageChunksByIdMod(copies, "vec_id", "graft-embingest", dir, nChunks)
     val out  = Files.createTempDirectory("graft-embingest-out").toString
-    val ckpt = Files.createTempDirectory("graft-embingest-ckpt").toString
     val (bits, baseKeys) = SimilarityQueries.embKeyIndex(spark, dir)
     val base = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val q = spark.readStream
-      .schema(copies.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(chunkDir.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.SimilarityQueries
-          .embeddingNearDupAcross(base, batch, threshold = 0.9,
-            bits = bits, baseKeys = baseKeys)
-          .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-      }.start()
-    q.awaitTermination()
+    Replay.drain(chunkStream(spark, copies.schema, chunkDir)) { (batch, batchId) =>
+      graft.operators.SimilarityQueries
+        .embeddingNearDupAcross(base, batch, threshold = 0.9,
+          bits = bits, baseKeys = baseKeys)
+        .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+    }
     out
   }
 
@@ -1648,7 +1453,6 @@ object StreamingPipelines {
       .unionAll(SimilarityQueries.plantedEmbeddingsGen2(spark, dir))
     val chunkDir = stageChunksByIdMod(incoming, "vec_id", "graft-embgrow", dir, nChunks)
     val out  = Files.createTempDirectory("graft-embgrow-out").toString
-    val ckpt = Files.createTempDirectory("graft-embgrow-ckpt").toString
     val grow = Files.createTempDirectory("graft-embgrow-idx")
     val keysDir = grow.resolve("keys").toString
     val vecsDir = grow.resolve("vecs").toString
@@ -1667,36 +1471,27 @@ object StreamingPipelines {
     val loopIvf = SimilarityQueries.ivfCentroids(spark, ivfKey,
       base.select(col("vec_id").as("id"), col("v")),
       counter = SimilarityQueries.ivfIngestTrainCount)
-    val q = spark.readStream
-      .schema(incoming.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(chunkDir.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // maintenance policy (candidate table only — the vecs PAYLOAD
-        // waits for the post-drain quiesced slot)
-        if (batchId > 0 && batchId % CompactEveryEpochs == 0)
-          compactIngestAppendix(spark, keysDir, Seq("id", "table_id", "key"),
-            uptoExclusive = batchId)
-        embGrowingProbe(spark, bits, baseKeys, base, batch, batchId, keysDir, vecsDir)
-          .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-        // accept: this batch's keys (at the standing width) and payload
-        // vectors join the accumulated index
-        batch.select(col("vec_id").as("id"),
-            posexplode(call_function(graft.functions.HyperplaneLsh.wideFnName,
-              col("v"), lit(bits))).as(Seq("table_id", "key")))
-          .write.mode("overwrite").parquet(s"$keysDir/batch_id=$batchId")
-        batch.select("vec_id", "v")
-          .write.mode("overwrite").parquet(s"$vecsDir/batch_id=$batchId")
-        // IVF accept: score the batch against the loop index's frozen
-        // centroids only — O(|batch| × k), the FAISS add() split
-        SimilarityQueries.ivfAssignIncremental(spark, loopIvf,
-          batch.select(col("vec_id").as("id"), col("v")), batchId)
-        ()
-      }.start()
-    q.awaitTermination()
+    Replay.drain(chunkStream(spark, incoming.schema, chunkDir)) { (batch, batchId) =>
+      // maintenance policy (candidate table only — the vecs PAYLOAD
+      // waits for the post-drain quiesced slot)
+      if (batchId > 0 && batchId % CompactEveryEpochs == 0)
+        compactIngestAppendix(spark, keysDir, Seq("id", "table_id", "key"),
+          uptoExclusive = batchId)
+      embGrowingProbe(spark, bits, baseKeys, base, batch, batchId, keysDir, vecsDir)
+        .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+      // accept: this batch's keys (at the standing width) and payload
+      // vectors join the accumulated index
+      batch.select(col("vec_id").as("id"),
+          posexplode(call_function(graft.functions.HyperplaneLsh.wideFnName,
+            col("v"), lit(bits))).as(Seq("table_id", "key")))
+        .write.mode("overwrite").parquet(s"$keysDir/batch_id=$batchId")
+      batch.select("vec_id", "v")
+        .write.mode("overwrite").parquet(s"$vecsDir/batch_id=$batchId")
+      // IVF accept: score the batch against the loop index's frozen
+      // centroids only — O(|batch| × k), the FAISS add() split
+      SimilarityQueries.ivfAssignIncremental(spark, loopIvf,
+        batch.select(col("vec_id").as("id"), col("v")), batchId)
+    }
     // post-drain QUIESCED maintenance slot (the stream has stopped with
     // its last epoch committed): fold the payload appendix, then apply
     // the IVF growth policy — retrain over the grown corpus iff the
@@ -1714,13 +1509,11 @@ object StreamingPipelines {
     out
   }
 
-  private val embGrowCache = TrieMap.empty[String, String]
-
   /** Q16m — drained growing-corpus embedding-ingest pairs. Oracle: each
     * incoming copy × (base ∪ strictly-earlier-chunk copies) at cos ≥
     * 0.9 — SQL-expressible, fully hash-checked. */
   def q16mStreamIngestEmbGrowing(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(embGrowCache.getOrElseUpdate(dir, ingestEmbGrowingReplay(spark, dir)))
+    spark.read.parquet(Replay.memo("embGrow", dir)(ingestEmbGrowingReplay(spark, dir)))
       .select("new_id", "old_id", "cos_sim")
       .orderBy("new_id", "old_id")
 
@@ -1759,61 +1552,50 @@ object StreamingPipelines {
     // the accept appendix path materializes at the FIRST accept write —
     // an existing-but-empty dir would fail schema inference at epoch 0
     val acc  = Files.createTempDirectory("graft-lineingest-acc").resolve("digests").toString
-    val ckpt = Files.createTempDirectory("graft-lineingest-ckpt").toString
-    val q = spark.readStream
-      .schema(incoming.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(chunkDir.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > 0 && batchId % CompactEveryEpochs == 0)
-          compactIngestAppendix(spark, acc, Seq("h64", "h128"), uptoExclusive = batchId)
-        val occ = DedupQueries.linedPages(batch)
-          .select(col("doc_id"), col("pos"), col("line"),
-            length(col("line")).cast("long").as("n_chars"),
-            xxhash64(col("line")).as("h64"), md5(col("line")).as("h128"))
-        val standing =
-          (if (!Files.exists(Paths.get(acc))) baseDigests
-           else baseDigests.unionAll(spark.read.parquet(acc)
-             .where(col("batch_id") < batchId).select("h64", "h128")))
-            .distinct().withColumn("seen", lit(1))
-        val winners = occ.groupBy("h64", "h128")
-          .agg(min(struct(col("doc_id"), col("pos"))).as("w"))
-        occ.join(winners, Seq("h64", "h128"))
-          .join(standing, Seq("h64", "h128"), "left_outer")
-          .select(col("doc_id"), col("pos"), col("line"), col("n_chars"),
-            (col("seen").isNull &&
-             col("w.doc_id") === col("doc_id") && col("w.pos") === col("pos")).as("keep"))
-          .groupBy("doc_id")
-          .agg(
-            count(lit(1)).as("n_lines"),
-            sum(when(col("keep"), 1L).otherwise(0L)).as("kept_lines"),
-            sum(when(!col("keep"), 1L).otherwise(0L)).as("dropped_lines"),
-            sum(when(col("keep"), col("n_chars")).otherwise(0L)).as("kept_chars"),
-            collect_list(when(col("keep"), struct(col("pos"), col("line")))).as("kept"))
-          .select(col("doc_id"), col("n_lines"), col("kept_lines"),
-            col("dropped_lines"), col("kept_chars"),
-            when(col("kept_lines") > 0,
-              md5(array_join(transform(array_sort(col("kept")), _.getField("line")),
-                "\n"))).as("clean_md5"))
-          .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-        // accept: every line digest this batch carried is now "seen"
-        occ.select("h64", "h128").distinct()
-          .write.mode("overwrite").parquet(s"$acc/batch_id=$batchId")
-      }.start()
-    q.awaitTermination()
+    Replay.drain(chunkStream(spark, incoming.schema, chunkDir)) { (batch, batchId) =>
+      if (batchId > 0 && batchId % CompactEveryEpochs == 0)
+        compactIngestAppendix(spark, acc, Seq("h64", "h128"), uptoExclusive = batchId)
+      val occ = DedupQueries.linedPages(batch)
+        .select(col("doc_id"), col("pos"), col("line"),
+          length(col("line")).cast("long").as("n_chars"),
+          xxhash64(col("line")).as("h64"), md5(col("line")).as("h128"))
+      val standing =
+        (if (!Files.exists(Paths.get(acc))) baseDigests
+         else baseDigests.unionAll(spark.read.parquet(acc)
+           .where(col("batch_id") < batchId).select("h64", "h128")))
+          .distinct().withColumn("seen", lit(1))
+      val winners = occ.groupBy("h64", "h128")
+        .agg(min(struct(col("doc_id"), col("pos"))).as("w"))
+      occ.join(winners, Seq("h64", "h128"))
+        .join(standing, Seq("h64", "h128"), "left_outer")
+        .select(col("doc_id"), col("pos"), col("line"), col("n_chars"),
+          (col("seen").isNull &&
+           col("w.doc_id") === col("doc_id") && col("w.pos") === col("pos")).as("keep"))
+        .groupBy("doc_id")
+        .agg(
+          count(lit(1)).as("n_lines"),
+          sum(when(col("keep"), 1L).otherwise(0L)).as("kept_lines"),
+          sum(when(!col("keep"), 1L).otherwise(0L)).as("dropped_lines"),
+          sum(when(col("keep"), col("n_chars")).otherwise(0L)).as("kept_chars"),
+          collect_list(when(col("keep"), struct(col("pos"), col("line")))).as("kept"))
+        .select(col("doc_id"), col("n_lines"), col("kept_lines"),
+          col("dropped_lines"), col("kept_chars"),
+          when(col("kept_lines") > 0,
+            md5(array_join(transform(array_sort(col("kept")), _.getField("line")),
+              "\n"))).as("clean_md5"))
+        .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+      // accept: every line digest this batch carried is now "seen"
+      occ.select("h64", "h128").distinct()
+        .write.mode("overwrite").parquet(s"$acc/batch_id=$batchId")
+    }
     out
   }
-
-  private val lineIngestCache = TrieMap.empty[String, String]
 
   /** Q16o — the drained per-page results of the streamed line-dedup
     * loop; oracle = keep-first under arrival rank (base before chunks,
     * (doc_id, pos) within), restricted to the incoming pages. */
   def q16oStreamLineIngest(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(lineIngestCache.getOrElseUpdate(dir, lineIngestReplay(spark, dir)))
+    spark.read.parquet(Replay.memo("lineIngest", dir)(lineIngestReplay(spark, dir)))
       .select("doc_id", "n_lines", "kept_lines", "dropped_lines", "kept_chars", "clean_md5")
       .orderBy("doc_id")
 
@@ -1838,9 +1620,7 @@ object StreamingPipelines {
     * needed at read. Oracle = batch q27's SQL, hash-checked. */
   def funnelReplay(spark: SparkSession, dir: String,
                    filesPerTrigger: Int = 16): String = {
-    val chunkDir = chunkEvents(spark, dir)
     val out  = Files.createTempDirectory("graft-funnel-out").toString
-    val ckpt = Files.createTempDirectory("graft-funnel-ckpt").toString
     // state sized to the state, not the cores (the q28t/replay()
     // discipline, guide §2.1 — q20n was one of the r20 ANTI-SCALERS:
     // 32 state-store partitions for a few-thousand-user funnel meant
@@ -1867,31 +1647,20 @@ object StreamingPipelines {
         state.update(s)
         (uid, s.tv.isDefined, s.tc.isDefined, s.tp.isDefined)
       }
-    val q = eventStream(ss,
-        SourceConfig(path = chunkDir.toString, filesPerTrigger = filesPerTrigger))
-      .where(col("event_type") =!= SentinelType)
+    Replay.drain(realEvents(ss, dir, filesPerTrigger)
       .as[Event]
       .groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(fold)
-      .toDF("user_id", "v", "c", "p")
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-      }.start()
-    q.awaitTermination()
+      .toDF("user_id", "v", "c", "p"), "update")(epochSink(out))
     out
   }
-
-  private val funnelCache = TrieMap.empty[String, String]
 
   /** Q20n — the drained streamed funnel: per-user stage flags reduced
     * by max (monotone), stage cohorts counted — must hash-equal batch
     * q27. */
   def q20nStreamFunnel(spark: SparkSession, dir: String): DataFrame = {
     val st = spark.read
-      .parquet(funnelCache.getOrElseUpdate(dir, funnelReplay(spark, dir)))
+      .parquet(Replay.memo("funnel", dir)(funnelReplay(spark, dir)))
       .groupBy("user_id")
       .agg(max(col("v").cast("int")).as("v"), max(col("c").cast("int")).as("c"),
         max(col("p").cast("int")).as("p"))
@@ -1969,26 +1738,14 @@ object StreamingPipelines {
     }
     val incoming = events.where(col("ts") >= cut)
     val chunkDir = stageChunksByIdMod(incoming, "event_id", "graft-snapingest", dir, nChunks)
-    val ckpt = Files.createTempDirectory("graft-snapingest-ckpt").toString
-    val q = spark.readStream
-      .schema(incoming.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(chunkDir.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        SnapshotStore.commitEpoch(batch.sparkSession, root, batch, batchId)
-        // in-loop GC: this epoch's version + its committed predecessor
-        // (a retry of this epoch must still find it) — the q25b policy
-        SnapshotStore.vacuum(batch.sparkSession, root, retain = 2)
-        ()
-      }.start()
-    q.awaitTermination()
+    Replay.drain(chunkStream(spark, incoming.schema, chunkDir)) { (batch, batchId) =>
+      SnapshotStore.commitEpoch(batch.sparkSession, root, batch, batchId)
+      // in-loop GC: this epoch's version + its committed predecessor
+      // (a retry of this epoch must still find it) — the q25b policy
+      SnapshotStore.vacuum(batch.sparkSession, root, retain = 2)
+    }
     root
   }
-
-  private val snapIngestCache = TrieMap.empty[String, Path]
 
   /** Q26j — COMPACTION of the streamed snapshot table (the OPTIMIZE /
     * `rewrite_data_files` maintenance op; [[graft.core.SnapshotStore.compact]]):
@@ -2004,7 +1761,7 @@ object StreamingPipelines {
     * already compact (re-runs are no-ops between ingests). */
   def q26jSnapshotCompact(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.SnapshotStore
-    val root = snapIngestCache.getOrElseUpdate(dir, snapIngestReplay(spark, dir))
+    val root = Replay.memo("snapIngest", dir)(snapIngestReplay(spark, dir))
     val head = SnapshotStore.headVersion(root).get
     if (SnapshotStore.filesAt(spark, root, head).size > SnapCompactFiles) {
       SnapshotStore.compact(spark, root, SnapCompactFiles,
@@ -2034,7 +1791,7 @@ object StreamingPipelines {
     * epoch dirs are storage-only (no key=value shape), so the read
     * takes `inferPartitions = false`. */
   def q26hStreamSnapIngest(spark: SparkSession, dir: String): DataFrame = {
-    val root = snapIngestCache.getOrElseUpdate(dir, snapIngestReplay(spark, dir))
+    val root = Replay.memo("snapIngest", dir)(snapIngestReplay(spark, dir))
     graft.core.SnapshotStore.readAt(spark, root, inferPartitions = false)
       .where(col("event_type").isin("click", "purchase", "view"))
       .groupBy(col("event_type"))
@@ -2061,11 +1818,26 @@ object StreamingPipelines {
     * counts. This is how a 100 TB corpus feeds a tokenizer fleet:
     * producers append versions; consumers see exactly the committed
     * deltas, never an in-flight file. */
-  def q26uStreamIncremental(spark: SparkSession, dir: String): DataFrame = {
+  def q26uStreamIncremental(spark: SparkSession, dir: String): DataFrame =
+    threeLoadRollup(spark, dir, "graft-q26u")(snapshotStream(spark, _))((_, _) => ())
+
+  /** A `graft-snapshot` stream over the table at `root`. */
+  private def snapshotStream(spark: SparkSession, root: Path,
+                             opts: (String, String)*): DataFrame =
+    spark.readStream.format("graft-snapshot").option("path", root.toString)
+      .options(opts.toMap).load()
+
+  /** The three-load sequence q26u, q28l and q28 share: the events
+    * before 2024-01-12 commit as v1 before `reader` starts consuming,
+    * the slice up to the snapshot cutoff lands mid-stream, `afterV2`
+    * runs (given the table root and the drain callback), and the tail
+    * lands last — each load drained as it commits. The drained rows
+    * roll up per event_type, which must equal the flat corpus's rollup. */
+  private def threeLoadRollup(spark: SparkSession, dir: String, family: String)
+                             (reader: Path => DataFrame)
+                             (afterV2: (Path, () => Unit) => Unit): DataFrame = {
     import graft.core.SnapshotStore
-    val root = Files.createTempDirectory("graft-q26u")
-    val ckpt = Files.createTempDirectory("graft-q26u-ckpt")
-    val out = root.resolve("drained").toString
+    val root = Files.createTempDirectory(family)
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("user_id"), col("value"))
     val c1 = lit("2024-01-12").cast("timestamp")
@@ -2077,23 +1849,14 @@ object StreamingPipelines {
         SnapshotStore.dataFiles(root).filter(_.startsWith(s"data/load$n/")))
     }
     commitLoad(1, events.where(col("ts") < c1)) // v1: before the stream
-    val q = spark.readStream
-      .format("graft-snapshot")
-      .option("path", root.toString)
-      .load()
-      .writeStream
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        b.write.mode("append").parquet(out))
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      q.processAllAvailable() // drains v1
+    Replay.consume(reader(root), root.resolve("drained").toString) { drain =>
+      drain() // drains v1
       commitLoad(2, events.where(col("ts") >= c1 && col("ts") < c2)) // v2: mid-stream
-      q.processAllAvailable() // drains exactly v2's delta
-      commitLoad(3, events.where(col("ts") >= c2)) // v3: mid-stream
-      q.processAllAvailable() // drains exactly v3's delta
-    } finally q.stop()
-    spark.read.parquet(out)
+      drain() // drains exactly v2's delta
+      afterV2(root, drain)
+      commitLoad(3, events.where(col("ts") >= c2)) // the tail: mid-stream
+      drain() // drains exactly the tail's delta
+    }
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
@@ -2114,49 +1877,13 @@ object StreamingPipelines {
     * catalog binding that re-drained a version, dropped a mid-stream
     * commit, or mis-bound the schema moves the rollup. */
   def q28lSqlStreamRead(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.SnapshotStore
-    val root = Files.createTempDirectory("graft-q28l")
-    val ckpt = Files.createTempDirectory("graft-q28l-ckpt")
-    val out = root.resolve("drained").toString
-    val events = Tables.load(spark, dir, "events")
-      .select(col("event_id"), col("ts"), col("event_type"), col("user_id"), col("value"))
-    val c1 = lit("2024-01-12").cast("timestamp")
-    val c2 = lit(graft.operators.LayoutQueries.SnapCutoff).cast("timestamp")
-    def commitLoad(n: Int, slice: DataFrame): Unit = {
-      slice.repartition(2).write.mode("overwrite")
-        .parquet(root.resolve(s"data/load$n").toString)
-      SnapshotStore.commitAppend(spark, root,
-        SnapshotStore.dataFiles(root).filter(_.startsWith(s"data/load$n/")))
-      ()
-    }
-    commitLoad(1, events.where(col("ts") < c1)) // v1: before the stream
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
-    val q = spark.readStream
-      .option("maxFilesPerTrigger", "64")
-      .table(s"graft_lake.`${root.toAbsolutePath.normalize}`")
-      .writeStream
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        b.write.mode("append").parquet(out))
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      q.processAllAvailable() // drains v1
-      commitLoad(2, events.where(col("ts") >= c1 && col("ts") < c2)) // v2: mid-stream
-      q.processAllAvailable() // drains exactly v2's delta
+    def table(root: Path) = s"graft_lake.`${root.toAbsolutePath.normalize}`"
+    threeLoadRollup(spark, dir, "graft-q28l")(root =>
+      spark.readStream.option("maxFilesPerTrigger", "64").table(table(root))) { (root, _) =>
       // batch reads of the SAME catalog name stay live mid-stream
-      require(spark.sql(
-          s"SELECT COUNT(*) FROM graft_lake.`${root.toAbsolutePath.normalize}`")
-        .head().getLong(0) > 0L)
-      commitLoad(3, events.where(col("ts") >= c2)) // v3: mid-stream
-      q.processAllAvailable() // drains exactly v3's delta
-    } finally q.stop()
-    spark.read.parquet(out)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        countDistinct(col("user_id")).as("n_users"),
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"),
-        max(col("ts")).as("max_ts"))
-      .orderBy("event_type")
+      require(spark.sql(s"SELECT COUNT(*) FROM ${table(root)}").head().getLong(0) > 0L)
+    }
   }
 
   /** Q28q — STREAMING WRITE THROUGH THE SQL CATALOG (VERDICT r18
@@ -2184,32 +1911,15 @@ object StreamingPipelines {
     * round-trip all hash-fail against the batch oracle. */
   def q28qSqlStreamWrite(spark: SparkSession, dir: String): DataFrame = {
     val root = Files.createTempDirectory("graft-q28q").resolve("tbl")
-    val ckpt = Files.createTempDirectory("graft-q28q-ckpt")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val t = s"graft_lake.`${root.toAbsolutePath.normalize}`"
     spark.sql(s"CREATE TABLE $t (event_id BIGINT, ts TIMESTAMP, " +
       "user_id BIGINT, value DOUBLE, props STRING, event_type STRING) " +
       "PARTITIONED BY (event_type)") // v1 seed
-    val chunkDir = chunkEvents(spark, dir)
-    def start() = eventStream(spark,
-        SourceConfig(path = chunkDir.toString, filesPerTrigger = 6))
-      .where(col("event_type") =!= SentinelType)
+    val events = realEvents(spark, dir, filesPerTrigger = 6)
       // aligned to the table's declared order (partition column last)
       .select("event_id", "ts", "user_id", "value", "props", "event_type")
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .toTable(t)
-    val q1 = start()
-    try {
-      // drain a prefix, then stop mid-corpus: the restart replays the
-      // last epoch whose sink commit the progress log may not have
-      // recorded — the manifest idempotence check absorbs it
-      var waited = 0
-      while (graft.core.SnapshotStore.headVersion(root).forall(_ < 3L)
-          && waited < 600) { Thread.sleep(100); waited += 1 }
-    } finally q1.stop()
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
+    stopRestartDrain(root)(ckpt => Replay.writer(events, ckpt).toTable(t))
     spark.sql(
       s"""SELECT event_type, COUNT(*) AS n_events,
          |  COUNT(DISTINCT user_id) AS n_users,
@@ -2219,6 +1929,23 @@ object StreamingPipelines {
          |GROUP BY event_type
          |ORDER BY event_type""".stripMargin)
   }
+
+  /** Run a streaming write into the catalog table at `root` until its
+    * HEAD reaches v3, stop it mid-corpus, then restart it from the same
+    * checkpoint and drain (q28q, q28t): the restart replays the last
+    * epoch whose sink commit the progress log may not have recorded,
+    * which the table's epoch ledger must absorb. */
+  private def stopRestartDrain(root: Path)(start: String => StreamingQuery): Unit =
+    Replay.withCheckpoint(None) { ckpt =>
+      val q1 = start(ckpt)
+      try {
+        var waited = 0
+        while (graft.core.SnapshotStore.headVersion(root).forall(_ < 3L)
+            && waited < 600) { Thread.sleep(100); waited += 1 }
+      } finally q1.stop()
+      val q2 = start(ckpt)
+      try q2.processAllAvailable() finally q2.stop()
+    }
 
   /** Q28t — UPDATE-MODE STREAMING WRITE INTO A CATALOG TABLE (VERDICT
     * r19 missing #3): a streaming AGGREGATION — the reference's own
@@ -2246,12 +1973,10 @@ object StreamingPipelines {
     * the table. */
   def q28tSqlStreamUpdate(spark: SparkSession, dir: String): DataFrame = {
     val root = Files.createTempDirectory("graft-q28t").resolve("tbl")
-    val ckpt = Files.createTempDirectory("graft-q28t-ckpt")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val t = s"graft_lake.`${root.toAbsolutePath.normalize}`"
     spark.sql(s"CREATE TABLE $t (user_id BIGINT, n_events BIGINT, " +
       "sum_value DOUBLE, max_ts TIMESTAMP)") // v1 seed, flat
-    val chunkDir = chunkEvents(spark, dir)
     // state sized to the state, not the cores (the replay()/q20k
     // discipline, guide §2): this aggregation holds one row per user —
     // 32 state-store partitions would mean 32 near-empty store commits
@@ -2265,31 +1990,13 @@ object StreamingPipelines {
     ss.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     ss.conf.set("spark.sql.shuffle.partitions",
       spark.conf.getOption("spark.graft.stream.statePartitions").getOrElse("2"))
-    def start() = eventStream(ss,
-        SourceConfig(path = chunkDir.toString, filesPerTrigger = 6))
-      .where(col("event_type") =!= SentinelType)
+    val perUser = realEvents(ss, dir, filesPerTrigger = 6)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"),
         max(col("ts")).as("max_ts"))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt.toString)
-      .option("mergeKeys", "user_id")
-      .toTable(t)
-    locally {
-      val q1 = start()
-      try {
-        // drain a prefix, then stop mid-corpus: the restart replays the
-        // last epoch whose sink commit the progress log may not have
-        // recorded — the epoch ledger absorbs it
-        var waited = 0
-        while (graft.core.SnapshotStore.headVersion(root).forall(_ < 3L)
-            && waited < 600) { Thread.sleep(100); waited += 1 }
-      } finally q1.stop()
-      val q2 = start()
-      try q2.processAllAvailable() finally q2.stop()
-    }
+    stopRestartDrain(root)(ckpt =>
+      Replay.writer(perUser, ckpt, "update").option("mergeKeys", "user_id").toTable(t))
     // quiesced-slot compaction: resolve any pending deltas so PLAIN SQL
     // serves the state (mid-stream folds already ran under policy)
     spark.sql(s"CALL graft_lake.system.fold_cdc(" +
@@ -2318,51 +2025,14 @@ object StreamingPipelines {
     * `skipChangeCommits` / Iceberg rewrite-tolerant stream semantics —
     * at 100 TB, OPTIMIZE must not force a fleet of consumers to
     * re-checkpoint. */
-  def q28StreamCompactSkip(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.SnapshotStore
-    val root = Files.createTempDirectory("graft-q28")
-    val ckpt = Files.createTempDirectory("graft-q28-ckpt")
-    val out = root.resolve("drained").toString
-    val events = Tables.load(spark, dir, "events")
-      .select(col("event_id"), col("ts"), col("event_type"), col("user_id"), col("value"))
-    val c1 = lit("2024-01-12").cast("timestamp")
-    val c2 = lit(graft.operators.LayoutQueries.SnapCutoff).cast("timestamp")
-    def commitLoad(n: Int, slice: DataFrame): Unit = {
-      slice.repartition(2).write.mode("overwrite")
-        .parquet(root.resolve(s"data/load$n").toString)
-      SnapshotStore.commitAppend(spark, root,
-        SnapshotStore.dataFiles(root).filter(_.startsWith(s"data/load$n/")))
-    }
-    commitLoad(1, events.where(col("ts") < c1)) // v1: before the stream
-    val q = spark.readStream
-      .format("graft-snapshot")
-      .option("path", root.toString)
-      .option("skipRewrites", "true")
-      .load()
-      .writeStream
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        b.write.mode("append").parquet(out))
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      q.processAllAvailable() // drains v1
-      commitLoad(2, events.where(col("ts") >= c1 && col("ts") < c2)) // v2: mid-stream
-      q.processAllAvailable() // drains exactly v2's delta
+  def q28StreamCompactSkip(spark: SparkSession, dir: String): DataFrame =
+    threeLoadRollup(spark, dir, "graft-q28")(
+        snapshotStream(spark, _, "skipRewrites" -> "true")) { (root, drain) =>
       // v3: MID-STREAM COMPACTION — rewrites every standing file;
       // the consumer must drain it as a no-op, not refuse, not re-read
-      SnapshotStore.compact(spark, root, numFiles = 2, sortCol = Some("ts"))
-      q.processAllAvailable()
-      commitLoad(4, events.where(col("ts") >= c2)) // v4: append AFTER the rewrite
-      q.processAllAvailable() // drains exactly v4's delta
-    } finally q.stop()
-    spark.read.parquet(out)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        countDistinct(col("user_id")).as("n_users"),
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"),
-        max(col("ts")).as("max_ts"))
-      .orderBy("event_type")
-  }
+      graft.core.SnapshotStore.compact(spark, root, numFiles = 2, sortCol = Some("ts"))
+      drain()
+    }
 
   /** Q28b — STREAMING SOURCE OVER A MERGE-ON-READ (CDC-delta) TABLE
     * (VERDICT r15 missing #4 / next #3): the q26r table shape — a
@@ -2383,11 +2053,17 @@ object StreamingPipelines {
     * pattern: writers land O(|batch|) delta files, folds run under
     * policy, and downstream consumers keep draining through both —
     * nobody re-checkpoints because maintenance ran. */
-  def q28bStreamCdcFeed(spark: SparkSession, dir: String): DataFrame = {
+  def q28bStreamCdcFeed(spark: SparkSession, dir: String): DataFrame =
+    cdcFeedUpsert(spark, dir, "graft-q28b")(snapshotStream(spark, _, "cdcFeed" -> "true"))
+
+  /** The CDC-feed harness q28b and q28o share: the pre-cutoff events'
+    * upsert state as v1, three post-cutoff deltas with a fold after the
+    * second, each drained live by `reader`; the consumer resolves the
+    * drained feed with readAtCdc's per-key argmax. */
+  private def cdcFeedUpsert(spark: SparkSession, dir: String, family: String)
+                           (reader: Path => DataFrame): DataFrame = {
     import graft.core.SnapshotStore
-    val root = Files.createTempDirectory("graft-q28b")
-    val ckpt = Files.createTempDirectory("graft-q28b-ckpt")
-    val out = root.resolve("drained").toString
+    val root = Files.createTempDirectory(family)
     val events = Tables.load(spark, dir, "events")
     val cut = lit(graft.operators.LayoutQueries.SnapCutoff).cast("timestamp")
     cdcState(events.where(col("ts") < cut))
@@ -2395,35 +2071,23 @@ object StreamingPipelines {
       .write.mode("overwrite").parquet(root.resolve("data/base").toString)
     SnapshotStore.commit(spark, root, SnapshotStore.dataFiles(root),
       statsCols = Seq("user_id")) // v1: the standing upsert state
-    val q = spark.readStream
-      .format("graft-snapshot")
-      .option("path", root.toString)
-      .option("cdcFeed", "true")
-      .load()
-      .writeStream
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        b.write.mode("append").parquet(out))
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      q.processAllAvailable() // drains v1: base rows, _seq NULL
+    Replay.consume(reader(root), root.resolve("drained").toString) { drain =>
+      drain() // drains v1: base rows, _seq NULL
       val incoming = events.where(col("ts") >= cut)
       (0 until 3).foreach { i =>
         SnapshotStore.commitCdcDelta(spark, root,
           cdcState(incoming.where(pmod(col("event_id"), lit(3)) === i)), "user_id")
-        q.processAllAvailable() // drains exactly this delta's rows
+        drain() // drains exactly this delta's rows
         if (i == 1) {
           // MID-LOOP fold (the q26r maintenance op): pending deltas
           // collapse into the hot region; the feed drains it as a no-op
           SnapshotStore.foldCdc(spark, root, "user_id",
             Seq("last_ts", "last_eid"), numFiles = 8)
-          q.processAllAvailable()
+          drain()
         }
       }
-    } finally q.stop()
-    // consumer-side resolution: readAtCdc's per-key argmax, verbatim
-    val drained = spark.read.parquet(out)
-    drained
+    }
+      // consumer-side resolution: readAtCdc's per-key argmax, verbatim
       .withColumn("_s", coalesce(col("_seq"), lit(0L)))
       .groupBy("user_id")
       .agg(max_by(
@@ -2450,50 +2114,9 @@ object StreamingPipelines {
     * ergonomics — at 100 TB a CDC consumer addresses the feed by
     * table NAME, not by filesystem incantation. */
   def q28oSqlCdcFeed(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.SnapshotStore
-    val root = Files.createTempDirectory("graft-q28o")
-    val ckpt = Files.createTempDirectory("graft-q28o-ckpt")
-    val out = root.resolve("drained").toString
-    val events = Tables.load(spark, dir, "events")
-    val cut = lit(graft.operators.LayoutQueries.SnapCutoff).cast("timestamp")
-    cdcState(events.where(col("ts") < cut))
-      .repartitionByRange(8, col("user_id")).sortWithinPartitions("user_id")
-      .write.mode("overwrite").parquet(root.resolve("data/base").toString)
-    SnapshotStore.commit(spark, root, SnapshotStore.dataFiles(root),
-      statsCols = Seq("user_id")) // v1: the standing upsert state
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
-    val q = spark.readStream
-      .table(s"graft_lake.changes.`${root.toAbsolutePath.normalize}`")
-      .writeStream
-      .foreachBatch((b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        b.write.mode("append").parquet(out))
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      q.processAllAvailable() // drains v1: base rows, _seq NULL
-      val incoming = events.where(col("ts") >= cut)
-      (0 until 3).foreach { i =>
-        SnapshotStore.commitCdcDelta(spark, root,
-          cdcState(incoming.where(pmod(col("event_id"), lit(3)) === i)), "user_id")
-        q.processAllAvailable() // drains exactly this delta's rows
-        if (i == 1) {
-          SnapshotStore.foldCdc(spark, root, "user_id",
-            Seq("last_ts", "last_eid"), numFiles = 8)
-          q.processAllAvailable() // the fold drains as a no-op
-        }
-      }
-    } finally q.stop()
-    val drained = spark.read.parquet(out)
-    drained
-      .withColumn("_s", coalesce(col("_seq"), lit(0L)))
-      .groupBy("user_id")
-      .agg(max_by(
-        struct(col("last_type"), col("last_value"), col("last_ts"), col("deleted")),
-        struct(col("last_ts"), col("last_eid"), col("_s"))).as("w"))
-      .where(!col("w.deleted"))
-      .select(col("user_id"), col("w.last_type").as("last_type"),
-        col("w.last_value").as("last_value"), col("w.last_ts").as("last_ts"))
-      .orderBy("user_id")
+    cdcFeedUpsert(spark, dir, "graft-q28o")(root =>
+      spark.readStream.table(s"graft_lake.changes.`${root.toAbsolutePath.normalize}`"))
   }
 
   /** Q28f — STREAMING SOURCE OVER A MOR-DELETE TABLE (VERDICT r16
@@ -2518,9 +2141,39 @@ object StreamingPipelines {
     * policy, and downstream consumers drain through both. */
   def q28fStreamMorFeed(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.SnapshotStore
-    val root = Files.createTempDirectory("graft-q28f")
-    val ckpt = Files.createTempDirectory("graft-q28f-ckpt")
-    val out = root.resolve("drained").toString
+    deleteFeedRollup(spark, dir, "graft-q28f", "mor",
+        SnapshotStore.readAtMor(spark, _, None, "event_id")) { (root, cut, drain) =>
+      val ids = Tables.load(spark, dir, "events").select("event_id")
+      def delDecile(k: Int): Unit = {
+        SnapshotStore.deleteMor(spark, root,
+          ids.where(col("event_id") > cut(k - 1) && col("event_id") <= cut(k)), "event_id")
+        ()
+      }
+      delDecile(4) // v2: O(|keys|) delete commit
+      drain() // drains the retraction rows, _seq = 2
+      delDecile(5) // v3: deletes accumulate
+      drain()
+      // v4: MID-STREAM FOLD — deletes applied at rest; drains as a no-op
+      SnapshotStore.foldMor(spark, root, "event_id", numFiles = 4,
+        statsCols = Seq("event_id"))
+      drain()
+      delDecile(6) // v5: a LATE delete AFTER the fold
+      drain() // its retraction must still fold downstream
+    }
+  }
+
+  /** The delete-feed harness q28f and q28k share: the flat corpus
+    * event_id-clustered as v1, consumed live under `cdcFeed` while
+    * `deletes` commits (given the table root, the id-decile cut points
+    * and the drain callback). Consumer-side resolution is one per-key
+    * argmax over `coalesce(_seq, 0)` — a retraction's `_seq` (its commit
+    * version) beats every data row's 0 — and its per-type rollup,
+    * tagged `feed`, sits beside the at-rest read's, tagged `restTag`. */
+  private def deleteFeedRollup(spark: SparkSession, dir: String, family: String,
+                               restTag: String, atRest: Path => DataFrame)
+                              (deletes: (Path, Int => Long, () => Unit) => Unit): DataFrame = {
+    import graft.core.SnapshotStore
+    val root = Files.createTempDirectory(family)
     val flat = Tables.load(spark, dir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
     flat.repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id")
@@ -2529,39 +2182,11 @@ object StreamingPipelines {
       statsCols = Seq("event_id")) // v1: the standing corpus
     val b = flat.agg(min(col("event_id")), max(col("event_id"))).head()
     val (lo, hi) = (b.getLong(0), b.getLong(1)); val span = hi - lo
-    def cut(k: Int) = lo + k * span / 10
-    def delDecile(k: Int): Unit = {
-      SnapshotStore.deleteMor(spark, root,
-        flat.where(col("event_id") > cut(k - 1) && col("event_id") <= cut(k))
-          .select("event_id"), "event_id")
-      ()
+    val resolved = Replay.consume(snapshotStream(spark, root, "cdcFeed" -> "true"),
+        root.resolve("drained").toString) { drain =>
+      drain() // drains v1: data rows, _tombstone false
+      deletes(root, k => lo + k * span / 10, drain)
     }
-    val q = spark.readStream
-      .format("graft-snapshot")
-      .option("path", root.toString)
-      .option("cdcFeed", "true")
-      .load()
-      .writeStream
-      .foreachBatch((bt: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        bt.write.mode("append").parquet(out))
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      q.processAllAvailable() // drains v1: data rows, _tombstone false
-      delDecile(4) // v2: O(|keys|) delete commit
-      q.processAllAvailable() // drains the retraction rows, _seq = 2
-      delDecile(5) // v3: deletes accumulate
-      q.processAllAvailable()
-      // v4: MID-STREAM FOLD — deletes applied at rest; drains as a no-op
-      SnapshotStore.foldMor(spark, root, "event_id", numFiles = 4,
-        statsCols = Seq("event_id"))
-      q.processAllAvailable()
-      delDecile(6) // v5: a LATE delete AFTER the fold
-      q.processAllAvailable() // its retraction must still fold downstream
-    } finally q.stop()
-    // consumer-side resolution: readAtMor's semantics as one argmax —
-    // a tombstone's _seq (= its commit version) beats every data row's 0
-    val resolved = spark.read.parquet(out)
       .withColumn("_s", coalesce(col("_seq"), lit(0L)))
       .groupBy("event_id")
       .agg(max_by(struct(col("event_type"), col("value"), col("_tombstone")),
@@ -2574,8 +2199,7 @@ object StreamingPipelines {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
     roll(resolved, "feed")
-      .unionByName(roll(
-        SnapshotStore.readAtMor(spark, root, None, "event_id"), "mor"))
+      .unionByName(roll(atRest(root), restTag))
       .orderBy("src", "event_type")
   }
 
@@ -2603,38 +2227,16 @@ object StreamingPipelines {
     * consumers drain through both. */
   def q28kStreamDvFeed(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.SnapshotStore
-    val root = Files.createTempDirectory("graft-q28k")
-    val ckpt = Files.createTempDirectory("graft-q28k-ckpt")
-    val out = root.resolve("drained").toString
-    val flat = Tables.load(spark, dir, "events")
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    flat.repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id")
-      .write.mode("overwrite").parquet(root.resolve("data/load1").toString)
-    SnapshotStore.commit(spark, root, SnapshotStore.dataFiles(root),
-      statsCols = Seq("event_id")) // v1: the standing corpus
-    val b = flat.agg(min(col("event_id")), max(col("event_id"))).head()
-    val (lo, hi) = (b.getLong(0), b.getLong(1)); val span = hi - lo
-    def cut(k: Int) = lo + k * span / 10
-    val q = spark.readStream
-      .format("graft-snapshot")
-      .option("path", root.toString)
-      .option("cdcFeed", "true")
-      .load()
-      .writeStream
-      .foreachBatch((bt: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        bt.write.mode("append").parquet(out))
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      q.processAllAvailable() // drains v1: data rows, _tombstone false
+    deleteFeedRollup(spark, dir, "graft-q28k", "dv",
+        SnapshotStore.readAtDv(spark, _, None)) { (root, cut, drain) =>
       SnapshotStore.deleteDv(spark, root, // v2: O(|positions|) vector
         col("event_type") === "click" &&
           col("event_id") > cut(3) && col("event_id") <= cut(4))
-      q.processAllAvailable() // drains the derived retractions, _seq = 2
+      drain() // drains the derived retractions, _seq = 2
       SnapshotStore.deleteDv(spark, root, // v3: vectors accumulate
         col("event_type") === "purchase" &&
           col("event_id") > cut(4) && col("event_id") <= cut(5))
-      q.processAllAvailable()
+      drain()
       // v4: MID-STREAM FOLD, fired by the POLICY (maybeFoldDv's
       // vector-count threshold — two pending vectors hit
       // maxDvCommits = 2, the per-read ledger fan-in bound); vectors
@@ -2642,31 +2244,12 @@ object StreamingPipelines {
       require(SnapshotStore.maybeFoldDv(spark, root, numFiles = 4,
           statsCols = Seq("event_id"), maxDvCommits = 2).nonEmpty,
         "the DV fold policy must fire after two pending vectors")
-      q.processAllAvailable()
+      drain()
       SnapshotStore.deleteDv(spark, root, // v5: a LATE vector AFTER the fold
         col("event_type") === "click" &&
           col("event_id") > cut(5) && col("event_id") <= cut(6))
-      q.processAllAvailable() // its positions point into the FOLDED files
-    } finally q.stop()
-    // consumer-side resolution: readAtDv's semantics as one argmax —
-    // a retraction's _seq (= its vector's commit version) beats every
-    // data row's 0
-    val resolved = spark.read.parquet(out)
-      .withColumn("_s", coalesce(col("_seq"), lit(0L)))
-      .groupBy("event_id")
-      .agg(max_by(struct(col("event_type"), col("value"), col("_tombstone")),
-        col("_s")).as("w"))
-      .where(!col("w._tombstone"))
-      .select(col("event_id"), col("w.event_type").as("event_type"),
-        col("w.value").as("value"))
-    def roll(df: DataFrame, tag: String): DataFrame = df
-      .groupBy(lit(tag).as("src"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
-    roll(resolved, "feed")
-      .unionByName(roll(
-        SnapshotStore.readAtDv(spark, root, None), "dv"))
-      .orderBy("src", "event_type")
+      drain() // its positions point into the FOLDED files
+    }
   }
 
   /** Q28j — a RENAMED table consumed by the STREAMING source (the
@@ -2685,8 +2268,6 @@ object StreamingPipelines {
   def q28jStreamRenamed(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.SnapshotStore
     val root = Files.createTempDirectory("graft-q28j")
-    val ckpt = Files.createTempDirectory("graft-q28j-ckpt")
-    val out = root.resolve("drained").toString
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("user_id"), col("value"))
     val cut = lit(graft.operators.LayoutQueries.SnapCutoff).cast("timestamp")
@@ -2695,25 +2276,15 @@ object StreamingPipelines {
     SnapshotStore.commit(spark, root, SnapshotStore.dataFiles(root),
       statsCols = Seq("ts")) // v1: old-generation files under `value`
     SnapshotStore.renameColumnMapped(spark, root, "value", "val_amt") // v2
-    val q = spark.readStream
-      .format("graft-snapshot")
-      .option("path", root.toString)
-      .load()
-      .writeStream
-      .foreachBatch((bt: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        bt.write.mode("append").parquet(out))
-      .option("checkpointLocation", ckpt.toString)
-      .start()
-    try {
-      q.processAllAvailable() // drains v2 = the OLD generation, coalesced
+    Replay.consume(snapshotStream(spark, root), root.resolve("drained").toString) { drain =>
+      drain() // drains v2 = the OLD generation, coalesced
       events.where(col("ts") >= cut).withColumnRenamed("value", "val_amt")
         .repartition(2)
         .write.mode("overwrite").parquet(root.resolve("data/tail").toString)
       SnapshotStore.commitAppend(spark, root,
         SnapshotStore.dataFiles(root).filter(_.startsWith("data/tail/"))) // v3
-      q.processAllAvailable() // the new generation, same plan
-    } finally q.stop()
-    spark.read.parquet(out)
+      drain() // the new generation, same plan
+    }
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
@@ -2791,28 +2362,16 @@ object StreamingPipelines {
     snapCdcCowBytes.set(0); snapCdcCowEpochs.set(0)
     val incoming = events.where(col("ts") >= cut)
     val chunkDir = stageChunksByIdMod(incoming, "event_id", "graft-snapcdc", dir, nChunks)
-    val ckpt = Files.createTempDirectory("graft-snapcdc-ckpt").toString
-    val q = spark.readStream
-      .schema(incoming.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(chunkDir.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val delta = cdcState(batch).withColumn("_delete", lit(false))
-        val v = SnapshotStore.mergeCow(batch.sparkSession, root, delta, "user_id",
-          orderCols = Seq("last_ts", "last_eid"))
-        snapCdcCowBytes.addAndGet(dirBytes(root.resolve(s"data/merge_a$v")))
-        snapCdcCowEpochs.incrementAndGet()
-        SnapshotStore.vacuum(batch.sparkSession, root, retain = 2)
-        ()
-      }.start()
-    q.awaitTermination()
+    Replay.drain(chunkStream(spark, incoming.schema, chunkDir)) { (batch, batchId) =>
+      val delta = cdcState(batch).withColumn("_delete", lit(false))
+      val v = SnapshotStore.mergeCow(batch.sparkSession, root, delta, "user_id",
+        orderCols = Seq("last_ts", "last_eid"))
+      snapCdcCowBytes.addAndGet(dirBytes(root.resolve(s"data/merge_a$v")))
+      snapCdcCowEpochs.incrementAndGet()
+      SnapshotStore.vacuum(batch.sparkSession, root, retain = 2)
+    }
     root
   }
-
-  private val cdcMergeCache = TrieMap.empty[String, Path]
 
   /** Q26n — the drained streamed-merge table read AT HEAD: tombstones
     * filtered, q25's exact output shape. One lost epoch, one
@@ -2826,7 +2385,7 @@ object StreamingPipelines {
     * under policy — that is the 100 TB path; q26n stays declared as
     * the read-optimized twin (zero read-time merge cost). */
   def q26nStreamCdcMerge(spark: SparkSession, dir: String): DataFrame = {
-    val root = cdcMergeCache.getOrElseUpdate(dir, cdcMergeReplay(spark, dir))
+    val root = Replay.memo("cdcMerge", dir)(cdcMergeReplay(spark, dir))
     graft.core.SnapshotStore.readAt(spark, root, inferPartitions = false)
       .where(!col("deleted"))
       .select("user_id", "last_type", "last_value", "last_ts")
@@ -2914,58 +2473,36 @@ object StreamingPipelines {
     }
     val incoming = events.where(col("ts") >= cut)
     val chunkDir = stageChunksByIdMod(incoming, "event_id", "graft-snapcdcmor", dir, nChunks)
-    val ckpt = ckptOpt.getOrElse(Files.createTempDirectory("graft-snapcdcmor-ckpt").toString)
-    val q = spark.readStream
-      .schema(incoming.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(chunkDir.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val delta = cdcState(batch)
-        val v = SnapshotStore.commitCdcDelta(s, root, delta, "user_id")
-        snapCdcMorDeltaBytes.addAndGet(dirBytes(root.resolve(s"data/_cdcdelta_a$v")))
-        snapCdcMorEpochs.incrementAndGet()
-        // amortization floor 2 matches the 3-epoch staging: one fold
-        // fires mid-stream (policy exercised), the last epoch's delta
-        // stays pending so the drained read resolves it at scan time
-        SnapshotStore.maybeFoldCdc(s, root, "user_id",
-            Seq("last_ts", "last_eid"), numFiles = 8, minDeltaCommits = 2).foreach { fv =>
-          snapCdcMorFoldBytes.addAndGet(dirBytes(root.resolve(s"data/cdcfold_a$fv")))
-          snapCdcMorFolds.incrementAndGet()
-        }
-        SnapshotStore.vacuum(s, root, retain = 2)
-        ()
-      }.start()
-    if (stopAfterBatches == Int.MaxValue) q.awaitTermination()
-    else {
-      // failure-injection mode (restart-hardening spec): kill the loop
-      // once ≥ stopAfterBatches epochs committed; a later call with the
-      // same ckpt + resume=true continues from the checkpoint — an
-      // epoch whose delta landed but whose checkpoint didn't re-commits
-      // the same rows, which the recency argmax absorbs (spec-pinned
-      // replay idempotency)
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (q.isActive && System.nanoTime() < deadline &&
-             (q.lastProgress == null || q.lastProgress.batchId + 1 < stopAfterBatches)) {
-        Thread.sleep(50)
+    // stopAfterBatches is failure injection (restart-hardening spec):
+    // the loop is killed once that many epochs committed; a later call
+    // with the same ckpt + resume=true continues from the checkpoint — an
+    // epoch whose delta landed but whose checkpoint didn't re-commits
+    // the same rows, which the recency argmax absorbs (spec-pinned
+    // replay idempotency)
+    Replay.drain(chunkStream(spark, incoming.schema, chunkDir), ckptOpt = ckptOpt,
+        stopAfterBatches = stopAfterBatches) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val delta = cdcState(batch)
+      val v = SnapshotStore.commitCdcDelta(s, root, delta, "user_id")
+      snapCdcMorDeltaBytes.addAndGet(dirBytes(root.resolve(s"data/_cdcdelta_a$v")))
+      snapCdcMorEpochs.incrementAndGet()
+      // amortization floor 2 matches the 3-epoch staging: one fold
+      // fires mid-stream (policy exercised), the last epoch's delta
+      // stays pending so the drained read resolves it at scan time
+      SnapshotStore.maybeFoldCdc(s, root, "user_id",
+          Seq("last_ts", "last_eid"), numFiles = 8, minDeltaCommits = 2).foreach { fv =>
+        snapCdcMorFoldBytes.addAndGet(dirBytes(root.resolve(s"data/cdcfold_a$fv")))
+        snapCdcMorFolds.incrementAndGet()
       }
-      q.stop()
-      q.awaitTermination()
+      SnapshotStore.vacuum(s, root, retain = 2)
     }
     root
   }
 
-  private val cdcMorCache = TrieMap.empty[String, Path]
-
   /** Force the next q26n/q26r call to re-run its replay (spec hook for
     * the write-amplification comparison — the byte meters only carry a
     * run that actually streamed in this JVM). */
-  def evictCdcReplays(dir: String): Unit = {
-    cdcMergeCache.remove(dir); cdcMorCache.remove(dir)
-  }
+  def evictCdcReplays(dir: String): Unit = Replay.evict(dir, "cdcMerge", "cdcMor")
 
   /** Q26r — the drained MOR streamed-merge table read AT HEAD through
     * the CDC-resolving scan: tombstones filtered, q25's exact output
@@ -2973,7 +2510,7 @@ object StreamingPipelines {
     * drain time are resolved by the read — byte-equality with q26n
     * regardless of where the fold policy last fired. */
   def q26rStreamCdcMor(spark: SparkSession, dir: String): DataFrame = {
-    val root = cdcMorCache.getOrElseUpdate(dir, cdcMorReplay(spark, dir))
+    val root = Replay.memo("cdcMor", dir)(cdcMorReplay(spark, dir))
     graft.core.SnapshotStore.readAtCdc(spark, root, None,
         "user_id", Seq("last_ts", "last_eid"))
       .where(!col("deleted"))
@@ -3021,18 +2558,9 @@ object StreamingPipelines {
     val incoming = emb.where(col("vec_id") % DedupQueries.IngestSplitMod
       === DedupQueries.IngestSplitRem)
     val chunkDir = stageChunksByIdMod(incoming, "vec_id", "graft-pqingest", dir, nChunks)
-    val ckpt = Files.createTempDirectory("graft-pqingest-ckpt").toString
-    val q = spark.readStream
-      .schema(incoming.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(chunkDir.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        SimilarityQueries.pqEncodeIncremental(idx, unitOf(batch), batchId)
-      }.start()
-    q.awaitTermination()
+    Replay.drain(chunkStream(spark, incoming.schema, chunkDir)) { (batch, batchId) =>
+      SimilarityQueries.pqEncodeIncremental(idx, unitOf(batch), batchId)
+    }
     // post-drain QUIESCED maintenance slot: fold the payload appendix
     // (disjoint vec_ids across batches — the compactor's distinct is
     // exact), then apply the growth policy
@@ -3041,28 +2569,24 @@ object StreamingPipelines {
     ()
   }
 
-  private val pqIngestReplayCache = TrieMap.empty[String, Boolean]
-
   /** Forget one dataset's PQ-ingest replay memo (tests: force a fresh
     * staged replay without evicting every other pipeline's cache). */
-  def evictPqIngestReplay(dir: String): Unit = pqIngestReplayCache.remove(dir)
+  def evictPqIngestReplay(dir: String): Unit = Replay.evict(dir, "pqIngest")
 
   /** Q17l — run (once per dataset per JVM) the PQ ingest replay, then
     * answer the q17j search from the loop-maintained index. Rows-only
     * by design (k-means artifact); the spec pins exact equality with
     * q17j post-retrain. */
   def q17lPqStreamIngest(spark: SparkSession, dir: String): DataFrame = {
-    pqIngestReplayCache.getOrElseUpdate(dir, { pqIngestReplay(spark, dir); true })
+    Replay.memo("pqIngest", dir) { pqIngestReplay(spark, dir); true }
     graft.operators.SimilarityQueries.q17lAfterIngest(spark, dir)
   }
-
-  private val embIngestCache = TrieMap.empty[String, String]
 
   /** Q16l — drained embedding-ingest duplicate pairs; oracle = the
     * batch all-pairs cosine join (copies × base) at threshold 0.9 in
     * DuckDB. */
   def q16lStreamIngestEmbDup(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(embIngestCache.getOrElseUpdate(dir, embIngestReplay(spark, dir)))
+    spark.read.parquet(Replay.memo("embIngest", dir)(embIngestReplay(spark, dir)))
       .select("new_id", "old_id", "cos_sim")
       .orderBy("new_id", "old_id")
 
@@ -3082,55 +2606,40 @@ object StreamingPipelines {
         octet_length(col("text")).cast("long").as("n_bytes"))
     val chunkDir = stageChunksByIdMod(media, "doc_id", "graft-mediaingest", dir, nChunks)
     val out  = Files.createTempDirectory("graft-media-out").toString
-    val ckpt = Files.createTempDirectory("graft-media-ckpt").toString
-    val q = spark.readStream
-      .schema(media.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(chunkDir.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import batch.sparkSession.implicits._
-        MultimodalQueries.resizeAndSample(
-            MultimodalQueries.extractFeatures(
-              batch.as[graft.operators.MultimodalQueries.MediaRecord]), 96, 96, 2)
-          .toDF("doc_id", "width", "height", "frames")
-          .select(col("doc_id"), col("width"), col("height"),
-                  explode(col("frames")).as("frame_idx"))
-          .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-      }.start()
-    q.awaitTermination()
+    Replay.drain(chunkStream(spark, media.schema, chunkDir)) { (batch, batchId) =>
+      import batch.sparkSession.implicits._
+      MultimodalQueries.resizeAndSample(
+          MultimodalQueries.extractFeatures(
+            batch.as[graft.operators.MultimodalQueries.MediaRecord]), 96, 96, 2)
+        .toDF("doc_id", "width", "height", "frames")
+        .select(col("doc_id"), col("width"), col("height"),
+                explode(col("frames")).as("frame_idx"))
+        .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+    }
     out
   }
-
-  private val mediaCache = TrieMap.empty[String, String]
 
   /** Q19e — drained streaming media decode/resize/frame-sample; each
     * doc lands in exactly one micro-batch, so the union read is the
     * full answer; oracle = batch q19d. */
   def q19eStreamMedia(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(mediaCache.getOrElseUpdate(dir, mediaIngestReplay(spark, dir)))
+    spark.read.parquet(Replay.memo("media", dir)(mediaIngestReplay(spark, dir)))
       .select("doc_id", "width", "height", "frame_idx")
       .orderBy("doc_id", "frame_idx")
-
-  private val growCache = TrieMap.empty[String, String]
 
   /** Q16k — drained growing-corpus streaming-ingest pairs. Oracle: the
     * q16i cross pairs PLUS within-slice pairs whose old side sits in a
     * strictly earlier chunk (chunk = doc_id mod [[graft.operators.DedupQueries.IngestChunks]]). */
   def q16kStreamIngestGrowing(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(growCache.getOrElseUpdate(dir, ingestNearDupGrowingReplay(spark, dir)))
+    spark.read.parquet(Replay.memo("grow", dir)(ingestNearDupGrowingReplay(spark, dir)))
       .select("new_id", "old_id", "jac")
       .orderBy("new_id", "old_id")
-
-  private val ingestCache = TrieMap.empty[String, String]
 
   /** Q16j — drained streaming-ingest near-dup pairs. Each ingest doc
     * lands in exactly one micro-batch, so epochs are disjoint and the
     * union read is the full answer; oracle = batch q16i. */
   def q16jStreamIngestNearDup(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(ingestCache.getOrElseUpdate(dir, ingestNearDupReplay(spark, dir)))
+    spark.read.parquet(Replay.memo("ingest", dir)(ingestNearDupReplay(spark, dir)))
       .select("new_id", "old_id", "jac")
       .orderBy("new_id", "old_id")
 
@@ -3139,7 +2648,7 @@ object StreamingPipelines {
     * decode + file replay agree end-to-end). */
   def q20kStreamWire(spark: SparkSession, dir: String): DataFrame =
     readLatestWins(spark,
-      wireCache.getOrElseUpdate(dir, wireReplay(spark, dir)), Seq("window_start"))
+      Replay.memo("wire", dir)(wireReplay(spark, dir)), Seq("window_start"))
       .select("window_start", "n_events")
       .orderBy("window_start")
 
@@ -3170,11 +2679,7 @@ object StreamingPipelines {
     * state crosses the driver, for the caller's parity check. */
   def processingTimeReplay(spark: SparkSession, dir: String, triggerMs: Long = 500,
                            filesPerTrigger: Int = 3): (Map[(Timestamp, String), Long], Seq[Long]) = {
-    val chunkDir = chunkEvents(spark, dir)
-    val ckpt = Files.createTempDirectory("graft-pt-ckpt").toString
     val out = Files.createTempDirectory("graft-pt-out").toString
-    val savedShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     // Drain detection: on Spark 3.4+/4.x an idle ProcessingTime trigger
     // emits QueryIdleEvent and does NOT update lastProgress (only ONE
     // no-data batch runs after the last data batch), so "two consecutive
@@ -3195,36 +2700,34 @@ object StreamingPipelines {
         if (e.runId == runIdRef.get) idleCount.incrementAndGet()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
-    spark.streams.addListener(listener)
-    val q = eventStream(spark, SourceConfig(path = chunkDir.toString, filesPerTrigger = filesPerTrigger))
-      .where(col("event_type") =!= SentinelType)
+    val stream = realEvents(spark, dir, filesPerTrigger)
       .withWatermark("ts", "300 seconds")
       .groupBy(window(col("ts"), "1 minute"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("window.start").as("window_start"), col("event_type"), col("cnt"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-      }.start()
-    runIdRef.set(q.runId)
-    try {
-      val deadline = System.nanoTime() + 120L * 1000000000L
-      while (!(sawData.get() && idleCount.get() >= 2) && System.nanoTime() < deadline) {
-        Thread.sleep(triggerMs / 2 max 50L)
-        // belt-and-braces vs the (tiny) window where a progress event
-        // outruns runIdRef.set: recover sawData from the query handle
-        if (!sawData.get() && q.recentProgress.exists(_.numInputRows > 0)) sawData.set(true)
+    val durations = Replay.withConfs(spark, Map("spark.sql.shuffle.partitions" -> "2")) {
+      Replay.withCheckpoint(None) { ckpt =>
+        spark.streams.addListener(listener)
+        try {
+          val q = Replay.writer(stream, ckpt, "update")
+            .trigger(Trigger.ProcessingTime(triggerMs))
+            .foreachBatch(epochSink(out)).start()
+          runIdRef.set(q.runId)
+          try {
+            val deadline = System.nanoTime() + 120L * 1000000000L
+            while (!(sawData.get() && idleCount.get() >= 2) && System.nanoTime() < deadline) {
+              Thread.sleep(triggerMs / 2 max 50L)
+              // belt-and-braces vs the (tiny) window where a progress event
+              // outruns runIdRef.set: recover sawData from the query handle
+              if (!sawData.get() && q.recentProgress.exists(_.numInputRows > 0)) sawData.set(true)
+            }
+          } finally q.stop()
+          q.recentProgress.toSeq
+            .filter(_.numInputRows > 0)
+            .map(_.durationMs.get("triggerExecution").longValue())
+        } finally spark.streams.removeListener(listener)
       }
-    } finally {
-      q.stop()
-      spark.streams.removeListener(listener)
-      spark.conf.set("spark.sql.shuffle.partitions", savedShuffle)
     }
-    val durations = q.recentProgress.toSeq
-      .filter(_.numInputRows > 0)
-      .map(_.durationMs.get("triggerExecution").longValue())
     // latest-epoch-wins over the drained sink: update mode re-emits a
     // key on change, so its highest batch_id carries the final value;
     // only the final (windows × types) state crosses the driver
@@ -3249,39 +2752,21 @@ object StreamingPipelines {
   def durableSinkReplay(spark: SparkSession, dir: String, filesPerTrigger: Int = 10,
                         ckptOpt: Option[String] = None, outOpt: Option[String] = None,
                         stopAfterBatches: Int = Int.MaxValue): String = {
-    val chunkDir = chunkEvents(spark, dir)
-    val ckpt = ckptOpt.getOrElse(Files.createTempDirectory("graft-sink-ckpt").toString)
     val out = outOpt.getOrElse(Files.createTempDirectory("graft-sink-out").toString)
-    withRocksDB(spark) {
-      val q = eventStream(spark, SourceConfig(path = chunkDir.toString, filesPerTrigger = filesPerTrigger))
-        .where(col("event_type") =!= SentinelType)
+    // stopAfterBatches is failure injection (checkpoint-recovery test):
+    // the query is killed once that many epochs committed; a later call
+    // with the same ckpt/out resumes from the checkpoint and
+    // idempotently overwrites any half-written epoch dir
+    Replay.withConfs(spark, RocksDBConfs) {
+      Replay.drain(realEvents(spark, dir, filesPerTrigger)
         .withWatermark("ts", "300 seconds")
         .groupBy(window(col("ts"), "1 minute"), col("event_type"))
         .agg(count(lit(1)).as("cnt"))
         .select(lit("events_per_minute").as("measurement"),
                 col("window.start").as("time"),
                 col("event_type").as("tag"),
-                col("cnt").as("value"))
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
-        }.start()
-      if (stopAfterBatches == Int.MaxValue) q.awaitTermination()
-      else {
-        // failure-injection mode (checkpoint-recovery test): kill the
-        // query once ≥ stopAfterBatches epochs have committed; a later
-        // call with the same ckpt/out resumes from the checkpoint and
-        // idempotently overwrites any half-written epoch dir
-        val deadline = System.nanoTime() + 60L * 1000000000L
-        while (q.isActive && System.nanoTime() < deadline &&
-               (q.lastProgress == null || q.lastProgress.batchId + 1 < stopAfterBatches)) {
-          Thread.sleep(50)
-        }
-        q.stop()
-        q.awaitTermination()
-      }
+                col("cnt").as("value")),
+        "update", ckptOpt, stopAfterBatches)(epochSink(out))
     }
     out
   }
@@ -3315,24 +2800,16 @@ object StreamingPipelines {
   def runningCountViaTransformWithState(spark: SparkSession, dir: String): Long = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val chunkDir = chunkEvents(spark, dir)
-    val ckpt = Files.createTempDirectory("graft-tws-ckpt").toString
     val sink = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    withRocksDB(spark) {
-      val q = eventStream(spark, SourceConfig(path = chunkDir.toString))
-        .where(col("event_type") =!= SentinelType)
+    Replay.withConfs(spark, RocksDBConfs) {
+      Replay.drain(realEvents(spark, dir, filesPerTrigger = 10)
         .as[Event]
         .withWatermark("ts", "300 seconds")
         .groupByKey(_ => "count")
-        .transformWithState(new RunningCountProcessor, TimeMode.EventTime(), OutputMode.Update())
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[CountUpdate], _: Long) =>
-          batch.collect().foreach(u => sink.add(u.count))
-        }
-        .start()
-      q.awaitTermination()
+        .transformWithState(new RunningCountProcessor, TimeMode.EventTime(), OutputMode.Update()),
+        "update") { (batch, _) =>
+        batch.collect().foreach(u => sink.add(u.count))
+      }
     }
     var m = 0L
     sink.forEach(c => m = math.max(m, c))
