@@ -1,9 +1,21 @@
 package graft
 
-import graft.core.GraftSession
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.{GraftSession, IndexStore}
 
-/** Benchmark main — runs every declared query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line `{"metric":"total","value":…,"queries":{…}}`.
+/** Benchmark main — the one timing main. Runs every declared query on
+  * SPARK_GRAFT_SF_DIR and prints two JSON lines, the full
+  * `{"metric":"total","value":…,"queries":{…}}` and a compact
+  * `{"metric":"summary",…}` (also written to BENCH_SUMMARY.json).
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=… runMain graft.Bench [q1,q2,...]
+  * With a query list, only those queries run, with the same passes, and
+  * only the `total` line prints: a change is priced in seconds without a
+  * full-suite run. Every pass starts with the replay memos cleared, so
+  * a memoized streaming harness is timed as a replay, not as a parquet
+  * re-read of its drained sink. SPARK_GRAFT_JOBLOG=1 prints each
+  * Spark job's wall seconds and its description or callsite.
   *
   * Methodology (VERDICT r1 fixes; r4: min-of-two; r6: auditability +
   * cross-query isolation):
@@ -81,11 +93,11 @@ object Bench {
     * falling behind its producer by construction. Emitted as a JSON
     * object (or `null` if the probe itself failed — never fails the
     * bench). */
-  private def snapSlaProbe(spark: org.apache.spark.sql.SparkSession): String = try {
+  private def snapSlaProbe(spark: SparkSession): String = try {
     import graft.core.SnapshotStore
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("bench-snap-sla")
-    val ckpt = java.nio.file.Files.createTempDirectory("bench-snap-sla-ckpt")
+    val root = IndexStore.tempDir("bench-snap-sla")
+    val ckpt = IndexStore.tempDir("bench-snap-sla-ckpt")
     val cadenceMs = 250L
     val nCommits = 12
     (0L until 2000L).map(i => (i, s"base$i")).toDF("k", "p")
@@ -132,8 +144,8 @@ object Bench {
     def pct(q: Double): Long = durs(math.min(durs.size - 1,
       math.ceil(q * durs.size).toInt - 1).max(0))
     val (p50, p99) = (pct(0.50), pct(0.99))
-    graft.core.IndexStore.deleteRecursively(root)
-    graft.core.IndexStore.deleteRecursively(ckpt)
+    IndexStore.deleteRecursively(root)
+    IndexStore.deleteRecursively(ckpt)
     // caught_up is the production question — admission control lets one
     // trigger drain several versions, so DRAIN RATE ≥ COMMIT RATE (the
     // backlog emptied while the producer was still the bottleneck) is
@@ -155,6 +167,13 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val only = args.headOption.map(_.split(",").toSeq)
+    val unknown = only.getOrElse(Nil).filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    // deterministic order: sorted by name for a full run (so warmup
+    // cost doesn't land on a random query), the given order for a list
+    val queries = only.getOrElse(SparkEntry.queries.keys.toSeq.sorted)
+      .map(n => n -> SparkEntry.queries(n))
     // persisted indexes (band/LSH-key/IVF) live under the bench's own
     // target/ dir, not java.io.tmpdir — tmpdir eviction mid-run would
     // silently convert index reads into per-pass rebuilds (the r7
@@ -164,100 +183,11 @@ object Bench {
       sys.props("graft.index.dir") =
         new java.io.File("target/graft-index").getAbsolutePath
     val spark = GraftSession.build(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
+    if (sys.env.get("SPARK_GRAFT_JOBLOG").contains("1")) spark.sparkContext.addSparkListener(jobLog)
 
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    def runOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-               sess: org.apache.spark.sql.SparkSession = spark): Double = {
-      // q20* share one streamed replay (all streaming queries run
-      // concurrently on one session, reference O19). The replay cost is
-      // timed once, on q20_stream_tumbling (cache cleared → real
-      // replay); the other q20* entries are derived reads of the same
-      // drained sinks and time as such.
-      if (name == "q20_stream_tumbling") graft.streaming.StreamingPipelines.clearCache()
-      val t0 = System.nanoTime()
-      val t = try {
-        fn(sess, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          -1.0
-      }
-      // cross-query isolation, outside the timed window: drop any
-      // cached blocks the query left behind (they'd occupy unified
-      // memory and bill later queries' GC)
-      spark.catalog.clearCache()
-      t
-    }
-
-    // ISOLATION LEVER (VERDICT r19 next #8, priced like the GC lever):
-    // families named in SPARK_GRAFT_FRESH_SESSION_FAMILIES (e.g.
-    // "q26,q28") run on a FRESH spark.newSession() per family per pass —
-    // same SparkContext/executors, but fresh SQL session state (temp
-    // views, catalog instances, session conf), so one family's
-    // accumulated session state cannot bill another's queries. Off by
-    // default; a paired run prices it.
-    val freshFams: Set[String] =
-      sys.env.getOrElse("SPARK_GRAFT_FRESH_SESSION_FAMILIES", "")
-        .split(',').map(_.trim).filter(_.nonEmpty).toSet
-
-    // wall-clock anchor: per-query start offsets (sec since this) ride
-    // the artifact, so a contended host window shows up as a cluster of
-    // blips at one offset range instead of needing builder testimony
-    // (VERDICT r8 wrong #1 / next #7)
-    val benchT0 = System.nanoTime()
-
-    // a query's FAMILY = its leading qNN token (q28k → q28): the unit
-    // the per-family budget line groups by, and the boundary at which
-    // the inter-family GC lever fires (VERDICT r18 next #7 — two rounds
-    // of full-suite growth decomposed to in-suite GC concentrated in
-    // the streaming-replay family sharing one JVM; a collection at each
-    // family boundary, OUTSIDE any timed window, keeps one family's
-    // garbage from billing the next family's queries)
-    def familyOf(n: String): String = {
-      val m = "^(q\\d+)".r.findFirstIn(n)
-      m.getOrElse(n)
-    }
-
-    // the lever is SWITCHABLE so a paired run can price it:
-    // SPARK_GRAFT_FAMILY_GC=0 disables the boundary collections
-    val familyGc = sys.env.getOrElse("SPARK_GRAFT_FAMILY_GC", "1") != "0"
-
-    def runPass(label: String): (Seq[(String, (Double, Double))], (String, String)) = {
-      val (gcMs0, gcN0) = gcStats()
-      var prevFamily = ""
-      var famSession = spark
-      val res = ordered.map { case (n, f) =>
-        val fam = familyOf(n)
-        if (prevFamily.nonEmpty && fam != prevFamily) {
-          if (familyGc) System.gc()
-          famSession = if (freshFams(fam)) spark.newSession() else spark
-        } else if (prevFamily.isEmpty && freshFams(fam))
-          famSession = spark.newSession()
-        prevFamily = fam
-        val startOff = (System.nanoTime() - benchT0) / 1e9
-        n -> (runOne(n, f, famSession), math.rint(startOff * 10) / 10)
-      }
-      val (gcMs1, gcN1) = gcStats()
-      // inter-pass hygiene: unload streaming state stores (native
-      // RocksDB instances) and compact the heap so pass N+1 starts from
-      // the same baseline as pass N
-      graft.streaming.StreamingPipelines.unloadStateStores()
-      System.gc()
-      (res, (label, s"""{"gc_ms":${gcMs1 - gcMs0},"gc_n":${gcN1 - gcN0}}"""))
-    }
-
-    val (_, gcWarm) = runPass("warmup")
-    val (pass1t, gc1) = runPass("pass1")
-    val (pass2t, gc2) = runPass("pass2")
-    val pass1 = pass1t.map { case (n, (d, _)) => n -> d }
-    val pass2 = pass2t.map { case (n, (d, _)) => n -> d }
-    val starts1 = pass1t.map { case (n, (_, s)) => n -> s }
-    val starts2 = pass2t.map { case (n, (_, s)) => n -> s }
-    val results = pass1.zip(pass2).map { case ((n, a), (_, b)) =>
-      // a failure in either pass reports as failed; otherwise best-of-two
-      n -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
-    }
+    val passes = timePasses(spark, sfDir, queries)
+    val Passes(pass1, pass2, starts1, starts2, gcObj) = passes
+    val results = passes.results
 
     def obj(res: Seq[(String, Double)]): String =
       res.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -292,11 +222,12 @@ object Bench {
     // silently dropping a failed query's time would inflate the
     // apparent like-for-like speedup
     val r2Failed = results.count { case (n, v) => r2Set(n) && v < 0 }
-    val gcObj = Seq(gcWarm, gc1, gc2)
-      .map { case (l, j) => "\"" + l + "\":" + j }.mkString("{", ",", "}")
     // raw passes + GC deltas are emitted alongside the min so the
     // min-of-two methodology and any memory pressure are auditable
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(results)},"pass1":${obj(pass1)},"pass2":${obj(pass2)},"starts1":${obj(starts1)},"starts2":${obj(starts2)},"gc":$gcObj,"failed":$nFailed,"r2_subset_n":${results.count(r => r2Set(r._1))},"r2_subset_failed":$r2Failed,"r2_subset_total":$r2Total,"sf":"$sfDir"}""")
+    // a list run prices a subset: no summary, and BENCH_SUMMARY.json
+    // (a checked-in artifact) stays as the last full run left it
+    if (only.nonEmpty) { spark.stop(); return }
     // the full line above has been tail-truncated in driver artifacts
     // (BENCH_r06 lost the min-of-two map and headline value); emit a
     // SECOND compact line so a tail-capped artifact still carries the
@@ -330,102 +261,8 @@ object Bench {
       s""""snapmor":${graft.operators.LayoutQueries.snapMorBuildCount.get},""" +
       s""""postings":${graft.operators.LayoutQueries.postingBuildCount.get},""" +
       s""""postings_base":${graft.operators.LayoutQueries.postingBaseBuildCount.get}}"""
-    // measured recall/overlap for the rows-only ANN entries (VERDICT r9
-    // next #5): the correctness artifact can only say "50 rows" for
-    // q17b/c/f/i, so a recall regression inside the spec threshold is
-    // invisible round-over-round — stamp the measured value here.
-    // Driver-side set compares over bounded top-k results (50-100 rows
-    // each), OUTSIDE the timed window; exact baselines: q17 (cosine
-    // top-5) for the ANN variants, q17h (exact-ranker RRF) for the
-    // indexed hybrid's fused set.
-    // recall/latency KNOB CURVE seconds (VERDICT r13 #7) — filled while
-    // the recall entries compute, emitted as its own summary key
-    val curveSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val recallObj = {
-      import graft.operators.{LayoutQueries, SimilarityQueries}
-      def pairs(df: org.apache.spark.sql.DataFrame, a: String, b: String): Set[(Long, Long)] =
-        df.select(a, b).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      def vs(approx: Set[(Long, Long)], exact: Set[(Long, Long)]): Double =
-        math.rint(1000.0 * (approx & exact).size / exact.size) / 1000
-      val entries =
-        try {
-          val exact = pairs(SimilarityQueries.q17CosineTopK(spark, sfDir), "probe_id", "neighbor_id")
-          val hExact = pairs(SimilarityQueries.q17hHybridRrf(spark, sfDir), "probe_id", "doc_id")
-          Seq(
-            "q17b_ann_topk" ->
-              vs(pairs(SimilarityQueries.q17bAnnTopK(spark, sfDir), "probe_id", "neighbor_id"), exact),
-            "q17c_ivf_topk" ->
-              vs(pairs(SimilarityQueries.q17cIvfTopK(spark, sfDir), "probe_id", "neighbor_id"), exact),
-            "q17f_ivf_int8_topk" ->
-              vs(pairs(SimilarityQueries.q17fIvfInt8TopK(spark, sfDir), "probe_id", "neighbor_id"), exact),
-            "q17j_pq_topk" ->
-              vs(pairs(SimilarityQueries.q17jPqTopK(spark, sfDir), "probe_id", "neighbor_id"), exact),
-            "q17k_ivfpq_topk" ->
-              vs(pairs(SimilarityQueries.q17kIvfPqTopK(spark, sfDir), "probe_id", "neighbor_id"), exact),
-            "q17m_binary_topk" ->
-              vs(pairs(SimilarityQueries.q17mBinaryHammingTopK(spark, sfDir), "probe_id", "neighbor_id"), exact),
-            "q17i_hybrid_indexed" ->
-              vs(pairs(LayoutQueries.q17iHybridIndexed(spark, sfDir), "probe_id", "doc_id"), hExact)) ++ {
-            // the recall/latency KNOB CURVE (VERDICT r13 #7): the rungs
-            // stamp one operating point each, but serving decisions need
-            // the curve — recall at nprobe ∈ {k/8, k/4, k/2} for the IVF
-            // rung and ADC shortlist ∈ {150, 300, 600} for the PQ rung,
-            // all query-time knobs over the SAME persisted indexes (no
-            // rebuilds; the `index_builds` audit would flag one). Each
-            // point also stamps its wall seconds into knob_curve_sec, so
-            // the artifact carries both axes of the trade. Entries join
-            // the recall map, so the regression gate covers every
-            // operating point from the next round on.
-            def point(key: String)(df: => org.apache.spark.sql.DataFrame): (String, Double) = {
-              val t0 = System.nanoTime
-              val r = vs(pairs(df, "probe_id", "neighbor_id"), exact)
-              curveSecs(key) = math.rint(1000.0 * (System.nanoTime - t0) / 1e9) / 1000
-              key -> r
-            }
-            Seq(
-              point("q17c_ivf_topk@np1of8")(SimilarityQueries.ivfRank(spark, sfDir, 5, Some(0.125))),
-              point("q17c_ivf_topk@np1of4")(SimilarityQueries.ivfRank(spark, sfDir, 5, Some(0.25))),
-              point("q17c_ivf_topk@np1of2")(SimilarityQueries.ivfRank(spark, sfDir, 5, Some(0.5))),
-              point("q17j_pq_topk@sl150")(SimilarityQueries.q17jPqTopKAt(spark, sfDir, 150)),
-              point("q17j_pq_topk@sl300")(SimilarityQueries.q17jPqTopKAt(spark, sfDir, 300)),
-              point("q17j_pq_topk@sl600")(SimilarityQueries.q17jPqTopKAt(spark, sfDir, 600)))
-          }
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] recall computation FAILED: ${e.getMessage}")
-            Seq.empty[(String, Double)]
-        }
-      // second stamp per rung on the CLUSTERED synthetic corpus
-      // (VERDICT r12 #6): the testdata embeddings are uniform-random —
-      // PQ/binary's worst case; real embeddings cluster. Same rungs,
-      // same persisted-index machinery, dir = the deterministic
-      // mixture fixture. Failures degrade to missing stamps, never a
-      // bench abort.
-      val clustered =
-        try {
-          import graft.operators.SimilarityQueries
-          val cdir = SimilarityQueries.clusteredEmbeddingsDir(spark)
-          val exact = pairs(SimilarityQueries.q17CosineTopK(spark, cdir), "probe_id", "neighbor_id")
-          Seq(
-            "q17b_ann_topk_clustered" ->
-              vs(pairs(SimilarityQueries.q17bAnnTopK(spark, cdir), "probe_id", "neighbor_id"), exact),
-            "q17c_ivf_topk_clustered" ->
-              vs(pairs(SimilarityQueries.q17cIvfTopK(spark, cdir), "probe_id", "neighbor_id"), exact),
-            "q17f_ivf_int8_topk_clustered" ->
-              vs(pairs(SimilarityQueries.q17fIvfInt8TopK(spark, cdir), "probe_id", "neighbor_id"), exact),
-            "q17j_pq_topk_clustered" ->
-              vs(pairs(SimilarityQueries.q17jPqTopK(spark, cdir), "probe_id", "neighbor_id"), exact),
-            "q17k_ivfpq_topk_clustered" ->
-              vs(pairs(SimilarityQueries.q17kIvfPqTopK(spark, cdir), "probe_id", "neighbor_id"), exact),
-            "q17m_binary_topk_clustered" ->
-              vs(pairs(SimilarityQueries.q17mBinaryHammingTopK(spark, cdir), "probe_id", "neighbor_id"), exact))
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] clustered recall computation FAILED: ${e.getMessage}")
-            Seq.empty[(String, Double)]
-        }
-      (entries ++ clustered).map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    }
+    val (recallStamp, curveSecs) = recallStamps(spark, sfDir)
+    val recallObj = obj(recallStamp)
     // the recall-regression GATE (VERDICT r10 #5): stamps existed since
     // r9 but drift was only visible by diffing artifacts by hand — now
     // the bench itself compares against the latest committed
@@ -437,8 +274,7 @@ object Bench {
         .map(f => parseRecallBlock(new String(
           java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")))
         .getOrElse(Map.empty[String, Double])
-      val cur = parseRecallBlock(s""""recall":$recallObj""")
-      val (deltas, regressed) = recallDeltas(prev, cur)
+      val (deltas, regressed) = recallDeltas(prev, recallStamp.toMap)
       (deltas.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + v }
         .mkString("{", ",", "}"),
        regressed.map("\"" + _ + "\"").mkString("[", ",", "]"))
@@ -450,8 +286,7 @@ object Bench {
     val growStats = graft.streaming.StreamingPipelines.lastGrowStats
       .map(s => s"""{"b":${s.batchId},"probe_s":${s.probeSec},"dirs":${s.appendixDirs},"rows":${s.appendixRows},"compacted":${s.compacted}}""")
       .mkString("[", ",", "]")
-    val curveSecObj = curveSecs.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val curveSecObj = obj(curveSecs)
     // SUSTAINED-TRIGGER SLA for the incremental source (VERDICT r15
     // #4): a producer thread commits versions on a fixed cadence while
     // a ProcessingTime-triggered consumer drains under admission
@@ -514,5 +349,175 @@ object Bench {
     catch { case e: Exception =>
       System.err.println(s"[bench] BENCH_SUMMARY.json write failed: ${e.getMessage}") }
     spark.stop()
+  }
+
+  /** A query's FAMILY = its leading qNN token (q28k → q28): the unit the
+    * per-family budget line groups by, and the boundary at which a pass
+    * runs a GC (VERDICT r18 next #7 — two rounds of full-suite growth
+    * decomposed to in-suite GC concentrated in the streaming-replay
+    * family sharing one JVM; a collection at each family boundary,
+    * OUTSIDE any timed window, keeps one family's garbage from billing
+    * the next family's queries). */
+  private def familyOf(n: String): String =
+    "^(q\\d+)".r.findFirstIn(n).getOrElse(n)
+
+  /** Prints every Spark job's wall seconds + its description/callsite,
+    * so a harness query decomposes into its jobs. */
+  private def jobLog: org.apache.spark.scheduler.SparkListener =
+    new org.apache.spark.scheduler.SparkListener {
+      private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val fromSite = js.stageInfos.flatMap(si =>
+          si.details.linesIterator.find(l => l.contains("graft.")))
+          .headOption.map(_.trim.take(120))
+        val desc = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .orElse(fromSite)
+          .orElse(js.stageInfos.headOption.map(_.name.take(100)))
+          .getOrElse("?")
+        t0.put(js.jobId, (System.nanoTime(), desc))
+      }
+      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        Option(t0.remove(je.jobId)).foreach { case (t, desc) =>
+          val s = (System.nanoTime() - t) / 1e9
+          if (s >= 0.02) println(f"[job] ${je.jobId}%5d $s%8.3f s  $desc")
+        }
+      }
+    }
+
+  /** The two timed passes of a run: each query's seconds (`-1` when it
+    * threw) and start offset (seconds since the run began), plus the
+    * per-pass GC deltas as a JSON object. */
+  final case class Passes(pass1: Seq[(String, Double)], pass2: Seq[(String, Double)],
+                          starts1: Seq[(String, Double)], starts2: Seq[(String, Double)],
+                          gc: String) {
+    /** Best-of-two per query; a failure in either pass reports `-1`. */
+    def results: Seq[(String, Double)] = pass1.zip(pass2).map { case ((n, a), (_, b)) =>
+      n -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
+    }
+  }
+
+  /** Time `queries`, in the given order, on `spark` over `sfDir`: one
+    * warmup pass, then two timed passes. The replay memos are cleared at
+    * the start of every pass, so each pass re-runs the memoized
+    * harnesses it times. */
+  private[graft] def timePasses(spark: SparkSession, sfDir: String,
+                                queries: Seq[(String, (SparkSession, String) => DataFrame)]): Passes = {
+    // wall-clock anchor: per-query start offsets (sec since this) ride
+    // the artifact, so a contended host window shows up as a cluster of
+    // blips at one offset range instead of needing builder testimony
+    // (VERDICT r8 wrong #1 / next #7)
+    val benchT0 = System.nanoTime()
+    def runOne(name: String, fn: (SparkSession, String) => DataFrame): Double = {
+      // q20* share one streamed replay (all streaming queries run
+      // concurrently on one session, reference O19). The replay cost is
+      // timed once, on q20_stream_tumbling (cache cleared → real
+      // replay); the other q20* entries are derived reads of the same
+      // drained sinks and time as such.
+      if (name == "q20_stream_tumbling") graft.streaming.StreamingPipelines.clearCache()
+      val t0 = System.nanoTime()
+      val t = try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          -1.0
+      }
+      // cross-query isolation, outside the timed window: drop any
+      // cached blocks the query left behind (they'd occupy unified
+      // memory and bill later queries' GC)
+      spark.catalog.clearCache()
+      t
+    }
+    def runPass(label: String): (Seq[(String, (Double, Double))], String) = {
+      graft.streaming.StreamingPipelines.clearCache()
+      val (gcMs0, gcN0) = gcStats()
+      var prevFamily = ""
+      val res = queries.map { case (n, f) =>
+        val fam = familyOf(n)
+        if (prevFamily.nonEmpty && fam != prevFamily) System.gc()
+        prevFamily = fam
+        val startOff = (System.nanoTime() - benchT0) / 1e9
+        n -> (runOne(n, f), math.rint(startOff * 10) / 10)
+      }
+      val (gcMs1, gcN1) = gcStats()
+      // inter-pass hygiene: unload streaming state stores (native
+      // RocksDB instances) and compact the heap so pass N+1 starts from
+      // the same baseline as pass N
+      graft.streaming.StreamingPipelines.unloadStateStores()
+      System.gc()
+      (res, "\"" + label + s"""":{"gc_ms":${gcMs1 - gcMs0},"gc_n":${gcN1 - gcN0}}""")
+    }
+    val (_, gcWarm) = runPass("warmup")
+    val (pass1t, gc1) = runPass("pass1")
+    val (pass2t, gc2) = runPass("pass2")
+    Passes(pass1t.map { case (n, (d, _)) => n -> d }, pass2t.map { case (n, (d, _)) => n -> d },
+      pass1t.map { case (n, (_, s)) => n -> s }, pass2t.map { case (n, (_, s)) => n -> s },
+      Seq(gcWarm, gc1, gc2).mkString("{", ",", "}"))
+  }
+
+  /** Measured recall/overlap for the rows-only ANN entries (VERDICT r9
+    * next #5): the correctness artifact can only say "50 rows" for
+    * q17b/c/f/i, so a recall regression inside the spec threshold is
+    * invisible round-over-round — the summary stamps the measured value,
+    * from the same ladder [[Bounds]] checks its floors on. Driver-side
+    * set compares over bounded top-k results (50-100 rows each), OUTSIDE
+    * any timed window. Returns the `recall` entries and the knob curve's
+    * seconds per point. */
+  private[graft] def recallStamps(spark: SparkSession, sfDir: String)
+      : (Seq[(String, Double)], Seq[(String, Double)]) = {
+    import graft.operators.SimilarityQueries
+    val curveSecs = mutable.LinkedHashMap.empty[String, Double]
+    def ladder(dir: String, suffix: String, exact: Set[(Long, Long)]): Seq[(String, Double)] =
+      Bounds.annRungs.map { case (n, _, topK) => n + suffix -> Bounds.annRecall(topK(spark, dir), exact) }
+    val entries =
+      try {
+        val exact = Bounds.exactTopK(spark, sfDir)
+        // the recall/latency KNOB CURVE (VERDICT r13 #7): the rungs
+        // stamp one operating point each, but serving decisions need
+        // the curve — recall at nprobe ∈ {k/8, k/4, k/2} for the IVF
+        // rung and ADC shortlist ∈ {150, 300, 600} for the PQ rung,
+        // all query-time knobs over the SAME persisted indexes (no
+        // rebuilds; the `index_builds` audit would flag one). Each
+        // point also stamps its wall seconds into knob_curve_sec, so
+        // the artifact carries both axes of the trade. Entries join
+        // the recall map, so the regression gate covers every
+        // operating point from the next round on.
+        def point(key: String)(df: => DataFrame): (String, Double) = {
+          val t0 = System.nanoTime
+          val r = Bounds.annRecall(df, exact)
+          curveSecs(key) = math.rint(1000.0 * (System.nanoTime - t0) / 1e9) / 1000
+          key -> r
+        }
+        ladder(sfDir, "", exact) ++ Seq(
+          "q17i_hybrid_indexed" -> Bounds.hybridOverlap(spark, sfDir),
+          point("q17c_ivf_topk@np1of8")(SimilarityQueries.ivfRank(spark, sfDir, 5, Some(0.125))),
+          point("q17c_ivf_topk@np1of4")(SimilarityQueries.ivfRank(spark, sfDir, 5, Some(0.25))),
+          point("q17c_ivf_topk@np1of2")(SimilarityQueries.ivfRank(spark, sfDir, 5, Some(0.5))),
+          point("q17j_pq_topk@sl150")(SimilarityQueries.q17jPqTopKAt(spark, sfDir, 150)),
+          point("q17j_pq_topk@sl300")(SimilarityQueries.q17jPqTopKAt(spark, sfDir, 300)),
+          point("q17j_pq_topk@sl600")(SimilarityQueries.q17jPqTopKAt(spark, sfDir, 600)))
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] recall computation FAILED: ${e.getMessage}")
+          Seq.empty[(String, Double)]
+      }
+    // second stamp per rung on the CLUSTERED synthetic corpus
+    // (VERDICT r12 #6): the testdata embeddings are uniform-random —
+    // PQ/binary's worst case; real embeddings cluster. Same rungs,
+    // same persisted-index machinery, dir = the deterministic
+    // mixture fixture. Failures degrade to missing stamps, never a
+    // bench abort.
+    val clustered =
+      try {
+        val cdir = SimilarityQueries.clusteredEmbeddingsDir(spark)
+        ladder(cdir, "_clustered", Bounds.exactTopK(spark, cdir))
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] clustered recall computation FAILED: ${e.getMessage}")
+          Seq.empty[(String, Double)]
+      }
+    (entries ++ clustered, curveSecs.toSeq)
   }
 }

@@ -29,8 +29,9 @@ import org.apache.spark.sql.functions._
   * correctness artifact carries `{bound_checked: true, within, bound,
   * pass}` per rows-only entry; RetrievalSpec/ScaleOpsSpec enforce the
   * same floors in `sbt test`. Every comparison is a bounded driver-side
-  * set compare over ≤ a few hundred rows — the same discipline as the
-  * bench's recall stamps. */
+  * set compare over ≤ a few hundred rows; [[graft.Bench]] stamps its
+  * recall block from the same [[annRungs]], [[annRecall]] and
+  * [[hybridOverlap]]. */
 object Bounds {
 
   final case class BoundCheck(name: String, kind: String,
@@ -47,11 +48,43 @@ object Bounds {
   private def pairs(df: DataFrame, a: String, b: String): Set[(Long, Long)] =
     df.select(a, b).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  /** The share of `exact` that `approx` found, to 3 dp (1.0 when there
+    * is nothing to find): the one recall every report stamps. */
   private def recall(approx: Set[(Long, Long)], exact: Set[(Long, Long)]): Double =
-    if (exact.isEmpty) 1.0 else (approx & exact).size.toDouble / exact.size
+    if (exact.isEmpty) 1.0 else math.rint(1000.0 * (approx & exact).size / exact.size) / 1000
+
+  /** The ANN ladder in report order: each rung's name, its recall
+    * floor and its top-k query. */
+  val annRungs: Seq[(String, Double, (SparkSession, String) => DataFrame)] = {
+    import graft.operators.{SimilarityQueries => S}
+    Seq(
+      ("q17b_ann_topk", 0.7, S.q17bAnnTopK),
+      ("q17c_ivf_topk", 0.8, S.q17cIvfTopK),
+      ("q17f_ivf_int8_topk", 0.8, S.q17fIvfInt8TopK),
+      ("q17j_pq_topk", 0.7, S.q17jPqTopK),
+      ("q17k_ivfpq_topk", 0.7, S.q17kIvfPqTopK),
+      ("q17m_binary_topk", 0.8, S.q17mBinaryHammingTopK))
+  }
+
+  /** The exact cosine top-k (q17, hash-green) on `dir`: the pairs each
+    * rung's recall is measured against. */
+  def exactTopK(spark: SparkSession, dir: String): Set[(Long, Long)] =
+    pairs(graft.operators.SimilarityQueries.q17CosineTopK(spark, dir), "probe_id", "neighbor_id")
+
+  /** A top-k result's recall vs `exact` (see [[exactTopK]]). */
+  def annRecall(topK: DataFrame, exact: Set[(Long, Long)]): Double =
+    recall(pairs(topK, "probe_id", "neighbor_id"), exact)
+
+  /** The indexed hybrid's (q17i) fused-set overlap with the exact-ranker
+    * RRF fusion (q17h, hash-green) on `dir`. */
+  def hybridOverlap(spark: SparkSession, dir: String): Double = {
+    import graft.operators.{LayoutQueries, SimilarityQueries}
+    val exact = pairs(SimilarityQueries.q17hHybridRrf(spark, dir), "probe_id", "doc_id")
+    recall(pairs(LayoutQueries.q17iHybridIndexed(spark, dir), "probe_id", "doc_id"), exact)
+  }
 
   def all(spark: SparkSession, dir: String): Seq[BoundCheck] = {
-    import graft.operators.{LayoutQueries, RelationalQueries => R, SimilarityQueries => S}
+    import graft.operators.{RelationalQueries => R, SimilarityQueries => S}
     val events = graft.core.Tables.load(spark, dir, "events")
     val exactUsers = events.groupBy("event_type")
       .agg(countDistinct(col("user_id")).cast("double").as("n"))
@@ -62,25 +95,21 @@ object Bounds {
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
 
     val checks = scala.collection.mutable.ArrayBuffer.empty[BoundCheck]
-    def add(name: String, kind: String, bound: Double)(within: => Double): Unit =
+    // ceiling checks pass when within <= bound, floor (recall-style)
+    // checks when within >= bound
+    def check(name: String, kind: String, bound: Double, floor: Boolean)(within: => Double): Unit =
       checks += (try {
         val w = rnd3(within)
-        BoundCheck(name, kind, w, bound, w <= bound)
+        BoundCheck(name, kind, w, bound, if (floor) w >= bound else w <= bound)
       } catch {
         case e: Throwable =>
           System.err.println(s"[bounds] $name failed: ${e.getMessage}")
           BoundCheck(name, kind, Double.NaN, bound, pass = false)
       })
-    // recall-style checks pass when within >= bound
+    def add(name: String, kind: String, bound: Double)(within: => Double): Unit =
+      check(name, kind, bound, floor = false)(within)
     def addFloor(name: String, kind: String, floor: Double)(within: => Double): Unit =
-      checks += (try {
-        val w = rnd3(within)
-        BoundCheck(name, kind, w, floor, w >= floor)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bounds] $name failed: ${e.getMessage}")
-          BoundCheck(name, kind, Double.NaN, floor, pass = false)
-      })
+      check(name, kind, floor, floor = true)(within)
 
     // HLL estimates vs the exact per-type distinct (rsd 0.01 / lgK 12:
     // a 5% band is ~4 standard errors)
@@ -125,24 +154,11 @@ object Bounds {
       if ((got -- exact).nonEmpty) 0.0 else recall(got, exact)
     }
     // the ANN ladder vs the hash-green exact cosine top-k
-    val exactTopK = pairs(S.q17CosineTopK(spark, dir), "probe_id", "neighbor_id")
-    addFloor("q17b_ann_topk", "recall_vs_exact_topk", 0.7)(
-      recall(pairs(S.q17bAnnTopK(spark, dir), "probe_id", "neighbor_id"), exactTopK))
-    addFloor("q17c_ivf_topk", "recall_vs_exact_topk", 0.8)(
-      recall(pairs(S.q17cIvfTopK(spark, dir), "probe_id", "neighbor_id"), exactTopK))
-    addFloor("q17f_ivf_int8_topk", "recall_vs_exact_topk", 0.8)(
-      recall(pairs(S.q17fIvfInt8TopK(spark, dir), "probe_id", "neighbor_id"), exactTopK))
-    addFloor("q17j_pq_topk", "recall_vs_exact_topk", 0.7)(
-      recall(pairs(S.q17jPqTopK(spark, dir), "probe_id", "neighbor_id"), exactTopK))
-    addFloor("q17k_ivfpq_topk", "recall_vs_exact_topk", 0.7)(
-      recall(pairs(S.q17kIvfPqTopK(spark, dir), "probe_id", "neighbor_id"), exactTopK))
-    addFloor("q17m_binary_topk", "recall_vs_exact_topk", 0.8)(
-      recall(pairs(S.q17mBinaryHammingTopK(spark, dir), "probe_id", "neighbor_id"), exactTopK))
-    // indexed hybrid vs the exact-ranker RRF fusion
-    addFloor("q17i_hybrid_indexed", "overlap_vs_exact_rrf", 0.9) {
-      val hExact = pairs(S.q17hHybridRrf(spark, dir), "probe_id", "doc_id")
-      recall(pairs(LayoutQueries.q17iHybridIndexed(spark, dir), "probe_id", "doc_id"), hExact)
+    val exactK = exactTopK(spark, dir)
+    annRungs.foreach { case (name, floor, topK) =>
+      addFloor(name, "recall_vs_exact_topk", floor)(annRecall(topK(spark, dir), exactK))
     }
+    addFloor("q17i_hybrid_indexed", "overlap_vs_exact_rrf", 0.9)(hybridOverlap(spark, dir))
     // streamed PQ ingest == batch-built q17j, byte for byte
     addFloor("q17l_pq_stream_ingest", "byte_equality_with_q17j", 1.0) {
       val streamed = graft.streaming.StreamingPipelines

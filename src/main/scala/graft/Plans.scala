@@ -34,83 +34,3 @@ object Plans {
     spark.stop()
   }
 }
-
-/** Subset timer (optimization rounds): times the named declared queries
-  * with the SAME methodology as Bench (noop sink, cache cleared outside
-  * the window, warmup + two timed passes, min-of-two) but over an
-  * explicit list, so a change can be priced in seconds without a full
-  * 162-query run. Never run by the driver.
-  *
-  * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.BenchOne q1,q2,...
-  */
-object BenchOne {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val names = args(0).split(",").toSeq
-    if (sys.env.get("SPARK_GRAFT_INDEX_DIR").isEmpty && sys.props.get("graft.index.dir").isEmpty)
-      sys.props("graft.index.dir") =
-        new java.io.File("target/graft-index").getAbsolutePath
-    val spark = graft.core.GraftSession.build(
-      master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-    // SPARK_GRAFT_JOBLOG=1: print every Spark job's wall seconds + its
-    // description/callsite, so a harness query decomposes into its jobs
-    if (sys.env.get("SPARK_GRAFT_JOBLOG").contains("1")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val fromSite = js.stageInfos.flatMap(si =>
-            si.details.linesIterator.find(l => l.contains("graft.")))
-            .headOption.map(_.trim.take(120))
-          val desc = Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .orElse(fromSite)
-            .orElse(js.stageInfos.headOption.map(_.name.take(100)))
-            .getOrElse("?")
-          t0.put(js.jobId, (System.nanoTime(), desc))
-        }
-        override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          Option(t0.remove(je.jobId)).foreach { case (t, desc) =>
-            val s = (System.nanoTime() - t) / 1e9
-            if (s >= 0.02) println(f"[job] ${je.jobId}%5d $s%8.3f s  $desc")
-          }
-        }
-      })
-    }
-    val qs = names.map(n => n -> SparkEntry.queries(n))
-    def runOne(name: String,
-               fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      if (name == "q20_stream_tumbling") graft.streaming.StreamingPipelines.clearCache()
-      val t0 = System.nanoTime()
-      val t = try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[benchone] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-        e.printStackTrace()
-        -1.0
-      }
-      spark.catalog.clearCache()
-      t
-    }
-    def pass(): Seq[(String, Double)] = {
-      // mirror Bench's per-pass replay-cache wipe (Bench clears at
-      // q20_stream_tumbling; a subset without it would otherwise time
-      // cached sink reads instead of real replays)
-      graft.streaming.StreamingPipelines.clearCache()
-      val r = qs.map { case (n, f) => n -> runOne(n, f) }
-      graft.streaming.StreamingPipelines.unloadStateStores()
-      System.gc()
-      r
-    }
-    pass() // warmup
-    val p1 = pass(); val p2 = pass()
-    val res = p1.zip(p2).map { case ((n, a), (_, b)) =>
-      n -> (if (a < 0 || b < 0) -1.0 else math.min(a, b)) }
-    def obj(r: Seq[(String, Double)]) =
-      r.map { case (k, v) => "\"" + k + "\":" + math.rint(v * 1000) / 1000 }
-        .mkString("{", ",", "}")
-    println(s"""{"metric":"benchone","queries":${obj(res)},"pass1":${obj(p1)},"pass2":${obj(p2)},"sf":"$sfDir"}""")
-    spark.stop()
-  }
-}

@@ -91,6 +91,24 @@ object IndexStore {
       paths.reverse.foreach(Files.deleteIfExists(_))
     }
 
+  /** This JVM's one scratch root in `java.io.tmpdir`, deleted with
+    * everything under it at JVM exit. Spark's shutdown hooks, the
+    * SparkContext's stop among them, run as one Hadoop hook at
+    * `FileSystem.SHUTDOWN_HOOK_PRIORITY + 30`; a lower priority runs
+    * after them, so no query still writes under the root. */
+  private lazy val scratchRoot: Path = {
+    val r = Files.createTempDirectory("graft-run")
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => deleteRecursively(r),
+      org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 20)
+    r
+  }
+
+  /** A fresh dir named `prefix…` for a harness's tables, outputs and
+    * checkpoints, removed at JVM exit (see [[scratchRoot]]). Data that
+    * must outlive the JVM goes under [[root]] instead. */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(scratchRoot, prefix)
+
   /** True iff the tree under `p` contains at least one parquet data
     * file. The appendix-read guard (ADVICE r10 #3): an accepted-but-
     * EMPTY micro-batch writes a `batch_id=N` dir with no parquet files

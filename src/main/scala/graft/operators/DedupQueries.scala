@@ -487,7 +487,7 @@ object DedupQueries {
     * differential-test twin. Returns (node, rep). */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cc").toString
+    val tmp = graft.core.IndexStore.tempDir("graft-cc").toString
     pairs.write.mode("overwrite").parquet(s"$tmp/edges")
     val e = spark.read.parquet(s"$tmp/edges")
     val edges = e.select(col("doc_i").as("a"), col("doc_j").as("b"))
@@ -552,7 +552,7 @@ object DedupQueries {
   def connectedComponentsStarWithRounds(pairs: DataFrame, maxIter: Int = 40): (DataFrame, Int) = {
     import org.apache.spark.sql.expressions.Window
     val spark = pairs.sparkSession
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ccs").toString
+    val tmp = graft.core.IndexStore.tempDir("graft-ccs").toString
     // materialize the input once: the round-1 edge set and the node
     // universe both derive from it (two references to an unmaterialized
     // `pairs` would recompute the upstream LSH pipeline twice)

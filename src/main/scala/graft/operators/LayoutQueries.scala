@@ -437,7 +437,7 @@ object LayoutQueries {
     * SQL-vs-API CAS semantics are spec-pinned in
     * SnapshotShapeEvolutionSpec. */
   def q26wSqlInsert(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-q26w")
+    val root = IndexStore.tempDir("graft-q26w")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
@@ -475,7 +475,7 @@ object LayoutQueries {
     * hash-fails against the flat-corpus oracle (a failed drop fails
     * the post-drop INSERT outright). */
   def q28cSqlDdl(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-q28c").resolve("tbl")
+    val root = IndexStore.tempDir("graft-q28c").resolve("tbl")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("value"), col("user_id"))
@@ -518,7 +518,7 @@ object LayoutQueries {
     * the old name, chained renames compose, single-relation surfaces
     * refuse until compaction retires the mapping. */
   def q28dRenameMapped(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-q28d")
+    val root = IndexStore.tempDir("graft-q28d")
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("user_id"), col("value"))
     val cut = lit(SnapCutoff).cast("timestamp")
@@ -556,7 +556,7 @@ object LayoutQueries {
     * column alone, loses every pre-rename row and hash-fails. Row-level
     * DML stays refused until compaction (the store's contract). */
   def q28iSqlRenamedRead(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-q28i")
+    val root = IndexStore.tempDir("graft-q28i")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("user_id"), col("value"))
@@ -598,7 +598,7 @@ object LayoutQueries {
     * At 100 TB this is the operator story: ingest, maintain, and audit
     * a table without leaving `spark.sql`. */
   def q28eSqlMaintenance(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-q28e").resolve("tbl")
+    val root = IndexStore.tempDir("graft-q28e").resolve("tbl")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("user_id"), col("value"))
@@ -641,7 +641,7 @@ object LayoutQueries {
     * click row. At 100 TB this is the backfill story in SQL: one day's
     * correction rewrites one partition, never lists the rest. */
   def q28gSqlPartitioned(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-q28g").resolve("tbl")
+    val root = IndexStore.tempDir("graft-q28g").resolve("tbl")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("user_id"), col("value"))
@@ -694,7 +694,7 @@ object LayoutQueries {
     * UPDATE rewrites matched files ×2 writes, the DELETE opens one
     * partition's files — never the table. */
   def q28mSqlPartitionedEvolve(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-q28m").resolve("tbl")
+    val root = IndexStore.tempDir("graft-q28m").resolve("tbl")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("user_id"), col("value"))
@@ -738,7 +738,7 @@ object LayoutQueries {
     * that nulls the old generation under the new name, drops the late
     * rows, or loses a partition dir value hash-fails. */
   def q28pSqlPartitionedRename(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-q28p").resolve("tbl")
+    val root = IndexStore.tempDir("graft-q28p").resolve("tbl")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("user_id"), col("value"))
@@ -806,7 +806,7 @@ object LayoutQueries {
     * daily partitioning: the flip costs one metadata write, and every
     * query keeps pruning on both generations' layouts. */
   def q28sSqlPartitionSpecEvolve(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-q28s").resolve("tbl")
+    val root = IndexStore.tempDir("graft-q28s").resolve("tbl")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("user_id"), col("value"))
@@ -863,7 +863,7 @@ object LayoutQueries {
     * or a HEAD moved by the rejected cycle all hash-fail — exactly
     * q26m's pins, now reachable by an operator who only has SQL. */
   def q28nSqlWap(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-q28n").resolve("tbl")
+    val root = IndexStore.tempDir("graft-q28n").resolve("tbl")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("user_id"), col("value"))
@@ -997,7 +997,7 @@ object LayoutQueries {
     * File-scoping and NULL-predicate semantics are spec-pinned in
     * SnapshotShapeEvolutionSpec. */
   def q26ySqlDelete(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-q26y")
+    val root = IndexStore.tempDir("graft-q26y")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
@@ -1037,7 +1037,7 @@ object LayoutQueries {
     * file-scoped envelope-pruned flavor is the API's
     * [[SnapshotStore.mergeCow]] (q26l) and the MOR-delta rung (q26r). */
   def q26zSqlMerge(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-q26z")
+    val root = IndexStore.tempDir("graft-q26z")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val events = Tables.load(spark, dir, "events")
     val cut = lit(SnapCutoff).cast("timestamp")
@@ -1836,9 +1836,11 @@ object LayoutQueries {
   // ---- hybrid retrieval over the sublinear rankers --------------------
 
   /** Fusion-time knobs for q17i, picked from the measured
-    * overlap-vs-depth curve (VERDICT r10 #1; the curve itself is
-    * printed by `graft.Probe` mode `hybrid` and asserted as a floor in
-    * RetrievalSpec): fusion depth stays at the q17h-matched 20 (RRF
+    * overlap-vs-depth curve (VERDICT r10 #1; `q17iHybridIndexed`'s
+    * `fusionK` and `nprobeFrac` arguments re-measure any point of it,
+    * and the chosen point's overlap is stamped by `graft.Bench` and
+    * asserted as a floor in RetrievalSpec and `graft.Bounds`): fusion
+    * depth stays at the q17h-matched 20 (RRF
     * consumes ranks; deepening the lists mostly adds tail noise), while
     * the IVF ranker probes k/2 lists at fusion time instead of the
     * standalone k/4 — fused-set quality is bounded by the weaker list,
@@ -1861,7 +1863,7 @@ object LayoutQueries {
     * is exactly the part of a lexical top-k that carries no signal.
     *
     * Round-11 note (VERDICT r10 #1): q17i previously fused BM25 here.
-    * The measured overlap-vs-depth curve (Probe mode `hybrid`) capped
+    * The measured overlap-vs-depth curve capped
     * at 0.62 even with the IVF side probing ALL lists — the ceiling was
     * never IVF recall but the BM25-vs-Jaccard ranker mismatch against
     * q17h's fixed lexical side. Serving the same Jaccard semantics from

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import graft.core.Tables
+import graft.core.{IndexStore, Tables}
 import graft.functions.TagCount
 
 /** Structured Streaming twins of the reference's continuous queries
@@ -273,6 +273,8 @@ object StreamingPipelines {
 
   // ---- the shared replay: all continuous queries on one session --------
 
+  private val ReplayFilesPerTrigger = 16
+
   /** Run ALL the streaming pipelines concurrently on one session (O19,
     * S:86-109) over the chunked replay; block until drained; return the
     * final sink state. One replay feeds every q20* reader — the bench
@@ -280,8 +282,8 @@ object StreamingPipelines {
     * per-pipeline replays tripled source reads, query start/stop
     * cycles, and RocksDB instance churn for no semantic gain).
     *
-    * filesPerTrigger sizes the replay at 2 data triggers + drain per
-    * query (30 day-chunks + the sentinel chunk / 16): multi-trigger
+    * `ReplayFilesPerTrigger` sizes the replay at 2 data triggers + drain
+    * per query (30 day-chunks + the sentinel chunk / 16): multi-trigger
     * semantics (watermark advance, state carry-over, per-trigger
     * upserts) are still exercised, but the wall clock is not dominated
     * by trigger bookkeeping — each trigger costs offset/commit-log
@@ -290,7 +292,7 @@ object StreamingPipelines {
     * Parity is batch-size-independent here: the replay is
     * event-time-ordered, so a row's window is never below the watermark
     * when it arrives (no drops at any trigger granularity). */
-  def replay(spark: SparkSession, dir: String, filesPerTrigger: Int = 16): SinkState = {
+  def replay(spark: SparkSession, dir: String): SinkState = {
     import spark.implicits._
     val sink = new SinkState
     val chunkDir = chunkEvents(spark, dir)
@@ -343,25 +345,25 @@ object StreamingPipelines {
         spark.streams.addListener(dedupWmListener)
         try {
           def source: DataFrame = eventStream(spark,
-            SourceConfig(path = chunkDir.toString, filesPerTrigger = filesPerTrigger))
+            SourceConfig(path = chunkDir.toString, filesPerTrigger = ReplayFilesPerTrigger))
           // real events only — every pipeline aggregating over the corpus
           // drops the watermark-flush sentinel before it can count; only the
           // session query (append mode) lets it through its watermark node
           def data: DataFrame = source.where(col("event_type") =!= SentinelType)
 
-          sink.tumblingSinkDir = Files.createTempDirectory("graft-out-tumbling").toString
-          sink.slidingSinkDir  = Files.createTempDirectory("graft-out-sliding").toString
-          sink.perTypeSinkDir  = Files.createTempDirectory("graft-out-pertype").toString
-          sink.top1SinkDir     = Files.createTempDirectory("graft-out-top1").toString
-          sink.joinSinkDir     = Files.createTempDirectory("graft-out-join").toString
-          sink.leftJoinSinkDir = Files.createTempDirectory("graft-out-leftjoin").toString
-          sink.dedupSinkDir    = Files.createTempDirectory("graft-out-dedup").toString
-          sink.dedupWmSinkDir  = Files.createTempDirectory("graft-out-dedupwm").toString
-          sink.enrichSinkDir   = Files.createTempDirectory("graft-out-enrich").toString
-          sink.sessionSinkDir  = Files.createTempDirectory("graft-out-session").toString
-          sink.cdcSnapDir      = Files.createTempDirectory("graft-out-cdc").toString
-          sink.cdcBucketDir    = Files.createTempDirectory("graft-out-cdcb").toString
-          sink.mvDir           = Files.createTempDirectory("graft-out-mv").toString
+          sink.tumblingSinkDir = IndexStore.tempDir("graft-out-tumbling").toString
+          sink.slidingSinkDir  = IndexStore.tempDir("graft-out-sliding").toString
+          sink.perTypeSinkDir  = IndexStore.tempDir("graft-out-pertype").toString
+          sink.top1SinkDir     = IndexStore.tempDir("graft-out-top1").toString
+          sink.joinSinkDir     = IndexStore.tempDir("graft-out-join").toString
+          sink.leftJoinSinkDir = IndexStore.tempDir("graft-out-leftjoin").toString
+          sink.dedupSinkDir    = IndexStore.tempDir("graft-out-dedup").toString
+          sink.dedupWmSinkDir  = IndexStore.tempDir("graft-out-dedupwm").toString
+          sink.enrichSinkDir   = IndexStore.tempDir("graft-out-enrich").toString
+          sink.sessionSinkDir  = IndexStore.tempDir("graft-out-session").toString
+          sink.cdcSnapDir      = IndexStore.tempDir("graft-out-cdc").toString
+          sink.cdcBucketDir    = IndexStore.tempDir("graft-out-cdcb").toString
+          sink.mvDir           = IndexStore.tempDir("graft-out-mv").toString
 
           // O12 — tumbling 1-minute count, update mode.
           run("tumbling", "update", data
@@ -834,7 +836,7 @@ object StreamingPipelines {
     * Returns the durable sink dir. */
   def wireReplay(spark: SparkSession, dir: String, rounds: Int = 4): String = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val out  = Files.createTempDirectory("graft-wire-out").toString
+    val out  = IndexStore.tempDir("graft-wire-out").toString
     // Broker-stand-in data plane (VERDICT r7 wrong #2: the former
     // whole-corpus collect would OOM the driver long before the engine
     // saw a byte at 100×): the serialized frames are STAGED to disk as
@@ -919,7 +921,7 @@ object StreamingPipelines {
     import graft.operators.DedupQueries
     val docs = Tables.load(spark, dir, "documents")
     val chunkDir = stageIngestChunks(spark, dir, nChunks)
-    val out  = Files.createTempDirectory("graft-ingest-out").toString
+    val out  = IndexStore.tempDir("graft-ingest-out").toString
     // the index and the base payload frame are static across batches
     val index = DedupQueries.baseBandIndex(spark, dir)
     val base = DedupQueries.wordShingleDocs(spark, dir)
@@ -1023,8 +1025,8 @@ object StreamingPipelines {
     import graft.operators.DedupQueries
     val docs = Tables.load(spark, dir, "documents")
     val chunkDir = chunkDirOpt.getOrElse(stageIngestChunks(spark, dir, nChunks))
-    val out  = outOpt.getOrElse(Files.createTempDirectory("graft-grow-out").toString)
-    val grow = growOpt.getOrElse(Files.createTempDirectory("graft-grow-idx"))
+    val out  = outOpt.getOrElse(IndexStore.tempDir("graft-grow-out").toString)
+    val grow = growOpt.getOrElse(IndexStore.tempDir("graft-grow-idx"))
     val sigDir  = grow.resolve("sigs").toString
     val bandDir = grow.resolve("bands").toString
     val baseIdx = DedupQueries.baseBandIndex(spark, dir)
@@ -1389,7 +1391,7 @@ object StreamingPipelines {
     val copies = SimilarityQueries.plantedEmbeddings(spark, dir)
       .where(col("vec_id") >= 1000000L)
     val chunkDir = stageChunksByIdMod(copies, "vec_id", "graft-embingest", dir, nChunks)
-    val out  = Files.createTempDirectory("graft-embingest-out").toString
+    val out  = IndexStore.tempDir("graft-embingest-out").toString
     val (bits, baseKeys) = SimilarityQueries.embKeyIndex(spark, dir)
     val base = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -1452,8 +1454,8 @@ object StreamingPipelines {
       .where(col("vec_id") >= 1000000L)
       .unionAll(SimilarityQueries.plantedEmbeddingsGen2(spark, dir))
     val chunkDir = stageChunksByIdMod(incoming, "vec_id", "graft-embgrow", dir, nChunks)
-    val out  = Files.createTempDirectory("graft-embgrow-out").toString
-    val grow = Files.createTempDirectory("graft-embgrow-idx")
+    val out  = IndexStore.tempDir("graft-embgrow-out").toString
+    val grow = IndexStore.tempDir("graft-embgrow-idx")
     val keysDir = grow.resolve("keys").toString
     val vecsDir = grow.resolve("vecs").toString
     val (bits, baseKeys) = SimilarityQueries.embKeyIndex(spark, dir)
@@ -1548,10 +1550,10 @@ object StreamingPipelines {
       DedupQueries.lineBaseRoot(spark, dir).resolve("digests").toString)
     val incoming = DedupQueries.incomingWithReposts(Tables.load(spark, dir, "documents"))
     val chunkDir = stageChunksByIdMod(incoming, "doc_id", "graft-lineingest", dir, nChunks)
-    val out  = Files.createTempDirectory("graft-lineingest-out").toString
+    val out  = IndexStore.tempDir("graft-lineingest-out").toString
     // the accept appendix path materializes at the FIRST accept write —
     // an existing-but-empty dir would fail schema inference at epoch 0
-    val acc  = Files.createTempDirectory("graft-lineingest-acc").resolve("digests").toString
+    val acc  = IndexStore.tempDir("graft-lineingest-acc").resolve("digests").toString
     Replay.drain(chunkStream(spark, incoming.schema, chunkDir)) { (batch, batchId) =>
       if (batchId > 0 && batchId % CompactEveryEpochs == 0)
         compactIngestAppendix(spark, acc, Seq("h64", "h128"), uptoExclusive = batchId)
@@ -1620,7 +1622,7 @@ object StreamingPipelines {
     * needed at read. Oracle = batch q27's SQL, hash-checked. */
   def funnelReplay(spark: SparkSession, dir: String,
                    filesPerTrigger: Int = 16): String = {
-    val out  = Files.createTempDirectory("graft-funnel-out").toString
+    val out  = IndexStore.tempDir("graft-funnel-out").toString
     // state sized to the state, not the cores (the q28t/replay()
     // discipline, guide §2.1 — q20n was one of the r20 ANTI-SCALERS:
     // 32 state-store partitions for a few-thousand-user funnel meant
@@ -1701,7 +1703,7 @@ object StreamingPipelines {
     * no longer exists). Returns the table root. */
   def snapIngestReplay(spark: SparkSession, dir: String,
                        nChunks: Int = graft.operators.DedupQueries.IngestChunks): Path = {
-    import graft.core.{IndexStore, SnapshotStore}
+    import graft.core.SnapshotStore
     import graft.operators.{LayoutQueries, SimilarityQueries}
     val events = Tables.load(spark, dir, "events")
     val cut = lit(LayoutQueries.SnapCutoff).cast("timestamp")
@@ -1837,7 +1839,7 @@ object StreamingPipelines {
                              (reader: Path => DataFrame)
                              (afterV2: (Path, () => Unit) => Unit): DataFrame = {
     import graft.core.SnapshotStore
-    val root = Files.createTempDirectory(family)
+    val root = IndexStore.tempDir(family)
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("user_id"), col("value"))
     val c1 = lit("2024-01-12").cast("timestamp")
@@ -1910,7 +1912,7 @@ object StreamingPipelines {
     * (timestamps included), or a partition value lost to the dir
     * round-trip all hash-fail against the batch oracle. */
   def q28qSqlStreamWrite(spark: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft-q28q").resolve("tbl")
+    val root = IndexStore.tempDir("graft-q28q").resolve("tbl")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val t = s"graft_lake.`${root.toAbsolutePath.normalize}`"
     spark.sql(s"CREATE TABLE $t (event_id BIGINT, ts TIMESTAMP, " +
@@ -1972,7 +1974,7 @@ object StreamingPipelines {
     * written per epoch, folds amortized under policy, consumers read
     * the table. */
   def q28tSqlStreamUpdate(spark: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("graft-q28t").resolve("tbl")
+    val root = IndexStore.tempDir("graft-q28t").resolve("tbl")
     spark.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
     val t = s"graft_lake.`${root.toAbsolutePath.normalize}`"
     spark.sql(s"CREATE TABLE $t (user_id BIGINT, n_events BIGINT, " +
@@ -2063,7 +2065,7 @@ object StreamingPipelines {
   private def cdcFeedUpsert(spark: SparkSession, dir: String, family: String)
                            (reader: Path => DataFrame): DataFrame = {
     import graft.core.SnapshotStore
-    val root = Files.createTempDirectory(family)
+    val root = IndexStore.tempDir(family)
     val events = Tables.load(spark, dir, "events")
     val cut = lit(graft.operators.LayoutQueries.SnapCutoff).cast("timestamp")
     cdcState(events.where(col("ts") < cut))
@@ -2173,7 +2175,7 @@ object StreamingPipelines {
                                restTag: String, atRest: Path => DataFrame)
                               (deletes: (Path, Int => Long, () => Unit) => Unit): DataFrame = {
     import graft.core.SnapshotStore
-    val root = Files.createTempDirectory(family)
+    val root = IndexStore.tempDir(family)
     val flat = Tables.load(spark, dir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
     flat.repartitionByRange(4, col("event_id")).sortWithinPartitions("event_id")
@@ -2267,7 +2269,7 @@ object StreamingPipelines {
     * per-batch schema guard (spec-pinned; restart contract). */
   def q28jStreamRenamed(spark: SparkSession, dir: String): DataFrame = {
     import graft.core.SnapshotStore
-    val root = Files.createTempDirectory("graft-q28j")
+    val root = IndexStore.tempDir("graft-q28j")
     val events = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("ts"), col("event_type"), col("user_id"), col("value"))
     val cut = lit(graft.operators.LayoutQueries.SnapCutoff).cast("timestamp")
@@ -2605,7 +2607,7 @@ object StreamingPipelines {
         encode(col("text"), "UTF-8").as("media"),
         octet_length(col("text")).cast("long").as("n_bytes"))
     val chunkDir = stageChunksByIdMod(media, "doc_id", "graft-mediaingest", dir, nChunks)
-    val out  = Files.createTempDirectory("graft-media-out").toString
+    val out  = IndexStore.tempDir("graft-media-out").toString
     Replay.drain(chunkStream(spark, media.schema, chunkDir)) { (batch, batchId) =>
       import batch.sparkSession.implicits._
       MultimodalQueries.resizeAndSample(
@@ -2679,7 +2681,7 @@ object StreamingPipelines {
     * state crosses the driver, for the caller's parity check. */
   def processingTimeReplay(spark: SparkSession, dir: String, triggerMs: Long = 500,
                            filesPerTrigger: Int = 3): (Map[(Timestamp, String), Long], Seq[Long]) = {
-    val out = Files.createTempDirectory("graft-pt-out").toString
+    val out = IndexStore.tempDir("graft-pt-out").toString
     // Drain detection: on Spark 3.4+/4.x an idle ProcessingTime trigger
     // emits QueryIdleEvent and does NOT update lastProgress (only ONE
     // no-data batch runs after the last data batch), so "two consecutive
@@ -2752,7 +2754,7 @@ object StreamingPipelines {
   def durableSinkReplay(spark: SparkSession, dir: String, filesPerTrigger: Int = 10,
                         ckptOpt: Option[String] = None, outOpt: Option[String] = None,
                         stopAfterBatches: Int = Int.MaxValue): String = {
-    val out = outOpt.getOrElse(Files.createTempDirectory("graft-sink-out").toString)
+    val out = outOpt.getOrElse(IndexStore.tempDir("graft-sink-out").toString)
     // stopAfterBatches is failure injection (checkpoint-recovery test):
     // the query is killed once that many epochs committed; a later call
     // with the same ckpt/out resumes from the checkpoint and
