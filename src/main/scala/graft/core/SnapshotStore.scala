@@ -673,10 +673,14 @@ object SnapshotStore {
   /** The operation type version `v` was published with (see
     * [[publishVersion]]'s `_op` stamp), if the version postdates op
     * stamping. */
-  def opTypeOf(root: Path, v: Long): Option[String] = {
-    val p = manifestPath(root, v).resolve("_op")
+  def opTypeOf(root: Path, v: Long): Option[String] =
+    sidecar(root, v, "_op").map(_.trim)
+
+  /** The text of metadata file `name` in version `v`'s manifest dir. */
+  private def sidecar(root: Path, v: Long, name: String): Option[String] = {
+    val p = manifestPath(root, v).resolve(name)
     if (!Files.exists(p)) None
-    else Some(new String(Files.readAllBytes(p), "UTF-8").trim)
+    else Some(new String(Files.readAllBytes(p), "UTF-8"))
   }
 
   /** The committed STREAM-EPOCH high-water for a streaming-query token
@@ -686,21 +690,15 @@ object SnapshotStore {
     * read; survives folds/compactions/COW rewrites because the ledger
     * is carried forward in commit metadata, never derived from file
     * names. */
-  def streamEpochOf(root: Path, v: Long, queryTok: String): Option[Long] = {
-    val p = manifestPath(root, v).resolve("_stream_epochs")
-    if (!Files.exists(p)) None
-    else new String(Files.readAllBytes(p), "UTF-8").split('\n').toSeq
+  def streamEpochOf(root: Path, v: Long, queryTok: String): Option[Long] =
+    sidecar(root, v, "_stream_epochs").flatMap(_.split('\n').toSeq
       .filter(_.nonEmpty).map(_.split('\t'))
-      .collectFirst { case a if a.length >= 2 && a(0) == queryTok => a(1).toLong }
-  }
+      .collectFirst { case a if a.length >= 2 && a(0) == queryTok => a(1).toLong })
 
   /** The wall-clock instant version `v` committed at (millis), if the
     * version was published after timestamp stamping landed. */
-  def commitTimeOf(root: Path, v: Long): Option[Long] = {
-    val p = manifestPath(root, v).resolve("_commit_ms")
-    if (!Files.exists(p)) None
-    else Some(new String(Files.readAllBytes(p), "UTF-8").trim.toLong)
-  }
+  def commitTimeOf(root: Path, v: Long): Option[Long] =
+    sidecar(root, v, "_commit_ms").map(_.trim.toLong)
 
   /** TIMESTAMP → VERSION resolution (the Delta/Iceberg `TIMESTAMP AS
     * OF` contract): the LATEST mainline version whose commit instant is
@@ -711,8 +709,7 @@ object SnapshotStore {
     * first stamped commit is refused. Cost: one tiny file read per
     * mainline version — bounded by history length, never table size. */
   def versionAtTimestamp(root: Path, tsMillis: Long): Long = {
-    val head = headVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $root"))
+    val head = versionOrHead(root, None)
     val stamped = (1L to head)
       .filter(v => Files.exists(manifestPath(root, v)))
       .flatMap(v => commitTimeOf(root, v).map(v -> _))
@@ -737,6 +734,16 @@ object SnapshotStore {
     if (!Files.exists(headPath(root))) None
     else Some(new String(Files.readAllBytes(headPath(root)), "UTF-8").trim.toLong)
 
+  /** HEAD, or a refusal naming the op: `op` needs a committed table. */
+  private[graft] def headOf(root: Path, op: String): Long =
+    headVersion(root).getOrElse(
+      throw new IllegalStateException(s"$op on uncommitted table $root"))
+
+  /** Version `v`, or HEAD when `v` is None; refuses an uncommitted table. */
+  private def versionOrHead(root: Path, v: Option[Long]): Long =
+    v.orElse(headVersion(root)).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot under $root"))
+
   // ---- named refs (branches) — the write-audit-publish seam ----------
 
   private def refsDir(root: Path): Path = snapDir(root).resolve("refs")
@@ -751,6 +758,11 @@ object SnapshotStore {
     if (!Files.exists(p)) None
     else Some(new String(Files.readAllBytes(p), "UTF-8").trim.toLong)
   }
+
+  /** The version a commit to `ref` builds on: the ref's tip, or for a
+    * branch not yet born, HEAD (its fork point). */
+  private def refOrHead(root: Path, ref: String): Option[Long] =
+    refVersion(root, ref).orElse(if (ref == "HEAD") None else headVersion(root))
 
   /** Names of the live branch refs (empty when no branch exists). */
   def liveRefs(root: Path): Seq[String] = {
@@ -862,15 +874,27 @@ object SnapshotStore {
     * the writer-side helper for building a commit's file list right
     * after a write. Driver-side walk, bounded by the table's file count
     * (the same contract as the q26d manifest listing). */
-  def dataFiles(root: Path): Seq[String] = {
-    val data = root.resolve("data")
-    if (!Files.exists(data)) return Seq.empty
+  def dataFiles(root: Path): Seq[String] = parquetFilesUnder(root, "data")
+
+  /** The `.parquet` files under `root/rel` (hidden `_`-prefixed dirs
+    * included: delete, delta and DV files live there), relative to
+    * `root`, sorted; empty when `rel` does not exist. */
+  private[graft] def parquetFilesUnder(root: Path, rel: String): Seq[String] = {
+    val dir = root.resolve(rel)
+    if (!Files.exists(dir)) return Seq.empty
     import scala.jdk.CollectionConverters._
-    val s = Files.walk(data)
+    val s = Files.walk(dir)
     try s.iterator().asScala
       .filter(p => p.getFileName.toString.endsWith(".parquet"))
       .map(p => root.relativize(p).toString).toSeq.sorted
     finally s.close()
+  }
+
+  /** Write `df` as parquet under `root/rel` (overwrite: an attempt dir
+    * is rewritten whole on retry) and list the files it produced. */
+  private[graft] def writeFresh(df: DataFrame, root: Path, rel: String): Seq[String] = {
+    df.write.mode("overwrite").parquet(root.resolve(rel).toString)
+    parquetFilesUnder(root, rel)
   }
 
   /** Commit a new version whose content is exactly `files` (paths
@@ -933,11 +957,7 @@ object SnapshotStore {
              declareDdl: Option[String] = None,
              streamEpoch: Option[(String, Long)] = None): Long = {
     require(files.nonEmpty, s"empty commit for $root")
-    var prev =
-      if (expectedBase < 0)
-        refVersion(root, ref).orElse(if (ref == "HEAD") None else headVersion(root))
-      else if (expectedBase == 0) None
-      else Some(expectedBase)
+    var prev = baseOf(root, ref, expectedBase)
     var target = files
     var rebases = 0
     while (true) {
@@ -981,8 +1001,7 @@ object SnapshotStore {
           val targetSet = target.toSet
           if (!baseFiles.forall(targetSet)) throw cme // not an append
           val added = target.filterNot(baseFiles.toSet)
-          val now = refVersion(root, ref)
-            .orElse(if (ref == "HEAD") None else headVersion(root))
+          val now = refOrHead(root, ref)
           if (now == prev) throw cme // CME not caused by ref movement
           prev = now
           target = orCme(now.map(v => filesAt(spark, root, v)).getOrElse(Seq.empty))
@@ -992,6 +1011,13 @@ object SnapshotStore {
     }
     throw new IllegalStateException("unreachable")
   }
+
+  /** The base version of a commit to `ref`: `expectedBase` when pinned
+    * (0 = an empty table), else the ref's current version. */
+  private def baseOf(root: Path, ref: String, expectedBase: Long): Option[Long] =
+    if (expectedBase < 0) refOrHead(root, ref)
+    else if (expectedBase == 0) None
+    else Some(expectedBase)
 
   /** One CAS attempt of [[commit]] against a pinned base, on the
     * two-level metadata tree. The driver never holds manifest STAT
@@ -1093,7 +1119,6 @@ object SnapshotStore {
                          streamEpoch: Option[(String, Long)] = None): Long = {
     import spark.implicits._
     commitAttemptHook(root, prev)
-    val next = prev.getOrElse(0L) + 1
     // prev side: the list rows, or ONE synthetic legacy pseudo-part
     // (mpath None) — legacy single-dir manifests are never carried by
     // reference, so the first commit on top migrates them into parts
@@ -1165,25 +1190,44 @@ object SnapshotStore {
     val carriedRows: Seq[ListRow] = cleanIdx.map(i => prevParts(i).get)
     val withKept = dirtyIdx.filter(i => namesOf(i).exists(keep))
     val fresh = files.filterNot(prevNames)
-    val written = scala.collection.mutable.ArrayBuffer.empty[ListRow]
-    try {
-      written ++= writeNewPart(spark, root, fresh, effStats, manifestCols,
+    publishAttempt(spark, root, ref, prev, carriedRows,
+      writeNewPart(spark, root, fresh, effStats, manifestCols,
         keptEntries = withKept.flatMap(i => entriesByPart(i).filter(e => keep(e._1))),
         keptFrame =
           if (withKept.isEmpty) None
           else Some(withKept.map(i => partDf(prevParts(i)))
             .reduce(_.unionByName(_)).select(manifestCols.map(col): _*)
-            .join(files.toDF("file"), Seq("file"), "left_semi")))
-      val (listRows, extra, merged) =
-        consolidate(spark, root, carriedRows ++ written.toSeq)
+            .join(files.toDF("file"), Seq("file"), "left_semi"))),
+      declareDdl, fresh, files, opType, streamEpoch,
+      namesHeld = _ => (prevNames.size + files.size).toLong, appendFastPath = false)
+  }
+
+  /** The tail of one CAS attempt, shared by [[commitOnce]] and
+    * [[appendOnce]]: write the attempt's new part, consolidate it with
+    * the `carried` parts, publish (declaring `declareDdl`, else the
+    * base's declaration merged with `fresh`'s footers, else a birth
+    * declaration), drop the parts consolidation superseded and stamp
+    * [[lastCommitStats]] (`namesHeld` given the published list width).
+    * A failed attempt leaves NO trace: its parts go now (the list tmp
+    * dir is cleaned by [[publishVersion]] itself). Either way they
+    * leave the in-flight set. Returns the committed version. */
+  private def publishAttempt(spark: SparkSession, root: Path, ref: String,
+                             prev: Option[Long], carried: Seq[ListRow],
+                             newPart: => Option[ListRow], declareDdl: Option[String],
+                             fresh: Seq[String], files: Seq[String], opType: String,
+                             streamEpoch: Option[(String, Long)],
+                             namesHeld: Int => Long, appendFastPath: Boolean): Long = {
+    val next = prev.getOrElse(0L) + 1
+    val written = scala.collection.mutable.ArrayBuffer.empty[ListRow]
+    try {
+      written ++= newPart
+      val (listRows, extra, merged) = consolidate(spark, root, carried ++ written.toSeq)
       written ++= extra
       require(listRows.nonEmpty, s"empty commit for $root")
+      val freshAbs = fresh.map(f => root.resolve(f).toString)
       publishVersion(root, ref, prev, next, listRows,
-        schemaDdl = declareDdl.orElse {
-          val freshAbs = fresh.map(f => root.resolve(f).toString)
-          mergedDeclared(spark, root, prev, freshAbs)
-            .orElse(birthDeclared(spark, root, prev, files, freshAbs))
-        },
+        schemaDdl = declareDdl.orElse(mergedDeclared(spark, root, prev, freshAbs)
+          .orElse(birthDeclared(spark, root, prev, files, freshAbs))),
         opType = opType, streamEpoch = streamEpoch)
       // parts this commit wrote but consolidation superseded were
       // never published by any list — drop them now
@@ -1194,13 +1238,11 @@ object SnapshotStore {
         partsWritten = written.size,
         entriesWritten = written.map(_.nFiles).sum,
         listRows = listRows.size,
-        namesHeld = (prevNames.size + files.size).toLong,
-        consolidated = merged, appendFastPath = false))
+        namesHeld = namesHeld(listRows.size),
+        consolidated = merged, appendFastPath = appendFastPath))
       next
     } catch {
       case t: Throwable =>
-        // a failed attempt leaves NO trace: its unreferenced parts go
-        // now (the list tmp dir is cleaned by publishVersion itself)
         written.foreach(r => IndexStore.deleteRecursively(root.resolve(r.mpath)))
         throw t
     } finally written.foreach(r => inFlightFor(root).remove(r.mpath))
@@ -1225,8 +1267,7 @@ object SnapshotStore {
       // CAS guard (same-process fast path): the ref being committed to
       // must still sit at the base this commit derived from (for a
       // not-yet-born branch: its fork point, HEAD)
-      val refNow = refVersion(root, ref)
-        .orElse(if (ref == "HEAD") None else headVersion(root))
+      val refNow = refOrHead(root, ref)
       if (refNow != prev)
         throw new java.util.ConcurrentModificationException(
           s"commit of $root ($ref) based on v=${prev.getOrElse(0L)} lost to a concurrent " +
@@ -1258,20 +1299,12 @@ object SnapshotStore {
       Files.write(tmpMan.resolve("_op"), opType.getBytes("UTF-8"))
       // the NAME-MAPPING ledger (VERDICT r15 #7): inherited verbatim
       // like the declared schema; extended only by renameColumnMapped
-      renamesTsv.orElse(prev.flatMap { pv =>
-        val rp = manifestPath(root, pv).resolve("_renames")
-        if (Files.exists(rp)) Some(new String(Files.readAllBytes(rp), "UTF-8"))
-        else None
-      }).foreach(tsv =>
+      renamesTsv.orElse(prev.flatMap(sidecar(root, _, "_renames"))).foreach(tsv =>
         Files.write(tmpMan.resolve("_renames"), tsv.getBytes("UTF-8")))
       // the DROPPED-NAME ledger (VERDICT r16 #3): inherited verbatim
       // like `_renames`; extended only by dropColumn, cleared by
       // retirement once the boundary file set left HEAD
-      droppedTsv.orElse(prev.flatMap { pv =>
-        val dp = manifestPath(root, pv).resolve("_dropped")
-        if (Files.exists(dp)) Some(new String(Files.readAllBytes(dp), "UTF-8"))
-        else None
-      }).foreach(tsv =>
+      droppedTsv.orElse(prev.flatMap(sidecar(root, _, "_dropped"))).foreach(tsv =>
         Files.write(tmpMan.resolve("_dropped"), tsv.getBytes("UTF-8")))
       // the STREAM-EPOCH high-water ledger (ADVICE r19 #2 / VERDICT r19
       // wrong #4): per streaming-query token, the highest epoch whose
@@ -1283,11 +1316,7 @@ object SnapshotStore {
       // the epoch's files, and costs one tiny read per epoch instead
       // of an O(table files) name scan.
       locally {
-        val prevTsv = prev.flatMap { pv =>
-          val sp = manifestPath(root, pv).resolve("_stream_epochs")
-          if (Files.exists(sp)) Some(new String(Files.readAllBytes(sp), "UTF-8"))
-          else None
-        }
+        val prevTsv = prev.flatMap(sidecar(root, _, "_stream_epochs"))
         val mergedTsv: Option[String] = streamEpoch match {
           case None => prevTsv
           case Some((tok, epoch)) =>
@@ -1305,8 +1334,7 @@ object SnapshotStore {
       def publish(): Boolean =
         arbiterFor(root).publishDir(tmpMan, manifestPath(root, next))
       if (!publish()) {
-        val now = refVersion(root, ref)
-          .orElse(if (ref == "HEAD") None else headVersion(root))
+        val now = refOrHead(root, ref)
         if (now.getOrElse(0L) >= next) {
           IndexStore.deleteRecursively(tmpMan)
           throw new java.util.ConcurrentModificationException(
@@ -1364,11 +1392,7 @@ object SnapshotStore {
                    ref: String = "HEAD", opType: String = "append",
                    streamEpoch: Option[(String, Long)] = None): Long = {
     require(addFiles.nonEmpty, s"empty append for $root")
-    var prev =
-      if (expectedBase < 0)
-        refVersion(root, ref).orElse(if (ref == "HEAD") None else headVersion(root))
-      else if (expectedBase == 0) None
-      else Some(expectedBase)
+    var prev = baseOf(root, ref, expectedBase)
     var rebases = 0
     while (true) {
       try {
@@ -1384,8 +1408,7 @@ object SnapshotStore {
       } catch {
         case cme: java.util.ConcurrentModificationException =>
           if (expectedBase >= 0 || rebases >= MaxAppendRebases) throw cme
-          val now = refVersion(root, ref)
-            .orElse(if (ref == "HEAD") None else headVersion(root))
+          val now = refOrHead(root, ref)
           if (now == prev) throw cme // CME not caused by ref movement
           prev = now
           rebases += 1
@@ -1402,7 +1425,6 @@ object SnapshotStore {
                          ref: String, opType: String = "append",
                          streamEpoch: Option[(String, Long)] = None): Option[Long] = {
     commitAttemptHook(root, prev)
-    val next = prev.getOrElse(0L) + 1
     val carried: Seq[ListRow] = prev match {
       case Some(v) => readList(root, v) match {
         case Some(rows) => rows
@@ -1427,35 +1449,11 @@ object SnapshotStore {
       Seq("file", "n_rows") ++ effStats.flatMap(c => Seq(s"min_$c", s"max_$c"))
     if (carriedColSets.exists(_.toSet != manifestCols.toSet))
       return None // shape change: carried files must project/rescan — general path
-    val written = scala.collection.mutable.ArrayBuffer.empty[ListRow]
-    try {
-      written ++= writeNewPart(spark, root, addFiles, effStats, manifestCols,
-        keptEntries = Seq.empty, keptFrame = None)
-      val (listRows, extra, merged) =
-        consolidate(spark, root, carried ++ written.toSeq)
-      written ++= extra
-      publishVersion(root, ref, prev, next, listRows,
-        schemaDdl = {
-          val addAbs = addFiles.map(f => root.resolve(f).toString)
-          mergedDeclared(spark, root, prev, addAbs)
-            .orElse(birthDeclared(spark, root, prev, addFiles, addAbs))
-        },
-        opType = opType, streamEpoch = streamEpoch)
-      val live = listRows.map(_.mpath).toSet
-      written.filterNot(r => live(r.mpath))
-        .foreach(r => IndexStore.deleteRecursively(root.resolve(r.mpath)))
-      lastCommitStats = Some(CommitStats(next, ref,
-        partsWritten = written.size,
-        entriesWritten = written.map(_.nFiles).sum,
-        listRows = listRows.size,
-        namesHeld = (addFiles.size + carried.size + listRows.size).toLong,
-        consolidated = merged, appendFastPath = true))
-      Some(next)
-    } catch {
-      case t: Throwable =>
-        written.foreach(r => IndexStore.deleteRecursively(root.resolve(r.mpath)))
-        throw t
-    } finally written.foreach(r => inFlightFor(root).remove(r.mpath))
+    Some(publishAttempt(spark, root, ref, prev, carried,
+      writeNewPart(spark, root, addFiles, effStats, manifestCols,
+        keptEntries = Seq.empty, keptFrame = None),
+      declareDdl = None, addFiles, addFiles, opType, streamEpoch,
+      namesHeld = w => (addFiles.size + carried.size + w).toLong, appendFastPath = true))
   }
 
   /** Atomically point `ref` at version `v` (HEAD or a branch ref). */
@@ -1716,8 +1714,7 @@ object SnapshotStore {
   def readAt(spark: SparkSession, root: Path, v: Option[Long] = None,
              inferPartitions: Boolean = true,
              mergeSchema: Boolean = false): DataFrame = {
-    val ver = v.orElse(headVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $root"))
+    val ver = versionOrHead(root, v)
     val relFiles = filesAt(spark, root, ver)
     require(relFiles.nonEmpty, s"snapshot v=$ver of $root is empty")
     val renames = renamesAt(root, ver)
@@ -1803,11 +1800,8 @@ object SnapshotStore {
 
   /** The read schema version `v` DECLARED at commit time, if any — set
     * by [[widenColumn]] and inherited by every later commit. */
-  def declaredSchema(root: Path, v: Long): Option[String] = {
-    val p = manifestPath(root, v).resolve("_schema.ddl")
-    if (!Files.exists(p)) None
-    else Some(new String(Files.readAllBytes(p), "UTF-8"))
-  }
+  def declaredSchema(root: Path, v: Long): Option[String] =
+    sidecar(root, v, "_schema.ddl")
 
   /** The declared read schema a NEW version should carry (ADVICE r14):
     * the base version's declaration EXTENDED by any column the commit's
@@ -1905,8 +1899,7 @@ object SnapshotStore {
   def widenColumn(spark: SparkSession, root: Path, column: String,
                   toType: String): Long = {
     import org.apache.spark.sql.types._
-    val head = headVersion(root).getOrElse(
-      throw new IllegalStateException(s"widenColumn on uncommitted table $root"))
+    val head = headOf(root, "widenColumn")
     val rows = readList(root, head).getOrElse(throw new IllegalStateException(
       s"widenColumn on a legacy-layout table $root — any commit migrates it first"))
     val cur = readAt(spark, root, Some(head), inferPartitions = false).schema
@@ -1942,8 +1935,7 @@ object SnapshotStore {
   def addColumn(spark: SparkSession, root: Path, column: String,
                 typeDdl: String): Long = {
     import org.apache.spark.sql.types._
-    val head = headVersion(root).getOrElse(
-      throw new IllegalStateException(s"addColumn on uncommitted table $root"))
+    val head = headOf(root, "addColumn")
     val rows = readList(root, head).getOrElse(throw new IllegalStateException(
       s"addColumn on a legacy-layout table $root — any commit migrates it first"))
     val cur = readAt(spark, root, Some(head), inferPartitions = false).schema
@@ -2009,8 +2001,7 @@ object SnapshotStore {
     * At 100 TB: O(1) metadata, like every evolution verb here. */
   def dropColumn(spark: SparkSession, root: Path, column: String): Long = {
     import org.apache.spark.sql.types._
-    val head = headVersion(root).getOrElse(
-      throw new IllegalStateException(s"dropColumn on uncommitted table $root"))
+    val head = headOf(root, "dropColumn")
     val rows = readList(root, head).getOrElse(throw new IllegalStateException(
       s"dropColumn on a legacy-layout table $root — any commit migrates it first"))
     val declared = declaredSchema(root, head).map(StructType.fromDDL).getOrElse(
@@ -2045,15 +2036,12 @@ object SnapshotStore {
   /** The DROPPED-NAME ledger of version `v`: `(column, boundary)`
     * pairs — names whose old values still sit in files the boundary
     * version references (see [[dropColumn]]'s re-add refusal). */
-  def droppedAt(root: Path, v: Long): Seq[(String, Long)] = {
-    val p = manifestPath(root, v).resolve("_dropped")
-    if (!Files.exists(p)) Seq.empty
-    else new String(Files.readAllBytes(p), "UTF-8").split('\n').toSeq
+  def droppedAt(root: Path, v: Long): Seq[(String, Long)] =
+    sidecar(root, v, "_dropped").toSeq.flatMap(_.split('\n').toSeq)
       .map(_.trim).filter(_.nonEmpty).map { line =>
         val Array(c, vr) = line.split('\t')
         (c, vr.toLong)
       }.sortBy(_._2)
-  }
 
   /** Column RENAME is REFUSED, deliberately (VERDICT r13 #6 asked for
     * id-based rename or a documented refusal): this seam maps parquet
@@ -2078,15 +2066,12 @@ object SnapshotStore {
     * boundary version. Files referenced by the boundary version's
     * manifest physically carry `from`; files written later carry `to`
     * (or a later mapping's name). */
-  def renamesAt(root: Path, v: Long): Seq[(String, String, Long)] = {
-    val p = manifestPath(root, v).resolve("_renames")
-    if (!Files.exists(p)) Seq.empty
-    else new String(Files.readAllBytes(p), "UTF-8").split('\n').toSeq
+  def renamesAt(root: Path, v: Long): Seq[(String, String, Long)] =
+    sidecar(root, v, "_renames").toSeq.flatMap(_.split('\n').toSeq)
       .map(_.trim).filter(_.nonEmpty).map { line =>
         val Array(to, from, vr) = line.split('\t')
         (to, from, vr.toLong)
       }.sortBy(_._3)
-  }
 
   /** Each renamed logical column's PHYSICAL NAME CHAIN, newest-first
     * (the logical name itself heads the chain) — what the
@@ -2171,8 +2156,7 @@ object SnapshotStore {
   def renameColumnMapped(spark: SparkSession, root: Path,
                          from: String, to: String): Long = {
     import org.apache.spark.sql.types._
-    val head = headVersion(root).getOrElse(
-      throw new IllegalStateException(s"renameColumnMapped on uncommitted table $root"))
+    val head = headOf(root, "renameColumnMapped")
     val rows = readList(root, head).getOrElse(throw new IllegalStateException(
       s"renameColumnMapped on a legacy-layout table $root — any commit migrates it first"))
     // pending special files and a fresh name mapping deadlock each other
@@ -2232,8 +2216,7 @@ object SnapshotStore {
     * single-relation surface (SQL, streaming, row ops) serves the
     * table again. No-op returning HEAD when nothing is retirable. */
   def dropRetiredRenames(spark: SparkSession, root: Path): Long = {
-    val head = headVersion(root).getOrElse(
-      throw new IllegalStateException(s"dropRetiredRenames on uncommitted table $root"))
+    val head = headOf(root, "dropRetiredRenames")
     val priorRen = renamesAt(root, head)
     val priorDrop = droppedAt(root, head)
     if (priorRen.isEmpty && priorDrop.isEmpty) return head
@@ -2308,16 +2291,8 @@ object SnapshotStore {
     // unique per commit on this single-writer table → attempt dirs
     // never collide, prior attempts stay untouched on disk
     val attempt = prevHead.getOrElse(0L) + 1
-    val epochRel = s"data/epoch_${epochId}_a$attempt"
-    batch.write.mode("overwrite").parquet(root.resolve(epochRel).toString)
+    val fresh = writeFresh(batch, root, s"data/epoch_${epochId}_a$attempt")
     val epochPrefix = s"data/epoch_${epochId}_"
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(root.resolve(epochRel))
-    val fresh =
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => root.relativize(p).toString).toSeq.sorted
-      finally s.close()
     // retry detection is METADATA-ONLY (round 14): one tiny manifest
     // probe instead of an O(table) name collect — the happy path (no
     // prior attempt of this epoch committed) then appends O(delta)
@@ -2389,7 +2364,6 @@ object SnapshotStore {
               sortCol: Option[String] = None,
               statsCols: Seq[String] = Nil): Long = {
     val attempt = headVersion(root).getOrElse(0L) + 1
-    val rel = s"data/compact_a$attempt"
     // compact reads PLAIN rows — pending special files must fold first
     // (their own fold IS the compaction for those rungs)
     requireNoPending(filesAt(spark, root, attempt - 1), "compact",
@@ -2399,15 +2373,8 @@ object SnapshotStore {
       case Some(c) => df.repartitionByRange(numFiles, col(c)).sortWithinPartitions(c)
       case None => df.repartition(numFiles)
     }
-    shaped.write.mode("overwrite").parquet(root.resolve(rel).toString)
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(root.resolve(rel))
-    val fresh =
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => root.relativize(p).toString).toSeq.sorted
-      finally s.close()
-    commit(spark, root, fresh, statsCols, opType = "replace")
+    commit(spark, root, writeFresh(shaped, root, s"data/compact_a$attempt"), statsCols,
+      opType = "replace")
   }
 
   /** COPY-ON-WRITE MERGE — the row-level write op every lakehouse user
@@ -2457,11 +2424,8 @@ object SnapshotStore {
   def mergeCow(spark: SparkSession, root: Path, changes: DataFrame,
                keyCol: String, deleteCol: String = "_delete",
                orderCols: Seq[String] = Nil): Long = {
-    import spark.implicits._
-    val head = headVersion(root).getOrElse(
-      throw new IllegalStateException(s"mergeCow on uncommitted table $root"))
+    val head = headOf(root, "mergeCow")
     requireNoRenames(root, head, "mergeCow")
-    val man = manifest(spark, root, head)
     // MOR-aware (ADVICE r12): a table carrying un-folded [[deleteMor]]
     // files must not read them as standing data — a delete-key file
     // rewritten into merge output would resurrect deleted keys as
@@ -2479,17 +2443,8 @@ object SnapshotStore {
     requireNoPending(headFiles, "mergeCow", cdcDeltas = true, dvs = true)
     val (delFiles, dataFiles) = headFiles.partition(isDeleteFile)
     val changeKeys = changes.select(col(keyCol)).distinct()
-    // file-scoped planning: envelope ∩ change-keys, with the MANIFEST
-    // as the broadcast side — it is bounded by the table's file count,
-    // while the key side can be arbitrarily large; only matching file
-    // NAMES cross the driver
-    val touched: Seq[String] =
-      (if (man.columns.contains(s"min_$keyCol") && man.columns.contains(s"max_$keyCol"))
-        changeKeys.join(
-            broadcast(man.select(col("file"), col(s"min_$keyCol"), col(s"max_$keyCol"))),
-            col(keyCol).between(col(s"min_$keyCol"), col(s"max_$keyCol")))
-          .select("file").distinct().as[String].collect().toSeq.sorted
-      else dataFiles).filterNot(isDeleteFile)
+    // file-scoped planning: envelope ∩ change-keys
+    val (touched, untouched) = envelopeSplit(spark, root, head, changeKeys, keyCol, dataFiles)
     val deleteKeys =
       if (delFiles.isEmpty) None
       else Some(readFiles(spark, root, delFiles, inferPartitions = false)
@@ -2519,19 +2474,9 @@ object SnapshotStore {
       .where(!col(s"_w.$deleteCol"))
       .select(col(keyCol) +: payloadCols.map(c => col(s"_w.$c").as(c)): _*)
     val attempt = head + 1
-    val rel = s"data/merge_a$attempt"
-    val nFiles = math.max(1, touched.size)
-    merged
-      .repartitionByRange(nFiles, col(keyCol))
-      .sortWithinPartitions(keyCol)
-      .write.mode("overwrite").parquet(root.resolve(rel).toString)
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(root.resolve(rel))
-    val fresh =
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => root.relativize(p).toString).toSeq.sorted
-      finally s.close()
+    val fresh = writeFresh(merged
+      .repartitionByRange(math.max(1, touched.size), col(keyCol))
+      .sortWithinPartitions(keyCol), root, s"data/merge_a$attempt")
     // surviving delete keys (those NOT decided by this merge's change
     // set) are rewritten as a fresh delete file; keys for rows in
     // untouched files still need them, keys whose rows lived in
@@ -2543,27 +2488,50 @@ object SnapshotStore {
         val surviving = dk.join(changeKeys, Seq(keyCol), "left_anti").cache()
         try {
           if (surviving.isEmpty) Seq.empty
-          else {
-            val schema = touchedRaw.schema
-            val padded = surviving.select(schema.fields.map { f =>
-              if (f.name == keyCol) col(keyCol).cast(f.dataType).as(f.name)
-              else lit(null).cast(f.dataType).as(f.name)
-            }.toSeq: _*)
-            val delRel = s"data/_deletes_a$attempt"
-            padded.coalesce(1).write.mode("overwrite")
-              .parquet(root.resolve(delRel).toString)
-            val ds = Files.walk(root.resolve(delRel))
-            try ds.iterator().asScala
-              .filter(_.getFileName.toString.endsWith(".parquet"))
-              .map(p => root.relativize(p).toString).toSeq.sorted
-            finally ds.close()
-          }
+          else writeDeleteKeys(root, surviving, keyCol, touchedRaw.schema, attempt)
         } finally surviving.unpersist()
       case None => Seq.empty
     }
-    commit(spark, root, dataFiles.filterNot(touched.toSet) ++ fresh ++ freshDel,
+    commit(spark, root, untouched ++ fresh ++ freshDel,
       expectedBase = head, opType = "merge")
   }
+
+  /** The files of version `v` among `data` whose `min_/max_<keyCol>`
+    * envelope can hold a key of `keys` (hot), and the rest (cold,
+    * provably key-disjoint). Planning joins the keys against the
+    * MANIFEST as the broadcast side — bounded by the table's file
+    * count, while the key side can be arbitrarily large; only matching
+    * file NAMES cross the driver. A version whose parts do not all
+    * carry the envelope (each part's cached footer columns decide, so
+    * no manifest is read to find out) has every file hot. */
+  private def envelopeSplit(spark: SparkSession, root: Path, v: Long, keys: DataFrame,
+                            keyCol: String, data: Seq[String]): (Seq[String], Seq[String]) = {
+    import spark.implicits._
+    val envelope = Seq(s"min_$keyCol", s"max_$keyCol")
+    val hasEnvelope = readList(root, v) match {
+      case Some(rows) => rows.forall(r => envelope.forall(partColsFor(spark, root, r.mpath).contains))
+      case None => envelope.forall(manifest(spark, root, v).columns.contains)
+    }
+    if (!hasEnvelope) (data, Seq.empty)
+    else {
+      val hit = keys.join(
+          broadcast(manifest(spark, root, v).select(col("file") +: envelope.map(col): _*)),
+          col(keyCol).between(col(s"min_$keyCol"), col(s"max_$keyCol")))
+        .select("file").distinct().as[String].collect().toSet
+      data.partition(hit)
+    }
+  }
+
+  /** Write `keys` as one MOR delete-key file under
+    * `data/_deletes_a<attempt>`, padded to the table `schema` (non-key
+    * columns null) so the manifest machinery treats it like any file;
+    * returns its root-relative name. */
+  private def writeDeleteKeys(root: Path, keys: DataFrame, keyCol: String,
+                              schema: StructType, attempt: Long): Seq[String] =
+    writeFresh(keys.select(schema.fields.map { f =>
+      if (f.name == keyCol) col(keyCol).cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    }.toSeq: _*).coalesce(1), root, s"data/_deletes_a$attempt")
 
   // ---- merge-on-read deletes (the deletion-vector rung) --------------
 
@@ -2595,8 +2563,7 @@ object SnapshotStore {
     * committed version. */
   def deleteMor(spark: SparkSession, root: Path, keys: DataFrame,
                 keyCol: String): Long = {
-    val head = headVersion(root).getOrElse(
-      throw new IllegalStateException(s"deleteMor on uncommitted table $root"))
+    val head = headOf(root, "deleteMor")
     requireNoRenames(root, head, "deleteMor")
     requireNoPendingAt(spark, root, head, "deleteMor", cdcDeltas = true, dvs = true)
     // the key-padding schema probe needs ONE data file's name, not the
@@ -2606,21 +2573,8 @@ object SnapshotStore {
                col("file").startsWith("data/_deletes_a")))
       .select("file").limit(1).collect().map(_.getString(0)).toSeq
     val schema = readFiles(spark, root, firstData, inferPartitions = false).schema
-    val padded = keys.select(schema.fields.map { f =>
-      if (f.name == keyCol) col(keyCol).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }.toSeq: _*)
-    val attempt = head + 1
-    val rel = s"data/_deletes_a$attempt"
-    padded.coalesce(1).write.mode("overwrite").parquet(root.resolve(rel).toString)
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(root.resolve(rel))
-    val fresh =
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => root.relativize(p).toString).toSeq.sorted
-      finally s.close()
-    commitAppend(spark, root, fresh, expectedBase = head)
+    commitAppend(spark, root, writeDeleteKeys(root, keys, keyCol, schema, head + 1),
+      expectedBase = head)
   }
 
   /** Read a version UNDER MOR SEMANTICS: data rows minus the delete
@@ -2645,8 +2599,7 @@ object SnapshotStore {
     * restriction. */
   def readAtMor(spark: SparkSession, root: Path, v: Option[Long] = None,
                 keyCol: String): DataFrame = {
-    val ver = v.orElse(headVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $root"))
+    val ver = versionOrHead(root, v)
     val files = filesAt(spark, root, ver)
     requireNoPending(files, "readAtMor", cdcDeltas = true, dvs = true)
     val (del, data) = files.partition(isDeleteFile)
@@ -2673,38 +2626,18 @@ object SnapshotStore {
     * via [[vacuum]] on the retention policy. */
   def foldMor(spark: SparkSession, root: Path, keyCol: String,
               numFiles: Int, statsCols: Seq[String] = Nil): Long = {
-    import spark.implicits._
-    val head = headVersion(root).getOrElse(
-      throw new IllegalStateException(s"foldMor on uncommitted table $root"))
+    val head = headOf(root, "foldMor")
     requireNoRenames(root, head, "foldMor")
     val files = filesAt(spark, root, head)
     val (del, data) = files.partition(isDeleteFile)
     if (del.isEmpty) return head
-    val attempt = head + 1
-    val rel = s"data/morfold_a$attempt"
     val delKeys = readFiles(spark, root, del, inferPartitions = false)
       .select(col(keyCol)).distinct()
-    val man = manifest(spark, root, head)
-    val (hot, cold) =
-      if (man.columns.contains(s"min_$keyCol") && man.columns.contains(s"max_$keyCol")) {
-        val hit = delKeys.join(
-            broadcast(man.select(col("file"), col(s"min_$keyCol"), col(s"max_$keyCol"))),
-            col(keyCol).between(col(s"min_$keyCol"), col(s"max_$keyCol")))
-          .select("file").distinct().as[String].collect().toSet
-        data.partition(hit)
-      } else (data, Seq.empty[String])
-    readFiles(spark, root, hot, inferPartitions = false)
+    val (hot, cold) = envelopeSplit(spark, root, head, delKeys, keyCol, data)
+    val fresh = writeFresh(readFiles(spark, root, hot, inferPartitions = false)
       .join(broadcast(delKeys), Seq(keyCol), "left_anti")
       .repartitionByRange(numFiles, col(keyCol))
-      .sortWithinPartitions(keyCol)
-      .write.mode("overwrite").parquet(root.resolve(rel).toString)
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(root.resolve(rel))
-    val fresh =
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => root.relativize(p).toString).toSeq.sorted
-      finally s.close()
+      .sortWithinPartitions(keyCol), root, s"data/morfold_a${head + 1}")
     commit(spark, root, cold ++ fresh, statsCols, opType = "fold")
   }
 
@@ -2756,8 +2689,7 @@ object SnapshotStore {
     * version. */
   def deleteDv(spark: SparkSession, root: Path,
                cond: org.apache.spark.sql.Column): Long = {
-    val head = headVersion(root).getOrElse(
-      throw new IllegalStateException(s"deleteDv on uncommitted table $root"))
+    val head = headOf(root, "deleteDv")
     requireNoRenames(root, head, "deleteDv")
     requireNoPendingAt(spark, root, head, "deleteDv",
       cdcDeltas = true, morDeletes = true)
@@ -2779,14 +2711,7 @@ object SnapshotStore {
     // honest cost; a delete-half-the-table predicate should not take
     // this path in the first place (maybeFoldDv's threshold names the
     // same bound).
-    padded.coalesce(1).write.mode("overwrite").parquet(root.resolve(rel).toString)
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(root.resolve(rel))
-    val fresh =
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => root.relativize(p).toString).toSeq.sorted
-      finally s.close()
+    val fresh = writeFresh(padded.coalesce(1), root, rel)
     // explicit file paths (a `_`-prefixed dir is hidden to listing);
     // a null ledger key means the file-path relativization missed —
     // fail loudly before a vector that silently never applies commits
@@ -2813,8 +2738,7 @@ object SnapshotStore {
     * (`inferPartitions = false` read shape). */
   def readAtDv(spark: SparkSession, root: Path,
                v: Option[Long] = None): DataFrame = {
-    val ver = v.orElse(headVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $root"))
+    val ver = versionOrHead(root, v)
     val files = filesAt(spark, root, ver)
     requireNoPending(files, "readAtDv", cdcDeltas = true, morDeletes = true)
     val (dv, data) = files.partition(isDvFile)
@@ -2850,8 +2774,7 @@ object SnapshotStore {
   def foldDv(spark: SparkSession, root: Path, numFiles: Int,
              statsCols: Seq[String] = Nil): Long = {
     import spark.implicits._
-    val head = headVersion(root).getOrElse(
-      throw new IllegalStateException(s"foldDv on uncommitted table $root"))
+    val head = headOf(root, "foldDv")
     requireNoRenames(root, head, "foldDv")
     val files = filesAt(spark, root, head)
     requireNoPending(files, "foldDv", cdcDeltas = true, morDeletes = true)
@@ -2865,24 +2788,14 @@ object SnapshotStore {
     val touched = positions.select("_dv_file").distinct()
       .as[String].collect().toSet
     val (hot, cold) = data.partition(touched)
-    val attempt = head + 1
-    val rel = s"data/dvfold_a$attempt"
     val hotDf = readFiles(spark, root, hot, inferPartitions = false)
     val cols = hotDf.columns.toSeq
-    hotDf
+    val fresh = writeFresh(hotDf
       .withColumn("_dv_file", relFileCol(root))
       .withColumn("_dv_pos", col("_metadata.row_index"))
       .join(broadcast(positions), Seq("_dv_file", "_dv_pos"), "left_anti")
       .select(cols.map(col): _*)
-      .repartition(numFiles)
-      .write.mode("overwrite").parquet(root.resolve(rel).toString)
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(root.resolve(rel))
-    val fresh =
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => root.relativize(p).toString).toSeq.sorted
-      finally s.close()
+      .repartition(numFiles), root, s"data/dvfold_a${head + 1}")
     commit(spark, root, cold ++ fresh, statsCols, opType = "fold")
   }
 
@@ -2998,20 +2911,11 @@ object SnapshotStore {
   def commitCdcDelta(spark: SparkSession, root: Path, changes: DataFrame,
                      keyCol: String,
                      streamEpoch: Option[(String, Long)] = None): Long = {
-    val head = headVersion(root).getOrElse(
-      throw new IllegalStateException(s"commitCdcDelta on uncommitted table $root"))
+    val head = headOf(root, "commitCdcDelta")
     requireCdcDeltaBase(spark, root, head)
     val attempt = head + 1
-    val rel = s"data/_cdcdelta_a$attempt"
-    changes.withColumn("_seq", lit(attempt))
-      .coalesce(1).write.mode("overwrite").parquet(root.resolve(rel).toString)
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(root.resolve(rel))
-    val fresh =
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => root.relativize(p).toString).toSeq.sorted
-      finally s.close()
+    val fresh = writeFresh(changes.withColumn("_seq", lit(attempt)).coalesce(1),
+      root, s"data/_cdcdelta_a$attempt")
     commitAppend(spark, root, fresh, expectedBase = head,
       streamEpoch = streamEpoch)
   }
@@ -3103,7 +3007,6 @@ object SnapshotStore {
   private def cdcResolve(spark: SparkSession, root: Path, ver: Long,
                          keyCol: String, orderCols: Seq[String])
       : (Seq[String], Seq[String], DataFrame, Seq[String]) = {
-    import spark.implicits._
     val files = filesAt(spark, root, ver)
     val (delta, data) = files.partition(isCdcDeltaFile)
     // both probes read footers, not schema-inference jobs: the deltas'
@@ -3116,21 +3019,8 @@ object SnapshotStore {
       .getOrElse(throw new IllegalStateException(
         s"$root v$ver: no readable footer among its ${delta.size} CDC delta files"))
     val dataCols = deltas.columns.toSeq.filterNot(_ == "_seq")
-    val envelope = Seq(s"min_$keyCol", s"max_$keyCol")
-    val hasEnvelope = readList(root, ver) match {
-      case Some(rows) => rows.forall(r => envelope.forall(partColsFor(spark, root, r.mpath).contains))
-      case None => envelope.forall(manifest(spark, root, ver).columns.contains)
-    }
     val (hot, cold) =
-      if (hasEnvelope) {
-        val man = manifest(spark, root, ver)
-        val deltaKeys = deltas.select(col(keyCol)).distinct()
-        val hit = deltaKeys.join(
-            broadcast(man.select(col("file"), col(s"min_$keyCol"), col(s"max_$keyCol"))),
-            col(keyCol).between(col(s"min_$keyCol"), col(s"max_$keyCol")))
-          .select("file").distinct().as[String].collect().toSet
-        data.partition(hit)
-      } else (data, Seq.empty[String])
+      envelopeSplit(spark, root, ver, deltas.select(col(keyCol)).distinct(), keyCol, data)
     val pool = readFiles(spark, root, hot, inferPartitions = false)
       .select(dataCols.map(col): _*).withColumn("_seq", lit(0L))
       .unionByName(deltas.select((dataCols :+ "_seq").map(col): _*))
@@ -3145,8 +3035,7 @@ object SnapshotStore {
 
   def readAtCdc(spark: SparkSession, root: Path, v: Option[Long] = None,
                 keyCol: String, orderCols: Seq[String]): DataFrame = {
-    val ver = v.orElse(headVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $root"))
+    val ver = versionOrHead(root, v)
     val files = filesAt(spark, root, ver)
     requireNoPending(files, "readAtCdc", morDeletes = true, dvs = true)
     if (!files.exists(isCdcDeltaFile))
@@ -3174,24 +3063,13 @@ object SnapshotStore {
   def foldCdc(spark: SparkSession, root: Path, keyCol: String,
               orderCols: Seq[String], numFiles: Int,
               statsCols: Seq[String] = Nil): Long = {
-    val head = headVersion(root).getOrElse(
-      throw new IllegalStateException(s"foldCdc on uncommitted table $root"))
+    val head = headOf(root, "foldCdc")
     requireNoRenames(root, head, "foldCdc")
     if (!filesAt(spark, root, head).exists(isCdcDeltaFile)) return head
-    val attempt = head + 1
-    val rel = s"data/cdcfold_a$attempt"
     val (_, cold, resolved, _) = cdcResolve(spark, root, head, keyCol, orderCols)
-    resolved
+    val fresh = writeFresh(resolved
       .repartitionByRange(numFiles, col(keyCol))
-      .sortWithinPartitions(keyCol)
-      .write.mode("overwrite").parquet(root.resolve(rel).toString)
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(root.resolve(rel))
-    val fresh =
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => root.relativize(p).toString).toSeq.sorted
-      finally s.close()
+      .sortWithinPartitions(keyCol), root, s"data/cdcfold_a${head + 1}")
     commit(spark, root, cold ++ fresh, statsCols, opType = "fold")
   }
 
@@ -3257,7 +3135,6 @@ object SnapshotStore {
     * key-shuffled full-outer join over the restricted sides. */
   def changesBetween(spark: SparkSession, root: Path, fromV: Long, toV: Long,
                      keyCol: String): DataFrame = {
-    import spark.implicits._
     val fromFiles = filesAt(spark, root, fromV)
     val toFiles = filesAt(spark, root, toV)
     // the diff resolves MOR deletes; CDC deltas need their own
@@ -3273,24 +3150,14 @@ object SnapshotStore {
       else readFiles(spark, root, changed, inferPartitions = false)
         .select(col(keyCol)).distinct()
     // one side's MOR read, scan-restricted to the data files whose key
-    // envelope can hold a changed key (manifest join — the mergeCow
-    // planning pattern); tables without key stats read every data file
+    // envelope can hold a changed key ([[envelopeSplit]]); tables
+    // without key stats read every data file
     def sideRead(v: Long): DataFrame = {
       val files = filesAt(spark, root, v)
       val (del, data) = files.partition(isDeleteFile)
-      val man = manifest(spark, root, v)
       val candidates =
-        if (changed.nonEmpty &&
-            man.columns.contains(s"min_$keyCol") && man.columns.contains(s"max_$keyCol")) {
-          // manifest broadcast, not the keys: a compaction's "changed
-          // files" can be the whole table, but the manifest stays
-          // file-count sized
-          val hit = changedKeys.join(
-              broadcast(man.select(col("file"), col(s"min_$keyCol"), col(s"max_$keyCol"))),
-              col(keyCol).between(col(s"min_$keyCol"), col(s"max_$keyCol")))
-            .select("file").distinct().as[String].collect().toSet
-          data.filter(hit)
-        } else data
+        if (changed.isEmpty) data
+        else envelopeSplit(spark, root, v, changedKeys, keyCol, data)._1
       val base = readFiles(spark, root, candidates, inferPartitions = false)
       if (del.isEmpty) base
       else base.join(

@@ -1836,10 +1836,9 @@ object LayoutQueries {
   // ---- hybrid retrieval over the sublinear rankers --------------------
 
   /** Fusion-time knobs for q17i, picked from the measured
-    * overlap-vs-depth curve (VERDICT r10 #1; `q17iHybridIndexed`'s
-    * `fusionK` and `nprobeFrac` arguments re-measure any point of it,
-    * and the chosen point's overlap is stamped by `graft.Bench` and
-    * asserted as a floor in RetrievalSpec and `graft.Bounds`): fusion
+    * overlap-vs-depth curve (VERDICT r10 #1; the chosen point's
+    * overlap is stamped by `graft.Bench` and asserted as a floor in
+    * RetrievalSpec and `graft.Bounds`): fusion
     * depth stays at the q17h-matched 20 (RRF
     * consumes ranks; deepening the lists mostly adds tail noise), while
     * the IVF ranker probes k/2 lists at fusion time instead of the
@@ -1915,14 +1914,12 @@ object LayoutQueries {
     * to the driver to become literal pruning predicates — bounded by
     * the probe count, never the corpus (same contract as the IVF
     * centroid matrix). */
-  def q17iHybridIndexed(spark: SparkSession, dir: String,
-                        fusionK: Int = HybridFusionK,
-                        nprobeFrac: Double = HybridNProbeFrac): DataFrame = {
+  def q17iHybridIndexed(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     import graft.functions.TextFunctions.tokens
 
-    val vecR = SimilarityQueries.ivfRank(spark, dir, fusionK, Some(nprobeFrac))
+    val vecR = SimilarityQueries.ivfRank(spark, dir, HybridFusionK, Some(HybridNProbeFrac))
       .select(col("probe_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("r"), lit("vec").as("ranker"))
 
@@ -1932,7 +1929,7 @@ object LayoutQueries {
       .where(col("doc_id") < 10)
       .select(col("doc_id"), array_distinct(tokens(col("text"))).as("ts"))
       .as[(Long, Seq[String])].collect().toSeq.sortBy(_._1)
-    val lexR = jaccardRankIndexed(spark, postings, docstats, probeTerms, fusionK)
+    val lexR = jaccardRankIndexed(spark, postings, docstats, probeTerms, HybridFusionK)
       .select(col("probe_id"), col("doc_id"),
         col("r"), lit("lex").as("ranker"))
 

@@ -161,9 +161,7 @@ private[sql] object SnapshotProcedures {
               s"set_partition_spec on $root: the table is FLAT — " +
               "partitioning existing flat data is a rewrite (recreate " +
               "with PARTITIONED BY), not a spec flip")
-            val head = SnapshotStore.headVersion(root).getOrElse(
-              throw new IllegalStateException(
-                s"set_partition_spec on uncommitted table $root"))
+            val head = SnapshotStore.headOf(root, "set_partition_spec")
             val declared = SnapshotStore.declaredSchema(root, head)
               .map(org.apache.spark.sql.types.StructType.fromDDL)
               .getOrElse(throw new IllegalStateException(

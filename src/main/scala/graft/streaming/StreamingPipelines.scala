@@ -275,6 +275,11 @@ object StreamingPipelines {
 
   private val ReplayFilesPerTrigger = 16
 
+  /** State-store partitions of the per-user streaming aggregations
+    * (q20n's funnel, q28t's SQL update stream): sized to their state,
+    * one row per user, not to the cores. */
+  private val StatePartitions = 2
+
   /** Run ALL the streaming pipelines concurrently on one session (O19,
     * S:86-109) over the chunked replay; block until drained; return the
     * final sink state. One replay feeds every q20* reader — the bench
@@ -1620,18 +1625,15 @@ object StreamingPipelines {
     * MONOTONE (false→true only), so the drained per-epoch update-mode
     * sink reduces by a plain max per user — no epoch bookkeeping
     * needed at read. Oracle = batch q27's SQL, hash-checked. */
-  def funnelReplay(spark: SparkSession, dir: String,
-                   filesPerTrigger: Int = 16): String = {
+  def funnelReplay(spark: SparkSession, dir: String): String = {
     val out  = IndexStore.tempDir("graft-funnel-out").toString
     // state sized to the state, not the cores (the q28t/replay()
     // discipline, guide §2.1 — q20n was one of the r20 ANTI-SCALERS:
     // 32 state-store partitions for a few-thousand-user funnel meant
     // 32 near-empty store commits per trigger). Scoped session so the
-    // shared session's conf is never mutated; the count is the same
-    // deployment knob as q28t's.
+    // shared session's conf is never mutated; the count is q28t's.
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.getOption("spark.graft.stream.statePartitions").getOrElse("2"))
+    ss.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
     import ss.implicits._
     val fold: (Long, Iterator[Event], GroupState[FunnelState]) => (Long, Boolean, Boolean, Boolean) =
       (uid, events, state) => {
@@ -1649,7 +1651,7 @@ object StreamingPipelines {
         state.update(s)
         (uid, s.tv.isDefined, s.tc.isDefined, s.tp.isDefined)
       }
-    Replay.drain(realEvents(ss, dir, filesPerTrigger)
+    Replay.drain(realEvents(ss, dir, filesPerTrigger = 16)
       .as[Event]
       .groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout)(fold)
@@ -1986,12 +1988,10 @@ object StreamingPipelines {
     // reads 32 tiny files). VERDICT r20 wrong #4: the former
     // set/restore mutated the SHARED session's conf for the stream's
     // whole lifetime — a SCOPED newSession() (same SparkContext, own
-    // SQL conf) isolates the setting to this stream. Overridable for
-    // deployments whose state volume warrants more partitions.
+    // SQL conf) isolates the setting to this stream.
     val ss = spark.newSession()
     ss.conf.set("spark.sql.catalog.graft_lake", "graft.sql.SnapshotCatalog")
-    ss.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.getOption("spark.graft.stream.statePartitions").getOrElse("2"))
+    ss.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
     val perUser = realEvents(ss, dir, filesPerTrigger = 6)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
@@ -2668,7 +2668,7 @@ object StreamingPipelines {
     * TwitterDStreamTrendingHashtag.java:49; default trigger at
     * TwitterDatasetTrendingHashtag.java:86) — not replay-to-drain. Runs
     * the trending per-(window, type) pipeline under
-    * `Trigger.ProcessingTime(triggerMs)`, polls progress until the
+    * `Trigger.ProcessingTime` at that cadence, polls progress until the
     * source is exhausted, stops the query, and returns the final upsert
     * state plus each trigger's `triggerExecution` duration so the SLA
     * the reference implies (work per trigger < slide) is *measured*,
@@ -2679,8 +2679,9 @@ object StreamingPipelines {
     * DURING the stream); the final upsert state is derived from the
     * sink by a latest-epoch-wins read, and only that bounded final
     * state crosses the driver, for the caller's parity check. */
-  def processingTimeReplay(spark: SparkSession, dir: String, triggerMs: Long = 500,
-                           filesPerTrigger: Int = 3): (Map[(Timestamp, String), Long], Seq[Long]) = {
+  def processingTimeReplay(spark: SparkSession,
+                           dir: String): (Map[(Timestamp, String), Long], Seq[Long]) = {
+    val triggerMs = 500L
     val out = IndexStore.tempDir("graft-pt-out").toString
     // Drain detection: on Spark 3.4+/4.x an idle ProcessingTime trigger
     // emits QueryIdleEvent and does NOT update lastProgress (only ONE
@@ -2702,7 +2703,7 @@ object StreamingPipelines {
         if (e.runId == runIdRef.get) idleCount.incrementAndGet()
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
     }
-    val stream = realEvents(spark, dir, filesPerTrigger)
+    val stream = realEvents(spark, dir, filesPerTrigger = 3)
       .withWatermark("ts", "300 seconds")
       .groupBy(window(col("ts"), "1 minute"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))

@@ -467,7 +467,7 @@ class StreamingParitySpec extends AnyFunSuite {
   test("ProcessingTime trigger: sustained operation meets the per-trigger SLA") {
     import spark.implicits._
     val (state, durations) = StreamingPipelines.processingTimeReplay(
-      spark, "/root/testdata/sf0.001", triggerMs = 500, filesPerTrigger = 3)
+      spark, "/root/testdata/sf0.001")
     // parity: final upsert state == batch per-(minute, type) counts
     val batch = graft.core.Tables.load(spark, "/root/testdata/sf0.001", "events")
       .groupBy(window(col("ts"), "1 minute"), col("event_type"))

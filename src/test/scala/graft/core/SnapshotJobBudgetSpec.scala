@@ -129,6 +129,29 @@ class SnapshotJobBudgetSpec extends AnyFunSuite {
     } finally IndexStore.deleteRecursively(root)
   }
 
+  test("stats-less row-level ops read no manifest to look for key envelopes: mergeCow, foldMor and changesBetween each launch their budget") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("budget-rowops")
+    try {
+      SnapshotStore.commitAppend(spark, root,
+        Seq(writeFile(root, "data/b0", (1L to 6L).map(i => (i, s"v$i")).toDF("k", "p")))) // v1
+      val changes = Seq((2L, "x", false), (9L, "y", false)).toDF("k", "p", "_delete")
+      val (v2, merge) = jobsOf("budget-rowops-merge")(SnapshotStore.mergeCow(spark, root, changes, "k"))
+      SnapshotStore.deleteMor(spark, root, Seq(3L).toDF("k"), "k") // v3
+      val (v4, fold) = jobsOf("budget-rowops-fold")(SnapshotStore.foldMor(spark, root, "k", numFiles = 1))
+      assert((v2, v4) == (2L, 4L))
+      val (feed, diff) = jobsOf("budget-rowops-feed")(SnapshotStore.changesBetween(spark, root, 1L, v4, "k"))
+      // one job fewer per envelope probe than a schema-inferring manifest
+      // read (changesBetween probes both endpoints)
+      assert(merge <= 4, s"a stats-less mergeCow launched $merge Spark jobs (budget: 4)")
+      assert(fold <= 6, s"a stats-less foldMor launched $fold Spark jobs (budget: 6)")
+      assert(diff <= 4, s"planning a stats-less changesBetween launched $diff Spark jobs (budget: 4)")
+      assert(feed.orderBy("change_type", "k").as[(String, Long, String)].collect().toSeq == Seq(
+        ("delete", 3L, "v3"), ("insert", 9L, "y"),
+        ("update_postimage", 2L, "x"), ("update_preimage", 2L, "v2")))
+    } finally IndexStore.deleteRecursively(root)
+  }
+
   private val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
 
   /** Tweet batch `i` (40 tweets, 20 s of event time after batch i-1) as
