@@ -109,23 +109,6 @@ object IndexStore {
     * must outlive the JVM goes under [[root]] instead. */
   def tempDir(prefix: String): Path = Files.createTempDirectory(scratchRoot, prefix)
 
-  /** True iff the tree under `p` contains at least one parquet data
-    * file. The appendix-read guard (ADVICE r10 #3): an accepted-but-
-    * EMPTY micro-batch writes a `batch_id=N` dir with no parquet files
-    * (reachable: a chunk whose rows all fall below an accept
-    * threshold), and `spark.read.parquet` on an appendix whose only
-    * batch dirs are empty fails schema inference instead of treating
-    * the appendix as absent. Every composed base∪appendix view routes
-    * its existence check here so the empty-appendix case degrades to
-    * "no appendix" rather than a throw. */
-  def hasParquetFiles(p: Path): Boolean = {
-    if (!Files.exists(p)) return false
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(p)
-    try s.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
-    finally s.close()
-  }
-
   /** Build-or-load: returns the index root, running `build` (and
     * bumping `buildCounter`) only when the on-disk index is absent,
     * torn, or stamped with a different fingerprint. `build` must write

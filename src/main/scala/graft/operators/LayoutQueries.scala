@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{IndexStore, SnapshotStore, Tables}
+import graft.core.{Appendix, IndexStore, SnapshotStore, Tables}
 import graft.sources.Layout
 
 /** The storage layout's QUERY side (VERDICT r8 missing #1/#2): the
@@ -1758,8 +1758,8 @@ object LayoutQueries {
       docs.select(tokens(col("text")).as("toks"))
         .agg(count(lit(1)).as("n"), sum(size(col("toks")).cast("long")).as("sum_dl"))
         .coalesce(1).write.mode("overwrite").parquet(r.resolve("stats").toString)
-      IndexStore.deleteRecursively(r.resolve("postings_inc"))
-      IndexStore.deleteRecursively(r.resolve("stats_inc"))
+      Appendix(r.resolve("postings_inc").toString).clear()
+      Appendix(r.resolve("stats_inc").toString).clear()
     }
   }
 
@@ -1771,7 +1771,7 @@ object LayoutQueries {
     * in the standing layout is touched; df and the corpus stats are
     * VIEWS over base ∪ appendix, so they are correct the instant the
     * batch lands — no stats table to rewrite, no double-count on
-    * retry. `compactIngestAppendix` folds both appendices between
+    * retry. [[Appendix.compact]] folds both appendices between
     * rebuilds (posting rows are unique across batches — disjoint
     * doc_ids — and each stats partial carries its `src_batch` tag
     * precisely so two batches with IDENTICAL (n, sum_dl) stay two rows
@@ -1780,15 +1780,14 @@ object LayoutQueries {
   def postingsAppendIncremental(spark: SparkSession, root: java.nio.file.Path,
                                 batch: DataFrame, batchId: Long): Unit = {
     import graft.functions.TextFunctions.tokens
-    TextQueries.bm25Postings(batch, termFilter = None)
-      .withColumn("bucket", tokenBucket(col("token")))
-      .write.mode("overwrite")
-      .parquet(root.resolve(s"postings_inc/batch_id=$batchId").toString)
-    batch.select(tokens(col("text")).as("toks"))
-      .agg(count(lit(1)).as("n"), sum(size(col("toks")).cast("long")).as("sum_dl"))
-      .select(lit(batchId).as("src_batch"), col("n"), col("sum_dl"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(root.resolve(s"stats_inc/batch_id=$batchId").toString)
+    Appendix(root.resolve("postings_inc").toString).accept(
+      TextQueries.bm25Postings(batch, termFilter = None)
+        .withColumn("bucket", tokenBucket(col("token"))), batchId)
+    Appendix(root.resolve("stats_inc").toString).accept(
+      batch.select(tokens(col("text")).as("toks"))
+        .agg(count(lit(1)).as("n"), sum(size(col("toks")).cast("long")).as("sum_dl"))
+        .select(lit(batchId).as("src_batch"), col("n"), col("sum_dl"))
+        .coalesce(1), batchId)
   }
 
   /** The composed read view after ingest: base ∪ appendix postings, and
@@ -1798,19 +1797,13 @@ object LayoutQueries {
     * once, which is what makes q18q hash-checkable against q18o's
     * oracle). */
   def composedPostings(spark: SparkSession, root: java.nio.file.Path): (DataFrame, DataFrame) = {
-    val dataCols = Seq("doc_id", "dl", "token", "tf", "bucket").map(col)
-    val base = spark.read.parquet(root.resolve("postings").toString).select(dataCols: _*)
-    val incP = root.resolve("postings_inc")
-    val posts =
-      if (IndexStore.hasParquetFiles(incP))
-        base.unionAll(spark.read.parquet(incP.toString).select(dataCols: _*))
-      else base
+    val dataCols = Seq("doc_id", "dl", "token", "tf", "bucket")
+    val base = spark.read.parquet(root.resolve("postings").toString).select(dataCols.map(col): _*)
+    val posts = Appendix(root.resolve("postings_inc").toString).read(spark, dataCols)
+      .fold(base)(base.unionAll)
     val baseS = spark.read.parquet(root.resolve("stats").toString).select("n", "sum_dl")
-    val incS = root.resolve("stats_inc")
-    val statsAll =
-      (if (IndexStore.hasParquetFiles(incS))
-         baseS.unionAll(spark.read.parquet(incS.toString).select("n", "sum_dl"))
-       else baseS)
+    val statsAll = Appendix(root.resolve("stats_inc").toString).read(spark, Seq("n", "sum_dl"))
+      .fold(baseS)(baseS.unionAll)
         .agg(sum(col("n")).as("n"), sum(col("sum_dl")).as("sum_dl"))
         .select(col("n"), (col("sum_dl").cast("double") / col("n")).as("avgdl"))
     (posts, statsAll)

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Appendix, Tables}
 import graft.functions.{Scored, TopKByScore}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.3 Q17):
@@ -518,8 +518,8 @@ object SimilarityQueries {
         .write.mode("overwrite").parquet(root.resolve("sq8").toString)
       // a retrain supersedes the centroids any incremental batches were
       // scored against — their appended assignments and codes go with it
-      graft.core.IndexStore.deleteRecursively(root.resolve("assignments_inc"))
-      graft.core.IndexStore.deleteRecursively(root.resolve("sq8_inc"))
+      Appendix(root.resolve("assignments_inc").toString).clear()
+      Appendix(root.resolve("sq8_inc").toString).clear()
     }
     val cents = spark.read.parquet(root.resolve("centroids").toString)
       .as[(Int, Seq[Double])].collect().sortBy(_._1).toSeq
@@ -575,19 +575,17 @@ object SimilarityQueries {
     * ingest-loop accept pattern; standing assignments and codes are
     * never touched. Returns the accepted (id, cid) rows. A retrain
     * clears both `_inc` appendixes (those rows were scored against the
-    * superseded centroids); between retrains,
-    * [[graft.streaming.StreamingPipelines.compactIngestAppendix]] folds
-    * the accumulated batch dirs into one (the view has no batch-order
-    * semantics, so compaction is trivially exact here). */
+    * superseded centroids); between retrains, [[Appendix.compact]]
+    * folds the accumulated batch dirs into one (the view has no
+    * batch-order semantics, so compaction is trivially exact here). */
   def ivfAssignIncremental(spark: SparkSession, ivf: IvfIndex,
                            delta: DataFrame, batchId: Long): DataFrame = {
     import spark.implicits._
-    ivfAssignDelta(ivf, delta).write.mode("overwrite")
-      .parquet(s"${ivf.assignPath}_inc/batch_id=$batchId")
+    Appendix(s"${ivf.assignPath}_inc").accept(ivfAssignDelta(ivf, delta), batchId)
     val landed = spark.read
       .parquet(s"${ivf.assignPath}_inc/batch_id=$batchId").select("id", "cid")
-    sq8Encode(delta, landed, broadcast(ivf.centroids.toDF("cid", "cvec")))
-      .write.mode("overwrite").parquet(s"${ivf.sq8Path}_inc/batch_id=$batchId")
+    Appendix(s"${ivf.sq8Path}_inc").accept(
+      sq8Encode(delta, landed, broadcast(ivf.centroids.toDF("cid", "cvec"))), batchId)
     landed
   }
 
@@ -595,10 +593,23 @@ object SimilarityQueries {
     * incrementally-accepted delta batches — what queries read (with no
     * deltas it is exactly the base table). */
   def ivfAssignments(spark: SparkSession, ivf: IvfIndex): DataFrame = {
-    val inc = java.nio.file.Paths.get(s"${ivf.assignPath}_inc")
     val base = Tables.readParquet(spark, ivf.assignPath)
-    if (!graft.core.IndexStore.hasParquetFiles(inc)) base
-    else base.unionAll(Tables.readParquet(spark, inc.toString).select("id", "cid"))
+    Appendix(s"${ivf.assignPath}_inc").read(spark, Seq("id", "cid"))
+      .fold(base)(base.unionAll)
+  }
+
+  /** Retrain once an index's accepted appendix holds more than this
+    * fraction of its trained base rows (FAISS-style re-add threshold). */
+  val RetrainGrowth = 0.2
+
+  /** The growth test of [[maybeRetrain]] and [[maybePqRetrain]]: the
+    * `<base>_inc` appendix's rows against the base table's, both from
+    * parquet footers (exact, no Spark job). The base dir is read with
+    * the appendix's visible-file rule; with no appendix rows it is not
+    * read at all. */
+  private def outgrown(spark: SparkSession, base: String): Boolean = {
+    val incRows = Appendix(s"${base}_inc").rows(spark)
+    incRows > 0 && incRows > RetrainGrowth * Appendix(base).rows(spark)
   }
 
   /** The documented retrain TRIGGER (VERDICT r8 next #6) —
@@ -606,29 +617,23 @@ object SimilarityQueries {
     * accepted batch is scored against centroids trained WITHOUT it, so
     * recall decays as the appendix grows relative to the trained base.
     * This maintenance op makes the policy explicit: when the `_inc`
-    * appendix exceeds `growthFactor` × base rows (FAISS-style re-add
+    * appendix exceeds [[RetrainGrowth]] × base rows (FAISS-style re-add
     * threshold; the width-refit analog of the embedding-ingest LSH
     * rebuild), retrain over the GROWN corpus. The retrain routes
     * through [[ivfCentroids]] unchanged: the grown corpus's fingerprint
     * differs from the stamped one, so the standard build-or-load path
     * rebuilds centroids + assignments and clears the `_inc` appendix
     * (every delta row is re-scored against the fresh centroids as part
-    * of the full assignment). Below threshold: a two-count metadata
-    * check, nothing touched.
+    * of the full assignment). Below threshold: a footer-count metadata
+    * check, no Spark job, nothing touched.
     *
     * `unitAll` is the standing corpus INCLUDING accepted deltas — at
     * 100 TB this runs as the periodic offline compaction job next to
-    * [[graft.streaming.StreamingPipelines.compactIngestAppendix]],
-    * never inline with a query. Returns whether a retrain ran. */
+    * [[Appendix.compact]], never inline with a query. Returns whether a
+    * retrain ran. */
   def maybeRetrain(spark: SparkSession, dir: String, ivf: IvfIndex,
-                   unitAll: DataFrame, growthFactor: Double = 0.2): Boolean = {
-    val inc = java.nio.file.Paths.get(s"${ivf.assignPath}_inc")
-    if (!graft.core.IndexStore.hasParquetFiles(inc)) return false
-    val incRows = spark.read.parquet(inc.toString).count()
-    val baseRows = spark.read.parquet(ivf.assignPath).count()
-    if (incRows <= growthFactor * baseRows) false
-    else { ivfCentroids(spark, dir, unitAll); true }
-  }
+                   unitAll: DataFrame): Boolean =
+    outgrown(spark, ivf.assignPath) && { ivfCentroids(spark, dir, unitAll); true }
 
   /** Q17b's IVF sibling (Q17c) — approximate top-5 cosine neighbors via
     * inverted lists: vectors are bucketed by nearest coarse centroid;
@@ -770,11 +775,8 @@ object SimilarityQueries {
     // reads codes + scale, 8× fewer bytes than the f64 vectors, which
     // this query never touches corpus-wide.
     val baseCodes = Tables.readParquet(spark, ivf.sq8Path)
-    val inc = java.nio.file.Paths.get(s"${ivf.sq8Path}_inc")
-    val codes =
-      if (!graft.core.IndexStore.hasParquetFiles(inc)) baseCodes
-      else baseCodes.unionByName(Tables.readParquet(spark, inc.toString)
-        .select("id", "cid", "qv", "scale"))
+    val codes = Appendix(s"${ivf.sq8Path}_inc").read(spark, Seq("id", "cid", "qv", "scale"))
+      .fold(baseCodes)(baseCodes.unionByName)
 
     // asymmetric scoring: reconstruct c̃ = centroid + qv/scale, rank by
     // cos(p_unit, c̃) = dot(p, c̃)/|c̃| (probe is unit-norm exact). The
@@ -1125,7 +1127,7 @@ object SimilarityQueries {
         .write.mode("overwrite").parquet(root.resolve("codes").toString)
       // a retrain supersedes the codebook any incremental batches were
       // encoded against — their appended codes go with it
-      graft.core.IndexStore.deleteRecursively(root.resolve("codes_inc"))
+      Appendix(root.resolve("codes_inc").toString).clear()
     }
     val built = PqIndex(loadCodebook(spark, root), root.resolve("codes").toString)
     pqCache.put(dir, (fp, built))
@@ -1213,54 +1215,29 @@ object SimilarityQueries {
     * codes index a codebook that no longer exists). */
   def pqEncodeIncremental(pq: PqIndex,
                           delta: DataFrame, batchId: Long): Unit =
-    pqEncode(delta, pq.codebook)
-      .write.mode("overwrite").parquet(s"${pq.codesPath}_inc/batch_id=$batchId")
+    Appendix(s"${pq.codesPath}_inc").accept(pqEncode(delta, pq.codebook), batchId)
 
   /** The composed code view: persisted base codes ∪ incrementally
-    * encoded batches (with no appendix it is exactly the base table). */
+    * encoded batches (with no readable appendix it is exactly the base
+    * table). */
   def pqComposedCodes(spark: SparkSession, pq: PqIndex): DataFrame = {
-    val inc = java.nio.file.Paths.get(s"${pq.codesPath}_inc")
     val base = Tables.readParquet(spark, pq.codesPath).select("id", "codes")
-    // hasParquetFiles, not exists: an appendix whose only batch dir is
-    // an accepted-but-empty epoch has no readable schema (ADVICE r10)
-    if (!graft.core.IndexStore.hasParquetFiles(inc)) base
-    else base.unionAll(Tables.readParquet(spark, inc.toString).select("id", "codes"))
+    Appendix(s"${pq.codesPath}_inc").read(spark, Seq("id", "codes"))
+      .fold(base)(base.unionAll)
   }
 
   /** The PQ retrain policy — [[maybeRetrain]]'s twin for codebooks:
-    * when the encoded appendix exceeds `growthFactor` × base rows, the
+    * when the encoded appendix exceeds [[RetrainGrowth]] × base rows, the
     * quantization error of appendix vectors (scored against centroids
     * trained without them) matters enough to refit — retrain over the
     * GROWN corpus through the standard build-or-load path (fingerprint
     * differs → rebuild; the build clears `codes_inc`, re-encoding every
-    * vector against the fresh codebook). Below threshold: a two-count
+    * vector against the fresh codebook). Below threshold: a footer-count
     * metadata check, nothing touched. Offline-slot contract as all
     * maintenance ops. */
   def maybePqRetrain(spark: SparkSession, key: String, pq: PqIndex,
-                     unitAll: DataFrame, growthFactor: Double = 0.2): Boolean = {
-    val inc = java.nio.file.Paths.get(s"${pq.codesPath}_inc")
-    if (!graft.core.IndexStore.hasParquetFiles(inc)) return false
-    // the growth check is a two-count METADATA decision — parquet
-    // footer row counts (exact) driver-side instead of two count()
-    // jobs per replay (guide §5: scheduler round-trips for per-file
-    // metadata are the driver's to read, not a cluster's to compute)
-    def footerRows(dir: java.nio.file.Path): Long = {
-      import scala.jdk.CollectionConverters._
-      val walked = java.nio.file.Files.walk(dir)
-      val pqFiles = try walked.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .filter(p => dir.relativize(p).iterator().asScala.forall { seg =>
-            val s = seg.toString; !s.startsWith("_") && !s.startsWith(".") })
-          .map(_.toString).toSeq
-        finally walked.close()
-      org.apache.spark.sql.execution.datasources.parquet
-        .GraftParquetShim.footerRowCount(spark, pqFiles)
-    }
-    val incRows = footerRows(inc)
-    val baseRows = footerRows(java.nio.file.Paths.get(pq.codesPath))
-    if (incRows <= growthFactor * baseRows) false
-    else { pqIndex(spark, key, unitAll, pqIngestBuildCount); true }
-  }
+                     unitAll: DataFrame): Boolean =
+    outgrown(spark, pq.codesPath) && { pqIndex(spark, key, unitAll, pqIngestBuildCount); true }
 
   /** Q17l's query step: the q17j search answered from the LOOP-
     * maintained PQ index under its own store key — the composed

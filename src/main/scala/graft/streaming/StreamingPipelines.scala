@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import graft.core.{IndexStore, Tables}
+import graft.core.{Appendix, IndexStore, Tables}
 import graft.functions.TagCount
 
 /** Structured Streaming twins of the reference's continuous queries
@@ -213,8 +213,7 @@ object StreamingPipelines {
     * instead of duplicating rows (exactly-once at rest on top of the
     * source's replayable offsets) — the portable InfluxDB stand-in
     * (S:242-248). No driver round-trip. */
-  def epochSink(out: String): (DataFrame, Long) => Unit =
-    (batch, batchId) => batch.write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+  def epochSink(out: String): (DataFrame, Long) => Unit = Appendix(out).accept
 
   // ---- source seam -----------------------------------------------------
 
@@ -516,8 +515,7 @@ object StreamingPipelines {
             .select(col("c_user").as("user_id"), col("click_id"),
                     coalesce(col("purchase_id"), lit(-1L)).as("purchase_id")))(
             _.foreachBatch { (batch: DataFrame, batchId: Long) =>
-              batch.where(col("user_id") >= 0)
-                .write.mode("overwrite").parquet(s"${sink.leftJoinSinkDir}/batch_id=$batchId")
+              Appendix(sink.leftJoinSinkDir).accept(batch.where(col("user_id") >= 0), batchId)
             })
 
           // Stream-STATIC enrichment join (q20j) — the dimension-join mode the
@@ -932,13 +930,12 @@ object StreamingPipelines {
     val base = DedupQueries.wordShingleDocs(spark, dir)
       .where(col("doc_id") % DedupQueries.IngestSplitMod =!= DedupQueries.IngestSplitRem)
     Replay.drain(chunkStream(spark, docs.schema, chunkDir)) { (batch, batchId) =>
-      DedupQueries.nearDupPairsAcross(
+      Appendix(out).accept(DedupQueries.nearDupPairsAcross(
           base = base, batch = shingleBatch(batch),
           sigCol = call_function(graft.functions.MinHash.sigFnName, col("sh")),
           payloadCol = col("sh"),
           jacOf = DedupQueries.arrayJaccard, threshold = 0.8,
-          baseIndex = Some(index))
-        .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+          baseIndex = Some(index)), batchId)
     }
     out
   }
@@ -977,13 +974,11 @@ object StreamingPipelines {
                          payload: DataFrame, shingled: DataFrame, batchId: Long,
                          sigDir: String, bandDir: String): DataFrame = {
     import graft.operators.DedupQueries
-    val standing =
-      if (!Files.exists(Paths.get(sigDir))) baseIdx
-      else DedupQueries.BandIndex(
-        baseIdx.sigs.unionAll(spark.read.parquet(sigDir)
-          .where(col("batch_id") < batchId).select("doc_id", "sig")),
-        baseIdx.bands.unionAll(spark.read.parquet(bandDir)
-          .where(col("batch_id") < batchId).select("doc_id", "band")))
+    val standing = DedupQueries.BandIndex(
+      Appendix(sigDir).read(spark, Seq("doc_id", "sig"), before = batchId)
+        .fold(baseIdx.sigs)(baseIdx.sigs.unionAll),
+      Appendix(bandDir).read(spark, Seq("doc_id", "band"), before = batchId)
+        .fold(baseIdx.bands)(baseIdx.bands.unionAll))
     DedupQueries.nearDupPairsAcross(
       base = payload, batch = shingled,
       sigCol = call_function(graft.functions.MinHash.sigFnName, col("sh")),
@@ -995,7 +990,7 @@ object StreamingPipelines {
   /** In-loop appendix-compaction cadence for the growing ingest loops
     * (VERDICT r9 next #3): every K-th accepted epoch first folds the
     * CANDIDATE appendix dirs strictly below itself into one
-    * (`compactIngestAppendix(…, uptoExclusive = batchId)`), bounding
+    * (`Appendix.compact(…, uptoExclusive = batchId)`), bounding
     * the probe-side dir listing at K + 1 dirs for stream lifetime
     * instead of one dir per epoch. Candidate tables only — payload
     * appendices compact in the post-drain quiesced slot. */
@@ -1044,127 +1039,30 @@ object StreamingPipelines {
       // identically — pinned in StreamingParitySpec)
       val compacted = batchId > 0 && batchId % CompactEveryEpochs == 0
       if (compacted) {
-        compactIngestAppendix(spark, sigDir, Seq("doc_id", "sig"), uptoExclusive = batchId)
-        compactIngestAppendix(spark, bandDir, Seq("doc_id", "band"), uptoExclusive = batchId)
+        Appendix.compact(spark, sigDir, Seq("doc_id", "sig"), uptoExclusive = batchId)
+        Appendix.compact(spark, bandDir, Seq("doc_id", "band"), uptoExclusive = batchId)
       }
       // telemetry stamp only (q16k_batches): appendix row count from
-      // parquet FOOTERS driver-side — exact, zero Spark jobs, where a
-      // count() job per epoch was pure scheduler overhead (guide §5)
-      val (dirsNow, rowsNow) =
-        if (!Files.exists(Paths.get(sigDir))) (0, 0L)
-        else {
-          // match Spark's leaf-file filtering (ADVICE r20 #3): skip
-          // _temporary/hidden segments an aborted epoch write can
-          // stray, which spark.read ignores but a bare walk counts
-          val walked = Files.walk(Paths.get(sigDir))
-          val pq = try walked.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .filter(p => Paths.get(sigDir).relativize(p).iterator().asScala
-              .forall { seg =>
-                val s = seg.toString
-                !s.startsWith("_") && !s.startsWith(".")
-              })
-            .map(_.toString).toSeq finally walked.close()
-          (listDir(Paths.get(sigDir))
-             .count(_.getFileName.toString.startsWith("batch_id=")),
-           org.apache.spark.sql.execution.datasources.parquet
-             .GraftParquetShim.footerRowCount(spark, pq))
-        }
+      // parquet footers driver-side — exact, zero Spark jobs
+      val sigApp = Appendix(sigDir)
+      val (dirsNow, rowsNow) = (sigApp.batches.size, sigApp.rows(spark))
       val t0 = System.nanoTime()
       val shingled = shingleBatch(batch)
-      growingIngestProbe(spark, baseIdx, payload, shingled, batchId, sigDir, bandDir)
-        .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+      Appendix(out).accept(
+        growingIngestProbe(spark, baseIdx, payload, shingled, batchId, sigDir, bandDir), batchId)
       val probeSec = (System.nanoTime() - t0) / 1e9
       // accept: this batch's sig/band tables join the standing index.
       // `sigs` is referenced twice (sig write, band derivation) —
       // batch-sized, so the recompute is cheaper than a read-back.
       val sigs = shingled.select(col("doc_id"),
         call_function(graft.functions.MinHash.sigFnName, col("sh")).as("sig"))
-      sigs.write.mode("overwrite").parquet(s"$sigDir/batch_id=$batchId")
-      sigs.select(col("doc_id"), explode(DedupQueries.bandKeys(col("sig"))).as("band"))
-        .write.mode("overwrite").parquet(s"$bandDir/batch_id=$batchId")
+      sigApp.accept(sigs, batchId)
+      Appendix(bandDir).accept(
+        sigs.select(col("doc_id"), explode(DedupQueries.bandKeys(col("sig"))).as("band")), batchId)
       lastGrowStats = lastGrowStats :+
         IngestBatchStat(batchId, math.rint(probeSec * 1000) / 1000, dirsNow, rowsNow, compacted)
     }
     out
-  }
-
-  /** Compact a growing-ingest appendix (the accumulated `batch_id=N`
-    * dirs under one index table's root) into the single highest-id
-    * partition — the small-files maintenance op a long-lived ingest
-    * loop needs: every accepted epoch adds one dir of
-    * shuffle-partition-many files, and at 100 TB the probe's file
-    * listing (and the namenode) pays for all of them on every
-    * micro-batch. Generic over the appendix schema (`dataCols`):
-    * q16k's (doc_id, sig)/(doc_id, band) and q16m's
-    * (id, table_id, key)/(vec_id, v) alike.
-    *
-    * Two invocation modes (VERDICT r9 next #3):
-    *  - OFFLINE (`uptoExclusive` defaulted): run QUIESCED — after the
-    *    ingest query has stopped with its last epoch
-    *    checkpoint-committed (the same offline-maintenance slot as an
-    *    IVF retrain). Relabeling every row to the HIGHEST accepted id M
-    *    is then exact for every future probe: a future epoch's
-    *    `batch_id < batchId` filter has batchId > M, and the "old ∈
-    *    base ∪ strictly-earlier batches" contract only ever compares
-    *    against the committed frontier, never inside it. (Relabeling to
-    *    the LOWEST id would instead resurrect the retried-epoch
-    *    self-probe bug the filter exists to prevent.)
-    *  - MID-STREAM (`uptoExclusive` = the executing epoch N, called
-    *    from inside the ingest loop under an every-K-epochs policy):
-    *    only dirs with id < N participate, folding into the highest id
-    *    M < N — the executing epoch's own accept dirs are never the
-    *    fold target, so a failure-retried epoch N (whose probe filters
-    *    `batch_id < N`) still sees every earlier batch's rows at M < N,
-    *    exactly as before the fold. Safe for CANDIDATE tables even
-    *    across a mid-compaction crash (see below); a PAYLOAD table
-    *    still belongs in the offline slot.
-    *
-    * Crash-safe without a table format, by per-file rename atomicity
-    * plus the probe's duplicate tolerance (candidate pairs collapse in
-    * the screen's pair-dedup aggregate before anything is scored):
-    *  1. rows to move = dirs < M EXCEPT what `batch_id=M` already
-    *     holds, so a re-run after any crash never re-appends;
-    *  2. append them to `batch_id=M` — task files land by rename, so a
-    *     crash leaves complete duplicate files, never torn rows;
-    *  3. delete the superseded dirs — a crash here leaves duplicate
-    *     rows the next run's steps 1+3 converge away.
-    * Re-running after any crash converges, and for CANDIDATE tables
-    * (sigs/bands/keys — whatever feeds a screen with a pair-dedup)
-    * every intermediate state even probes identically to the
-    * uncompacted appendix; both pinned in StreamingParitySpec. A
-    * PAYLOAD table (q16m's vecs) joins 1:1 into scored results, so its
-    * crash-window duplicates would duplicate output rows — there the
-    * quiesce contract is load-bearing, not just advisable. */
-  def compactIngestAppendix(spark: SparkSession, dirStr: String,
-                            dataCols: Seq[String],
-                            uptoExclusive: Long = Long.MaxValue): Unit = {
-    val root = Paths.get(dirStr)
-    if (!Files.exists(root)) return
-    val batchDirs = listDir(root)
-      .filter(_.getFileName.toString.startsWith("batch_id="))
-      .filter(_.getFileName.toString.stripPrefix("batch_id=").toLong < uptoExclusive)
-      .sortBy(_.getFileName.toString.stripPrefix("batch_id=").toLong)
-    if (batchDirs.size <= 1) return
-    val m = batchDirs.last.getFileName.toString.stripPrefix("batch_id=").toLong
-    val cols = dataCols.map(col)
-    // partition pruning keeps the < M read off the target dir, so the
-    // append never reads its own output
-    val lower = spark.read.parquet(dirStr)
-      .where(col("batch_id") < m).select(cols: _*)
-    // an accepted-but-EMPTY batch writes a dir with no parquet files
-    // (reachable: a chunk whose docs all fall below the shingle
-    // minimum) — reading it for the except() would fail schema
-    // inference; except-nothing keeps the same distinct semantics
-    val targetHasFiles = listDir(batchDirs.last)
-      .exists(_.getFileName.toString.endsWith(".parquet"))
-    val toMove =
-      if (targetHasFiles)
-        lower.except(spark.read.parquet(s"$dirStr/batch_id=$m").select(cols: _*))
-      else lower.distinct()
-    toMove.coalesce(spark.sparkContext.defaultParallelism)
-      .write.mode("append").parquet(s"$dirStr/batch_id=$m")
-    batchDirs.init.foreach(graft.core.IndexStore.deleteRecursively)
   }
 
   // ---- the partition-scoped CDC merge (q25c) ---------------------------
@@ -1313,7 +1211,7 @@ object StreamingPipelines {
   }
 
   /** The q25b snapshot VACUUM (the lakehouse twin of
-    * [[compactIngestAppendix]], for the CDC sink): every epoch writes a
+    * [[Appendix.compact]], for the CDC sink): every epoch writes a
     * FULL snapshot, so superseded `snap_batch_id<N` dirs are pure
     * garbage once epoch N commits — readers only ever open the highest
     * id. Deleting them bounds the sink's footprint at `retain`
@@ -1325,7 +1223,7 @@ object StreamingPipelines {
     * keeping the second-highest guarantees the last COMMITTED snapshot
     * survives, so a retried N still finds its predecessor and no
     * changelog prefix is ever lost. retain = 1 is exact only under the
-    * quiesce contract ([[compactIngestAppendix]]'s offline slot): the
+    * quiesce contract ([[Appendix.compact]]'s offline slot): the
     * stream is stopped with its last epoch checkpoint-committed. */
   def vacuumCdcSnapshots(snapDirStr: String, retain: Int = 1): Unit = {
     val root = Paths.get(snapDirStr)
@@ -1366,9 +1264,9 @@ object StreamingPipelines {
     // exactly (disjoint doc_ids across batches; stats partials carry
     // `src_batch` so identical (n, sum_dl) rows survive distinct) —
     // pinned in RetrievalSpec.
-    compactIngestAppendix(spark, root.resolve("postings_inc").toString,
+    Appendix.compact(spark, root.resolve("postings_inc").toString,
       Seq("doc_id", "dl", "token", "tf", "bucket"))
-    compactIngestAppendix(spark, root.resolve("stats_inc").toString,
+    Appendix.compact(spark, root.resolve("stats_inc").toString,
       Seq("src_batch", "n", "sum_dl"))
   }
 
@@ -1401,10 +1299,9 @@ object StreamingPipelines {
     val base = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     Replay.drain(chunkStream(spark, copies.schema, chunkDir)) { (batch, batchId) =>
-      graft.operators.SimilarityQueries
+      Appendix(out).accept(graft.operators.SimilarityQueries
         .embeddingNearDupAcross(base, batch, threshold = 0.9,
-          bits = bits, baseKeys = baseKeys)
-        .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+          bits = bits, baseKeys = baseKeys), batchId)
     }
     out
   }
@@ -1418,14 +1315,10 @@ object StreamingPipelines {
   def embGrowingProbe(spark: SparkSession, bits: Int, baseKeys: DataFrame,
                       base: DataFrame, batch: DataFrame, batchId: Long,
                       keysDir: String, vecsDir: String): DataFrame = {
-    val standingKeys =
-      if (!Files.exists(Paths.get(keysDir))) baseKeys
-      else baseKeys.unionAll(spark.read.parquet(keysDir)
-        .where(col("batch_id") < batchId).select("id", "table_id", "key"))
-    val standingVecs =
-      if (!Files.exists(Paths.get(vecsDir))) base
-      else base.unionAll(spark.read.parquet(vecsDir)
-        .where(col("batch_id") < batchId).select("vec_id", "v"))
+    val standingKeys = Appendix(keysDir).read(spark, Seq("id", "table_id", "key"), before = batchId)
+      .fold(baseKeys)(baseKeys.unionAll)
+    val standingVecs = Appendix(vecsDir).read(spark, Seq("vec_id", "v"), before = batchId)
+      .fold(base)(base.unionAll)
     graft.operators.SimilarityQueries
       .embeddingNearDupAcross(standingVecs, batch, threshold = 0.9,
         bits = bits, baseKeys = standingKeys)
@@ -1482,18 +1375,16 @@ object StreamingPipelines {
       // maintenance policy (candidate table only — the vecs PAYLOAD
       // waits for the post-drain quiesced slot)
       if (batchId > 0 && batchId % CompactEveryEpochs == 0)
-        compactIngestAppendix(spark, keysDir, Seq("id", "table_id", "key"),
+        Appendix.compact(spark, keysDir, Seq("id", "table_id", "key"),
           uptoExclusive = batchId)
-      embGrowingProbe(spark, bits, baseKeys, base, batch, batchId, keysDir, vecsDir)
-        .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+      Appendix(out).accept(
+        embGrowingProbe(spark, bits, baseKeys, base, batch, batchId, keysDir, vecsDir), batchId)
       // accept: this batch's keys (at the standing width) and payload
       // vectors join the accumulated index
-      batch.select(col("vec_id").as("id"),
+      Appendix(keysDir).accept(batch.select(col("vec_id").as("id"),
           posexplode(call_function(graft.functions.HyperplaneLsh.wideFnName,
-            col("v"), lit(bits))).as(Seq("table_id", "key")))
-        .write.mode("overwrite").parquet(s"$keysDir/batch_id=$batchId")
-      batch.select("vec_id", "v")
-        .write.mode("overwrite").parquet(s"$vecsDir/batch_id=$batchId")
+            col("v"), lit(bits))).as(Seq("table_id", "key"))), batchId)
+      Appendix(vecsDir).accept(batch.select("vec_id", "v"), batchId)
       // IVF accept: score the batch against the loop index's frozen
       // centroids only — O(|batch| × k), the FAISS add() split
       SimilarityQueries.ivfAssignIncremental(spark, loopIvf,
@@ -1504,13 +1395,13 @@ object StreamingPipelines {
     // the IVF growth policy — retrain over the grown corpus iff the
     // accepted appendix exceeds 20% of the trained base (it routes
     // through the standard build-or-load path and clears `_inc`)
-    compactIngestAppendix(spark, vecsDir, Seq("vec_id", "v"))
+    Appendix.compact(spark, vecsDir, Seq("vec_id", "v"))
     // the accepted SQ8 codes (written with each assign since r13) are
     // payload too — fold their batch dirs in the same quiesced slot so
     // the code appendix's dir listing stays bounded like every other
-    compactIngestAppendix(spark, s"${loopIvf.sq8Path}_inc",
+    Appendix.compact(spark, s"${loopIvf.sq8Path}_inc",
       Seq("id", "cid", "qv", "scale"))
-    val grown = base.unionAll(spark.read.parquet(vecsDir).select("vec_id", "v"))
+    val grown = Appendix(vecsDir).read(spark, Seq("vec_id", "v")).fold(base)(base.unionAll)
       .select(col("vec_id").as("id"), col("v"))
     SimilarityQueries.maybeRetrain(spark, ivfKey, loopIvf, grown)
     out
@@ -1556,24 +1447,20 @@ object StreamingPipelines {
     val incoming = DedupQueries.incomingWithReposts(Tables.load(spark, dir, "documents"))
     val chunkDir = stageChunksByIdMod(incoming, "doc_id", "graft-lineingest", dir, nChunks)
     val out  = IndexStore.tempDir("graft-lineingest-out").toString
-    // the accept appendix path materializes at the FIRST accept write —
-    // an existing-but-empty dir would fail schema inference at epoch 0
     val acc  = IndexStore.tempDir("graft-lineingest-acc").resolve("digests").toString
     Replay.drain(chunkStream(spark, incoming.schema, chunkDir)) { (batch, batchId) =>
       if (batchId > 0 && batchId % CompactEveryEpochs == 0)
-        compactIngestAppendix(spark, acc, Seq("h64", "h128"), uptoExclusive = batchId)
+        Appendix.compact(spark, acc, Seq("h64", "h128"), uptoExclusive = batchId)
       val occ = DedupQueries.linedPages(batch)
         .select(col("doc_id"), col("pos"), col("line"),
           length(col("line")).cast("long").as("n_chars"),
           xxhash64(col("line")).as("h64"), md5(col("line")).as("h128"))
-      val standing =
-        (if (!Files.exists(Paths.get(acc))) baseDigests
-         else baseDigests.unionAll(spark.read.parquet(acc)
-           .where(col("batch_id") < batchId).select("h64", "h128")))
-          .distinct().withColumn("seen", lit(1))
+      val standing = Appendix(acc).read(spark, Seq("h64", "h128"), before = batchId)
+        .fold(baseDigests)(baseDigests.unionAll)
+        .distinct().withColumn("seen", lit(1))
       val winners = occ.groupBy("h64", "h128")
         .agg(min(struct(col("doc_id"), col("pos"))).as("w"))
-      occ.join(winners, Seq("h64", "h128"))
+      val cleaned = occ.join(winners, Seq("h64", "h128"))
         .join(standing, Seq("h64", "h128"), "left_outer")
         .select(col("doc_id"), col("pos"), col("line"), col("n_chars"),
           (col("seen").isNull &&
@@ -1590,10 +1477,9 @@ object StreamingPipelines {
           when(col("kept_lines") > 0,
             md5(array_join(transform(array_sort(col("kept")), _.getField("line")),
               "\n"))).as("clean_md5"))
-        .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+      Appendix(out).accept(cleaned, batchId)
       // accept: every line digest this batch carried is now "seen"
-      occ.select("h64", "h128").distinct()
-        .write.mode("overwrite").parquet(s"$acc/batch_id=$batchId")
+      Appendix(acc).accept(occ.select("h64", "h128").distinct(), batchId)
     }
     out
   }
@@ -2566,7 +2452,7 @@ object StreamingPipelines {
     // post-drain QUIESCED maintenance slot: fold the payload appendix
     // (disjoint vec_ids across batches — the compactor's distinct is
     // exact), then apply the growth policy
-    compactIngestAppendix(spark, s"${idx.codesPath}_inc", Seq("id", "codes"))
+    Appendix.compact(spark, s"${idx.codesPath}_inc", Seq("id", "codes"))
     SimilarityQueries.maybePqRetrain(spark, pqKey, idx, unitOf(emb))
     ()
   }
@@ -2610,13 +2496,12 @@ object StreamingPipelines {
     val out  = IndexStore.tempDir("graft-media-out").toString
     Replay.drain(chunkStream(spark, media.schema, chunkDir)) { (batch, batchId) =>
       import batch.sparkSession.implicits._
-      MultimodalQueries.resizeAndSample(
+      Appendix(out).accept(MultimodalQueries.resizeAndSample(
           MultimodalQueries.extractFeatures(
             batch.as[graft.operators.MultimodalQueries.MediaRecord]), 96, 96, 2)
         .toDF("doc_id", "width", "height", "frames")
         .select(col("doc_id"), col("width"), col("height"),
-                explode(col("frames")).as("frame_idx"))
-        .write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+                explode(col("frames")).as("frame_idx")), batchId)
     }
     out
   }

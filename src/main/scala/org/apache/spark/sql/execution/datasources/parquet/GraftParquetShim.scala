@@ -21,6 +21,13 @@ object GraftParquetShim {
     * own `asNullable`, package-private). */
   def asNullable(schema: StructType): StructType = schema.asNullable
 
+  /** True for a path segment Spark's file listing skips — a `_`- or
+    * `.`-prefixed name other than a `k=v` dir or a parquet summary
+    * file (`_temporary`, `_SUCCESS`, `.crc`), or a `._COPYING_` file:
+    * `HadoopFSUtils.shouldFilterOutPathName`, package-private. */
+  def isHiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   def footerMergedSchema(spark: SparkSession,
                          paths: Seq[String]): Option[StructType] = {
     if (paths.isEmpty) return None

@@ -300,7 +300,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     SimilarityQueries.ivfAssignIncremental(spark, ivf, delta2, 1L)
     val viewBefore = SimilarityQueries.ivfAssignments(spark, ivf)
       .as[(Long, Int)].collect().toSet
-    graft.streaming.StreamingPipelines.compactIngestAppendix(
+    graft.core.Appendix.compact(
       spark, s"${ivf.assignPath}_inc", Seq("id", "cid"))
     import scala.jdk.CollectionConverters._
     val incDirs = java.nio.file.Files.list(
@@ -369,6 +369,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(SimilarityQueries.ivfTrainCount.get() == trainedBefore)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"${ivf.assignPath}_inc")),
       "below-threshold maybeRetrain must leave the appendix alone")
+    // the growth check reads parquet footers: no Spark job below threshold
+    val (_, growthJobs) = SparkJobs.jobsOf("ivf-growth-check")(
+      SimilarityQueries.maybeRetrain(spark, dataDir.toString, ivf, unit.unionAll(d0)))
+    assert(growthJobs == 0, s"a below-threshold growth check launched $growthJobs Spark jobs")
 
     // a second delta pushes the appendix past 20% of base → retrain:
     // fresh centroids over the grown corpus, appendix cleared, every
@@ -708,8 +712,58 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // the retrain policy must treat it as empty too: no throw, no retrain
     assert(!SimilarityQueries.maybePqRetrain(spark, sf + "#pqemptybatch", idx, baseUnit),
       "an empty appendix must never trigger (or crash) the retrain policy")
+    // the second fault: a writer that died before its commit left its
+    // only parquet file under `_temporary/`, which spark.read skips
+    SimilarityQueries.pqEncode(baseUnit.limit(5), idx.codebook)
+      .write.mode("overwrite").parquet(s"${idx.codesPath}_inc/batch_id=1/_temporary/0")
+    assert(SimilarityQueries.pqComposedCodes(spark, idx)
+      .as[(Long, Seq[Int])].collect().sortBy(_._1).toSeq == base,
+      "an appendix whose only parquet file is under _temporary/ must read as absent")
+    assert(!SimilarityQueries.maybePqRetrain(spark, sf + "#pqemptybatch", idx, baseUnit),
+      "a _temporary/-only appendix must never trigger (or crash) the retrain policy")
     graft.core.IndexStore.deleteRecursively(
       java.nio.file.Paths.get(s"${idx.codesPath}_inc"))
+  }
+
+  test("growing probes: an accept dir a dead writer left with only _SUCCESS reads as no appendix") {
+    import java.nio.file.Files
+    import graft.streaming.StreamingPipelines
+    val dir = "/root/testdata/sf0.001"
+    // the fault: epoch 0's writer died after mkdir and left only its
+    // `_SUCCESS` marker in each accept dir — no file spark.read can read
+    val grow = Files.createTempDirectory("grow-success-only")
+    def successOnly(table: String): String = {
+      val batch0 = grow.resolve(table).resolve("batch_id=0")
+      Files.createDirectories(batch0)
+      Files.write(batch0.resolve("_SUCCESS"), Array.empty[Byte])
+      grow.resolve(table).toString
+    }
+    val missing = grow.resolve("none").toString
+    // q16k's epoch-1 probe must equal its base-only probe
+    val baseIdx = DedupQueries.baseBandIndex(spark, dir)
+    val payload = DedupQueries.wordShingleDocs(spark, dir)
+    val batch1 = payload.where(
+      col("doc_id") % DedupQueries.IngestSplitMod === DedupQueries.IngestSplitRem &&
+      pmod(col("doc_id"), lit(DedupQueries.IngestChunks)) === 1)
+    def textProbe(sigDir: String, bandDir: String) = StreamingPipelines.growingIngestProbe(
+        spark, baseIdx, payload, batch1, 1L, sigDir, bandDir)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(textProbe(successOnly("sigs"), successOnly("bands")) == textProbe(missing, missing),
+      "a _SUCCESS-only accept dir must probe as base only")
+    // and so must q16m's
+    val (bits, baseKeys) = SimilarityQueries.embKeyIndex(spark, dir)
+    val base = graft.core.Tables.load(spark, dir, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val chunk1 = SimilarityQueries.plantedEmbeddings(spark, dir)
+      .where(col("vec_id") >= 1000000L)
+      .unionAll(SimilarityQueries.plantedEmbeddingsGen2(spark, dir))
+      .where(pmod(col("vec_id"), lit(DedupQueries.IngestChunks)) === 1)
+    def embProbe(keysDir: String, vecsDir: String) = StreamingPipelines.embGrowingProbe(
+        spark, bits, baseKeys, base, chunk1, 1L, keysDir, vecsDir)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(embProbe(successOnly("keys"), successOnly("vecs")) == embProbe(missing, missing),
+      "a _SUCCESS-only accept dir must probe as base only")
+    graft.core.IndexStore.deleteRecursively(grow)
   }
 
   test("binary sign-bit top-k recall vs exact top-k (sf0.001)") {

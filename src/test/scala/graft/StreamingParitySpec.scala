@@ -676,8 +676,8 @@ class StreamingParitySpec extends AnyFunSuite {
     val before = probe()
     assert(before.nonEmpty, "chunk 2 must flag pairs against the accumulated index")
     def compactBoth(): Unit = {
-      StreamingPipelines.compactIngestAppendix(spark, sigDir, Seq("doc_id", "sig"))
-      StreamingPipelines.compactIngestAppendix(spark, bandDir, Seq("doc_id", "band"))
+      graft.core.Appendix.compact(spark, sigDir, Seq("doc_id", "sig"))
+      graft.core.Appendix.compact(spark, bandDir, Seq("doc_id", "band"))
     }
     compactBoth()
     assert(partDirs(sigDir) == Seq("batch_id=1") && partDirs(bandDir) == Seq("batch_id=1"),
@@ -702,7 +702,7 @@ class StreamingParitySpec extends AnyFunSuite {
     // compaction must fold into it without tripping schema inference
     val empty2 = java.nio.file.Paths.get(s"$sigDir/batch_id=2")
     Files.createDirectories(empty2)
-    StreamingPipelines.compactIngestAppendix(spark, sigDir, Seq("doc_id", "sig"))
+    graft.core.Appendix.compact(spark, sigDir, Seq("doc_id", "sig"))
     assert(partDirs(sigDir) == Seq("batch_id=2"))
     assert(spark.read.parquet(s"$sigDir/batch_id=2").count() == sigRows,
       "folding into an empty newest batch must carry every row")
@@ -739,8 +739,8 @@ class StreamingParitySpec extends AnyFunSuite {
     assert(before.exists { case (n, o, _) => o >= 1000000L },
       "chunk 2 must flag a cross-generation pair via the accumulated index")
     // vecs carries an array<double> payload column through except()
-    StreamingPipelines.compactIngestAppendix(spark, keysDir, Seq("id", "table_id", "key"))
-    StreamingPipelines.compactIngestAppendix(spark, vecsDir, Seq("vec_id", "v"))
+    graft.core.Appendix.compact(spark, keysDir, Seq("id", "table_id", "key"))
+    graft.core.Appendix.compact(spark, vecsDir, Seq("vec_id", "v"))
     def partDirs(p: String) = Files.list(Paths.get(p)).iterator().asScala
       .map(_.getFileName.toString).filter(_.startsWith("batch_id=")).toSeq.sorted
     assert(partDirs(keysDir) == Seq("batch_id=1") && partDirs(vecsDir) == Seq("batch_id=1"))
