@@ -186,7 +186,7 @@ object Bench {
     if (sys.env.get("SPARK_GRAFT_JOBLOG").contains("1")) spark.sparkContext.addSparkListener(jobLog)
 
     val passes = timePasses(spark, sfDir, queries)
-    val Passes(pass1, pass2, starts1, starts2, gcObj) = passes
+    val Passes(pass1, pass2, starts1, starts2, gcObj, compilesObj) = passes
     val results = passes.results
 
     def obj(res: Seq[(String, Double)]): String =
@@ -224,7 +224,7 @@ object Bench {
     val r2Failed = results.count { case (n, v) => r2Set(n) && v < 0 }
     // raw passes + GC deltas are emitted alongside the min so the
     // min-of-two methodology and any memory pressure are auditable
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(results)},"pass1":${obj(pass1)},"pass2":${obj(pass2)},"starts1":${obj(starts1)},"starts2":${obj(starts2)},"gc":$gcObj,"failed":$nFailed,"r2_subset_n":${results.count(r => r2Set(r._1))},"r2_subset_failed":$r2Failed,"r2_subset_total":$r2Total,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(results)},"pass1":${obj(pass1)},"pass2":${obj(pass2)},"starts1":${obj(starts1)},"starts2":${obj(starts2)},"gc":$gcObj,"codegen_compiles":$compilesObj,"failed":$nFailed,"r2_subset_n":${results.count(r => r2Set(r._1))},"r2_subset_failed":$r2Failed,"r2_subset_total":$r2Total,"sf":"$sfDir"}""")
     // a list run prices a subset: no summary, and BENCH_SUMMARY.json
     // (a checked-in artifact) stays as the last full run left it
     if (only.nonEmpty) { spark.stop(); return }
@@ -338,7 +338,7 @@ object Bench {
         }
       }
     } catch { case _: Exception => "[]" }
-    val summaryLine = s"""{"metric":"summary","value":$total,"unit":"sec","failed":$nFailed,"n":${results.size},"r2_subset_total":$r2Total,"r2_subset_failed":$r2Failed,"index_builds":$idxBuilds,"recall":$recallObj,"recall_delta":$recallDeltaObj,"recall_regressed":$recallRegressed,"knob_curve_sec":$curveSecObj,"q16k_batches":$growStats,"snap_sla":$snapSlaObj,"slowest":$slowest,"family_sec":$familySec,"regressed_rows":$regressedRows,"sf":"$sfDir"}"""
+    val summaryLine = s"""{"metric":"summary","value":$total,"unit":"sec","failed":$nFailed,"n":${results.size},"r2_subset_total":$r2Total,"r2_subset_failed":$r2Failed,"index_builds":$idxBuilds,"recall":$recallObj,"recall_delta":$recallDeltaObj,"recall_regressed":$recallRegressed,"knob_curve_sec":$curveSecObj,"q16k_batches":$growStats,"snap_sla":$snapSlaObj,"slowest":$slowest,"family_sec":$familySec,"regressed_rows":$regressedRows,"codegen_compiles":$compilesObj,"sf":"$sfDir"}"""
     println(summaryLine)
     // the driver's artifact-of-record (stdout capture) arrived
     // tail-truncated three rounds running (VERDICT r15 #2) — the
@@ -387,10 +387,12 @@ object Bench {
 
   /** The two timed passes of a run: each query's seconds (`-1` when it
     * threw) and start offset (seconds since the run began), plus the
-    * per-pass GC deltas as a JSON object. */
+    * per-pass GC deltas and generated classes compiled (codegen cache
+    * misses), each as a JSON object. A warm pass that compiles has a
+    * working set the codegen cache does not hold. */
   final case class Passes(pass1: Seq[(String, Double)], pass2: Seq[(String, Double)],
                           starts1: Seq[(String, Double)], starts2: Seq[(String, Double)],
-                          gc: String) {
+                          gc: String, compiles: String) {
     /** Best-of-two per query; a failure in either pass reports `-1`. */
     def results: Seq[(String, Double)] = pass1.zip(pass2).map { case ((n, a), (_, b)) =>
       n -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
@@ -430,9 +432,10 @@ object Bench {
       spark.catalog.clearCache()
       t
     }
-    def runPass(label: String): (Seq[(String, (Double, Double))], String) = {
+    def runPass(label: String): (Seq[(String, (Double, Double))], String, String) = {
       graft.streaming.StreamingPipelines.clearCache()
       val (gcMs0, gcN0) = gcStats()
+      val compiles0 = GraftSession.codegenCompiles()
       var prevFamily = ""
       val res = queries.map { case (n, f) =>
         val fam = familyOf(n)
@@ -442,19 +445,21 @@ object Bench {
         n -> (runOne(n, f), math.rint(startOff * 10) / 10)
       }
       val (gcMs1, gcN1) = gcStats()
+      val compiles = GraftSession.codegenCompiles() - compiles0
       // inter-pass hygiene: unload streaming state stores (native
       // RocksDB instances) and compact the heap so pass N+1 starts from
       // the same baseline as pass N
       graft.streaming.StreamingPipelines.unloadStateStores()
       System.gc()
-      (res, "\"" + label + s"""":{"gc_ms":${gcMs1 - gcMs0},"gc_n":${gcN1 - gcN0}}""")
+      (res, "\"" + label + s"""":{"gc_ms":${gcMs1 - gcMs0},"gc_n":${gcN1 - gcN0}}""",
+       "\"" + label + "\":" + compiles)
     }
-    val (_, gcWarm) = runPass("warmup")
-    val (pass1t, gc1) = runPass("pass1")
-    val (pass2t, gc2) = runPass("pass2")
+    val (_, gcWarm, cWarm) = runPass("warmup")
+    val (pass1t, gc1, c1) = runPass("pass1")
+    val (pass2t, gc2, c2) = runPass("pass2")
     Passes(pass1t.map { case (n, (d, _)) => n -> d }, pass2t.map { case (n, (d, _)) => n -> d },
       pass1t.map { case (n, (_, s)) => n -> s }, pass2t.map { case (n, (_, s)) => n -> s },
-      Seq(gcWarm, gc1, gc2).mkString("{", ",", "}"))
+      Seq(gcWarm, gc1, gc2).mkString("{", ",", "}"), Seq(cWarm, c1, c2).mkString("{", ",", "}"))
   }
 
   /** Measured recall/overlap for the rows-only ANN entries (VERDICT r9

@@ -185,6 +185,28 @@ object Tables {
   * `file:` paths through [[GraftLocalFileSystem]] / [[GraftLocalFs]].
   */
 object GraftSession {
+  /** `spark.sql.codegen.cache.maxEntries`, static: Spark's cache of
+    * compiled generated classes, keyed by their source, is split into 4
+    * LRU segments of a quarter each, and a class it drops is compiled
+    * (and JIT-compiled) again on its next use. Measured at local[4]:
+    *  - the corpus mix (q3, q18, q18i, q16, q16c, q17, q17j) reuses 100
+    *    classes a round; at Spark's default cap of 100 it recompiled 53
+    *    in 7 warm rounds (24 in one round on the test fixture), at
+    *    2,000 none;
+    *  - the full `graft.Bench` list at sf0.001 compiles 2,878 classes
+    *    in its warm-up pass. With no eviction (cap 10,000) each later
+    *    pass still compiles ~690 whose source is new each run (such as
+    *    a stream's watermark predicates), so ~2,200 are reused; at a
+    *    cap of 2,000 a pass recompiled 2,760.
+    * 4,096 holds the full list's ~2,900 per pass with room for each
+    * segment's share to run over a quarter. */
+  val CodegenCacheEntries = 4096
+
+  /** Generated classes compiled in this JVM so far (each miss of the
+    * codegen cache compiles one). */
+  def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   def build(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
@@ -207,6 +229,7 @@ object GraftSession {
       // codegen cutoff; without this the signature stage silently runs
       // interpreted (~2× slower measured)
       .config("spark.sql.codegen.maxFields", "256")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // InferFiltersFromGenerate re-derives `size(arr) > 0` beneath every
       // explode and pushes it to the scan with the array-producing
       // expression tree fully inlined — for nested-lambda trees (shingles,

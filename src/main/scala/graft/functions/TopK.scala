@@ -13,7 +13,7 @@ import org.apache.spark.sql.expressions.Aggregator
   *    tag→count map — O(distinct keys) state; this is O(k));
   *  - associative + commutative merge → Spark plans partial aggregation,
   *    so only k rows per group per partition ever cross the shuffle;
-  *  - deterministic tie-break (score desc, id asc) — the reference's
+  *  - deterministic tie-break (cnt desc, tag asc) — the reference's
   *    argmax depended on HashMap iteration order (S:187-196).
   *
   * Reduce cost (VERDICT r5 #4): `reduce` NEVER sorts. Below k elements it
@@ -24,7 +24,6 @@ import org.apache.spark.sql.expressions.Aggregator
   * overflows or `finish` — each sorts at most once per partition /
   * group. `sortPasses` is test-visible so TopKSpec can pin this.
   */
-case class Scored(probe: Long, id: Long, score: Double)
 case class TagCount(tag: String, cnt: Long)
 case class HashedDoc(lang: String, fp: Long, doc_id: Long)
 /** Output bean of [[TrendingArgMax]]. */
@@ -56,17 +55,10 @@ abstract class BoundedTopK[T](k: Int, ord: Ordering[T]) extends Aggregator[T, Se
   final override def finish(r: Seq[T]): Seq[T] = sortedTake(r)
 }
 
-/** Top-k (id, score) pairs by (score desc, id asc). */
-class TopKByScore(k: Int)
-    extends BoundedTopK[Scored](k, Ordering.by((s: Scored) => (-s.score, s.id))) {
-  override def bufferEncoder: Encoder[Seq[Scored]] = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Scored]]()
-  override def outputEncoder: Encoder[Seq[Scored]] = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Scored]]()
-}
-
 /** Bottom-k docs by (fp asc, doc_id asc) — deterministic content-hash
   * stratified sampling: the k docs whose fingerprint sorts lowest
   * within each stratum. Same bounded-buffer/partial-agg properties as
-  * [[TopKByScore]]: only k rows per group per partition cross the
+  * [[TopKCounts]]: only k rows per group per partition cross the
   * shuffle, never the stratum (a per-group `row_number` window would
   * shuffle every row into as few partitions as there are strata). */
 class BottomKByHash(k: Int)

@@ -1,15 +1,15 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.aggregate.GraftAggShim
 import org.apache.spark.sql.functions._
 import graft.core.{Appendix, Tables}
-import graft.functions.{Scored, TopKByScore}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.3 Q17):
   * brute-force cosine top-k as the exact baseline, expressed so the plan
   * scales: probes are broadcast (no shuffle of the big side), scoring is
-  * native array arithmetic inside codegen, and top-k per probe is a
-  * bounded typed Aggregator with partial aggregation — only k rows per
+  * native array arithmetic inside codegen, and top-k per probe is
+  * Spark's bounded `CollectTopK` with partial aggregation — only k rows per
   * probe per partition cross the shuffle, never all N scored candidates.
   * (The sublinear path at 100 TB is LSH/IVF bucketing — reusing the
   * banded-bucket join pattern from [[DedupQueries]] — over the same
@@ -1152,8 +1152,7 @@ object SimilarityQueries {
     * the corpus), then every corpus vector scores as m array lookups
     * over its 8-byte code — `aggregate(sequence(...))` over
     * `element_at`, no f64 vector is read in the scan. The ADC top-[[pqShortlist]]
-    * shortlist per probe (typed bounded [[graft.functions.TopKByScore]]
-    * aggregator — never a full sort) is re-ranked with exact cosine,
+    * shortlist per probe (bounded [[rankedTopK]] — never a full sort) is re-ranked with exact cosine,
     * touching full vectors for ≤ probes×shortlist rows. Rows-only by design
     * (codebooks are k-means artifacts); recall vs exact q17 is pinned
     * in RetrievalSpec and stamped into the bench artifact.
@@ -1267,8 +1266,8 @@ object SimilarityQueries {
     * bounded by probe count / codebook size, never the corpus. */
   private def pqProbeLuts(spark: SparkSession, unit: DataFrame, pq: PqIndex): DataFrame = {
     import spark.implicits._
-    val probeVecs = unit.where(col("id") < 10)
-      .as[(Long, Seq[Double])].collect().sortBy(_._1)
+    val probeVecs = unit.where(col("id") < 10).collect()
+      .map(r => (r.getAs[Number](0).longValue, r.getSeq[Double](1))).sortBy(_._1)
     val cbBySub = pq.codebook.groupBy(_._1)
     probeVecs.map { case (pid, pv) =>
       val lut: Seq[Seq[Double]] = (0 until pqSubspaces).map { s =>
@@ -1392,20 +1391,29 @@ object SimilarityQueries {
     pqExactRerank(emb, shortlist)
   }
 
-  private def rankedTopK(scored: DataFrame, k: Int, scoreName: String): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val topk = new TopKByScore(k).toColumn
-    scored.as[Scored]
-      .groupByKey(_.probe)
-      .agg(topk.name("topk"))
-      .toDF("probe_id", "topk")
+  /** Top-`k` `(probe, id, score)` rows per probe as `(probe_id,
+    * neighbor_id, rank, <scoreName>)`, ranked by score desc then id asc,
+    * score rounded to 6dp. Spark's bounded `CollectTopK` keeps the `k`
+    * smallest `(-score, negZero, id)` keys per probe per partition, so
+    * only `k` rows per probe cross the shuffle. Spark orders `-0.0`
+    * equal to `0.0`; the `negZero` flag ranks a `0.0` score ahead of a
+    * `-0.0` one, as `java.lang.Double.compare` does. `NaN` ranks last.
+    * A null score has no rank and is dropped. */
+  private[graft] def rankedTopK(scored: DataFrame, k: Int, scoreName: String): DataFrame = {
+    val score = col("score").cast("double")
+    // the sign of a zero shows only in its text (Spark's atan2 and hash
+    // fold -0.0 into 0.0); the cast runs on zero scores alone
+    val negZero = score === 0.0 && score.cast("string") === "-0.0"
+    val key = struct((-score).as("neg"), negZero.as("neg_zero"), col("id").cast("long").as("id"))
+    scored.where(score.isNotNull)
+      .groupBy(col("probe").cast("long").as("probe_id"))
+      .agg(GraftAggShim.collectBottomK(key, k).as("topk"))
       .select(col("probe_id"), posexplode(col("topk")))
       .select(
         col("probe_id"),
         col("col.id").as("neighbor_id"),
         (col("pos") + 1).cast("long").as("rank"),
-        round(col("col.score"), 6).as(scoreName))
+        round(-col("col.neg"), 6).as(scoreName))
       .orderBy("probe_id", "rank")
   }
 

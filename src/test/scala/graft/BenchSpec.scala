@@ -22,6 +22,7 @@ class BenchSpec extends AnyFunSuite {
     assert(p.pass1.map(_._1) == names && p.pass2.map(_._1) == names)
     assert(p.starts1.map(_._1) == names && p.starts2.map(_._1) == names)
     Seq("warmup", "pass1", "pass2").foreach(l => assert(p.gc.contains("\"" + l + "\":{\"gc_ms\":")))
+    assert(p.compiles.matches("""\{"warmup":\d+,"pass1":\d+,"pass2":\d+\}"""), p.compiles)
     val (p1, p2, res) = (p.pass1.toMap, p.pass2.toMap, p.results.toMap)
     Seq("q1_scan_filter", "q3_hashtag_explode").foreach { n =>
       assert(p1(n) > 0 && p2(n) > 0)

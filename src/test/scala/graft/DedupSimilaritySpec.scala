@@ -688,7 +688,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"${idx.codesPath}_inc"))
   }
 
-  test("PQ appendix fault injection: an empty accepted batch reads as no appendix, retrain doesn't throw (VERDICT r11 #3)") {
+  test("PQ appendix fault injection: a batch dir a dead writer left with only _SUCCESS reads as no appendix, retrain doesn't throw (VERDICT r11 #3)") {
     val sf = "/root/testdata/sf0.001"
     val emb = graft.core.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -699,9 +699,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val idx = SimilarityQueries.pqIndex(spark, sf + "#pqemptybatch", baseUnit)
     val base = SimilarityQueries.pqComposedCodes(spark, idx)
       .as[(Long, Seq[Int])].collect().sortBy(_._1).toSeq
-    // the fault: an accepted micro-batch whose dir holds NO parquet data
-    // files (writer died after mkdir / emitted only _SUCCESS) — schema
-    // inference over it would throw if read unguarded
+    // the fault: a micro-batch dir whose writer died after mkdir and
+    // left only _SUCCESS, no parquet data file — schema inference over
+    // it would throw if read unguarded
     val batchDir = java.nio.file.Paths.get(s"${idx.codesPath}_inc", "batch_id=0")
     java.nio.file.Files.createDirectories(batchDir)
     java.nio.file.Files.write(batchDir.resolve("_SUCCESS"), Array.empty[Byte])

@@ -697,9 +697,10 @@ class StreamingParitySpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$sigDir/batch_id=1").count() == sigRows,
       "a crash-recovery re-run must not re-append rows the target already holds")
     assert(probe() == before)
-    // accepted-but-EMPTY newest batch (a chunk whose docs all fall
-    // below the shingle minimum writes a dir with no parquet files):
-    // compaction must fold into it without tripping schema inference
+    // a newest batch dir with no parquet files (what a writer that died
+    // after mkdir leaves; an accepted empty chunk writes one
+    // schema-carrying part file): compaction must fold into it without
+    // tripping schema inference
     val empty2 = java.nio.file.Paths.get(s"$sigDir/batch_id=2")
     Files.createDirectories(empty2)
     graft.core.Appendix.compact(spark, sigDir, Seq("doc_id", "sig"))

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
-import graft.functions.{Scored, TagCount, TopKByScore, TopKCounts}
+import graft.functions.{TagCount, TopKCounts}
 
 /** UDAF laws (O11 re-principled): the merge the reference's Aggregator
   * must satisfy (S:153-180) — associativity/commutativity — plus
@@ -51,11 +51,74 @@ class TopKSpec extends AnyFunSuite {
     }
   }
 
-  test("TopKByScore: score desc, id asc tie-break, bounded at k") {
-    val a = new TopKByScore(2)
-    val xs = Seq(Scored(0, 7, 0.5), Scored(0, 3, 0.9), Scored(0, 1, 0.5), Scored(0, 9, 0.1))
-    val out = a.finish(xs.foldLeft(a.zero)(a.reduce))
-    assert(out == Seq(Scored(0, 3, 0.9), Scored(0, 1, 0.5)))
+  // ---- the ANN rankers' top-k: Spark's bounded CollectTopK behind
+  // SimilarityQueries.rankedTopK, ranked score desc then id asc ----
+
+  private type Scored = (Long, Long, Double) // (probe, id, score)
+
+  /** The reference ranking: score desc then id asc under
+    * `java.lang.Double.compare` (so `0.0` ahead of `-0.0`, `NaN` last),
+    * the first `k` per probe, ranked from 1, score rounded like the
+    * ranker's output (`-0.0` rounds to `0.0`). */
+  private def reference(xs: Seq[Scored], k: Int): Seq[(Long, Long, Long, String)] = {
+    val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+    xs.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (p, g) =>
+      g.sortBy(s => (-s._3, s._2))(ord).take(k).zipWithIndex.map { case ((_, id, sc), i) =>
+        (p, id, i + 1L, (if (sc.isNaN) sc else BigDecimal(sc).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble).toString)
+      }
+    }
+  }
+
+  private def ranked(xs: Seq[Scored], k: Int, partitions: Int = 1): Seq[(Long, Long, Long, String)] = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val df = operators.SimilarityQueries.rankedTopK(
+      xs.toDF("probe", "id", "score").repartition(partitions), k, "s")
+    df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3).toString))
+  }
+
+  test("rankedTopK: score desc, id asc tie-break, bounded at k") {
+    val xs = Seq[Scored]((0, 7, 0.5), (0, 3, 0.9), (0, 1, 0.5), (0, 9, 0.1))
+    val out = ranked(xs, 2)
+    assert(out == Seq((0L, 3L, 1L, "0.9"), (0L, 1L, 2L, "0.5")))
+    assert(out == reference(xs, 2))
+  }
+
+  test("rankedTopK: k larger than the group returns the whole group, ranked") {
+    val xs = Seq[Scored]((4, 2, 0.25), (4, 8, 0.75), (4, 5, 0.25))
+    assert(ranked(xs, 10) == Seq((4L, 8L, 1L, "0.75"), (4L, 2L, 2L, "0.25"), (4L, 5L, 3L, "0.25")))
+  }
+
+  test("rankedTopK: 0.0 ranks ahead of -0.0 and NaN ranks last, as Double.compare orders them") {
+    val xs = Seq[Scored]((1, 2, -0.0), (1, 5, 0.0), (1, 4, Double.NaN), (1, 8, -1.0),
+      (1, 6, 0.0), (1, 3, Double.NaN))
+    val out = ranked(xs, 10)
+    assert(out.map(_._2) == Seq(5L, 6L, 2L, 8L, 3L, 4L))
+    assert(out == reference(xs, 10))
+    assert(ranked(xs, 3).map(_._2) == Seq(5L, 6L, 2L))
+  }
+
+  test("rankedTopK: partial buffers merged across partitions match the reference (50 seeded trials)") {
+    val pool = Array(0.0, -0.0, Double.NaN, 0.5, -0.5, 0.25, 1.0, -1.0, 0.125)
+    for (seed <- 1 to 50) {
+      val rnd = new Random(seed)
+      val xs = Seq.fill[Scored](1 + rnd.nextInt(60))(
+        (rnd.nextInt(3).toLong, rnd.nextInt(1000).toLong, pool(rnd.nextInt(pool.length))))
+        .distinctBy(s => (s._1, s._2))
+      val k = 1 + rnd.nextInt(8)
+      assert(ranked(xs, k, partitions = 4) == reference(xs, k), s"seed=$seed k=$k")
+    }
+  }
+
+  test("rankedTopK plans Spark's native bounded aggregate, with no typed-encoder projections") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val df = operators.SimilarityQueries.rankedTopK(
+      Seq[Scored]((0, 1, 0.5)).toDF("probe", "id", "score"), 5, "s")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("collect_top_k"), plan)
+    Seq("DeserializeToObject", "AppendColumns", "SerializeFromObject")
+      .foreach(n => assert(!plan.contains(n), s"$n in\n$plan"))
   }
 
   test("reduce never sorts: the hot path is bounded insertion (VERDICT r5 #4)") {
