@@ -1394,17 +1394,16 @@ object SimilarityQueries {
   /** Top-`k` `(probe, id, score)` rows per probe as `(probe_id,
     * neighbor_id, rank, <scoreName>)`, ranked by score desc then id asc,
     * score rounded to 6dp. Spark's bounded `CollectTopK` keeps the `k`
-    * smallest `(-score, negZero, id)` keys per probe per partition, so
-    * only `k` rows per probe cross the shuffle. Spark orders `-0.0`
-    * equal to `0.0`; the `negZero` flag ranks a `0.0` score ahead of a
-    * `-0.0` one, as `java.lang.Double.compare` does. `NaN` ranks last.
-    * A null score has no rank and is dropped. */
+    * smallest `(-score, id)` keys per probe per partition, so only `k`
+    * rows per probe cross the shuffle. `NaN` ranks last. Spark orders
+    * `-0.0` equal to `0.0`, so the two tie and id breaks the tie; no
+    * ranker gives one probe zeros of both signs (a zero sum that starts
+    * from `0.0` is `+0.0`, divided by positive norms it stays so, and
+    * `negham` negates every distance). A null score has no rank and is
+    * dropped. */
   private[graft] def rankedTopK(scored: DataFrame, k: Int, scoreName: String): DataFrame = {
     val score = col("score").cast("double")
-    // the sign of a zero shows only in its text (Spark's atan2 and hash
-    // fold -0.0 into 0.0); the cast runs on zero scores alone
-    val negZero = score === 0.0 && score.cast("string") === "-0.0"
-    val key = struct((-score).as("neg"), negZero.as("neg_zero"), col("id").cast("long").as("id"))
+    val key = struct((-score).as("neg"), col("id").cast("long").as("id"))
     scored.where(score.isNotNull)
       .groupBy(col("probe").cast("long").as("probe_id"))
       .agg(GraftAggShim.collectBottomK(key, k).as("topk"))

@@ -57,13 +57,13 @@ class TopKSpec extends AnyFunSuite {
   private type Scored = (Long, Long, Double) // (probe, id, score)
 
   /** The reference ranking: score desc then id asc under
-    * `java.lang.Double.compare` (so `0.0` ahead of `-0.0`, `NaN` last),
-    * the first `k` per probe, ranked from 1, score rounded like the
-    * ranker's output (`-0.0` rounds to `0.0`). */
+    * `java.lang.Double.compare` with `-0.0` read as `0.0` (so the two
+    * tie, `NaN` last), the first `k` per probe, ranked from 1, score
+    * rounded like the ranker's output (`-0.0` rounds to `0.0`). */
   private def reference(xs: Seq[Scored], k: Int): Seq[(Long, Long, Long, String)] = {
     val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
     xs.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (p, g) =>
-      g.sortBy(s => (-s._3, s._2))(ord).take(k).zipWithIndex.map { case ((_, id, sc), i) =>
+      g.sortBy(s => (if (s._3 == 0.0) 0.0 else -s._3, s._2))(ord).take(k).zipWithIndex.map { case ((_, id, sc), i) =>
         (p, id, i + 1L, (if (sc.isNaN) sc else BigDecimal(sc).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble).toString)
       }
     }
@@ -89,13 +89,13 @@ class TopKSpec extends AnyFunSuite {
     assert(ranked(xs, 10) == Seq((4L, 8L, 1L, "0.75"), (4L, 2L, 2L, "0.25"), (4L, 5L, 3L, "0.25")))
   }
 
-  test("rankedTopK: 0.0 ranks ahead of -0.0 and NaN ranks last, as Double.compare orders them") {
+  test("rankedTopK: -0.0 ties with 0.0 and breaks by id, NaN ranks last") {
     val xs = Seq[Scored]((1, 2, -0.0), (1, 5, 0.0), (1, 4, Double.NaN), (1, 8, -1.0),
       (1, 6, 0.0), (1, 3, Double.NaN))
     val out = ranked(xs, 10)
-    assert(out.map(_._2) == Seq(5L, 6L, 2L, 8L, 3L, 4L))
+    assert(out.map(_._2) == Seq(2L, 5L, 6L, 8L, 3L, 4L))
     assert(out == reference(xs, 10))
-    assert(ranked(xs, 3).map(_._2) == Seq(5L, 6L, 2L))
+    assert(ranked(xs, 3).map(_._2) == Seq(2L, 5L, 6L))
   }
 
   test("rankedTopK: partial buffers merged across partitions match the reference (50 seeded trials)") {
